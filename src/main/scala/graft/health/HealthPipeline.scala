@@ -13,7 +13,11 @@ import org.apache.spark.sql.functions._
   * five SCD2 merges) → four gold marts, sequenced by [[PipelineRunner]]
   * exactly like the reference DAG chain
   * (/root/reference/dags/parent_dag.py:21-44 → pyspark_dag.py:67-126 →
-  * bq_dag.py:44-96).
+  * bq_dag.py:44-96). Inside a stage the tables are independent, so
+  * ingest's per-table loads, silver's seven tables and gold's four
+  * marts each run concurrently ([[graft.ops.Concurrently]]); an
+  * entity that fails does not stop the others, which still publish
+  * before the stage fails.
   *
   * Storage is path-based parquet under `workRoot`:
   * landing/ audit_log/ pipeline_logs/ bronze/ silver/ gold/.
@@ -70,6 +74,12 @@ final class HealthPipeline(
   private def readRecovered(path: String): DataFrame = {
     graft.ops.TableSwap.recover(fs, new Path(path), graft.ops.TableSwap.tmpPath(path))
     spark.read.parquet(path)
+  }
+
+  /** [[readRecovered]] for a table that may not exist yet. */
+  private def recovered(path: String): Option[DataFrame] = {
+    graft.ops.TableSwap.recover(fs, new Path(path), graft.ops.TableSwap.tmpPath(path))
+    if (exists(path)) Some(spark.read.parquet(path)) else None
   }
 
   /** Write-temp-then-swap (atomic table replace without reading and
@@ -139,54 +149,60 @@ final class HealthPipeline(
       if (exists(bronzePath(name))) Some(spark.read.parquet(bronzePath(name))) else None
   }
 
-  /** Silver: reload the two type-1 dims, then run each SCD2 merge over
-    * whatever bronze data is present (silver.sql, whole file). */
+  /** Silver: reload the two type-1 dims and run each SCD2 merge over
+    * whatever bronze data is present (silver.sql, whole file). The
+    * seven tables are independent, so they are built concurrently
+    * ([[graft.ops.Concurrently]]); one entity's failure does not stop
+    * the others — they all finish and publish, then the stage fails
+    * with the first failure in entity order. */
   def runSilver(): Unit = {
     val ts = clock()
-    for {
-      ha <- bronzeTable("departments_ha")
-      hb <- bronzeTable("departments_hb")
-    } writeSwap(HealthSilver.departments(ha, hb), silverPath("departments"))
-    for {
-      ha <- bronzeTable("providers_ha")
-      hb <- bronzeTable("providers_hb")
-    } writeSwap(HealthSilver.providers(ha, hb), silverPath("providers"))
-
-    scd2Entities.foreach { e =>
+    val dims = Seq(
+      () => for {
+        ha <- bronzeTable("departments_ha")
+        hb <- bronzeTable("departments_hb")
+      } writeSwap(HealthSilver.departments(ha, hb), silverPath("departments")),
+      () => for {
+        ha <- bronzeTable("providers_ha")
+        hb <- bronzeTable("providers_hb")
+      } writeSwap(HealthSilver.providers(ha, hb), silverPath("providers")))
+    val merges = scd2Entities.map { e => () =>
       val bronze = e.bronzeTables.flatMap(t => bronzeTable(t).map(t -> _)).toMap
       if (bronze.nonEmpty) {
         val staged = e.stage(bronze)
-        // Refuse a type flip over standing history: merging decimal
-        // staging into float silver (or vice versa, after toggling
-        // spark.graft.decimalMoney mid-history) would NOT fail — the
-        // SCD2 union/join would silently widen back to double and
-        // void the exact-cents contract. Type drift is a migration,
-        // not a merge (Warehouse.appendEvolving's rule).
-        if (exists(silverPath(e.table))) {
-          val tgt = silver(e.table).schema
-          val drift = staged.schema
-            .filter(f => tgt.fieldNames.contains(f.name))
-            .filter(f => tgt(f.name).dataType != f.dataType)
-          if (drift.nonEmpty) throw new IllegalStateException(
-            s"silver.${e.table}: staged column types differ from the existing table " +
-              drift.map(f => s"${f.name}: ${tgt(f.name).dataType.simpleString} -> " +
-                f.dataType.simpleString).mkString("(", ", ", ")") +
-              " — did spark.graft.decimalMoney flip mid-history? Migrate explicitly.")
-        }
-        val target =
-          if (exists(silverPath(e.table))) silver(e.table)
-          else staged
+        val target = recovered(silverPath(e.table)) match {
+          case Some(tgt) =>
+            // Refuse a type flip over standing history: merging decimal
+            // staging into float silver (or vice versa, after toggling
+            // spark.graft.decimalMoney mid-history) would NOT fail — the
+            // SCD2 union/join would silently widen back to double and
+            // void the exact-cents contract. Type drift is a migration,
+            // not a merge (Warehouse.appendEvolving's rule).
+            val drift = staged.schema
+              .filter(f => tgt.columns.contains(f.name))
+              .filter(f => tgt.schema(f.name).dataType != f.dataType)
+            if (drift.nonEmpty) throw new IllegalStateException(
+              s"silver.${e.table}: staged column types differ from the existing table " +
+                drift.map(f => s"${f.name}: ${tgt.schema(f.name).dataType.simpleString} -> " +
+                  f.dataType.simpleString).mkString("(", ", ", ")") +
+                " — did spark.graft.decimalMoney flip mid-history? Migrate explicitly.")
+            tgt
+          case None => staged
             .select((e.keyCol +: e.compareCols).map(col): _*)
             .withColumn("inserted_date", lit(null).cast("timestamp"))
             .withColumn("modified_date", lit(null).cast("timestamp"))
             .withColumn("is_current", lit(true))
             .limit(0)
+        }
         writeSwap(e.merge(lit(ts))(target, staged), silverPath(e.table))
       }
     }
+    graft.ops.Concurrently.run(spark)(dims ++ merges)
+    ()
   }
 
-  /** Gold: the four marts (gold.sql), truncate-and-reload. */
+  /** Gold: the four marts (gold.sql), truncate-and-reload, written
+    * concurrently. */
   def runGold(): Unit = {
     val p = silver("patients")
     val e = silver("encounters")
@@ -194,10 +210,12 @@ final class HealthPipeline(
     val c = silver("claims")
     val pr = silver("providers")
     val d = silver("departments")
-    writeSwap(HealthGold.providerChargeSummary(t, pr, d), goldPath("provider_charge_summary"))
-    writeSwap(HealthGold.patientHistory(p, e, t, c), goldPath("patient_history"))
-    writeSwap(HealthGold.providerPerformance(pr, e, t, c), goldPath("provider_performance"))
-    writeSwap(HealthGold.departmentPerformance(d, e, t), goldPath("department_performance"))
+    graft.ops.Concurrently.run(spark)(Seq(
+      () => writeSwap(HealthGold.providerChargeSummary(t, pr, d), goldPath("provider_charge_summary")),
+      () => writeSwap(HealthGold.patientHistory(p, e, t, c), goldPath("patient_history")),
+      () => writeSwap(HealthGold.providerPerformance(pr, e, t, c), goldPath("provider_performance")),
+      () => writeSwap(HealthGold.departmentPerformance(d, e, t), goldPath("department_performance"))))
+    ()
   }
 
   /** The full DAG, one in-process chain with per-stage retry

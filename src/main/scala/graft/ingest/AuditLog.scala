@@ -10,9 +10,12 @@ import org.apache.spark.sql.functions._
   * :124-137 watermark `MAX(load_timestamp)` with default `1900-01-01`
   * at :134).
   *
-  * Stored as parquet at `path`; appends are one tiny file per
-  * table-load (a run appends O(#tables) rows — compaction is a
-  * maintenance concern, not a hot path).
+  * Stored as parquet at `path`. An ingest run appends all its tables'
+  * rows in one write, so the log grows by one small file per run
+  * (compaction is a maintenance concern, not a hot path). Appends are
+  * never issued concurrently into `path`: concurrent `SaveMode.Append`
+  * jobs into one parquet directory share its `_temporary` commit
+  * directory and can clobber each other's commit.
   */
 final class AuditLog(spark: SparkSession, path: String) {
   import spark.implicits._
@@ -24,9 +27,9 @@ final class AuditLog(spark: SparkSession, path: String) {
     new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
       .exists(new Path(path))
 
-  /** S11: append one audit row. */
-  def append(rec: AuditRecord): Unit =
-    Seq(rec).toDS().write.mode(SaveMode.Append).parquet(path)
+  /** S11: append audit rows as one single-file write (none: no write). */
+  def append(recs: AuditRecord*): Unit =
+    if (recs.nonEmpty) recs.toDS().coalesce(1).write.mode(SaveMode.Append).parquet(path)
 
   def all(): org.apache.spark.sql.DataFrame =
     if (exists) spark.read.parquet(path)

@@ -18,8 +18,19 @@ final case class TableLoadResult(
   *
   * Per table: archive prior landing files → extract (full, or
   * incremental rows past the audit watermark) → write JSON-lines to the
-  * landing zone → append one audit row. A failing table is audited
-  * FAILED and does not stop the run.
+  * landing zone → one audit row. A failing table is audited FAILED and
+  * does not stop the run.
+  *
+  * `run` loads a datasource's tables concurrently
+  * ([[graft.ops.Concurrently]]: each load is a few small jobs, so side
+  * by side they share the slots instead of queueing) and then appends
+  * every table's audit row in ONE write — concurrent appends into the
+  * audit directory would share its `_temporary` commit dir. Crash
+  * window: a table whose landing files were published before a crash
+  * that precedes the audit append has no audit row, so its watermark
+  * has not moved and the next run re-extracts the same rows (the
+  * landing archive keeps the earlier copy). `loadTable` called on its
+  * own appends its single row the same way.
   *
   * Scale notes: the extract-to-landing path is a single distributed
   * read→write with the incremental predicate pushed into the scan
@@ -40,7 +51,17 @@ final class IngestionRunner(
     logger: PipelineLogger,
     clock: () => Timestamp) {
 
+  /** Load one table and append its audit row. */
   def loadTable(entry: LoadConfigEntry, runDate: LocalDate): TableLoadResult = {
+    val (result, rec) = extract(entry, runDate)
+    audit.append(rec)
+    result
+  }
+
+  /** Archive, extract and land one table; returns its outcome and the
+    * audit row to append. */
+  private def extract(entry: LoadConfigEntry, runDate: LocalDate)
+      : (TableLoadResult, AuditRecord) = {
     val table = entry.tablename
     try {
       val archived = landing.archive(entry.datasource, table, runDate)
@@ -71,21 +92,25 @@ final class IngestionRunner(
         landing.publishStaged(entry.datasource, table)
         logger.info(s"Data written to landing zone ($n rows)", "write", table)
       }
-      audit.append(AuditRecord(entry.datasource, table, entry.loadtype, n, clock(), "SUCCESS"))
-      TableLoadResult(table, "SUCCESS", n, None)
+      (TableLoadResult(table, "SUCCESS", n, None),
+        AuditRecord(entry.datasource, table, entry.loadtype, n, clock(), "SUCCESS"))
     } catch {
       case e: Exception =>
         logger.error("Extraction failed", "extract", table, e.toString)
-        audit.append(AuditRecord(entry.datasource, table, entry.loadtype, 0L, clock(), "FAILED"))
-        TableLoadResult(table, "FAILED", 0L, Some(e.toString))
+        (TableLoadResult(table, "FAILED", 0L, Some(e.toString)),
+          AuditRecord(entry.datasource, table, entry.loadtype, 0L, clock(), "FAILED"))
     }
   }
 
-  /** The main per-table loop over active config rows (:236-257). */
+  /** The per-table loads over active config rows (:236-257), run
+    * concurrently; results in config order, audit rows in one append. */
   def run(config: Seq[LoadConfigEntry], datasource: String, runDate: LocalDate)
       : Seq[TableLoadResult] = {
     logger.info("Pipeline started", "start")
-    val results = LoadConfig.active(config, datasource).map(loadTable(_, runDate))
+    val loads = graft.ops.Concurrently.run(spark)(
+      LoadConfig.active(config, datasource).map(e => () => extract(e, runDate)))
+    audit.append(loads.map(_._2): _*)
+    val results = loads.map(_._1)
     if (results.forall(_.status == "SUCCESS"))
       logger.success("Pipeline completed successfully", "end")
     else

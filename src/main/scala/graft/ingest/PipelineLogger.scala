@@ -9,6 +9,11 @@ import org.apache.spark.sql.{SaveMode, SparkSession}
   * driver and appended in one write at `flush()` — the reference's
   * per-event remote insert (:84-90) is a designed-out anti-pattern
   * (SURVEY §4.3 #3).
+  *
+  * Safe to call from several threads (concurrent table loads log into
+  * one logger): appends, snapshots and the flush's take-and-clear all
+  * hold the buffer's lock, so no event is lost or written twice. A
+  * failed flush puts its events back ahead of any logged meanwhile.
   */
 final class PipelineLogger(spark: SparkSession, path: String, clock: () => Timestamp) {
   import spark.implicits._
@@ -17,7 +22,9 @@ final class PipelineLogger(spark: SparkSession, path: String, clock: () => Times
 
   def log(eventType: String, message: String, step: String,
       table: String = "", errorTrace: String = ""): Unit = {
-    buf += LogEvent(clock(), eventType, message, step, table, errorTrace)
+    val e = LogEvent(clock(), eventType, message, step, table, errorTrace)
+    buf.synchronized { buf += e }
+    ()
   }
 
   def info(msg: String, step: String, table: String = ""): Unit =
@@ -27,11 +34,17 @@ final class PipelineLogger(spark: SparkSession, path: String, clock: () => Times
   def error(msg: String, step: String, table: String, trace: String): Unit =
     log("ERROR", msg, step, table, trace)
 
-  def pending: Seq[LogEvent] = buf.toSeq
+  def pending: Seq[LogEvent] = buf.synchronized(buf.toSeq)
 
   /** Append all buffered events as one write; clears the buffer. */
-  def flush(): Unit = if (buf.nonEmpty) {
-    buf.toSeq.toDS().write.mode(SaveMode.Append).parquet(path)
-    buf.clear()
+  def flush(): Unit = {
+    val batch = buf.synchronized { val b = buf.toSeq; buf.clear(); b }
+    if (batch.nonEmpty)
+      try batch.toDS().write.mode(SaveMode.Append).parquet(path)
+      catch {
+        case e: Throwable =>
+          buf.synchronized { buf.prependAll(batch) }
+          throw e
+      }
   }
 }

@@ -6,14 +6,16 @@ import java.sql.Timestamp
 import java.time.LocalDate
 
 import graft.health.HealthPipeline
+import graft.ingest.{PipelineRunner, Stage}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.TimestampType
+import org.apache.spark.sql.types.{DoubleType, TimestampType}
 
 /** End-to-end medallion over the reference's own seed data (gold row
   * counts, quarantine counts, audit trail), plus a synthetic multi-run
   * spec pinning watermark-incremental extraction and the SCD2
   * close-then-insert run-over-run semantics (SURVEY §5.2 items 2-3,
-  * §7.4 item 4).
+  * §7.4 item 4), and a synthetic twin of the decimal-mode drift
+  * refusal that runs without the reference data.
   */
 class HealthPipelineSpec extends SparkSpec {
 
@@ -187,5 +189,78 @@ class HealthPipelineSpec extends SparkSpec {
       .head().getLong(0) shouldBe 0
     silverPatients.count() shouldBe 4
     silverPatients.filter(col("is_current")).count() shouldBe 3
+  }
+
+  test("flipping decimalMoney over standing history fails silver; other entities still publish") {
+    val root = tmpDir("health-drift")
+    val srcDir = s"$root/emr/hospital-a"
+    Files.createDirectories(Paths.get(srcDir))
+    Files.createDirectories(Paths.get(s"$root/cptcodes"))
+    def write(path: String, lines: String*): Unit =
+      Files.write(Paths.get(path), lines.mkString("\n").getBytes(StandardCharsets.UTF_8))
+    def writeDay(p2Address: String, p2Modified: String, t1Amount: String,
+        t1Modified: String, cpt: String*): Unit = {
+      write(s"$srcDir/patients.csv",
+        "PatientID,FirstName,LastName,MiddleName,SSN,PhoneNumber,Gender,DOB,Address,ModifiedDate",
+        "P1,Ann,Ray,A,s1,ph1,F,1990-01-01,Addr1,2024-01-05",
+        s"P2,Bob,Lee,B,s2,ph2,M,1991-02-02,$p2Address,$p2Modified")
+      write(s"$srcDir/transactions.csv",
+        "TransactionID,EncounterID,PatientID,ProviderID,DeptID,VisitDate,ServiceDate,PaidDate," +
+          "VisitType,Amount,AmountType,PaidAmount,ClaimID,PayorID,ProcedureCode,ICDCode," +
+          "LineOfBusiness,MedicaidID,MedicareID,InsertDate,ModifiedDate",
+        s"T1,E1,P1,PROV1,DEPT1,2024-01-02,2024-01-02,2024-01-09,Outpatient,$t1Amount,Co-pay," +
+          s"10.00,C1,PAY1,99213,I10,Commercial,MC1,MR1,2024-01-02,$t1Modified",
+        "T2,E2,P2,PROV1,DEPT1,2024-02-03,2024-02-03,2024-02-10,Inpatient,250.75,Insurance," +
+          "200.00,C2,PAY1,99214,E11,Medicare,MC2,MR2,2024-02-03,2024-02-03")
+      write(s"$root/cptcodes/cptcodes.csv",
+        "Procedure Code Category,CPT Codes,Procedure Code Descriptions,Code Status" +: cpt: _*)
+    }
+    val cfg = s"$root/load_config.csv"
+    write(cfg, "database,datasource,tablename,loadtype,watermark,is_active,targetpath",
+      "db,hospital_a_db,patients,Incremental,ModifiedDate,1,hospital-a",
+      "db,hospital_a_db,transactions,Incremental,ModifiedDate,1,hospital-a")
+
+    var now = Timestamp.valueOf("2025-01-01 00:00:00")
+    val pipe = new HealthPipeline(spark, root, cfg, s"$root/work", () => now)
+    def silverRun(): Seq[graft.ingest.StageResult] = {
+      pipe.ingest("hospital_a_db", srcDir, runDate)
+      pipe.loadBronzeCpt()
+      PipelineRunner.run(Seq(Stage("silver", () => pipe.runSilver())), pipe.logger,
+        retries = 0)
+    }
+
+    // day 1, default (double) mode: standing float history
+    writeDay("Addr2", "2024-02-06", "120.50", "2024-01-02",
+      "Medicine,99213,Office visit,Active", "Medicine,99214,Office visit,Active")
+    silverRun().map(r => (r.status, r.error)) shouldBe Seq(("SUCCESS", None))
+    pipe.silver("transactions").schema("Amount").dataType shouldBe DoubleType
+
+    // day 2 in decimal mode: P2, T1 and the CPT list change
+    now = Timestamp.valueOf("2025-02-01 00:00:00")
+    writeDay("Addr2-NEW", "2025-01-20", "130.50", "2025-01-20",
+      "Medicine,99213,Office visit,Active", "Medicine,99214,Office visit,Active",
+      "Surgery,10060,Drainage,Active")
+    spark.conf.set(HealthPipeline.DecimalMoneyKey, "true")
+    try {
+      val silverStage = silverRun().find(_.name == "silver").get
+      silverStage.status shouldBe "FAILED"
+      silverStage.error.get should include("decimalMoney")
+    } finally spark.conf.unset(HealthPipeline.DecimalMoneyKey)
+
+    // transactions: the refused merge left the float history untouched
+    val tx = pipe.silver("transactions")
+    tx.schema("Amount").dataType shouldBe DoubleType
+    tx.count() shouldBe 2
+    tx.filter(col("Amount") === 120.5).count() shouldBe 1
+    // patients (before transactions in entity order) and cpt_codes
+    // (after it) both merged day 2 and published readable tables
+    val patients = pipe.silver("patients")
+    patients.filter(col("is_current")).select("SRC_PatientID")
+      .collect().map(_.getString(0)).toSeq shouldBe Seq("P1")
+    patients.filter(!col("is_current")).select("Address")
+      .collect().map(_.getString(0)).toSeq shouldBe Seq("Addr2")
+    val cpt = pipe.silver("cpt_codes")
+    cpt.count() shouldBe 3
+    cpt.filter(col("cpt_codes") === "10060" && col("is_current")).count() shouldBe 1
   }
 }

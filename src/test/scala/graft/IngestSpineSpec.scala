@@ -152,6 +152,28 @@ class IngestionRunnerSpec extends SparkSpec {
     audit.all().filter(col("status") === "SUCCESS").count() shouldBe 1
   }
 
+  test("a run over three tables, one failing, appends its audit rows as one file") {
+    val src = tmpDir("ing-src")
+    writeCsv(src, "alpha", Seq("id,ModifiedDate", "1,2024-01-01"))
+    writeCsv(src, "beta", Seq("id,ModifiedDate", "2,2024-01-01", "3,2024-02-01"))
+    val work = tmpDir("ing-work")
+    val (runner, audit, _, _) = mkRunner(src, work, fixed("2025-01-01 00:00:00"))
+    audit.append(AuditRecord("src", "older", "Full", 1, fixed("2024-01-01 00:00:00"), "SUCCESS"))
+    def parts = Option(new java.io.File(s"$work/audit").listFiles()).toSeq.flatten
+      .map(_.getName).filter(n => n.startsWith("part-") && n.endsWith(".parquet")).toSet
+    val before = parts
+    val res = runner.run(Seq(entry("alpha"), entry("missing"), entry("beta")), "src", day)
+    res.map(r => (r.table, r.status, r.records)) shouldBe
+      Seq(("alpha", "SUCCESS", 1L), ("missing", "FAILED", 0L), ("beta", "SUCCESS", 2L))
+    val added = parts -- before
+    added should have size 1
+    val rows = spark.read.parquet(s"$work/audit/${added.head}")
+      .select("tablename", "status", "record_count").collect()
+      .map(r => (r.getString(0), r.getString(1), r.getLong(2))).sorted
+    rows.toSeq shouldBe
+      Seq(("alpha", "SUCCESS", 1L), ("beta", "SUCCESS", 2L), ("missing", "FAILED", 0L))
+  }
+
   test("inactive and other-datasource config rows are skipped") {
     val src = tmpDir("ing-src")
     writeCsv(src, "alpha", Seq("id,ModifiedDate", "1,2024-01-01"))
@@ -161,6 +183,25 @@ class IngestionRunnerSpec extends SparkSpec {
       entry("alpha").copy(isActive = false, tablename = "inactive"),
       entry("alpha").copy(datasource = "other", tablename = "foreign"))
     runner.run(cfg, "src", day).map(_.table) shouldBe Seq("alpha")
+  }
+}
+
+class PipelineLoggerSpec extends SparkSpec {
+
+  test("8 threads logging 100 events each: one flush writes exactly 800 rows") {
+    val path = tmpDir("plog") + "/logs"
+    val logger = new PipelineLogger(spark, path, () => Timestamp.valueOf("2025-01-01 00:00:00"))
+    val threads = (0 until 8).map(t => new Thread(() =>
+      (0 until 100).foreach(i => logger.info(s"event $i", "step", s"t$t"))))
+    threads.foreach(_.start())
+    threads.foreach(_.join())
+    logger.pending should have size 800
+    logger.flush()
+    logger.pending shouldBe empty
+    logger.flush() // nothing left: no second write
+    val written = spark.read.parquet(path)
+    written.count() shouldBe 800
+    written.groupBy("tablename").count().collect().map(_.getLong(1)).toSet shouldBe Set(100L)
   }
 }
 
