@@ -7,15 +7,18 @@ import org.apache.spark.sql.functions._
   * (/root/reference/src/pipelines/transforms/gold.sql) over the health
   * silver tables, column-for-column.
   *
-  * Scale notes: providers/departments are dim-sized and broadcast; the
-  * two "performance" marts reproduce the reference's own join shapes —
-  * including their deliberate fan-out (encounters × transactions
-  * multiply per provider/department before aggregation, gold.sql:
-  * 121-127, 157-160). That shape is faithful but quadratic per key; at
-  * real scale the right query pre-aggregates each fact to one row per
-  * key before joining — noted here, not silently "fixed", because the
-  * mart's numbers (COUNT DISTINCT over the fan-out) are only defined by
-  * the reference's shape.
+  * Scale notes: providers/departments are dim-sized and broadcast. The
+  * two "performance" marts are defined by the reference's fan-out
+  * join shapes (gold.sql:121-127, 157-160): encounters × transactions
+  * multiply per provider/department before aggregation, so the sums
+  * count each transaction once per matching encounter row while the
+  * COUNT DISTINCTs do not. `department_performance` keeps those
+  * numbers but restates them from per-key aggregates — each fact is
+  * reduced to one row per department key, then joined — so it never
+  * materializes the product. `provider_performance` keeps the
+  * fan-out shape: its provider ids ('H1-'/'H2-' prefixed) match no
+  * fact row in the reference data or its generated twins, so its
+  * joins stay empty and a restatement would buy nothing there.
   */
 object HealthGold {
 
@@ -84,16 +87,43 @@ object HealthGold {
   }
 
   /** department_performance (gold.sql:135-162): split-key joins to both
-    * facts, quarantine filter on the dim, AVG KPI (gold.sql:155). */
-  def departmentPerformance(dept: DataFrame, e: DataFrame, t: DataFrame): DataFrame =
-    dept.filter(col("is_quarantined") === false)
-      .join(e, split(dept("Dept_Id"), "-").getItem(0) === e("DepartmentID"), "left")
-      .join(t, split(dept("Dept_Id"), "-").getItem(0) === t("DeptID"), "left")
-      .groupBy(dept("Dept_Id"), dept("Name").as("DepartmentName"))
+    * facts, quarantine filter on the dim, AVG KPI (gold.sql:155).
+    *
+    * The reference's fan-out is restated, not materialized: a dept
+    * row with key k meets every encounter row of k (or one NULL row)
+    * times every transaction row of k, so each transaction appears
+    * `dept rows × max(encounter rows of k, 1)` times in its group.
+    * The sums scale by that multiplicity; the distinct counts and the
+    * average are the per-key ones (repetition changes neither, and one
+    * group's dept rows share its key). The products are cast back to
+    * the plain SUM's type, so decimal mode keeps its exact cents at
+    * the reference's precision. */
+  def departmentPerformance(dept: DataFrame, e: DataFrame, t: DataFrame): DataFrame = {
+    val enc = e.groupBy(col("DepartmentID").as("e_key"))
+      .agg(countDistinct(col("Encounter_Key")).as("e_keys"), count(lit(1)).as("e_rows"))
+    val paid = coalesce(t("PaidAmount"), z(t, "PaidAmount"))
+    val tx = t.groupBy(col("DeptID").as("t_key"))
       .agg(
-        countDistinct(e("Encounter_Key")).as("TotalEncounters"),
-        countDistinct(t("Transaction_Key")).as("TotalTransactions"),
-        sum(coalesce(t("Amount"), z(t, "Amount"))).as("TotalBilledAmount"),
-        sum(coalesce(t("PaidAmount"), z(t, "PaidAmount"))).as("TotalPaidAmount"),
-        avg(coalesce(t("PaidAmount"), z(t, "PaidAmount"))).as("AvgPaymentPerTransaction"))
+        countDistinct(col("Transaction_Key")).as("t_keys"),
+        sum(coalesce(t("Amount"), z(t, "Amount"))).as("t_billed"),
+        sum(paid).as("t_paid"),
+        avg(paid).as("t_avg_paid"))
+    val d = dept.filter(col("is_quarantined") === false)
+      .groupBy(col("Dept_Id"), col("Name").as("DepartmentName"))
+      .agg(count(lit(1)).as("d_rows"))
+    val copies = col("d_rows") * coalesce(col("e_rows"), lit(1L))
+    def restated(c: String) =
+      coalesce((col(c) * copies).cast(tx.schema(c).dataType), z(tx, c))
+    val key = split(d("Dept_Id"), "-").getItem(0)
+    d.join(enc, key === enc("e_key"), "left")
+      .join(tx, key === tx("t_key"), "left")
+      .select(
+        col("Dept_Id"),
+        col("DepartmentName"),
+        coalesce(col("e_keys"), lit(0L)).as("TotalEncounters"),
+        coalesce(col("t_keys"), lit(0L)).as("TotalTransactions"),
+        restated("t_billed").as("TotalBilledAmount"),
+        restated("t_paid").as("TotalPaidAmount"),
+        coalesce(col("t_avg_paid"), z(tx, "t_avg_paid")).as("AvgPaymentPerTransaction"))
+  }
 }

@@ -29,9 +29,11 @@ import org.apache.spark.sql.types.{DataType, DoubleType, LongType, TimestampType
   *  - claims are tagged `'hosa'` wholesale at silver (silver.sql:564)
   *    even though bronze carries per-file hosa/hosb tags — reproduced
   *    as-is. Since the two claim files share the full ClaimID range,
-  *    run 1 inserts two current rows per Claim_Key; this is the
-  *    reference's own behavior (its BigQuery MERGE would error on the
-  *    SECOND daily run — an upstream defect, documented, not repaired).
+  *    run 1 inserts two current rows per Claim_Key, and later runs
+  *    close a duplicate of each ([[Scd2Merge]]'s duplicate-key note);
+  *    this is the reference's own behavior (its BigQuery MERGE would
+  *    error on the SECOND daily run — an upstream defect, documented,
+  *    not repaired).
   *  - SCD2 compare-column lists mirror each MERGE's predicate,
   *    including the quirk that claims omit SRC_InsertDate from change
   *    detection (silver.sql:568-592) while transactions include it

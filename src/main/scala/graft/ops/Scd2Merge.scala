@@ -28,18 +28,28 @@ import org.apache.spark.sql.functions._
   *      NULL-naturalKey rows, so NULL surrogate keys DO reach this
   *      operator in the health pipeline.)
   *
-  * Caller contract: `source` must be key-unique. BigQuery MERGE fails
-  * loudly on a multi-matched target row ("UPDATE/MERGE must match at
-  * most one source row"); a relational join cannot detect that without
-  * an extra pass, so a duplicate-key source here would instead emit the
-  * matched target row once per duplicate. Every in-repo caller feeds a
-  * QualityStage snapshot, which is distinct per run.
+  * Duplicate source keys: BigQuery MERGE fails loudly on a
+  * multi-matched target row ("UPDATE/MERGE must match at most one
+  * source row"); a relational join cannot detect that without an extra
+  * pass, so here each matched current row is emitted once per matching
+  * source row instead. `claims` reaches the merge this way: both claim
+  * files share one ClaimID range and silver tags both `'hosa'`, so its
+  * source carries two rows per `Claim_Key`. Run 1 inserts both as
+  * current rows; on a later run whose source carries both again, each
+  * current row meets both source rows, stays current against the one
+  * equal to it and is closed against the other — two current rows per
+  * key plus a closed duplicate of each (the behaviour `HealthSilver`'s
+  * notes describe).
   *
-  * Scale notes: the single wide operation is one full-outer join on the
-  * business key — a keyed sort-merge join whose shuffle is unavoidable
-  * and linear in |target ∪ source|. No driver-side collection, no
+  * Scale notes: the single wide operation is one full-outer join of
+  * the current rows with the source on the business key — a keyed
+  * sort-merge join whose shuffle is unavoidable and linear in
+  * |current ∪ source|. One projection of `when` expressions routes
+  * each joined row to its closed, untouched or inserted form, so the
+  * join is planned and run once. No driver-side collection, no
   * windowing over the whole table; history rows bypass the join
-  * entirely (union, narrow). AQE handles skewed keys.
+  * entirely (union, narrow), so the shuffle does not grow with
+  * history. AQE handles skewed keys.
   *
   * @param keyCols     business-key columns (present in both sides)
   * @param compareCols change-detection columns (present in both sides)
@@ -84,33 +94,22 @@ final case class Scd2Merge(
     val changed = compareCols
       .map(c => col(s"t_$c") =!= col(s"s_$c"))
       .reduce(_ || _)
+    // MATCHED AND changed → close the current row; otherwise a target
+    // row (matched unchanged, or source-absent) passes untouched, and a
+    // source-only row (NOT MATCHED) inserts as the new current version.
+    // Every joined row is exactly one of the three, so one projection
+    // routes them all.
+    val closes = inTarget && inSource && coalesce(changed, lit(false))
 
-    def tCols(over: Map[String, Column] = Map.empty): Seq[Column] =
-      outCols.map(c => over.getOrElse(c, col(s"t_$c")).as(c)).toSeq
+    val routed = outCols.map(c => (c match {
+      case InsertedDate => when(inTarget, col(s"t_$c")).otherwise(clock)
+      case ModifiedDate => when(inTarget && !closes, col(s"t_$c")).otherwise(clock)
+      case IsCurrent    => !closes // every target row here was current
+      case _            => when(inTarget, col(s"t_$c")).otherwise(col(s"s_$c"))
+    }).as(c))
 
-    // MATCHED AND changed → close the current row.
-    val closed = joined
-      .filter(inTarget && inSource && coalesce(changed, lit(false)))
-      .select(tCols(Map(IsCurrent -> lit(false), ModifiedDate -> clock)): _*)
-
-    // MATCHED unchanged, or source-absent → untouched current row.
-    val untouched = joined
-      .filter(inTarget && (!inSource || !coalesce(changed, lit(false))))
-      .select(tCols(): _*)
-
-    // NOT MATCHED → insert as the new current version.
-    val inserted = joined
-      .filter(!inTarget)
-      .select(outCols.map {
-        case InsertedDate | ModifiedDate => clock
-        case IsCurrent                   => lit(true)
-        case c                           => col(s"s_$c")
-      }.zip(outCols).map { case (c, n) => c.as(n) }.toSeq: _*)
-
-    closed
-      .unionByName(untouched)
-      .unionByName(inserted)
-      .unionByName(history.select(outCols.map(col).toSeq: _*))
+    joined.select(routed: _*)
+      .unionByName(history.select(outCols.map(col): _*))
   }
 }
 

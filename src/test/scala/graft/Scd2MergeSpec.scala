@@ -142,4 +142,19 @@ class Scd2MergeSpec extends SparkSpec {
     nullRows.foreach(_.getAs[Boolean]("is_current") shouldBe true)
     out.filter(col("k") === "p1").count() shouldBe 1
   }
+
+  test("duplicate source keys: each current row is emitted once per matching source row") {
+    // claims' shape: two current rows for one key (run 1 inserted both)
+    // and a source that carries both versions again
+    val tgt = target(
+      ("c1", "Ann", "Oslo", t0, t0, true),
+      ("c1", "Ann", "Bergen", t0, t0, true))
+    val out = merge(t1)(tgt, source(("c1", "Ann", "Oslo"), ("c1", "Ann", "Bergen")))
+    // A meets A (untouched) and B (closed); B meets A (closed) and B
+    // (untouched): each version once current and once closed
+    out.select("city", "is_current", "modified_date")
+      .as[(String, Boolean, Timestamp)].collect().sortBy(r => (r._1, r._2)) shouldBe Array(
+        ("Bergen", false, t1), ("Bergen", true, t0),
+        ("Oslo", false, t1), ("Oslo", true, t0))
+  }
 }

@@ -1,7 +1,9 @@
 package graft
 
+import java.sql.Timestamp
+
 import graft.ops.Scd2Merge
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
@@ -18,11 +20,15 @@ import org.scalacheck.rng.Seed
   *  4. convergence: merging the same (null-free) snapshot twice makes
   *     every snapshot key's current row carry the snapshot values —
   *     the close-only quirk delays the insert by exactly one run,
-  *     never more.
+  *     never more;
+  *  5. the one-join merge returns the same multiset of rows as the
+  *     three-branch form it replaced (kept below as
+  *     `Scd2PropertySpec.threeBranchMerge`), on every step and on
+  *     crafted edge inputs.
   */
 class Scd2PropertySpec extends SparkSpec {
 
-  import Scd2PropertySpec.Snap
+  import Scd2PropertySpec.{Snap, threeBranchMerge}
   import spark.implicits._
 
   private val snapGen: Gen[List[List[Snap]]] = {
@@ -46,6 +52,12 @@ class Scd2PropertySpec extends SparkSpec {
     .withColumn(Scd2Merge.ModifiedDate, lit(null).cast("timestamp"))
     .withColumn(Scd2Merge.IsCurrent, lit(true))
 
+  private def sameRows(got: DataFrame, want: DataFrame): Unit = {
+    got.schema.map(f => f.name -> f.dataType) shouldBe want.schema.map(f => f.name -> f.dataType)
+    got.exceptAll(want).count() shouldBe 0
+    want.exceptAll(got).count() shouldBe 0
+  }
+
   test("invariants hold across randomized snapshot sequences") {
     (1L to 6L).foreach { seed =>
       val snaps = sample(seed)
@@ -53,7 +65,11 @@ class Scd2PropertySpec extends SparkSpec {
       var prevCount = 0L
       val seen = scala.collection.mutable.Set[Long]()
       snaps.foreach { snap =>
-        target = merge(target, snap.toDF()).cache()
+        val next = merge(target, snap.toDF()).cache()
+        withClue(s"seed=$seed vs three-branch: ") {
+          sameRows(next, threeBranchMerge(merge)(target, snap.toDF()))
+        }
+        target = next
         seen ++= snap.map(_.id)
 
         val perKeyCurrent = target.filter(col(Scd2Merge.IsCurrent))
@@ -70,7 +86,12 @@ class Scd2PropertySpec extends SparkSpec {
 
       // convergence: double-merge of the final snapshot
       val last = snaps.last
-      target = merge(merge(target, last.toDF()), last.toDF())
+      val once = merge(target, last.toDF()).cache()
+      withClue(s"seed=$seed vs three-branch: ") {
+        sameRows(once, threeBranchMerge(merge)(target, last.toDF()))
+        sameRows(merge(once, last.toDF()), threeBranchMerge(merge)(once, last.toDF()))
+      }
+      target = merge(once, last.toDF())
       val current = target.filter(col(Scd2Merge.IsCurrent))
         .select("id", "a", "b").as[(Long, String, Long)].collect()
         .map(r => r._1 -> (r._2, r._3)).toMap
@@ -81,8 +102,92 @@ class Scd2PropertySpec extends SparkSpec {
       }
     }
   }
+
+  test("the one-join merge equals the three-branch merge on crafted edge inputs") {
+    val t0 = Timestamp.valueOf("2024-01-01 00:00:00")
+    def tgt(rows: (Option[Long], String, Option[Long], Boolean)*): DataFrame =
+      rows.map { case (id, a, b, cur) => (id, a, b, t0, t0, cur) }
+        .toDF("id", "a", "b", Scd2Merge.InsertedDate, Scd2Merge.ModifiedDate, Scd2Merge.IsCurrent)
+    def src(rows: (Option[Long], String, Option[Long])*): DataFrame = rows.toDF("id", "a", "b")
+    // StreamingIngest's first-touch target: the batch's columns plus
+    // NULL timestamps cast to timestamp, no rows
+    def bootstrap(batch: DataFrame): DataFrame = batch.limit(0)
+      .withColumn(Scd2Merge.InsertedDate, lit(null).cast("timestamp"))
+      .withColumn(Scd2Merge.ModifiedDate, lit(null).cast("timestamp"))
+      .withColumn(Scd2Merge.IsCurrent, lit(true))
+    val cases = Seq(
+      "NULL business keys on both sides" -> (
+        tgt((None, "x", Some(1L), true), (None, "x", Some(1L), false), (Some(1L), "x", Some(1L), true)),
+        src((None, "x", Some(1L)), (None, "y", Some(2L)), (Some(1L), "z", Some(1L)))),
+      "NULL->value and value->NULL compare columns" -> (
+        tgt((Some(1L), null, Some(1L), true), (Some(2L), "x", None, true), (Some(3L), "x", Some(3L), true)),
+        src((Some(1L), "x", Some(1L)), (Some(2L), "x", Some(2L)), (Some(3L), null, Some(4L)))),
+      "a history-only key comes back" -> (
+        tgt((Some(1L), "x", Some(1L), false), (Some(1L), "y", Some(1L), false), (Some(2L), "x", Some(2L), true)),
+        src((Some(1L), "y", Some(1L)), (Some(2L), "x", Some(2L)))),
+      "duplicate source keys over two current rows" -> (
+        tgt((Some(1L), "x", Some(1L), true), (Some(1L), "y", Some(1L), true)),
+        src((Some(1L), "x", Some(1L)), (Some(1L), "y", Some(1L))))) :+ {
+      val batch = src((Some(1L), "x", Some(1L)), (None, "y", None))
+      "bootstrap target" -> (bootstrap(batch), batch)
+    }
+    cases.foreach { case (name, (t, s)) =>
+      withClue(s"$name: ") { sameRows(merge(t, s), threeBranchMerge(merge)(t, s)) }
+    }
+  }
 }
 
 object Scd2PropertySpec {
   final case class Snap(id: Long, a: String, b: Long)
+
+  /** The merge as it was before the one-join routing: three filtered
+    * copies of the full outer join (closed, untouched, inserted) and
+    * their union. Kept only as the reference the new form must equal. */
+  def threeBranchMerge(m: Scd2Merge)(target: DataFrame, source: DataFrame): DataFrame = {
+    import Scd2Merge._
+    import m.{clock, compareCols, keyCols}
+    val outCols = keyCols ++ compareCols ++ Seq(InsertedDate, ModifiedDate, IsCurrent)
+
+    val current = target.filter(col(IsCurrent))
+    val history = target.filter(!col(IsCurrent))
+
+    val t = current.select(current.columns.map(c => col(c).as(s"t_$c")).toSeq
+      :+ lit(true).as("t_present"): _*)
+    val s = source.select(
+      (keyCols ++ compareCols).map(c => source(c).as(s"s_$c")).toSeq
+        :+ lit(true).as("s_present"): _*)
+
+    val joinCond = keyCols.map(k => col(s"t_$k") === col(s"s_$k")).reduce(_ && _)
+    val joined = t.join(s, joinCond, "full_outer")
+
+    val inTarget = col("t_present").isNotNull
+    val inSource = col("s_present").isNotNull
+    val changed = compareCols
+      .map(c => col(s"t_$c") =!= col(s"s_$c"))
+      .reduce(_ || _)
+
+    def tCols(over: Map[String, Column] = Map.empty): Seq[Column] =
+      outCols.map(c => over.getOrElse(c, col(s"t_$c")).as(c)).toSeq
+
+    val closed = joined
+      .filter(inTarget && inSource && coalesce(changed, lit(false)))
+      .select(tCols(Map(IsCurrent -> lit(false), ModifiedDate -> clock)): _*)
+
+    val untouched = joined
+      .filter(inTarget && (!inSource || !coalesce(changed, lit(false))))
+      .select(tCols(): _*)
+
+    val inserted = joined
+      .filter(!inTarget)
+      .select(outCols.map {
+        case InsertedDate | ModifiedDate => clock
+        case IsCurrent                   => lit(true)
+        case c                           => col(s"s_$c")
+      }.zip(outCols).map { case (c, n) => c.as(n) }.toSeq: _*)
+
+    closed
+      .unionByName(untouched)
+      .unionByName(inserted)
+      .unionByName(history.select(outCols.map(col).toSeq: _*))
+  }
 }
