@@ -3,9 +3,12 @@ package graft.ops
 import org.apache.hadoop.fs.{FileSystem, Path}
 
 /** Crash-safe write-temp-then-swap for parquet table directories —
-  * shared by the SCD2 streaming target (StreamingIngest), the health
-  * medallion's silver/gold publishes (HealthPipeline), and small-files
-  * compaction (Compaction).
+  * shared by the streaming state layer (`graft.streaming.ParquetState`:
+  * every whole-state streaming twin's fold, the SCD2 streaming target
+  * of StreamingIngest and StreamingRollingMau's counts), the health
+  * medallion's silver/gold publishes (HealthPipeline), small-files
+  * compaction (Compaction) and the landing zone's staged-extract
+  * promotion (LandingZone, `publish` only).
   *
   * The swap itself (delete dst → rename tmp over it) has an
   * unavoidable window on filesystems without atomic directory

@@ -31,13 +31,13 @@ import org.apache.spark.sql.types.StructType
   *     interrupted batch, marker included, before anything observes
   *     the state); an uncommitted one is discarded (state was never
   *     touched). After recovery a batch is therefore either FULLY
-  *     applied or not at all, and the applied-check ([[applied]]) is
-  *     one partition-pruned read of the single marker bucket
-  *     (`batchId mod B`), never a state scan.
+  *     applied or not at all, and the applied-check
+  *     ([[ParquetState.applied]]) is one partition-pruned read of the
+  *     single marker bucket (`batchId mod B`), never a state scan.
   *
-  * State schema contract (the StreamingCountMin row-kinds convention,
-  * bucketed): data columns include `kind` (STRING: 'c' cells / 'b'
-  * markers) and `batch_id` (BIGINT, markers only); `bkt` (BIGINT) is
+  * State schema contract ([[ParquetState]]'s row kinds, bucketed):
+  * data columns include `kind` (STRING: 'c' cells / 'b' markers) and
+  * `batch_id` (BIGINT, markers only); `bkt` (BIGINT) is
   * the partition directory, restored on read via basePath. The bucket
   * count must stay FIXED for a given state dir — re-sharding a live
   * state is q265's migration manifest, not a config flip.
@@ -46,9 +46,6 @@ import org.apache.spark.sql.types.StructType
   * [[StreamingCupedBucketed]] (q250 cells).
   */
 private[graft] object BucketedState {
-
-  private[graft] def fsOf(spark: SparkSession, dir: String): FileSystem =
-    new Path(dir).getFileSystem(spark.sessionState.newHadoopConf())
 
   private def tmpRoot(stateDir: String): Path =
     new Path(stateDir + "__batch_tmp")
@@ -101,7 +98,7 @@ private[graft] object BucketedState {
   private[graft] def readBuckets(
       spark: SparkSession, stateDir: String, ddl: String,
       only: Option[Seq[Long]]): DataFrame = {
-    val fs = fsOf(spark, stateDir)
+    val fs = ParquetState.fsOf(spark, stateDir)
     val root = new Path(stateDir)
     val dirs =
       if (!fs.exists(root)) Array.empty[String]
@@ -124,38 +121,13 @@ private[graft] object BucketedState {
         .option("basePath", stateDir).parquet(dirs.toIndexedSeq: _*)
   }
 
-  /** True when `batchId`'s marker is already in its marker bucket —
-    * after [[recoverPending]] this is equivalent to "fully applied"
-    * (publishes can no longer be half-done). */
-  private[graft] def applied(
-      spark: SparkSession, stateDir: String, ddl: String,
-      batchId: Long, buckets: Long): Boolean =
-    readBuckets(spark, stateDir, ddl, Some(Seq(markerBucket(batchId, buckets))))
-      .filter(col("kind") === "b" && col("batch_id") === batchId)
-      .limit(1).count() > 0
-
-  /** One marker row of the state schema: every column null except
-    * kind='b', batch_id, bkt — derived from the DDL so clients never
-    * hand-build null templates. */
-  private def markerRow(
-      spark: SparkSession, ddl: String, batchId: Long, bkt: Long): DataFrame = {
-    val schema = StructType.fromDDL(ddl + ", bkt BIGINT")
-    val values = schema.fields.map(_.name match {
-      case "kind" => "b"
-      case "batch_id" => batchId
-      case "bkt" => bkt
-      case _ => null
-    })
-    spark.createDataFrame(
-      java.util.Arrays.asList(Row.fromSeq(values.toIndexedSeq)), schema)
-  }
-
   /** Stage one micro-batch's update. `batchCells` must carry the data
     * columns plus `bkt`; `mergeCells(oldTouchedRows, batchCells)` must
     * return the COMPLETE merged kind='c' relation for the touched
-    * buckets (all data columns + bkt; `oldTouchedRows` arrives
-    * pre-filtered to kind='c', without the kind/batch_id columns).
-    * Markers are handled here generically: the touched buckets'
+    * buckets (`kind`, data columns + bkt, conformed to the DDL by
+    * [[ParquetState.conform]]; `oldTouchedRows` arrives pre-filtered
+    * to kind='c', without the kind/batch_id columns). Markers are
+    * handled here generically: the touched buckets'
     * existing markers are preserved and the new applied marker is
     * appended in bucket `batchId mod B`. Returns false when the batch
     * was already applied (nothing staged). Reads ONLY the touched
@@ -164,27 +136,19 @@ private[graft] object BucketedState {
       spark: SparkSession, stateDir: String, ddl: String, buckets: Long,
       batchId: Long, batchCells: DataFrame,
       mergeCells: (DataFrame, DataFrame) => DataFrame): Boolean = {
-    if (applied(spark, stateDir, ddl, batchId, buckets)) return false
-
     val mb = markerBucket(batchId, buckets)
+    if (ParquetState.applied(readBuckets(spark, stateDir, ddl, Some(Seq(mb))), batchId))
+      return false
+
     // control-plane: ≤B touched bucket ids (+ the marker's bucket)
     val touched = (batchCells.select("bkt").distinct().collect()
       .map(_.getLong(0)) :+ mb).distinct.toSeq
     val old = readBuckets(spark, stateDir, ddl, Some(touched))
     val schema = StructType.fromDDL(ddl + ", bkt BIGINT")
-    val dataCols = schema.fieldNames.filterNot(
-      n => n == "kind" || n == "batch_id" || n == "bkt")
-
-    val merged = mergeCells(
-      old.filter(col("kind") === "c")
-        .select(dataCols.map(col).toIndexedSeq: _*),
-      batchCells)
-    val markers = old.filter(col("kind") === "b")
-      .select(schema.fieldNames.map(col).toIndexedSeq: _*)
-      .unionByName(markerRow(spark, ddl, batchId, mb))
-
-    merged.select(schema.fieldNames.map(col).toIndexedSeq: _*)
-      .unionByName(markers)
+    val merged = mergeCells(ParquetState.ofKind(old, "c").drop("bkt"), batchCells)
+    ParquetState.conform(merged, schema)
+      .unionByName(old.filter(col("kind") === "b"))
+      .unionByName(ParquetState.markerRow(spark, schema, batchId, "bkt" -> mb))
       .write.mode("overwrite").partitionBy("bkt")
       .parquet(tmpRoot(stateDir).toString)
     true
@@ -197,7 +161,7 @@ private[graft] object BucketedState {
       spark: SparkSession, stateDir: String, ddl: String, buckets: Long,
       batchId: Long, batchCells: DataFrame,
       mergeCells: (DataFrame, DataFrame) => DataFrame): Boolean = {
-    val fs = fsOf(spark, stateDir)
+    val fs = ParquetState.fsOf(spark, stateDir)
     recoverPending(fs, stateDir)
     if (!stageBatch(spark, stateDir, ddl, buckets, batchId, batchCells,
         mergeCells)) return false
@@ -208,11 +172,7 @@ private[graft] object BucketedState {
   /** The maintained cells (all buckets), data columns only. */
   private[graft] def cells(
       spark: SparkSession, stateDir: String, ddl: String): DataFrame = {
-    recoverPending(fsOf(spark, stateDir), stateDir)
-    val dataCols = StructType.fromDDL(ddl).fieldNames.filterNot(
-      n => n == "kind" || n == "batch_id")
-    readBuckets(spark, stateDir, ddl, None)
-      .filter(col("kind") === "c")
-      .select(dataCols.map(col).toIndexedSeq: _*)
+    recoverPending(ParquetState.fsOf(spark, stateDir), stateDir)
+    ParquetState.ofKind(readBuckets(spark, stateDir, ddl, None), "c").drop("bkt")
   }
 }

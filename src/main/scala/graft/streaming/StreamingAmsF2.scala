@@ -1,6 +1,5 @@
 package graft.streaming
 
-import graft.ops.TableSwap
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -25,17 +24,15 @@ import org.apache.spark.sql.functions._
   * streaming estimates, whose median-of-means arithmetic is also the
   * shared code path ([[graft.queries.Profiling.amsEstimate]]).
   *
-  * Exactly-once under at-least-once delivery: applied-batch marker
-  * rows ride the same state file, whole-state republish via one
-  * crash-safe [[TableSwap]] — the StreamingCountMin contract
-  * verbatim. Per-batch cost: O(batch tokens) map-combined partials +
-  * a keyed merge over the 16-row state — bounded by the sketch
-  * geometry, never by the stream. At 100 TB/day each executor folds
-  * its partition to 16 longs before the shuffle.
+  * Exactly-once under at-least-once delivery: [[ParquetState.fold]].
+  * Per-batch cost: O(batch tokens) map-combined partials + a keyed
+  * merge over the 16-row state — bounded by the sketch geometry,
+  * never by the stream. At 100 TB/day each executor folds its
+  * partition to 16 longs before the shuffle.
   */
 object StreamingAmsF2 {
 
-  import ParquetState.readOrEmpty
+  import ParquetState.{fold, ofKind, rows}
 
   /** One relation, two row kinds, one atomic swap:
     * kind='x' → (i, x) counters; kind='b' → markers. */
@@ -44,43 +41,22 @@ object StreamingAmsF2 {
 
   /** The maintained tug-of-war counters. */
   def counters(spark: SparkSession, stateDir: String): DataFrame =
-    readOrEmpty(spark, stateDir, StateDdl)
-      .filter(col("kind") === "x")
-      .select(col("i"), col("x"))
+    rows(spark, stateDir, StateDdl, "x")
 
   /** Fold one micro-batch of documents into the sketch at `stateDir`.
     * Returns false (state untouched) when `batchId` was already
     * applied. */
   def processBatch(
       spark: SparkSession, batch: DataFrame, batchId: Long,
-      stateDir: String): Boolean = {
-    val st = readOrEmpty(spark, stateDir, StateDdl)
-    if (st.filter(col("kind") === "b" && col("batch_id") === batchId)
-        .limit(1).count() > 0) return false
-
-    val merged = st.filter(col("kind") === "x")
-      .select(col("i"), col("x"))
-      .unionByName(graft.queries.Profiling.amsCounterPartials(
-        graft.queries.Profiling.cmsTokens(batch)))
-      .groupBy(col("i"))
-      .agg(sum(col("x")).as("x"))
-      .select(lit("x").as("kind"), col("i"), col("x"),
-        lit(null).cast("bigint").as("batch_id"))
-    val markers = st.filter(col("kind") === "b").unionByName(
-      spark.range(1).select(lit("b").as("kind"),
-        lit(null).cast("bigint").as("i"),
-        lit(null).cast("bigint").as("x"),
-        lit(batchId).as("batch_id")))
-
-    val fs = new org.apache.hadoop.fs.Path(stateDir)
-      .getFileSystem(spark.sessionState.newHadoopConf())
-    val dst = new org.apache.hadoop.fs.Path(stateDir)
-    val tmp = TableSwap.tmpPath(stateDir)
-    TableSwap.recover(fs, dst, tmp)
-    merged.unionByName(markers).write.mode("overwrite").parquet(tmp.toString)
-    TableSwap.publish(fs, dst, tmp)
-    true
-  }
+      stateDir: String): Boolean =
+    fold(spark, stateDir, StateDdl, batchId) { st =>
+      ofKind(st, "x")
+        .unionByName(graft.queries.Profiling.amsCounterPartials(
+          graft.queries.Profiling.cmsTokens(batch)))
+        .groupBy(col("i"))
+        .agg(sum(col("x")).as("x"))
+        .withColumn("kind", lit("x"))
+    }
 
   /** The F2 estimate over the accumulated stream — batch q222's
     * median-of-4-means plus the estimator spread, computed by the

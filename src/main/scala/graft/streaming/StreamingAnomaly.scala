@@ -1,6 +1,5 @@
 package graft.streaming
 
-import graft.ops.TableSwap
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
@@ -20,13 +19,7 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * oracles therefore transitively verify the streaming finalizers;
   * StreamingAnomalySpec pins chunked-fold ≡ batch equality end-to-end.
   *
-  * Exactly-once under at-least-once delivery: counts are NOT
-  * idempotent (a replayed batch would double-add), so the state file
-  * carries applied-batch marker rows NEXT TO the count rows and the
-  * whole state republishes via ONE crash-safe [[TableSwap]] — marker
-  * and counts commit atomically, so a replayed foreachBatch id is a
-  * provable no-op (IncrementalAgg.mergeOnce's contract, made
-  * single-swap instead of two-relation).
+  * Exactly-once under at-least-once delivery: [[ParquetState.fold]].
   *
   * Per-batch cost: O(batch) for the partial rollup + a keyed merge
   * over the state (|types| × |active hours| rows — days, not events).
@@ -37,7 +30,7 @@ import org.apache.spark.sql.streaming.StreamingQuery
   */
 object StreamingAnomaly {
 
-  import ParquetState.readOrEmpty
+  import ParquetState.{fold, ofKind, rows}
 
   /** One relation, two row kinds, one atomic swap:
     * kind='c' → (event_type, hour_ts, cnt) count rows;
@@ -54,47 +47,20 @@ object StreamingAnomaly {
 
   /** The maintained per-(event_type, hour) exact counts. */
   def hourlyCounts(spark: SparkSession, stateDir: String): DataFrame =
-    readOrEmpty(spark, stateDir, StateDdl)
-      .filter(col("kind") === "c")
-      .select(col("event_type"), col("hour_ts"), col("cnt"))
+    rows(spark, stateDir, StateDdl, "c")
 
   /** Fold one micro-batch into the hourly count state at `stateDir`.
     * Returns false (and leaves the state untouched) when `batchId`
     * was already applied. */
   def processBatch(
-      spark: SparkSession, batch: DataFrame, batchId: Long, stateDir: String): Boolean = {
-    val st = readOrEmpty(spark, stateDir, StateDdl)
-    if (st.filter(col("kind") === "b" && col("batch_id") === batchId)
-        .limit(1).count() > 0) return false
-
-    val counts = st.filter(col("kind") === "c")
-      .select(col("event_type"), col("hour_ts"), col("cnt"))
-      .unionByName(hourlyPartials(batch))
-      .groupBy(col("event_type"), col("hour_ts"))
-      .agg(sum(col("cnt")).as("cnt"))
-      .select(lit("c").as("kind"), col("event_type"), col("hour_ts"),
-        col("cnt"), lit(null).cast("bigint").as("batch_id"))
-    val markers = st.filter(col("kind") === "b").unionByName(
-      spark.range(1).select(lit("b").as("kind"),
-        lit(null).cast("string").as("event_type"),
-        lit(null).cast("timestamp").as("hour_ts"),
-        lit(null).cast("bigint").as("cnt"),
-        lit(batchId).as("batch_id")))
-
-    // one atomic publish for counts + marker: the tmp write reads the
-    // OLD state files (still in place until the swap), the swap is
-    // crash-safe, and a crash anywhere replays into either the old
-    // state (marker absent → re-fold) or the new one (marker present
-    // → no-op) — never a half-applied batch
-    val fs = new org.apache.hadoop.fs.Path(stateDir)
-      .getFileSystem(spark.sessionState.newHadoopConf())
-    val dst = new org.apache.hadoop.fs.Path(stateDir)
-    val tmp = TableSwap.tmpPath(stateDir)
-    TableSwap.recover(fs, dst, tmp)
-    counts.unionByName(markers).write.mode("overwrite").parquet(tmp.toString)
-    TableSwap.publish(fs, dst, tmp)
-    true
-  }
+      spark: SparkSession, batch: DataFrame, batchId: Long, stateDir: String): Boolean =
+    fold(spark, stateDir, StateDdl, batchId) { st =>
+      ofKind(st, "c")
+        .unionByName(hourlyPartials(batch))
+        .groupBy(col("event_type"), col("hour_ts"))
+        .agg(sum(col("cnt")).as("cnt"))
+        .withColumn("kind", lit("c"))
+    }
 
   /** q134 over the maintained state: CUSUM change-point per type.
     * Hour counts roll up to days first — `date_trunc(DAY, hour_ts)`

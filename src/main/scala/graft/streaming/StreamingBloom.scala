@@ -1,6 +1,5 @@
 package graft.streaming
 
-import graft.ops.TableSwap
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -24,16 +23,14 @@ import org.apache.spark.sql.functions._
   * never miss. StreamingBloomSpec pins chunked-fold ≡ batch
   * BIT-EQUALITY plus the guarantee.
   *
-  * Exactly-once under at-least-once delivery: applied-batch marker
-  * rows ride the same state file, whole-state republish via one
-  * crash-safe [[TableSwap]] — the StreamingKAnonymity contract
-  * verbatim. Per-batch cost: O(batch tokens) map-combined bit
-  * partials + a distinct over the ≤m-row state — bounded by the
-  * filter geometry, never by the stream.
+  * Exactly-once under at-least-once delivery: [[ParquetState.fold]].
+  * Per-batch cost: O(batch tokens) map-combined bit partials + a
+  * distinct over the ≤m-row state — bounded by the filter geometry,
+  * never by the stream.
   */
 object StreamingBloom {
 
-  import ParquetState.readOrEmpty
+  import ParquetState.{fold, ofKind, rows}
 
   /** One relation, two row kinds, one atomic swap:
     * kind='s' → (bit) set bits; kind='b' → markers. */
@@ -41,44 +38,25 @@ object StreamingBloom {
 
   /** The maintained set-bit relation. */
   def bits(spark: SparkSession, stateDir: String): DataFrame =
-    readOrEmpty(spark, stateDir, StateDdl)
-      .filter(col("kind") === "s")
-      .select(col("bit"))
+    rows(spark, stateDir, StateDdl, "s")
 
   /** Fold one micro-batch of documents into the filter at `stateDir`.
     * Returns false (state untouched) when `batchId` was already
     * applied. */
   def processBatch(
       spark: SparkSession, batch: DataFrame, batchId: Long,
-      stateDir: String): Boolean = {
-    val st = readOrEmpty(spark, stateDir, StateDdl)
-    if (st.filter(col("kind") === "b" && col("batch_id") === batchId)
-        .limit(1).count() > 0) return false
-
-    val newBits = batch
-      .select(explode(split(trim(regexp_replace(lower(col("text")),
-        "\\s+", " ")), " ")).as("t"))
-      .distinct()
-      .select(explode(graft.queries.Profiling.bloomBitArr(col("t"))).as("bit"))
-    val merged = st.filter(col("kind") === "s").select(col("bit"))
-      .unionByName(newBits)
-      .distinct()
-      .select(lit("s").as("kind"), col("bit"),
-        lit(null).cast("bigint").as("batch_id"))
-    val markers = st.filter(col("kind") === "b").unionByName(
-      spark.range(1).select(lit("b").as("kind"),
-        lit(null).cast("bigint").as("bit"),
-        lit(batchId).as("batch_id")))
-
-    val fs = new org.apache.hadoop.fs.Path(stateDir)
-      .getFileSystem(spark.sessionState.newHadoopConf())
-    val dst = new org.apache.hadoop.fs.Path(stateDir)
-    val tmp = TableSwap.tmpPath(stateDir)
-    TableSwap.recover(fs, dst, tmp)
-    merged.unionByName(markers).write.mode("overwrite").parquet(tmp.toString)
-    TableSwap.publish(fs, dst, tmp)
-    true
-  }
+      stateDir: String): Boolean =
+    fold(spark, stateDir, StateDdl, batchId) { st =>
+      val newBits = batch
+        .select(explode(split(trim(regexp_replace(lower(col("text")),
+          "\\s+", " ")), " ")).as("t"))
+        .distinct()
+        .select(explode(graft.queries.Profiling.bloomBitArr(col("t"))).as("bit"))
+      ofKind(st, "s")
+        .unionByName(newBits)
+        .distinct()
+        .withColumn("kind", lit("s"))
+    }
 
   /** Membership answers for a requested token list (control plane —
     * a probe list, like StreamingCountMin.estimate): hit ⟺ all k bit

@@ -1,6 +1,5 @@
 package graft.streaming
 
-import graft.ops.TableSwap
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -24,16 +23,14 @@ import org.apache.spark.sql.functions._
   * streaming intervals, whose rank/percentile tail is the literally
   * shared code path ([[graft.queries.Analytics.bootFinalize]]).
   *
-  * Exactly-once under at-least-once delivery: applied-batch marker
-  * rows ride the same state file, whole-state republish via one
-  * crash-safe [[TableSwap]] — the StreamingCountMin contract
-  * verbatim. Per-batch cost: O(batch rows · B) map-combined partials
-  * + a keyed merge over the |priorities|·(B+1)-row state — bounded
-  * by the report geometry, never by the stream.
+  * Exactly-once under at-least-once delivery: [[ParquetState.fold]].
+  * Per-batch cost: O(batch rows · B) map-combined partials + a keyed
+  * merge over the |priorities|·(B+1)-row state — bounded by the
+  * report geometry, never by the stream.
   */
 object StreamingBootstrap {
 
-  import ParquetState.readOrEmpty
+  import ParquetState.{fold, ofKind, rows}
 
   /** One relation, three row kinds, one atomic swap:
     * kind='c' → (priority, r, swx, sw) replicate cells;
@@ -45,60 +42,32 @@ object StreamingBootstrap {
 
   /** The maintained replicate cells. */
   def cells(spark: SparkSession, stateDir: String): DataFrame =
-    readOrEmpty(spark, stateDir, StateDdl)
-      .filter(col("kind") === "c")
-      .select(col("priority"), col("r"), col("swx"), col("sw"))
+    rows(spark, stateDir, StateDdl, "c").select("priority", "r", "swx", "sw")
 
   /** The maintained exact-leg partials. */
   def exactRows(spark: SparkSession, stateDir: String): DataFrame =
-    readOrEmpty(spark, stateDir, StateDdl)
-      .filter(col("kind") === "e")
-      .select(col("priority"), col("n_orders"), col("sum_e2"))
+    rows(spark, stateDir, StateDdl, "e").select("priority", "n_orders", "sum_e2")
 
   /** Fold one micro-batch of orders rows into the state at
     * `stateDir`. Returns false (state untouched) when `batchId` was
     * already applied. */
   def processBatch(
       spark: SparkSession, batch: DataFrame, batchId: Long,
-      stateDir: String): Boolean = {
-    val st = readOrEmpty(spark, stateDir, StateDdl)
-    if (st.filter(col("kind") === "b" && col("batch_id") === batchId)
-        .limit(1).count() > 0) return false
-
-    val base = graft.queries.Analytics.bootBaseRows(batch)
-    val nullL = lit(null).cast("bigint")
-    val mergedCells = st.filter(col("kind") === "c")
-      .select(col("priority"), col("r"), col("swx"), col("sw"))
-      .unionByName(graft.queries.Analytics.bootCellPartials(base))
-      .groupBy("priority", "r")
-      .agg(sum(col("swx")).as("swx"), sum(col("sw")).as("sw"))
-      .select(lit("c").as("kind"), col("priority"), col("r"),
-        col("swx"), col("sw"), nullL.as("n_orders"), nullL.as("sum_e2"),
-        nullL.as("batch_id"))
-    val mergedExact = st.filter(col("kind") === "e")
-      .select(col("priority"), col("n_orders"), col("sum_e2"))
-      .unionByName(graft.queries.Analytics.bootExactPartials(base))
-      .groupBy("priority")
-      .agg(sum(col("n_orders")).as("n_orders"), sum(col("sum_e2")).as("sum_e2"))
-      .select(lit("e").as("kind"), col("priority"), nullL.as("r"),
-        nullL.as("swx"), nullL.as("sw"), col("n_orders"), col("sum_e2"),
-        nullL.as("batch_id"))
-    val markers = st.filter(col("kind") === "b").unionByName(
-      spark.range(1).select(lit("b").as("kind"),
-        lit(null).cast("string").as("priority"), nullL.as("r"),
-        nullL.as("swx"), nullL.as("sw"), nullL.as("n_orders"),
-        nullL.as("sum_e2"), lit(batchId).as("batch_id")))
-
-    val fs = new org.apache.hadoop.fs.Path(stateDir)
-      .getFileSystem(spark.sessionState.newHadoopConf())
-    val dst = new org.apache.hadoop.fs.Path(stateDir)
-    val tmp = TableSwap.tmpPath(stateDir)
-    TableSwap.recover(fs, dst, tmp)
-    mergedCells.unionByName(mergedExact).unionByName(markers)
-      .write.mode("overwrite").parquet(tmp.toString)
-    TableSwap.publish(fs, dst, tmp)
-    true
-  }
+      stateDir: String): Boolean =
+    fold(spark, stateDir, StateDdl, batchId) { st =>
+      val base = graft.queries.Analytics.bootBaseRows(batch)
+      val mergedCells = ofKind(st, "c").select("priority", "r", "swx", "sw")
+        .unionByName(graft.queries.Analytics.bootCellPartials(base))
+        .groupBy("priority", "r")
+        .agg(sum(col("swx")).as("swx"), sum(col("sw")).as("sw"))
+        .withColumn("kind", lit("c"))
+      val mergedExact = ofKind(st, "e").select("priority", "n_orders", "sum_e2")
+        .unionByName(graft.queries.Analytics.bootExactPartials(base))
+        .groupBy("priority")
+        .agg(sum(col("n_orders")).as("n_orders"), sum(col("sum_e2")).as("sum_e2"))
+        .withColumn("kind", lit("e"))
+      mergedCells.unionByName(mergedExact, allowMissingColumns = true)
+    }
 
   /** The interval report over the accumulated stream — batch q244's
     * columns, computed by the SHARED finalizer over the maintained

@@ -1,6 +1,5 @@
 package graft.streaming
 
-import graft.ops.TableSwap
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -23,16 +22,14 @@ import org.apache.spark.sql.functions._
   * stream. StreamingCountMinSpec pins chunked-fold ≡ batch
   * BIT-EQUALITY plus the guarantee.
   *
-  * Exactly-once under at-least-once delivery: applied-batch marker
-  * rows ride the same state file, whole-state republish via one
-  * crash-safe [[TableSwap]] — the StreamingKAnonymity contract
-  * verbatim. Per-batch cost: O(batch tokens) map-combined partials +
-  * a keyed merge over the ≤4096-row state — bounded by the sketch
-  * geometry, never by the stream.
+  * Exactly-once under at-least-once delivery: [[ParquetState.fold]].
+  * Per-batch cost: O(batch tokens) map-combined partials + a keyed
+  * merge over the ≤4096-row state — bounded by the sketch geometry,
+  * never by the stream.
   */
 object StreamingCountMin {
 
-  import ParquetState.readOrEmpty
+  import ParquetState.{fold, ofKind, rows}
 
   /** One relation, two row kinds, one atomic swap:
     * kind='c' → (r, c, n) counters; kind='b' → markers. */
@@ -41,44 +38,22 @@ object StreamingCountMin {
 
   /** The maintained counter cells. */
   def cells(spark: SparkSession, stateDir: String): DataFrame =
-    readOrEmpty(spark, stateDir, StateDdl)
-      .filter(col("kind") === "c")
-      .select(col("r"), col("c"), col("n"))
+    rows(spark, stateDir, StateDdl, "c")
 
   /** Fold one micro-batch of documents into the sketch at `stateDir`.
     * Returns false (state untouched) when `batchId` was already
     * applied. */
   def processBatch(
       spark: SparkSession, batch: DataFrame, batchId: Long,
-      stateDir: String): Boolean = {
-    val st = readOrEmpty(spark, stateDir, StateDdl)
-    if (st.filter(col("kind") === "b" && col("batch_id") === batchId)
-        .limit(1).count() > 0) return false
-
-    val merged = st.filter(col("kind") === "c")
-      .select(col("r"), col("c"), col("n"))
-      .unionByName(graft.queries.Profiling.cmsCellPartials(
-        graft.queries.Profiling.cmsTokens(batch)))
-      .groupBy(col("r"), col("c"))
-      .agg(sum(col("n")).as("n"))
-      .select(lit("c").as("kind"), col("r"), col("c"), col("n"),
-        lit(null).cast("bigint").as("batch_id"))
-    val markers = st.filter(col("kind") === "b").unionByName(
-      spark.range(1).select(lit("b").as("kind"),
-        lit(null).cast("bigint").as("r"),
-        lit(null).cast("bigint").as("c"),
-        lit(null).cast("bigint").as("n"),
-        lit(batchId).as("batch_id")))
-
-    val fs = new org.apache.hadoop.fs.Path(stateDir)
-      .getFileSystem(spark.sessionState.newHadoopConf())
-    val dst = new org.apache.hadoop.fs.Path(stateDir)
-    val tmp = TableSwap.tmpPath(stateDir)
-    TableSwap.recover(fs, dst, tmp)
-    merged.unionByName(markers).write.mode("overwrite").parquet(tmp.toString)
-    TableSwap.publish(fs, dst, tmp)
-    true
-  }
+      stateDir: String): Boolean =
+    fold(spark, stateDir, StateDdl, batchId) { st =>
+      ofKind(st, "c")
+        .unionByName(graft.queries.Profiling.cmsCellPartials(
+          graft.queries.Profiling.cmsTokens(batch)))
+        .groupBy(col("r"), col("c"))
+        .agg(sum(col("n")).as("n"))
+        .withColumn("kind", lit("c"))
+    }
 
   /** Point-frequency estimates for a requested token list (control
     * plane — a query list, like q57's centroids): min over the token's

@@ -1,6 +1,5 @@
 package graft.streaming
 
-import graft.ops.TableSwap
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -20,17 +19,15 @@ import org.apache.spark.sql.functions._
   * oracle transitively verifies the streaming θ / adjusted-diff / ρ²
   * columns.
   *
-  * Exactly-once under at-least-once delivery: applied-batch marker
-  * rows ride the same state file, whole-state republish via one
-  * crash-safe [[TableSwap]] — the StreamingCountMin contract
-  * verbatim. Per-batch cost: O(batch rows) map-combined cell partials
-  * + a keyed merge over the (type, user)-sized state — the same
+  * Exactly-once under at-least-once delivery: [[ParquetState.fold]].
+  * Per-batch cost: O(batch rows) map-combined cell partials + a keyed
+  * merge over the (type, user)-sized state — the same
   * membership-index scale the StreamingRollingMau contract already
   * admits.
   */
 object StreamingCuped {
 
-  import ParquetState.readOrEmpty
+  import ParquetState.{fold, ofKind, rows}
 
   /** One relation, two row kinds, one atomic swap:
     * kind='c' → (event_type, user_id, treat, x, y) covariate cells;
@@ -41,46 +38,21 @@ object StreamingCuped {
 
   /** The maintained covariate cells. */
   def cells(spark: SparkSession, stateDir: String): DataFrame =
-    readOrEmpty(spark, stateDir, StateDdl)
-      .filter(col("kind") === "c")
-      .select(col("event_type"), col("user_id"), col("treat"),
-        col("x"), col("y"))
+    rows(spark, stateDir, StateDdl, "c")
 
   /** Fold one micro-batch of events into the state at `stateDir`.
     * Returns false (state untouched) when `batchId` was already
     * applied. */
   def processBatch(
       spark: SparkSession, batch: DataFrame, batchId: Long,
-      stateDir: String): Boolean = {
-    val st = readOrEmpty(spark, stateDir, StateDdl)
-    if (st.filter(col("kind") === "b" && col("batch_id") === batchId)
-        .limit(1).count() > 0) return false
-
-    val nullL = lit(null).cast("bigint")
-    val mergedCells = st.filter(col("kind") === "c")
-      .select(col("event_type"), col("user_id"), col("treat"),
-        col("x"), col("y"))
-      .unionByName(graft.queries.EventAnalytics.cupedCells(batch))
-      .groupBy("event_type", "user_id", "treat")
-      .agg(sum(col("x")).as("x"), sum(col("y")).as("y"))
-      .select(lit("c").as("kind"), col("event_type"), col("user_id"),
-        col("treat"), col("x"), col("y"), nullL.as("batch_id"))
-    val markers = st.filter(col("kind") === "b").unionByName(
-      spark.range(1).select(lit("b").as("kind"),
-        lit(null).cast("string").as("event_type"), nullL.as("user_id"),
-        lit(null).cast("boolean").as("treat"),
-        nullL.as("x"), nullL.as("y"), lit(batchId).as("batch_id")))
-
-    val fs = new org.apache.hadoop.fs.Path(stateDir)
-      .getFileSystem(spark.sessionState.newHadoopConf())
-    val dst = new org.apache.hadoop.fs.Path(stateDir)
-    val tmp = TableSwap.tmpPath(stateDir)
-    TableSwap.recover(fs, dst, tmp)
-    mergedCells.unionByName(markers)
-      .write.mode("overwrite").parquet(tmp.toString)
-    TableSwap.publish(fs, dst, tmp)
-    true
-  }
+      stateDir: String): Boolean =
+    fold(spark, stateDir, StateDdl, batchId) { st =>
+      ofKind(st, "c")
+        .unionByName(graft.queries.EventAnalytics.cupedCells(batch))
+        .groupBy("event_type", "user_id", "treat")
+        .agg(sum(col("x")).as("x"), sum(col("y")).as("y"))
+        .withColumn("kind", lit("c"))
+    }
 
   /** The CUPED report over the accumulated stream — batch q250's
     * columns, computed by the SHARED finalizer. */

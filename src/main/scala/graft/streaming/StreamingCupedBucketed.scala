@@ -38,7 +38,6 @@ object StreamingCupedBucketed {
       .agg(sum(col("x")).as("x"), sum(col("y")).as("y"))
       .select(lit("c").as("kind"), col("event_type"), col("user_id"),
         col("treat"), col("x"), col("y"),
-        lit(null).cast("bigint").as("batch_id"),
         pmod(col("user_id"), lit(Buckets)).as("bkt"))
 
   /** The maintained covariate cells (all buckets). */

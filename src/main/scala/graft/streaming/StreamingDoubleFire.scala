@@ -1,6 +1,5 @@
 package graft.streaming
 
-import graft.ops.TableSwap
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -28,14 +27,13 @@ import org.apache.spark.sql.functions._
   * streaming math, and StreamingDoubleFireSpec pins time-split
   * chunked-fold ≡ batch BIT-EQUALITY.
   *
-  * Exactly-once under at-least-once delivery: applied-batch markers
-  * ride the same state file, one crash-safe [[TableSwap]] per fold.
+  * Exactly-once under at-least-once delivery: [[ParquetState.fold]].
   * Per-batch cost: O(batch) window + map-combined partials, then a
   * keyed merge over the |types × active users|-row state.
   */
 object StreamingDoubleFire {
 
-  import ParquetState.readOrEmpty
+  import ParquetState.{fold, ofKind, rows}
 
   /** One relation, two row kinds, one atomic swap: kind='t' →
     * (event_type, user_id, first_us, last_us, n, r) tallies;
@@ -67,10 +65,7 @@ object StreamingDoubleFire {
 
   /** The maintained per-(type, user) tallies. */
   def tallies(spark: SparkSession, stateDir: String): DataFrame =
-    readOrEmpty(spark, stateDir, StateDdl)
-      .filter(col("kind") === "t")
-      .select(col("event_type"), col("user_id"), col("first_us"),
-        col("last_us"), col("n"), col("r"))
+    rows(spark, stateDir, StateDdl, "t")
 
   /** Fold one micro-batch into the tally state at `stateDir`. Returns
     * false (state untouched) when `batchId` was already applied.
@@ -78,45 +73,23 @@ object StreamingDoubleFire {
     * per (type, user) — the append-stream time-order contract. */
   def processBatch(
       spark: SparkSession, batch: DataFrame, batchId: Long,
-      stateDir: String): Boolean = {
-    val st = readOrEmpty(spark, stateDir, StateDdl)
-    if (st.filter(col("kind") === "b" && col("batch_id") === batchId)
-        .limit(1).count() > 0) return false
-
-    val prev = st.filter(col("kind") === "t")
-      .select(col("event_type"), col("user_id"),
-        col("first_us").as("p_first"), col("last_us").as("p_last"),
-        col("n").as("p_n"), col("r").as("p_r"))
-    // seam: the batch's first event is a repeat of the state's last
-    val merged = tallyPartials(batch)
-      .join(prev, Seq("event_type", "user_id"), "full_outer")
-      .select(lit("t").as("kind"), col("event_type"), col("user_id"),
-        coalesce(col("p_first"), col("first_us")).as("first_us"),
-        coalesce(col("last_us"), col("p_last")).as("last_us"),
-        (coalesce(col("p_n"), lit(0L)) + coalesce(col("n"), lit(0L))).as("n"),
-        (coalesce(col("p_r"), lit(0L)) + coalesce(col("r"), lit(0L)) +
-          when(col("p_last").isNotNull && col("first_us").isNotNull &&
-            col("first_us") - col("p_last") < W, 1L).otherwise(0L)).as("r"),
-        lit(null).cast("bigint").as("batch_id"))
-    val markers = st.filter(col("kind") === "b").unionByName(
-      spark.range(1).select(lit("b").as("kind"),
-        lit(null).cast("string").as("event_type"),
-        lit(null).cast("bigint").as("user_id"),
-        lit(null).cast("bigint").as("first_us"),
-        lit(null).cast("bigint").as("last_us"),
-        lit(null).cast("bigint").as("n"),
-        lit(null).cast("bigint").as("r"),
-        lit(batchId).as("batch_id")))
-
-    val fs = new org.apache.hadoop.fs.Path(stateDir)
-      .getFileSystem(spark.sessionState.newHadoopConf())
-    val dst = new org.apache.hadoop.fs.Path(stateDir)
-    val tmp = TableSwap.tmpPath(stateDir)
-    TableSwap.recover(fs, dst, tmp)
-    merged.unionByName(markers).write.mode("overwrite").parquet(tmp.toString)
-    TableSwap.publish(fs, dst, tmp)
-    true
-  }
+      stateDir: String): Boolean =
+    fold(spark, stateDir, StateDdl, batchId) { st =>
+      val prev = ofKind(st, "t")
+        .select(col("event_type"), col("user_id"),
+          col("first_us").as("p_first"), col("last_us").as("p_last"),
+          col("n").as("p_n"), col("r").as("p_r"))
+      // seam: the batch's first event is a repeat of the state's last
+      tallyPartials(batch)
+        .join(prev, Seq("event_type", "user_id"), "full_outer")
+        .select(lit("t").as("kind"), col("event_type"), col("user_id"),
+          coalesce(col("p_first"), col("first_us")).as("first_us"),
+          coalesce(col("last_us"), col("p_last")).as("last_us"),
+          (coalesce(col("p_n"), lit(0L)) + coalesce(col("n"), lit(0L))).as("n"),
+          (coalesce(col("p_r"), lit(0L)) + coalesce(col("r"), lit(0L)) +
+            when(col("p_last").isNotNull && col("first_us").isNotNull &&
+              col("first_us") - col("p_last") < W, 1L).otherwise(0L)).as("r"))
+    }
 
   /** The current per-type double-fire report — the EXACT batch
     * finalizer over the maintained tallies (shared verbatim with

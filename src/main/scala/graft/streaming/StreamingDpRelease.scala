@@ -1,6 +1,5 @@
 package graft.streaming
 
-import graft.ops.TableSwap
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -23,16 +22,14 @@ import org.apache.spark.sql.functions._
   * verifies the streaming math. StreamingDpReleaseSpec pins
   * chunked-fold ≡ batch BIT-EQUALITY.
   *
-  * Exactly-once under at-least-once delivery: applied-batch marker
-  * rows ride the same state file and the whole state republishes via
-  * one crash-safe [[TableSwap]] — the StreamingKAnonymity contract
-  * verbatim. Per-batch cost: O(batch) map-combined cell partials + a
-  * keyed merge over the |source × lang|-row state — bounded by the
+  * Exactly-once under at-least-once delivery: [[ParquetState.fold]].
+  * Per-batch cost: O(batch) map-combined cell partials + a keyed
+  * merge over the |source × lang|-row state — bounded by the
   * attribute domains, never by documents seen.
   */
 object StreamingDpRelease {
 
-  import ParquetState.readOrEmpty
+  import ParquetState.{fold, ofKind, rows}
 
   /** One relation, two row kinds, one atomic swap:
     * kind='c' → (source, lang, cnt) cells; kind='b' → markers. */
@@ -49,42 +46,20 @@ object StreamingDpRelease {
 
   /** The maintained (source, lang) cell counts. */
   def cells(spark: SparkSession, stateDir: String): DataFrame =
-    readOrEmpty(spark, stateDir, StateDdl)
-      .filter(col("kind") === "c")
-      .select(col("source"), col("lang"), col("cnt"))
+    rows(spark, stateDir, StateDdl, "c")
 
   /** Fold one micro-batch into the cell state at `stateDir`. Returns
     * false (state untouched) when `batchId` was already applied. */
   def processBatch(
       spark: SparkSession, batch: DataFrame, batchId: Long,
-      stateDir: String): Boolean = {
-    val st = readOrEmpty(spark, stateDir, StateDdl)
-    if (st.filter(col("kind") === "b" && col("batch_id") === batchId)
-        .limit(1).count() > 0) return false
-
-    val merged = st.filter(col("kind") === "c")
-      .select(col("source"), col("lang"), col("cnt"))
-      .unionByName(cellPartials(batch))
-      .groupBy(col("source"), col("lang"))
-      .agg(sum(col("cnt")).as("cnt"))
-      .select(lit("c").as("kind"), col("source"), col("lang"),
-        col("cnt"), lit(null).cast("bigint").as("batch_id"))
-    val markers = st.filter(col("kind") === "b").unionByName(
-      spark.range(1).select(lit("b").as("kind"),
-        lit(null).cast("string").as("source"),
-        lit(null).cast("string").as("lang"),
-        lit(null).cast("bigint").as("cnt"),
-        lit(batchId).as("batch_id")))
-
-    val fs = new org.apache.hadoop.fs.Path(stateDir)
-      .getFileSystem(spark.sessionState.newHadoopConf())
-    val dst = new org.apache.hadoop.fs.Path(stateDir)
-    val tmp = TableSwap.tmpPath(stateDir)
-    TableSwap.recover(fs, dst, tmp)
-    merged.unionByName(markers).write.mode("overwrite").parquet(tmp.toString)
-    TableSwap.publish(fs, dst, tmp)
-    true
-  }
+      stateDir: String): Boolean =
+    fold(spark, stateDir, StateDdl, batchId) { st =>
+      ofKind(st, "c")
+        .unionByName(cellPartials(batch))
+        .groupBy(col("source"), col("lang"))
+        .agg(sum(col("cnt")).as("cnt"))
+        .withColumn("kind", lit("c"))
+    }
 
   /** The current noised release — the EXACT batch mechanism over the
     * maintained cells (shared verbatim with q206). */

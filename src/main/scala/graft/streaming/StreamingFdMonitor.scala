@@ -1,6 +1,5 @@
 package graft.streaming
 
-import graft.ops.TableSwap
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -20,9 +19,7 @@ import org.apache.spark.sql.functions._
   * batch BIT-EQUALITY (unlike the heavy-hitter twin, nothing here is
   * approximate: cell counts are exact under any chunking).
   *
-  * Exactly-once under at-least-once delivery: counts are not
-  * idempotent, so applied-batch marker rows ride the same state file
-  * and the whole state republishes via one crash-safe [[TableSwap]].
+  * Exactly-once under at-least-once delivery: [[ParquetState.fold]].
   *
   * Per-batch cost: O(batch) for the map-combined cell partials + a
   * keyed merge over |distinct (l, r)| state rows — value combinations,
@@ -34,7 +31,7 @@ import org.apache.spark.sql.functions._
   */
 object StreamingFdMonitor {
 
-  import ParquetState.readOrEmpty
+  import ParquetState.{fold, ofKind, rows}
 
   /** One relation, two row kinds, one atomic swap:
     * kind='c' → (l, r, cnt) cells; kind='b' → applied-batch markers. */
@@ -50,42 +47,20 @@ object StreamingFdMonitor {
 
   /** The maintained (l, r, cnt) cells. */
   def cells(spark: SparkSession, stateDir: String): DataFrame =
-    readOrEmpty(spark, stateDir, StateDdl)
-      .filter(col("kind") === "c")
-      .select(col("l"), col("r"), col("cnt"))
+    rows(spark, stateDir, StateDdl, "c")
 
   /** Fold one micro-batch into the cell state at `stateDir`. Returns
     * false (state untouched) when `batchId` was already applied. */
   def processBatch(
       spark: SparkSession, batch: DataFrame, batchId: Long,
-      stateDir: String, lhs: String, rhs: String): Boolean = {
-    val st = readOrEmpty(spark, stateDir, StateDdl)
-    if (st.filter(col("kind") === "b" && col("batch_id") === batchId)
-        .limit(1).count() > 0) return false
-
-    val merged = st.filter(col("kind") === "c")
-      .select(col("l"), col("r"), col("cnt"))
-      .unionByName(cellPartials(batch, lhs, rhs))
-      .groupBy(col("l"), col("r"))
-      .agg(sum(col("cnt")).as("cnt"))
-      .select(lit("c").as("kind"), col("l"), col("r"), col("cnt"),
-        lit(null).cast("bigint").as("batch_id"))
-    val markers = st.filter(col("kind") === "b").unionByName(
-      spark.range(1).select(lit("b").as("kind"),
-        lit(null).cast("string").as("l"),
-        lit(null).cast("string").as("r"),
-        lit(null).cast("bigint").as("cnt"),
-        lit(batchId).as("batch_id")))
-
-    val fs = new org.apache.hadoop.fs.Path(stateDir)
-      .getFileSystem(spark.sessionState.newHadoopConf())
-    val dst = new org.apache.hadoop.fs.Path(stateDir)
-    val tmp = TableSwap.tmpPath(stateDir)
-    TableSwap.recover(fs, dst, tmp)
-    merged.unionByName(markers).write.mode("overwrite").parquet(tmp.toString)
-    TableSwap.publish(fs, dst, tmp)
-    true
-  }
+      stateDir: String, lhs: String, rhs: String): Boolean =
+    fold(spark, stateDir, StateDdl, batchId) { st =>
+      ofKind(st, "c")
+        .unionByName(cellPartials(batch, lhs, rhs))
+        .groupBy(col("l"), col("r"))
+        .agg(sum(col("cnt")).as("cnt"))
+        .withColumn("kind", lit("c"))
+    }
 
   /** The current g3 report — the EXACT batch finalizer over the
     * maintained cells (shared verbatim with q167). */

@@ -1,6 +1,5 @@
 package graft.streaming
 
-import graft.ops.TableSwap
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -25,15 +24,13 @@ import org.apache.spark.sql.functions._
   * report is the literally shared finalizer, so the six q268–q273
   * DuckDB oracles transitively verify the streaming reports.
   *
-  * Exactly-once under at-least-once delivery: applied-batch marker
-  * rows ride the same state file, whole-state republish via one
-  * crash-safe [[TableSwap]] — the StreamingCountMin contract
-  * verbatim. Per-batch cost: O(batch rows) map-combined day partials
-  * + a keyed sum over the calendar-bounded state.
+  * Exactly-once under at-least-once delivery: [[ParquetState.fold]].
+  * Per-batch cost: O(batch rows) map-combined day partials + a keyed
+  * sum over the calendar-bounded state.
   */
 object StreamingForecast {
 
-  import ParquetState.readOrEmpty
+  import ParquetState.{fold, ofKind, rows}
 
   /** One relation, two row kinds, one atomic swap:
     * kind='c' → (event_type, day, y) daily cents cells;
@@ -44,44 +41,21 @@ object StreamingForecast {
   /** The maintained daily relation — q268–q273's `forecastDaily`
     * shape, continuously folded. */
   def cells(spark: SparkSession, stateDir: String): DataFrame =
-    readOrEmpty(spark, stateDir, StateDdl)
-      .filter(col("kind") === "c")
-      .select(col("event_type"), col("day"), col("y"))
+    rows(spark, stateDir, StateDdl, "c")
 
   /** Fold one micro-batch of events into the state at `stateDir`.
     * Returns false (state untouched) when `batchId` was already
     * applied. */
   def processBatch(
       spark: SparkSession, batch: DataFrame, batchId: Long,
-      stateDir: String): Boolean = {
-    val st = readOrEmpty(spark, stateDir, StateDdl)
-    if (st.filter(col("kind") === "b" && col("batch_id") === batchId)
-        .limit(1).count() > 0) return false
-
-    val nullL = lit(null).cast("bigint")
-    val mergedCells = st.filter(col("kind") === "c")
-      .select(col("event_type"), col("day"), col("y"))
-      .unionByName(graft.queries.EventAnalytics.forecastDaily(batch))
-      .groupBy("event_type", "day")
-      .agg(sum(col("y")).as("y"))
-      .select(lit("c").as("kind"), col("event_type"), col("day"),
-        col("y"), nullL.as("batch_id"))
-    val markers = st.filter(col("kind") === "b").unionByName(
-      spark.range(1).select(lit("b").as("kind"),
-        lit(null).cast("string").as("event_type"),
-        lit(null).cast("date").as("day"), nullL.as("y"),
-        lit(batchId).as("batch_id")))
-
-    val fs = new org.apache.hadoop.fs.Path(stateDir)
-      .getFileSystem(spark.sessionState.newHadoopConf())
-    val dst = new org.apache.hadoop.fs.Path(stateDir)
-    val tmp = TableSwap.tmpPath(stateDir)
-    TableSwap.recover(fs, dst, tmp)
-    mergedCells.unionByName(markers)
-      .write.mode("overwrite").parquet(tmp.toString)
-    TableSwap.publish(fs, dst, tmp)
-    true
-  }
+      stateDir: String): Boolean =
+    fold(spark, stateDir, StateDdl, batchId) { st =>
+      ofKind(st, "c")
+        .unionByName(graft.queries.EventAnalytics.forecastDaily(batch))
+        .groupBy("event_type", "day")
+        .agg(sum(col("y")).as("y"))
+        .withColumn("kind", lit("c"))
+    }
 
   /** q268's h = 1..7 Holt forecast over the accumulated stream — the
     * SHARED finalizer, batch columns. */

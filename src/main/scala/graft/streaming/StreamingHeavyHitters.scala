@@ -1,6 +1,5 @@
 package graft.streaming
 
-import graft.ops.TableSwap
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -26,11 +25,7 @@ import org.apache.spark.sql.functions._
   * StreamingHeavyHittersSpec folds chunked streams and MEASURES both
   * bounds against exact truth, plus same-chunking determinism.
   *
-  * Exactly-once under at-least-once delivery: the summary is not
-  * idempotent (a replayed batch would double-fold), so applied-batch
-  * marker rows ride the SAME state file and the whole state
-  * republishes via one crash-safe [[TableSwap]] — the
-  * StreamingAnomaly/StreamingMerkle discipline.
+  * Exactly-once under at-least-once delivery: [[ParquetState.fold]].
   *
   * Per-batch cost: one exact aggregate over the batch (map-side
   * combined), a keyed merge against ≤m state rows, and — only on
@@ -39,7 +34,7 @@ import org.apache.spark.sql.functions._
   */
 object StreamingHeavyHitters {
 
-  import ParquetState.readOrEmpty
+  import ParquetState.{fold, ofKind, rows}
 
   /** One relation, three row kinds, one atomic swap:
     * kind='m' → (tok, cnt) summary entries; kind='n' → total tokens
@@ -59,17 +54,11 @@ object StreamingHeavyHitters {
 
   /** The maintained summary: (tok, est) plus the folded total. */
   def summary(spark: SparkSession, stateDir: String): DataFrame =
-    readOrEmpty(spark, stateDir, StateDdl)
-      .filter(col("kind") === "m")
-      .select(col("tok"), col("cnt").as("est"))
+    rows(spark, stateDir, StateDdl, "m").select(col("tok"), col("cnt").as("est"))
 
   def totalTokens(spark: SparkSession, stateDir: String): Long =
-    readOrEmpty(spark, stateDir, StateDdl)
-      .filter(col("kind") === "n")
-      .select(sum(col("cnt"))).head().getAs[Any](0) match {
-      case null => 0L
-      case n: Long => n
-    }
+    rows(spark, stateDir, StateDdl, "n")
+      .agg(coalesce(sum(col("cnt")), lit(0L))).head().getLong(0)
 
   /** Fold one micro-batch into the MG summary state at `stateDir`.
     * Returns false (state untouched) when `batchId` was already
@@ -78,57 +67,30 @@ object StreamingHeavyHitters {
     * N/(m+1)). */
   def processBatch(
       spark: SparkSession, batch: DataFrame, batchId: Long,
-      stateDir: String, m: Int): Boolean = {
-    val st = readOrEmpty(spark, stateDir, StateDdl)
-    if (st.filter(col("kind") === "b" && col("batch_id") === batchId)
-        .limit(1).count() > 0) return false
-
-    val bc = batchCounts(batch).localCheckpoint(true) // read twice below
-    val batchN = bc.agg(sum(col("cnt"))).head().getAs[Any](0) match {
-      case null => 0L
-      case n: Long => n
+      stateDir: String, m: Int): Boolean =
+    fold(spark, stateDir, StateDdl, batchId) { st =>
+      val bc = batchCounts(batch).localCheckpoint(true) // read twice below
+      val merged = ofKind(st, "m")
+        .unionByName(bc)
+        .groupBy("tok").agg(sum(col("cnt")).as("cnt"))
+        .localCheckpoint(true) // sized + subtracted below
+      // mergeable-MG reduction: subtract the (m+1)-th largest count when
+      // the merge overflows m entries; survivors are strictly greater
+      // than the subtrahend, so at most m remain
+      val nMerged = merged.count()
+      val sub =
+        if (nMerged <= m) 0L
+        else merged.orderBy(col("cnt").desc, col("tok"))
+          .limit(m + 1).collect().last.getLong(1) // m+1 rows, control plane
+      // the folded token total: the old total plus the batch's tokens
+      val total = ofKind(st, "n").select(col("cnt")).unionByName(bc.select(col("cnt")))
+        .agg(coalesce(sum(col("cnt")), lit(0L)).as("cnt"))
+      merged
+        .select(col("tok"), (col("cnt") - lit(sub)).as("cnt"))
+        .filter(col("cnt") > 0L)
+        .withColumn("kind", lit("m"))
+        .unionByName(total.withColumn("kind", lit("n")), allowMissingColumns = true)
     }
-    val merged = st.filter(col("kind") === "m").select(col("tok"), col("cnt"))
-      .unionByName(bc)
-      .groupBy("tok").agg(sum(col("cnt")).as("cnt"))
-      .localCheckpoint(true) // sized + subtracted below
-    // mergeable-MG reduction: subtract the (m+1)-th largest count when
-    // the merge overflows m entries; survivors are strictly greater
-    // than the subtrahend, so at most m remain
-    val nMerged = merged.count()
-    val sub =
-      if (nMerged <= m) 0L
-      else merged.orderBy(col("cnt").desc, col("tok"))
-        .limit(m + 1).collect().last.getLong(1) // m+1 rows, control plane
-    val summaryRows = merged
-      .select(col("tok"), (col("cnt") - lit(sub)).as("cnt"))
-      .filter(col("cnt") > 0L)
-      .select(lit("m").as("kind"), col("tok"), col("cnt"),
-        lit(null).cast("bigint").as("batch_id"))
-
-    val prevN = st.filter(col("kind") === "n")
-      .select(sum(col("cnt"))).head().getAs[Any](0) match {
-      case null => 0L
-      case n: Long => n
-    }
-    val metaAndMarkers = spark.range(1).select(
-      lit("n").as("kind"), lit(null).cast("string").as("tok"),
-      lit(prevN + batchN).as("cnt"), lit(null).cast("bigint").as("batch_id"))
-      .unionByName(st.filter(col("kind") === "b"))
-      .unionByName(spark.range(1).select(
-        lit("b").as("kind"), lit(null).cast("string").as("tok"),
-        lit(null).cast("bigint").as("cnt"), lit(batchId).as("batch_id")))
-
-    val fs = new org.apache.hadoop.fs.Path(stateDir)
-      .getFileSystem(spark.sessionState.newHadoopConf())
-    val dst = new org.apache.hadoop.fs.Path(stateDir)
-    val tmp = TableSwap.tmpPath(stateDir)
-    TableSwap.recover(fs, dst, tmp)
-    summaryRows.unionByName(metaAndMarkers)
-      .write.mode("overwrite").parquet(tmp.toString)
-    TableSwap.publish(fs, dst, tmp)
-    true
-  }
 
   /** Candidate heavy hitters for threshold `thresh`: est ≥ thresh −
     * N/(m+1), the completeness-preserving read (every token with true

@@ -1,6 +1,5 @@
 package graft.streaming
 
-import graft.ops.TableSwap
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -23,15 +22,13 @@ import org.apache.spark.sql.functions._
   * fold verbatim. StreamingHllSpec pins chunked-fold ≡ batch
   * BIT-EQUALITY plus the estimate identity.
   *
-  * Exactly-once under at-least-once delivery: applied-batch marker
-  * rows ride the same state file, whole-state republish via one
-  * crash-safe [[TableSwap]] — the StreamingKAnonymity contract
-  * verbatim. Per-batch cost: O(batch rows) map-combined partials +
-  * a ≤16-row max merge.
+  * Exactly-once under at-least-once delivery: [[ParquetState.fold]].
+  * Per-batch cost: O(batch rows) map-combined partials + a ≤16-row
+  * max merge.
   */
 object StreamingHll {
 
-  import ParquetState.readOrEmpty
+  import ParquetState.{fold, ofKind, rows}
 
   /** One relation, two row kinds, one atomic swap:
     * kind='r' → (bucket, r) registers; kind='b' → markers. */
@@ -42,9 +39,7 @@ object StreamingHll {
 
   /** The maintained registers. */
   def registers(spark: SparkSession, stateDir: String): DataFrame =
-    readOrEmpty(spark, stateDir, StateDdl)
-      .filter(col("kind") === "r")
-      .select(col("bucket"), col("r"))
+    rows(spark, stateDir, StateDdl, "r")
 
   /** Per-batch register partials — q129's decomposition verbatim:
     * 48-bit salted md5 → 4-bit bucket + 44-bit suffix, rho = first
@@ -66,32 +61,13 @@ object StreamingHll {
     * applied. */
   def processBatch(
       spark: SparkSession, batch: DataFrame, batchId: Long,
-      stateDir: String): Boolean = {
-    val st = readOrEmpty(spark, stateDir, StateDdl)
-    if (st.filter(col("kind") === "b" && col("batch_id") === batchId)
-        .limit(1).count() > 0) return false
-
-    val merged = st.filter(col("kind") === "r")
-      .select(col("bucket"), col("r"))
-      .unionByName(registerPartials(batch))
-      .groupBy("bucket").agg(max(col("r")).as("r"))
-      .select(lit("r").as("kind"), col("bucket"), col("r"),
-        lit(null).cast("bigint").as("batch_id"))
-    val markers = st.filter(col("kind") === "b").unionByName(
-      spark.range(1).select(lit("b").as("kind"),
-        lit(null).cast("bigint").as("bucket"),
-        lit(null).cast("bigint").as("r"),
-        lit(batchId).as("batch_id")))
-
-    val fs = new org.apache.hadoop.fs.Path(stateDir)
-      .getFileSystem(spark.sessionState.newHadoopConf())
-    val dst = new org.apache.hadoop.fs.Path(stateDir)
-    val tmp = TableSwap.tmpPath(stateDir)
-    TableSwap.recover(fs, dst, tmp)
-    merged.unionByName(markers).write.mode("overwrite").parquet(tmp.toString)
-    TableSwap.publish(fs, dst, tmp)
-    true
-  }
+      stateDir: String): Boolean =
+    fold(spark, stateDir, StateDdl, batchId) { st =>
+      ofKind(st, "r")
+        .unionByName(registerPartials(batch))
+        .groupBy("bucket").agg(max(col("r")).as("r"))
+        .withColumn("kind", lit("r"))
+    }
 
   /** The distinct-users-so-far estimate: q129's exact-integer harmonic
     * fold over the current registers (absent buckets contribute 2^45

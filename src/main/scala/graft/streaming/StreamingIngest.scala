@@ -1,7 +1,6 @@
 package graft.streaming
 
 import graft.ops.Scd2Merge
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Dataset, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
@@ -48,25 +47,17 @@ object StreamingIngest {
     * Also called directly by the spec (pure function of on-disk state). */
   private[graft] def mergeBatch(batch: DataFrame, merge: Scd2Merge, targetDir: String): Unit = {
     val spark = batch.sparkSession
-    val hconf = spark.sparkContext.hadoopConfiguration
-    val target = new Path(targetDir)
-    val fs = target.getFileSystem(hconf)
-    val tmp = graft.ops.TableSwap.tmpPath(targetDir)
-
-    // a crash between the previous swap's delete and rename leaves the
-    // target missing and the committed merge result in tmp; without
-    // this the replayed batch would bootstrap an EMPTY table and
-    // silently discard all accumulated SCD2 history
-    graft.ops.TableSwap.recover(fs, target, tmp)
-
-    val current =
-      if (fs.exists(target)) spark.read.parquet(targetDir)
-      else batch.limit(0)
-        .withColumn(Scd2Merge.InsertedDate, lit(null).cast("timestamp"))
-        .withColumn(Scd2Merge.ModifiedDate, lit(null).cast("timestamp"))
-        .withColumn(Scd2Merge.IsCurrent, lit(true))
-
-    merge(current, batch).write.mode("overwrite").parquet(tmp.toString)
-    graft.ops.TableSwap.publish(fs, target, tmp)
+    // republish recovers first: reading in the crash window would
+    // bootstrap an EMPTY table and silently discard all accumulated
+    // SCD2 history
+    ParquetState.republish(spark, targetDir) {
+      val current =
+        if (ParquetState.exists(spark, targetDir)) spark.read.parquet(targetDir)
+        else batch.limit(0)
+          .withColumn(Scd2Merge.InsertedDate, lit(null).cast("timestamp"))
+          .withColumn(Scd2Merge.ModifiedDate, lit(null).cast("timestamp"))
+          .withColumn(Scd2Merge.IsCurrent, lit(true))
+      Some(merge(current, batch))
+    }
   }
 }

@@ -1,6 +1,5 @@
 package graft.streaming
 
-import graft.ops.TableSwap
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -27,9 +26,7 @@ import org.apache.spark.sql.functions._
   * partitioning — and therefore every count the finalizer reads — is
   * identical to the typed batch grouping.
   *
-  * Exactly-once under at-least-once delivery: counts are not
-  * idempotent, so applied-batch marker rows ride the same state file
-  * and the whole state republishes via one crash-safe [[TableSwap]].
+  * Exactly-once under at-least-once delivery: [[ParquetState.fold]].
   *
   * Per-batch cost: O(batch) map-combined class partials + a keyed
   * merge over the |QI domain|-row state — at 100 TB/day the state is
@@ -38,7 +35,7 @@ import org.apache.spark.sql.functions._
   */
 object StreamingKAnonymity {
 
-  import ParquetState.readOrEmpty
+  import ParquetState.{fold, ofKind, rows}
 
   /** One relation, two row kinds, one atomic swap:
     * kind='c' → (q1, q2, q3, cnt) QI classes; kind='b' → markers. */
@@ -59,43 +56,20 @@ object StreamingKAnonymity {
 
   /** The maintained QI class counts. */
   def classes(spark: SparkSession, stateDir: String): DataFrame =
-    readOrEmpty(spark, stateDir, StateDdl)
-      .filter(col("kind") === "c")
-      .select(col("q1"), col("q2"), col("q3"), col("cnt"))
+    rows(spark, stateDir, StateDdl, "c")
 
   /** Fold one micro-batch into the class state at `stateDir`. Returns
     * false (state untouched) when `batchId` was already applied. */
   def processBatch(
       spark: SparkSession, batch: DataFrame, batchId: Long,
-      stateDir: String, qi: Seq[String]): Boolean = {
-    val st = readOrEmpty(spark, stateDir, StateDdl)
-    if (st.filter(col("kind") === "b" && col("batch_id") === batchId)
-        .limit(1).count() > 0) return false
-
-    val merged = st.filter(col("kind") === "c")
-      .select(col("q1"), col("q2"), col("q3"), col("cnt"))
-      .unionByName(classPartials(batch, qi))
-      .groupBy(col("q1"), col("q2"), col("q3"))
-      .agg(sum(col("cnt")).as("cnt"))
-      .select(lit("c").as("kind"), col("q1"), col("q2"), col("q3"),
-        col("cnt"), lit(null).cast("bigint").as("batch_id"))
-    val markers = st.filter(col("kind") === "b").unionByName(
-      spark.range(1).select(lit("b").as("kind"),
-        lit(null).cast("string").as("q1"),
-        lit(null).cast("string").as("q2"),
-        lit(null).cast("string").as("q3"),
-        lit(null).cast("bigint").as("cnt"),
-        lit(batchId).as("batch_id")))
-
-    val fs = new org.apache.hadoop.fs.Path(stateDir)
-      .getFileSystem(spark.sessionState.newHadoopConf())
-    val dst = new org.apache.hadoop.fs.Path(stateDir)
-    val tmp = TableSwap.tmpPath(stateDir)
-    TableSwap.recover(fs, dst, tmp)
-    merged.unionByName(markers).write.mode("overwrite").parquet(tmp.toString)
-    TableSwap.publish(fs, dst, tmp)
-    true
-  }
+      stateDir: String, qi: Seq[String]): Boolean =
+    fold(spark, stateDir, StateDdl, batchId) { st =>
+      ofKind(st, "c")
+        .unionByName(classPartials(batch, qi))
+        .groupBy(col("q1"), col("q2"), col("q3"))
+        .agg(sum(col("cnt")).as("cnt"))
+        .withColumn("kind", lit("c"))
+    }
 
   /** The current per-threshold risk report — the EXACT batch finalizer
     * over the maintained classes (shared verbatim with q173). */

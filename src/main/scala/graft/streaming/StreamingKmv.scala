@@ -1,6 +1,5 @@
 package graft.streaming
 
-import graft.ops.TableSwap
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -23,16 +22,14 @@ import org.apache.spark.sql.functions._
   * [[graft.queries.Curation.kmvPairEstimate]] — so the q223 DuckDB
   * oracle transitively verifies the streaming overlap answers.
   *
-  * Exactly-once under at-least-once delivery: applied-batch marker
-  * rows ride the same state file, whole-state republish via one
-  * crash-safe [[TableSwap]] — the StreamingCountMin contract
-  * verbatim. Per-batch cost: O(batch grams) map-combined distinct +
-  * a per-source TopK over state∪batch (≤k rows per source survive) —
+  * Exactly-once under at-least-once delivery: [[ParquetState.fold]].
+  * Per-batch cost: O(batch grams) map-combined distinct + a
+  * per-source TopK over state∪batch (≤k rows per source survive) —
   * bounded by |sources|·k, never by the stream.
   */
 object StreamingKmv {
 
-  import ParquetState.readOrEmpty
+  import ParquetState.{fold, ofKind, rows}
 
   /** One relation, two row kinds, one atomic swap:
     * kind='h' → (source, gh) sketch hashes; kind='b' → markers. */
@@ -41,45 +38,24 @@ object StreamingKmv {
 
   /** The maintained per-source bottom-k sketches. */
   def sketches(spark: SparkSession, stateDir: String): DataFrame =
-    readOrEmpty(spark, stateDir, StateDdl)
-      .filter(col("kind") === "h")
-      .select(col("source"), col("gh"))
+    rows(spark, stateDir, StateDdl, "h")
 
   /** Fold one micro-batch of documents into the sketches at
     * `stateDir`. Returns false (state untouched) when `batchId` was
     * already applied. */
   def processBatch(
       spark: SparkSession, batch: DataFrame, batchId: Long,
-      stateDir: String): Boolean = {
-    val st = readOrEmpty(spark, stateDir, StateDdl)
-    if (st.filter(col("kind") === "b" && col("batch_id") === batchId)
-        .limit(1).count() > 0) return false
-
-    // union → distinct → bottom-k: dedup BEFORE the rank is what makes
-    // a gram re-seen in a later chunk a no-op (KMV is a sketch of the
-    // distinct gram SET, not the gram stream)
-    val merged = st.filter(col("kind") === "h")
-      .select(col("source"), col("gh"))
-      .unionByName(graft.queries.Curation.sourceGramRows(batch))
-      .distinct()
-      .transform(graft.queries.Curation.kmvBottomK)
-      .select(lit("h").as("kind"), col("source"), col("gh"),
-        lit(null).cast("bigint").as("batch_id"))
-    val markers = st.filter(col("kind") === "b").unionByName(
-      spark.range(1).select(lit("b").as("kind"),
-        lit(null).cast("string").as("source"),
-        lit(null).cast("bigint").as("gh"),
-        lit(batchId).as("batch_id")))
-
-    val fs = new org.apache.hadoop.fs.Path(stateDir)
-      .getFileSystem(spark.sessionState.newHadoopConf())
-    val dst = new org.apache.hadoop.fs.Path(stateDir)
-    val tmp = TableSwap.tmpPath(stateDir)
-    TableSwap.recover(fs, dst, tmp)
-    merged.unionByName(markers).write.mode("overwrite").parquet(tmp.toString)
-    TableSwap.publish(fs, dst, tmp)
-    true
-  }
+      stateDir: String): Boolean =
+    fold(spark, stateDir, StateDdl, batchId) { st =>
+      // union → distinct → bottom-k: dedup BEFORE the rank is what makes
+      // a gram re-seen in a later chunk a no-op (KMV is a sketch of the
+      // distinct gram SET, not the gram stream)
+      ofKind(st, "h")
+        .unionByName(graft.queries.Curation.sourceGramRows(batch))
+        .distinct()
+        .transform(graft.queries.Curation.kmvBottomK)
+        .withColumn("kind", lit("h"))
+    }
 
   /** Pairwise Jaccard estimates for a requested source-pair list
     * (control plane — the governance question names its suspects,

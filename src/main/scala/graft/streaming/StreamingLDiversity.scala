@@ -1,6 +1,5 @@
 package graft.streaming
 
-import graft.ops.TableSwap
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -26,9 +25,7 @@ import org.apache.spark.sql.functions._
   * QI + sensitive identities ride as string-cast columns (fixed state
   * schema for any monitored tuple; injective for the
   * integral/categorical columns this gate monitors). Exactly-once
-  * under at-least-once delivery: applied-batch marker rows ride the
-  * same state file and the whole state republishes via one crash-safe
-  * [[TableSwap]] — the StreamingKAnonymity contract verbatim.
+  * under at-least-once delivery: [[ParquetState.fold]].
   *
   * Per-batch cost: O(batch) map-combined cell partials + a keyed merge
   * over the |QI domain × sensitive domain|-row state — bounded by the
@@ -36,7 +33,7 @@ import org.apache.spark.sql.functions._
   */
 object StreamingLDiversity {
 
-  import ParquetState.readOrEmpty
+  import ParquetState.{fold, ofKind, rows}
 
   /** One relation, two row kinds, one atomic swap:
     * kind='c' → (q1, q2, sens, cnt) cells; kind='b' → markers. */
@@ -58,43 +55,20 @@ object StreamingLDiversity {
 
   /** The maintained (QI, sensitive) cell counts. */
   def cells(spark: SparkSession, stateDir: String): DataFrame =
-    readOrEmpty(spark, stateDir, StateDdl)
-      .filter(col("kind") === "c")
-      .select(col("q1"), col("q2"), col("sens"), col("cnt"))
+    rows(spark, stateDir, StateDdl, "c")
 
   /** Fold one micro-batch into the cell state at `stateDir`. Returns
     * false (state untouched) when `batchId` was already applied. */
   def processBatch(
       spark: SparkSession, batch: DataFrame, batchId: Long,
-      stateDir: String, qi: Seq[String], sens: String): Boolean = {
-    val st = readOrEmpty(spark, stateDir, StateDdl)
-    if (st.filter(col("kind") === "b" && col("batch_id") === batchId)
-        .limit(1).count() > 0) return false
-
-    val merged = st.filter(col("kind") === "c")
-      .select(col("q1"), col("q2"), col("sens"), col("cnt"))
-      .unionByName(cellPartials(batch, qi, sens))
-      .groupBy(col("q1"), col("q2"), col("sens"))
-      .agg(sum(col("cnt")).as("cnt"))
-      .select(lit("c").as("kind"), col("q1"), col("q2"), col("sens"),
-        col("cnt"), lit(null).cast("bigint").as("batch_id"))
-    val markers = st.filter(col("kind") === "b").unionByName(
-      spark.range(1).select(lit("b").as("kind"),
-        lit(null).cast("string").as("q1"),
-        lit(null).cast("string").as("q2"),
-        lit(null).cast("string").as("sens"),
-        lit(null).cast("bigint").as("cnt"),
-        lit(batchId).as("batch_id")))
-
-    val fs = new org.apache.hadoop.fs.Path(stateDir)
-      .getFileSystem(spark.sessionState.newHadoopConf())
-    val dst = new org.apache.hadoop.fs.Path(stateDir)
-    val tmp = TableSwap.tmpPath(stateDir)
-    TableSwap.recover(fs, dst, tmp)
-    merged.unionByName(markers).write.mode("overwrite").parquet(tmp.toString)
-    TableSwap.publish(fs, dst, tmp)
-    true
-  }
+      stateDir: String, qi: Seq[String], sens: String): Boolean =
+    fold(spark, stateDir, StateDdl, batchId) { st =>
+      ofKind(st, "c")
+        .unionByName(cellPartials(batch, qi, sens))
+        .groupBy(col("q1"), col("q2"), col("sens"))
+        .agg(sum(col("cnt")).as("cnt"))
+        .withColumn("kind", lit("c"))
+    }
 
   /** The current per-threshold diversity report — the EXACT batch
     * finalizer over the maintained cells (shared verbatim with q188). */

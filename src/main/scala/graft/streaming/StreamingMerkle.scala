@@ -1,6 +1,5 @@
 package graft.streaming
 
-import graft.ops.TableSwap
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
@@ -14,11 +13,10 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * do without exact arithmetic inverses colliding with overflow.
   *
   * State: one parquet relation of (bucket, n_rows, fp) leaf rows plus
-  * applied-batch marker rows, republished atomically via ONE
-  * [[TableSwap]] per batch — the [[StreamingAnomaly]] exactly-once
-  * discipline (a replayed foreachBatch id is a provable no-op). The
-  * root folds the ≤256 leaves at READ time ([[fingerprints]]), so the
-  * published state stays a single flat relation.
+  * applied-batch marker rows, folded exactly-once by
+  * [[ParquetState.fold]]. The root folds the ≤256 leaves at READ time
+  * ([[fingerprints]]), so the published state stays a single flat
+  * relation.
   *
   * Per-batch cost: O(batch) digesting (narrow, codegen'd md5) + a
   * 256-group map-combined aggregate + a ≤256-row state merge. At
@@ -26,7 +24,7 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * those rows, not the table. */
 object StreamingMerkle {
 
-  import ParquetState.readOrEmpty
+  import ParquetState.{fold, ofKind, rows}
 
   private val StateDdl = "kind STRING, bucket BIGINT, n_rows BIGINT, fp BIGINT, batch_id BIGINT"
 
@@ -40,38 +38,18 @@ object StreamingMerkle {
     * Returns false (state untouched) when `batchId` was already
     * applied. */
   def processBatch(
-      spark: SparkSession, batch: DataFrame, batchId: Long, stateDir: String): Boolean = {
-    val st = readOrEmpty(spark, stateDir, StateDdl)
-    if (st.filter(col("kind") === "b" && col("batch_id") === batchId)
-        .limit(1).count() > 0) return false
-    val merged = st.filter(col("kind") === "c")
-      .select(col("bucket"), col("n_rows"), col("fp"))
-      .unionByName(leafPartials(batch))
-      .groupBy(col("bucket"))
-      .agg(sum(col("n_rows")).as("n_rows"), expr("bit_xor(fp)").as("fp"))
-      .select(lit("c").as("kind"), col("bucket"), col("n_rows"), col("fp"),
-        lit(null).cast("bigint").as("batch_id"))
-    val markers = st.filter(col("kind") === "b").unionByName(
-      spark.range(1).select(lit("b").as("kind"),
-        lit(null).cast("bigint").as("bucket"),
-        lit(null).cast("bigint").as("n_rows"),
-        lit(null).cast("bigint").as("fp"),
-        lit(batchId).as("batch_id")))
-    val fs = new org.apache.hadoop.fs.Path(stateDir)
-      .getFileSystem(spark.sessionState.newHadoopConf())
-    val dst = new org.apache.hadoop.fs.Path(stateDir)
-    val tmp = TableSwap.tmpPath(stateDir)
-    TableSwap.recover(fs, dst, tmp)
-    merged.unionByName(markers).write.mode("overwrite").parquet(tmp.toString)
-    TableSwap.publish(fs, dst, tmp)
-    true
-  }
+      spark: SparkSession, batch: DataFrame, batchId: Long, stateDir: String): Boolean =
+    fold(spark, stateDir, StateDdl, batchId) { st =>
+      ofKind(st, "c")
+        .unionByName(leafPartials(batch))
+        .groupBy(col("bucket"))
+        .agg(sum(col("n_rows")).as("n_rows"), expr("bit_xor(fp)").as("fp"))
+        .withColumn("kind", lit("c"))
+    }
 
   /** The q164-shaped output (leaves + root) from the maintained state. */
   def fingerprints(spark: SparkSession, stateDir: String): DataFrame = {
-    val leaves = readOrEmpty(spark, stateDir, StateDdl)
-      .filter(col("kind") === "c")
-      .select(col("bucket"), col("n_rows"), col("fp"))
+    val leaves = rows(spark, stateDir, StateDdl, "c")
     val root = leaves
       .agg(sum(col("n_rows")).as("n_rows"), expr("bit_xor(fp)").as("fp"))
       .select(lit(-1L).as("bucket"), col("n_rows"), col("fp"))

@@ -1,6 +1,5 @@
 package graft.streaming
 
-import graft.ops.TableSwap
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -24,16 +23,14 @@ import org.apache.spark.sql.functions._
   * whose rank/count tail is the literally shared
   * [[graft.queries.EventAnalytics.permFinalize]].
   *
-  * Exactly-once under at-least-once delivery: applied-batch marker
-  * rows ride the same state file, whole-state republish via one
-  * crash-safe [[TableSwap]] — the StreamingCountMin contract
-  * verbatim. Per-batch cost: O(batch cells · B) map-combined
-  * partials + a keyed merge over the |types|·(B+1)-row state —
-  * bounded by the report geometry, never by the stream.
+  * Exactly-once under at-least-once delivery: [[ParquetState.fold]].
+  * Per-batch cost: O(batch cells · B) map-combined partials + a keyed
+  * merge over the |types|·(B+1)-row state — bounded by the report
+  * geometry, never by the stream.
   */
 object StreamingPermTest {
 
-  import ParquetState.readOrEmpty
+  import ParquetState.{fold, ofKind, rows}
 
   /** One relation, three row kinds, one atomic swap:
     * kind='c' → (event_type, r, pn0, pn1, ps0, ps1) permuted cells;
@@ -46,66 +43,37 @@ object StreamingPermTest {
 
   /** The maintained permuted-side cells. */
   def cells(spark: SparkSession, stateDir: String): DataFrame =
-    readOrEmpty(spark, stateDir, StateDdl)
-      .filter(col("kind") === "c")
-      .select(col("event_type"), col("r"),
-        col("pn0"), col("pn1"), col("ps0"), col("ps1"))
+    rows(spark, stateDir, StateDdl, "c")
+      .select("event_type", "r", "pn0", "pn1", "ps0", "ps1")
 
   /** The maintained observed-leg partials. */
   def obsRows(spark: SparkSession, stateDir: String): DataFrame =
-    readOrEmpty(spark, stateDir, StateDdl)
-      .filter(col("kind") === "o")
-      .select(col("event_type"), col("n0"), col("n1"), col("s0"), col("s1"))
+    rows(spark, stateDir, StateDdl, "o").select("event_type", "n0", "n1", "s0", "s1")
 
   /** Fold one micro-batch of events into the state at `stateDir`.
     * Returns false (state untouched) when `batchId` was already
     * applied. */
   def processBatch(
       spark: SparkSession, batch: DataFrame, batchId: Long,
-      stateDir: String): Boolean = {
-    val st = readOrEmpty(spark, stateDir, StateDdl)
-    if (st.filter(col("kind") === "b" && col("batch_id") === batchId)
-        .limit(1).count() > 0) return false
-
-    val base = graft.queries.EventAnalytics.permBaseCells(batch)
-    val nullL = lit(null).cast("bigint")
-    val mergedCells = st.filter(col("kind") === "c")
-      .select(col("event_type"), col("r"),
-        col("pn0"), col("pn1"), col("ps0"), col("ps1"))
-      .unionByName(graft.queries.EventAnalytics.permCellPartials(base))
-      .groupBy("event_type", "r")
-      .agg(sum(col("pn0")).as("pn0"), sum(col("pn1")).as("pn1"),
-        sum(col("ps0")).as("ps0"), sum(col("ps1")).as("ps1"))
-      .select(lit("c").as("kind"), col("event_type"), col("r"),
-        col("pn0"), col("pn1"), col("ps0"), col("ps1"),
-        nullL.as("n0"), nullL.as("n1"), nullL.as("s0"), nullL.as("s1"),
-        nullL.as("batch_id"))
-    val mergedObs = st.filter(col("kind") === "o")
-      .select(col("event_type"), col("n0"), col("n1"), col("s0"), col("s1"))
-      .unionByName(graft.queries.EventAnalytics.permObsPartials(base))
-      .groupBy("event_type")
-      .agg(sum(col("n0")).as("n0"), sum(col("n1")).as("n1"),
-        sum(col("s0")).as("s0"), sum(col("s1")).as("s1"))
-      .select(lit("o").as("kind"), col("event_type"), nullL.as("r"),
-        nullL.as("pn0"), nullL.as("pn1"), nullL.as("ps0"), nullL.as("ps1"),
-        col("n0"), col("n1"), col("s0"), col("s1"), nullL.as("batch_id"))
-    val markers = st.filter(col("kind") === "b").unionByName(
-      spark.range(1).select(lit("b").as("kind"),
-        lit(null).cast("string").as("event_type"), nullL.as("r"),
-        nullL.as("pn0"), nullL.as("pn1"), nullL.as("ps0"), nullL.as("ps1"),
-        nullL.as("n0"), nullL.as("n1"), nullL.as("s0"), nullL.as("s1"),
-        lit(batchId).as("batch_id")))
-
-    val fs = new org.apache.hadoop.fs.Path(stateDir)
-      .getFileSystem(spark.sessionState.newHadoopConf())
-    val dst = new org.apache.hadoop.fs.Path(stateDir)
-    val tmp = TableSwap.tmpPath(stateDir)
-    TableSwap.recover(fs, dst, tmp)
-    mergedCells.unionByName(mergedObs).unionByName(markers)
-      .write.mode("overwrite").parquet(tmp.toString)
-    TableSwap.publish(fs, dst, tmp)
-    true
-  }
+      stateDir: String): Boolean =
+    fold(spark, stateDir, StateDdl, batchId) { st =>
+      val base = graft.queries.EventAnalytics.permBaseCells(batch)
+      val mergedCells = ofKind(st, "c")
+        .select("event_type", "r", "pn0", "pn1", "ps0", "ps1")
+        .unionByName(graft.queries.EventAnalytics.permCellPartials(base))
+        .groupBy("event_type", "r")
+        .agg(sum(col("pn0")).as("pn0"), sum(col("pn1")).as("pn1"),
+          sum(col("ps0")).as("ps0"), sum(col("ps1")).as("ps1"))
+        .withColumn("kind", lit("c"))
+      val mergedObs = ofKind(st, "o")
+        .select("event_type", "n0", "n1", "s0", "s1")
+        .unionByName(graft.queries.EventAnalytics.permObsPartials(base))
+        .groupBy("event_type")
+        .agg(sum(col("n0")).as("n0"), sum(col("n1")).as("n1"),
+          sum(col("s0")).as("s0"), sum(col("s1")).as("s1"))
+        .withColumn("kind", lit("o"))
+      mergedCells.unionByName(mergedObs, allowMissingColumns = true)
+    }
 
   /** The test report over the accumulated stream — batch q245's
     * columns, computed by the SHARED finalizer over the maintained

@@ -1,6 +1,5 @@
 package graft.streaming
 
-import graft.ops.TableSwap
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -22,16 +21,14 @@ import org.apache.spark.sql.functions._
   * [[graft.queries.EventAnalytics.rankSumFinalize]] /
   * [[graft.queries.EventAnalytics.ksFinalize]] code paths.
   *
-  * Exactly-once under at-least-once delivery: applied-batch marker
-  * rows ride the same state file, whole-state republish via one
-  * crash-safe [[TableSwap]] — the StreamingCountMin contract
-  * verbatim. Per-batch cost: O(batch rows) map-combined cell
-  * partials + a keyed merge over the |types|·|value domain|-row
-  * state — bounded by the cents-value domain, never by the stream.
+  * Exactly-once under at-least-once delivery: [[ParquetState.fold]].
+  * Per-batch cost: O(batch rows) map-combined cell partials + a keyed
+  * merge over the |types|·|value domain|-row state — bounded by the
+  * cents-value domain, never by the stream.
   */
 object StreamingRankTests {
 
-  import ParquetState.readOrEmpty
+  import ParquetState.{fold, ofKind, rows}
 
   /** One relation, two row kinds, one atomic swap:
     * kind='c' → (event_type, v, n0v, n1v) value cells;
@@ -42,43 +39,21 @@ object StreamingRankTests {
 
   /** The maintained value cells. */
   def cells(spark: SparkSession, stateDir: String): DataFrame =
-    readOrEmpty(spark, stateDir, StateDdl)
-      .filter(col("kind") === "c")
-      .select(col("event_type"), col("v"), col("n0v"), col("n1v"))
+    rows(spark, stateDir, StateDdl, "c")
 
   /** Fold one micro-batch of events into the state at `stateDir`.
     * Returns false (state untouched) when `batchId` was already
     * applied. */
   def processBatch(
       spark: SparkSession, batch: DataFrame, batchId: Long,
-      stateDir: String): Boolean = {
-    val st = readOrEmpty(spark, stateDir, StateDdl)
-    if (st.filter(col("kind") === "b" && col("batch_id") === batchId)
-        .limit(1).count() > 0) return false
-
-    val nullL = lit(null).cast("bigint")
-    val mergedCells = st.filter(col("kind") === "c")
-      .select(col("event_type"), col("v"), col("n0v"), col("n1v"))
-      .unionByName(graft.queries.EventAnalytics.rankCells(batch))
-      .groupBy("event_type", "v")
-      .agg(sum(col("n0v")).as("n0v"), sum(col("n1v")).as("n1v"))
-      .select(lit("c").as("kind"), col("event_type"), col("v"),
-        col("n0v"), col("n1v"), nullL.as("batch_id"))
-    val markers = st.filter(col("kind") === "b").unionByName(
-      spark.range(1).select(lit("b").as("kind"),
-        lit(null).cast("string").as("event_type"), nullL.as("v"),
-        nullL.as("n0v"), nullL.as("n1v"), lit(batchId).as("batch_id")))
-
-    val fs = new org.apache.hadoop.fs.Path(stateDir)
-      .getFileSystem(spark.sessionState.newHadoopConf())
-    val dst = new org.apache.hadoop.fs.Path(stateDir)
-    val tmp = TableSwap.tmpPath(stateDir)
-    TableSwap.recover(fs, dst, tmp)
-    mergedCells.unionByName(markers)
-      .write.mode("overwrite").parquet(tmp.toString)
-    TableSwap.publish(fs, dst, tmp)
-    true
-  }
+      stateDir: String): Boolean =
+    fold(spark, stateDir, StateDdl, batchId) { st =>
+      ofKind(st, "c")
+        .unionByName(graft.queries.EventAnalytics.rankCells(batch))
+        .groupBy("event_type", "v")
+        .agg(sum(col("n0v")).as("n0v"), sum(col("n1v")).as("n1v"))
+        .withColumn("kind", lit("c"))
+    }
 
   /** The Mann–Whitney report over the accumulated stream — batch
     * q246's columns, computed by the SHARED finalizer. */

@@ -1,10 +1,8 @@
 package graft.streaming
 
-import graft.ops.TableSwap
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
-import org.apache.spark.sql.types.StructType
 
 /** Continuous EXACT rolling-7-day distinct users (streaming MAU/WAU) —
   * the streaming form of batch q83, sharing its contract: for every
@@ -23,8 +21,8 @@ import org.apache.spark.sql.types.StructType
   *      membership rows append (the index is the exact distinct state,
   *      in parquet, not the state store — no watermark eviction races,
   *      arbitrarily late events still land in their true windows);
-  *   3. per-window counts recompute FROM THE INDEX and publish via a
-  *      crash-safe [[TableSwap]] — counts are always derivable state,
+  *   3. per-window counts recompute FROM THE INDEX and publish via
+  *      [[ParquetState.republish]] — counts are always derivable state,
   *      so the append-then-swap pair needs no cross-table atomicity: a
   *      crash between the two heals on the next batch (replay
   *      anti-joins to empty and the count swap re-runs), keeping
@@ -69,16 +67,10 @@ object StreamingRollingMau {
 
     // counts are DERIVED state: recompute from the index and swap —
     // self-healing after any crash between append and publish
-    val fs = new org.apache.hadoop.fs.Path(countsDir)
-      .getFileSystem(spark.sessionState.newHadoopConf())
-    val dst = new org.apache.hadoop.fs.Path(countsDir)
-    val tmp = TableSwap.tmpPath(countsDir)
-    TableSwap.recover(fs, dst, tmp)
-    readOrEmpty(spark, indexDir, "window_day DATE, user_id BIGINT")
-      .groupBy(col("window_day"))
-      .agg(count(lit(1)).as("n_active_users"))
-      .write.mode("overwrite").parquet(tmp.toString)
-    TableSwap.publish(fs, dst, tmp)
+    ParquetState.republish(spark, countsDir)(Some(
+      readOrEmpty(spark, indexDir, "window_day DATE, user_id BIGINT")
+        .groupBy(col("window_day"))
+        .agg(count(lit(1)).as("n_active_users"))))
     n
   }
 

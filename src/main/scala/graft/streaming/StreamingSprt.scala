@@ -1,6 +1,5 @@
 package graft.streaming
 
-import graft.ops.TableSwap
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -26,14 +25,13 @@ import org.apache.spark.sql.functions._
   * oracle transitively verifies the streaming math, and
   * StreamingSprtSpec pins time-split chunked-fold ≡ batch equality.
   *
-  * Exactly-once under at-least-once delivery: applied-batch markers
-  * ride the same state file, one crash-safe [[TableSwap]] per fold.
+  * Exactly-once under at-least-once delivery: [[ParquetState.fold]].
   * Per-batch cost: O(batch) ordered window per variant + a 2-row
   * keyed merge.
   */
 object StreamingSprt {
 
-  import ParquetState.readOrEmpty
+  import ParquetState.{fold, ofKind, rows}
 
   /** One relation, two row kinds, one atomic swap: kind='v' →
     * (variant, n_obs, n_conversions, cum, n_to_decision,
@@ -48,85 +46,57 @@ object StreamingSprt {
 
   /** The maintained per-variant walk state. */
   def state(spark: SparkSession, stateDir: String): DataFrame =
-    readOrEmpty(spark, stateDir, StateDdl)
-      .filter(col("kind") === "v")
-      .select(col("variant"), col("n_obs"), col("n_conversions"),
-        col("cum"), col("n_to_decision"), col("cum_at_decision"))
+    rows(spark, stateDir, StateDdl, "v")
 
   /** Fold one micro-batch of events (the NEXT time slice — the
     * sequential append contract) into the walk at `stateDir`. Returns
     * false (state untouched) when `batchId` was already applied. */
   def processBatch(
       spark: SparkSession, batch: DataFrame, batchId: Long,
-      stateDir: String): Boolean = {
-    val st = readOrEmpty(spark, stateDir, StateDdl)
-    if (st.filter(col("kind") === "b" && col("batch_id") === batchId)
-        .limit(1).count() > 0) return false
-
-    val prev = st.filter(col("kind") === "v")
-      .select(col("variant"), col("n_obs"), col("n_conversions"),
-        col("cum"), col("n_to_decision"), col("cum_at_decision"))
-    val w = Window.partitionBy("variant").orderBy("ts", "event_id")
-    val walk = batch
-      .select((col("user_id") % 2).as("variant"), col("ts"), col("event_id"),
-        when(col("event_type") === "purchase", lit(Hit))
-          .otherwise(lit(Miss)).as("step"),
-        (col("event_type") === "purchase").cast("long").as("hit"))
-      .withColumn("bcum", sum(col("step")).over(
-        w.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-      .withColumn("brn", row_number().over(w).cast("long"))
-    // ride the batch walk on the state's offset; first in-batch
-    // crossing only counts while the variant is still undecided
-    val offset = walk
-      .join(prev.select(col("variant"), col("n_obs").as("p_n"),
-        col("cum").as("p_cum"), col("n_to_decision").as("p_dec")),
-        Seq("variant"), "left")
-      .withColumn("acum", coalesce(col("p_cum"), lit(0L)) + col("bcum"))
-    val crossing = offset
-      .filter(col("p_dec").isNull &&
-        (col("acum") >= Thr || col("acum") <= -Thr))
-      .groupBy("variant")
-      .agg(min(struct(col("brn"), col("acum"), col("p_n"))).as("x"))
-      .select(col("variant"),
-        (coalesce(col("x.p_n"), lit(0L)) + col("x.brn")).as("b_dec"),
-        col("x.acum").as("b_dec_cum"))
-    val batchAgg = offset.groupBy("variant")
-      .agg(count(lit(1)).as("b_obs"), sum(col("hit")).as("b_conv"),
-        sum(col("step")).as("b_sum"))
-      .join(crossing, Seq("variant"), "left")
-    val merged = prev
-      .join(batchAgg, Seq("variant"), "outer")
-      .select(col("variant"),
-        (coalesce(col("n_obs"), lit(0L)) + coalesce(col("b_obs"), lit(0L)))
-          .as("n_obs"),
-        (coalesce(col("n_conversions"), lit(0L)) + coalesce(col("b_conv"), lit(0L)))
-          .as("n_conversions"),
-        (coalesce(col("cum"), lit(0L)) + coalesce(col("b_sum"), lit(0L)))
-          .as("cum"),
-        coalesce(col("n_to_decision"), col("b_dec")).as("n_to_decision"),
-        coalesce(col("cum_at_decision"), col("b_dec_cum")).as("cum_at_decision"))
-      .select(lit("v").as("kind"), col("variant"), col("n_obs"),
-        col("n_conversions"), col("cum"), col("n_to_decision"),
-        col("cum_at_decision"), lit(null).cast("bigint").as("batch_id"))
-    val markers = st.filter(col("kind") === "b").unionByName(
-      spark.range(1).select(lit("b").as("kind"),
-        lit(null).cast("bigint").as("variant"),
-        lit(null).cast("bigint").as("n_obs"),
-        lit(null).cast("bigint").as("n_conversions"),
-        lit(null).cast("bigint").as("cum"),
-        lit(null).cast("bigint").as("n_to_decision"),
-        lit(null).cast("bigint").as("cum_at_decision"),
-        lit(batchId).as("batch_id")))
-
-    val fs = new org.apache.hadoop.fs.Path(stateDir)
-      .getFileSystem(spark.sessionState.newHadoopConf())
-    val dst = new org.apache.hadoop.fs.Path(stateDir)
-    val tmp = TableSwap.tmpPath(stateDir)
-    TableSwap.recover(fs, dst, tmp)
-    merged.unionByName(markers).write.mode("overwrite").parquet(tmp.toString)
-    TableSwap.publish(fs, dst, tmp)
-    true
-  }
+      stateDir: String): Boolean =
+    fold(spark, stateDir, StateDdl, batchId) { st =>
+      val prev = ofKind(st, "v")
+      val w = Window.partitionBy("variant").orderBy("ts", "event_id")
+      val walk = batch
+        .select((col("user_id") % 2).as("variant"), col("ts"), col("event_id"),
+          when(col("event_type") === "purchase", lit(Hit))
+            .otherwise(lit(Miss)).as("step"),
+          (col("event_type") === "purchase").cast("long").as("hit"))
+        .withColumn("bcum", sum(col("step")).over(
+          w.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
+        .withColumn("brn", row_number().over(w).cast("long"))
+      // ride the batch walk on the state's offset; first in-batch
+      // crossing only counts while the variant is still undecided
+      val offset = walk
+        .join(prev.select(col("variant"), col("n_obs").as("p_n"),
+          col("cum").as("p_cum"), col("n_to_decision").as("p_dec")),
+          Seq("variant"), "left")
+        .withColumn("acum", coalesce(col("p_cum"), lit(0L)) + col("bcum"))
+      val crossing = offset
+        .filter(col("p_dec").isNull &&
+          (col("acum") >= Thr || col("acum") <= -Thr))
+        .groupBy("variant")
+        .agg(min(struct(col("brn"), col("acum"), col("p_n"))).as("x"))
+        .select(col("variant"),
+          (coalesce(col("x.p_n"), lit(0L)) + col("x.brn")).as("b_dec"),
+          col("x.acum").as("b_dec_cum"))
+      val batchAgg = offset.groupBy("variant")
+        .agg(count(lit(1)).as("b_obs"), sum(col("hit")).as("b_conv"),
+          sum(col("step")).as("b_sum"))
+        .join(crossing, Seq("variant"), "left")
+      prev
+        .join(batchAgg, Seq("variant"), "outer")
+        .select(col("variant"),
+          (coalesce(col("n_obs"), lit(0L)) + coalesce(col("b_obs"), lit(0L)))
+            .as("n_obs"),
+          (coalesce(col("n_conversions"), lit(0L)) + coalesce(col("b_conv"), lit(0L)))
+            .as("n_conversions"),
+          (coalesce(col("cum"), lit(0L)) + coalesce(col("b_sum"), lit(0L)))
+            .as("cum"),
+          coalesce(col("n_to_decision"), col("b_dec")).as("n_to_decision"),
+          coalesce(col("cum_at_decision"), col("b_dec_cum")).as("cum_at_decision"))
+        .withColumn("kind", lit("v"))
+    }
 
   /** The q238-shaped readout over the maintained state. */
   def report(spark: SparkSession, stateDir: String): DataFrame =

@@ -1,6 +1,5 @@
 package graft.streaming
 
-import graft.ops.TableSwap
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -37,16 +36,14 @@ import org.apache.spark.sql.functions._
   * observation-end censoring is supposed to behave as the window
   * extends.
   *
-  * Exactly-once under at-least-once delivery: applied-batch marker
-  * rows ride the same state file, whole-state republish via one
-  * crash-safe [[TableSwap]] — the StreamingCountMin contract
-  * verbatim. Per-batch cost: O(batch rows) map-combined cell partials
-  * + a keyed min/max merge over the (user)-sized state (the
-  * StreamingRollingMau membership-index scale).
+  * Exactly-once under at-least-once delivery: [[ParquetState.fold]].
+  * Per-batch cost: O(batch rows) map-combined cell partials + a keyed
+  * min/max merge over the (user)-sized state (the StreamingRollingMau
+  * membership-index scale).
   */
 object StreamingSurvival {
 
-  import ParquetState.readOrEmpty
+  import ParquetState.{fold, ofKind, rows}
 
   /** One relation, two row kinds, one atomic swap:
     * kind='c' → (user_id, treat, fv, fp, le) survival cells;
@@ -57,45 +54,22 @@ object StreamingSurvival {
 
   /** The maintained survival cells. */
   def cells(spark: SparkSession, stateDir: String): DataFrame =
-    readOrEmpty(spark, stateDir, StateDdl)
-      .filter(col("kind") === "c")
-      .select(col("user_id"), col("treat"), col("fv"), col("fp"), col("le"))
+    rows(spark, stateDir, StateDdl, "c")
 
   /** Fold one micro-batch of events into the state at `stateDir`.
     * Returns false (state untouched) when `batchId` was already
     * applied. */
   def processBatch(
       spark: SparkSession, batch: DataFrame, batchId: Long,
-      stateDir: String): Boolean = {
-    val st = readOrEmpty(spark, stateDir, StateDdl)
-    if (st.filter(col("kind") === "b" && col("batch_id") === batchId)
-        .limit(1).count() > 0) return false
-
-    val nullL = lit(null).cast("bigint")
-    val mergedCells = st.filter(col("kind") === "c")
-      .select(col("user_id"), col("treat"), col("fv"), col("fp"), col("le"))
-      .unionByName(graft.queries.EventAnalytics.survivalCells(batch))
-      .groupBy("user_id", "treat")
-      .agg(min(col("fv")).as("fv"), min(col("fp")).as("fp"),
-        max(col("le")).as("le"))
-      .select(lit("c").as("kind"), col("user_id"), col("treat"),
-        col("fv"), col("fp"), col("le"), nullL.as("batch_id"))
-    val markers = st.filter(col("kind") === "b").unionByName(
-      spark.range(1).select(lit("b").as("kind"), nullL.as("user_id"),
-        lit(null).cast("boolean").as("treat"),
-        nullL.as("fv"), nullL.as("fp"), nullL.as("le"),
-        lit(batchId).as("batch_id")))
-
-    val fs = new org.apache.hadoop.fs.Path(stateDir)
-      .getFileSystem(spark.sessionState.newHadoopConf())
-    val dst = new org.apache.hadoop.fs.Path(stateDir)
-    val tmp = TableSwap.tmpPath(stateDir)
-    TableSwap.recover(fs, dst, tmp)
-    mergedCells.unionByName(markers)
-      .write.mode("overwrite").parquet(tmp.toString)
-    TableSwap.publish(fs, dst, tmp)
-    true
-  }
+      stateDir: String): Boolean =
+    fold(spark, stateDir, StateDdl, batchId) { st =>
+      ofKind(st, "c")
+        .unionByName(graft.queries.EventAnalytics.survivalCells(batch))
+        .groupBy("user_id", "treat")
+        .agg(min(col("fv")).as("fv"), min(col("fp")).as("fp"),
+          max(col("le")).as("le"))
+        .withColumn("kind", lit("c"))
+    }
 
   /** The KM curve over the accumulated stream — batch q254's columns,
     * by the SHARED finalizer. */

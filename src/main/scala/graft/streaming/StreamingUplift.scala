@@ -1,6 +1,5 @@
 package graft.streaming
 
-import graft.ops.TableSwap
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -25,16 +24,14 @@ import org.apache.spark.sql.functions._
   * path inherits the same no-single-task-sort scale property the
   * batch plan is pinned to.
   *
-  * Exactly-once under at-least-once delivery: applied-batch marker
-  * rows ride the same state file, whole-state republish via one
-  * crash-safe [[TableSwap]] — the StreamingCountMin contract
-  * verbatim. Per-batch cost: O(batch rows) map-combined cell partials
-  * + a keyed merge over the user-sized state (the StreamingRollingMau
+  * Exactly-once under at-least-once delivery: [[ParquetState.fold]].
+  * Per-batch cost: O(batch rows) map-combined cell partials + a keyed
+  * merge over the user-sized state (the StreamingRollingMau
   * membership-index scale).
   */
 object StreamingUplift {
 
-  import ParquetState.readOrEmpty
+  import ParquetState.{fold, ofKind, rows}
 
   /** One relation, two row kinds, one atomic swap:
     * kind='c' → (user_id, treat, score, conv) uplift cells;
@@ -45,43 +42,21 @@ object StreamingUplift {
 
   /** The maintained uplift cells. */
   def cells(spark: SparkSession, stateDir: String): DataFrame =
-    readOrEmpty(spark, stateDir, StateDdl)
-      .filter(col("kind") === "c")
-      .select(col("user_id"), col("treat"), col("score"), col("conv"))
+    rows(spark, stateDir, StateDdl, "c")
 
   /** Fold one micro-batch of events into the state at `stateDir`.
     * Returns false (state untouched) when `batchId` was already
     * applied. */
   def processBatch(
       spark: SparkSession, batch: DataFrame, batchId: Long,
-      stateDir: String): Boolean = {
-    val st = readOrEmpty(spark, stateDir, StateDdl)
-    if (st.filter(col("kind") === "b" && col("batch_id") === batchId)
-        .limit(1).count() > 0) return false
-
-    val nullL = lit(null).cast("bigint")
-    val mergedCells = st.filter(col("kind") === "c")
-      .select(col("user_id"), col("treat"), col("score"), col("conv"))
-      .unionByName(graft.queries.EventAnalytics.upliftCells(batch))
-      .groupBy("user_id", "treat")
-      .agg(sum(col("score")).as("score"), max(col("conv")).as("conv"))
-      .select(lit("c").as("kind"), col("user_id"), col("treat"),
-        col("score"), col("conv"), nullL.as("batch_id"))
-    val markers = st.filter(col("kind") === "b").unionByName(
-      spark.range(1).select(lit("b").as("kind"), nullL.as("user_id"),
-        lit(null).cast("boolean").as("treat"),
-        nullL.as("score"), nullL.as("conv"), lit(batchId).as("batch_id")))
-
-    val fs = new org.apache.hadoop.fs.Path(stateDir)
-      .getFileSystem(spark.sessionState.newHadoopConf())
-    val dst = new org.apache.hadoop.fs.Path(stateDir)
-    val tmp = TableSwap.tmpPath(stateDir)
-    TableSwap.recover(fs, dst, tmp)
-    mergedCells.unionByName(markers)
-      .write.mode("overwrite").parquet(tmp.toString)
-    TableSwap.publish(fs, dst, tmp)
-    true
-  }
+      stateDir: String): Boolean =
+    fold(spark, stateDir, StateDdl, batchId) { st =>
+      ofKind(st, "c")
+        .unionByName(graft.queries.EventAnalytics.upliftCells(batch))
+        .groupBy("user_id", "treat")
+        .agg(sum(col("score")).as("score"), max(col("conv")).as("conv"))
+        .withColumn("kind", lit("c"))
+    }
 
   /** The uplift-decile/Qini report over the accumulated stream —
     * batch q255's columns, computed by the SHARED finalizer. */

@@ -49,8 +49,7 @@ object StreamingUpliftBucketed {
       .groupBy("user_id", "treat")
       .agg(sum(col("score")).as("score"), max(col("conv")).as("conv"))
       .select(lit("c").as("kind"), col("user_id"), col("treat"),
-        col("score"), col("conv"), lit(null).cast("bigint").as("batch_id"),
-        pmod(col("user_id"), lit(Buckets)).as("bkt"))
+        col("score"), col("conv"), pmod(col("user_id"), lit(Buckets)).as("bkt"))
 
   /** The maintained uplift cells (all buckets). */
   def cells(spark: SparkSession, stateDir: String): DataFrame =

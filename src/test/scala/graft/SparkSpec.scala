@@ -24,4 +24,18 @@ abstract class SparkSpec extends AnyFunSuite with Matchers {
 
   def tmpDir(prefix: String): String =
     java.nio.file.Files.createTempDirectory(prefix).toString
+
+  /** Leave the table at `dir` as a crash between TableSwap.publish's
+    * delete and rename leaves it: the committed table (with its
+    * `_SUCCESS` marker) sits in the swap temp dir and `dir` is
+    * missing. */
+  def crashMidSwap(dir: String): Unit = {
+    val path = new org.apache.hadoop.fs.Path(dir)
+    path.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .rename(path, graft.ops.TableSwap.tmpPath(dir)) shouldBe true
+  }
+
+  /** The number of applied-batch marker rows in a state dir. */
+  def markerRows(dir: String): Long =
+    spark.read.parquet(dir).filter("kind = 'b'").count()
 }

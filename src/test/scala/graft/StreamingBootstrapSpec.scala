@@ -72,4 +72,47 @@ class StreamingBootstrapSpec extends SparkSpec {
     StreamingBootstrap.intervals(spark, dir)
       .collect().map(_.toSeq).toSet shouldBe want
   }
+
+  private def stateOf(dir: String): (Set[Seq[Any]], Set[Seq[Any]]) =
+    (StreamingBootstrap.cells(spark, dir).collect().map(_.toSeq).toSet,
+      StreamingBootstrap.exactRows(spark, dir).collect().map(_.toSeq).toSet)
+
+  /** Both row kinds of the given chunks folded without a crash. */
+  private def foldedState(
+      cs: Seq[Seq[(Long, String, Double)]]): (Set[Seq[Any]], Set[Seq[Any]]) = {
+    val dir = tmpDir("boot-ref")
+    cs.zipWithIndex.foreach { case (c, i) =>
+      StreamingBootstrap.processBatch(spark, df(c), i.toLong, dir) shouldBe true
+    }
+    stateOf(dir)
+  }
+
+  /** State after folding chunk 0 as batch 0, left in the swap's crash
+    * window. */
+  private def crashedAfterBatch0(prefix: String): String = {
+    val dir = tmpDir(prefix)
+    StreamingBootstrap.processBatch(spark, df(chunks(0)), 0L, dir) shouldBe true
+    crashMidSwap(dir)
+    dir
+  }
+
+  test("a fold inside the swap's crash window lands on the recovered state") {
+    val dir = crashedAfterBatch0("boot-crash-fold")
+    StreamingBootstrap.processBatch(spark, df(chunks(1)), 1L, dir) shouldBe true
+    stateOf(dir) shouldBe foldedState(chunks.take(2))
+    markerRows(dir) shouldBe 2
+  }
+
+  test("a replay inside the swap's crash window is refused") {
+    val dir = crashedAfterBatch0("boot-crash-replay")
+    StreamingBootstrap.processBatch(spark, df(chunks(0)), 0L, dir) shouldBe false
+    stateOf(dir) shouldBe foldedState(chunks.take(1))
+  }
+
+  test("a read inside the swap's crash window returns the recovered state") {
+    val dir = crashedAfterBatch0("boot-crash-read")
+    val (cells, exact) = stateOf(dir)
+    cells should not be empty
+    (cells, exact) shouldBe foldedState(chunks.take(1))
+  }
 }

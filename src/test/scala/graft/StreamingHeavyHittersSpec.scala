@@ -76,4 +76,48 @@ class StreamingHeavyHittersSpec extends SparkSpec {
     state(d1) shouldBe state(d2)
     StreamingHeavyHitters.totalTokens(spark, d1) shouldBe exactCounts.values.sum
   }
+
+  private def stateOf(dir: String): (Set[(String, Long)], Long) =
+    (StreamingHeavyHitters.summary(spark, dir)
+      .collect().map(r => (r.getString(0), r.getLong(1))).toSet,
+      StreamingHeavyHitters.totalTokens(spark, dir))
+
+  /** The summary and the token total of the given chunks folded
+    * without a crash. */
+  private def foldedState(cs: Seq[Seq[String]]): (Set[(String, Long)], Long) = {
+    val dir = tmpDir("shh-ref")
+    cs.zipWithIndex.foreach { case (c, i) =>
+      StreamingHeavyHitters.processBatch(spark, docs(c), i.toLong, dir, M) shouldBe true
+    }
+    stateOf(dir)
+  }
+
+  /** State after folding chunk 0 as batch 0, left in the swap's crash
+    * window. */
+  private def crashedAfterBatch0(prefix: String): String = {
+    val dir = tmpDir(prefix)
+    StreamingHeavyHitters.processBatch(spark, docs(chunks(0)), 0L, dir, M) shouldBe true
+    crashMidSwap(dir)
+    dir
+  }
+
+  test("a fold inside the swap's crash window lands on the recovered state") {
+    val dir = crashedAfterBatch0("shh-crash-fold")
+    StreamingHeavyHitters.processBatch(spark, docs(chunks(1)), 1L, dir, M) shouldBe true
+    stateOf(dir) shouldBe foldedState(chunks.take(2))
+    markerRows(dir) shouldBe 2
+  }
+
+  test("a replay inside the swap's crash window is refused") {
+    val dir = crashedAfterBatch0("shh-crash-replay")
+    StreamingHeavyHitters.processBatch(spark, docs(chunks(0)), 0L, dir, M) shouldBe false
+    stateOf(dir) shouldBe foldedState(chunks.take(1))
+  }
+
+  test("a read inside the swap's crash window returns the recovered state") {
+    val dir = crashedAfterBatch0("shh-crash-read")
+    val st = stateOf(dir)
+    st._2 should be > 0L
+    st shouldBe foldedState(chunks.take(1))
+  }
 }

@@ -56,4 +56,37 @@ class StreamingHllSpec extends SparkSpec {
     est should be > (exact * 22 / 100)
     est should be < (exact * 280 / 100)
   }
+
+  private def registersOf(dir: String): Set[Seq[Any]] =
+    StreamingHll.registers(spark, dir).collect().map(_.toSeq).toSet
+
+  private def batchRegistersOf(users: Seq[Long]): Set[Seq[Any]] =
+    StreamingHll.registerPartials(df(users)).collect().map(_.toSeq).toSet
+
+  /** State after folding users 1–20 as batch 0, left in the swap's
+    * crash window. */
+  private def crashedAfterBatch0(prefix: String): String = {
+    val dir = tmpDir(prefix)
+    StreamingHll.processBatch(spark, df(1L to 20L), 0L, dir) shouldBe true
+    crashMidSwap(dir)
+    dir
+  }
+
+  test("a fold inside the swap's crash window lands on the recovered state") {
+    val dir = crashedAfterBatch0("hll-crash-fold")
+    StreamingHll.processBatch(spark, df(21L to 40L), 1L, dir) shouldBe true
+    registersOf(dir) shouldBe batchRegistersOf(1L to 40L)
+    markerRows(dir) shouldBe 2
+  }
+
+  test("a replay inside the swap's crash window is refused") {
+    val dir = crashedAfterBatch0("hll-crash-replay")
+    StreamingHll.processBatch(spark, df(1L to 20L), 0L, dir) shouldBe false
+    registersOf(dir) shouldBe batchRegistersOf(1L to 20L)
+  }
+
+  test("a read inside the swap's crash window returns the recovered state") {
+    val dir = crashedAfterBatch0("hll-crash-read")
+    registersOf(dir) shouldBe batchRegistersOf(1L to 20L)
+  }
 }
