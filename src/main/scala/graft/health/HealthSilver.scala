@@ -113,7 +113,7 @@ object HealthSilver {
         "PhoneNumber", "Gender", "DOB", "Address", "SRC_ModifiedDate"),
       casts = Map("DOB" -> Ts, "SRC_ModifiedDate" -> Ts),
       quarantineRule = Some(col("SRC_PatientID").isNull || col("DOB").isNull ||
-        col("FirstName").isNull || lower(col("FirstName")) === "null"))))
+        col("FirstName").isNull || QualityStage.nullText(col("FirstName"))))))
 
   /** encounters (silver.sql:370-482); hosa's InsertedDate is dropped
     * (not in the staging SELECT, silver.sql:404-417). */
@@ -135,7 +135,7 @@ object HealthSilver {
         "EncounterDate", "EncounterType", "ProcedureCode", "SRC_ModifiedDate"),
       casts = Map("EncounterDate" -> Ts, "SRC_ModifiedDate" -> Ts, "ProcedureCode" -> I64),
       quarantineRule = Some(col("SRC_EncounterID").isNull || col("PatientID").isNull ||
-        col("EncounterDate").isNull || lower(col("EncounterType")) === "null"))))
+        col("EncounterDate").isNull || QualityStage.nullText(col("EncounterType"))))))
 
   /** transactions (silver.sql:207-363). Monetary columns type to
     * `money` — DoubleType for reference fidelity (the default), or
@@ -195,7 +195,7 @@ object HealthSilver {
         "SRC_ModifiedDate" -> Ts, "ClaimAmount" -> money, "PaidAmount" -> money,
         "Deductible" -> money, "Coinsurance" -> money, "Copay" -> money),
       quarantineRule = Some(col("SRC_ClaimID").isNull || col("PatientID").isNull ||
-        col("TransactionID").isNull || lower(col("ClaimStatus")) === "null"))))
+        col("TransactionID").isNull || QualityStage.nullText(col("ClaimStatus"))))))
 
   val claims: Entity = claimsEntity(F64)
 
@@ -213,7 +213,7 @@ object HealthSilver {
       surrogateKeyCol = "CP_Code_Key",
       keep = Seq("procedure_code_category", "cpt_codes", "procedure_code_descriptions",
         "code_status"),
-      quarantineRule = Some(col("cpt_codes").isNull || lower(col("code_status")) === "null"))))
+      quarantineRule = Some(col("cpt_codes").isNull || QualityStage.nullText(col("code_status"))))))
 
   val scd2Entities: Seq[Entity] = Seq(patients, encounters, transactions, claims, cptCodes)
 

@@ -36,11 +36,13 @@ final class PipelineLogger(spark: SparkSession, path: String, clock: () => Times
 
   def pending: Seq[LogEvent] = buf.synchronized(buf.toSeq)
 
-  /** Append all buffered events as one write; clears the buffer. */
+  /** Append all buffered events as one write of one file (without
+    * the coalesce a flush writes up to `defaultParallelism` small
+    * files); clears the buffer. */
   def flush(): Unit = {
     val batch = buf.synchronized { val b = buf.toSeq; buf.clear(); b }
     if (batch.nonEmpty)
-      try batch.toDS().write.mode(SaveMode.Append).parquet(path)
+      try batch.toDS().coalesce(1).write.mode(SaveMode.Append).parquet(path)
       catch {
         case e: Throwable =>
           buf.synchronized { buf.prependAll(batch) }

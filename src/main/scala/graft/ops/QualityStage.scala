@@ -62,8 +62,15 @@ object QualityStage {
   val DatasourceCol = "datasource"
   val QuarantinedCol = "is_quarantined"
 
+  /** The `LOWER(c) = 'null'` text sentinel (silver.sql:105-108),
+    * without `lower`: only ASCII N, U and L lower-case to n, u and l,
+    * so folding just those three gives the same answer for every
+    * string and NULL, and it never loads the ICU case-mapping tables
+    * that `lower` pulls in on first use (about 1.5 s of CPU per JVM). */
+  def nullText(c: Column): Column = translate(c, "NUL", "nul") === "null"
+
   /** `LOWER(c) = 'null'` sentinel + real NULL — silver.sql:105-108. */
-  def badValue(c: Column): Column = c.isNull || lower(c.cast("string")) === "null"
+  def badValue(c: Column): Column = c.isNull || nullText(c.cast("string"))
 
   def apply(spec: EntitySpec): DataFrame = {
     val conciliated = spec.sources.map { src =>

@@ -102,9 +102,12 @@ private[graft] object ParquetState {
   def ofKind(st: DataFrame, kind: String): DataFrame =
     st.filter(col("kind") === kind).drop("kind", "batch_id")
 
-  /** True when `st` holds `batchId`'s marker (one limit-1 job). */
+  /** True when `st` holds `batchId`'s marker. One job: `isEmpty`
+    * limits every partition and gathers them in the same job, where
+    * `limit(1).count()` runs two under AQE and `head(1)` runs a second
+    * when the first partition holds no marker. */
   def applied(st: DataFrame, batchId: Long): Boolean =
-    st.filter(col("kind") === "b" && col("batch_id") === batchId).limit(1).count() > 0
+    !st.filter(col("kind") === "b" && col("batch_id") === batchId).isEmpty
 
   /** One marker row of `schema`: kind = 'b', `batch_id`, the `fixed`
     * columns as given, every other column null. */

@@ -32,13 +32,8 @@ object StreamingCupedBucketed {
     cells.withColumn("bkt", pmod(col("user_id"), lit(Buckets)))
 
   /** The additive (x, y) cents merge — the StreamingCuped contract. */
-  private def merge(oldCells: DataFrame, bc: DataFrame): DataFrame =
-    oldCells.unionByName(bc.drop("bkt"))
-      .groupBy("event_type", "user_id", "treat")
-      .agg(sum(col("x")).as("x"), sum(col("y")).as("y"))
-      .select(lit("c").as("kind"), col("event_type"), col("user_id"),
-        col("treat"), col("x"), col("y"),
-        pmod(col("user_id"), lit(Buckets)).as("bkt"))
+  private val keys = Seq("event_type", "user_id", "treat")
+  private val aggs = Seq(sum(col("x")).as("x"), sum(col("y")).as("y"))
 
   /** The maintained covariate cells (all buckets). */
   def cells(spark: SparkSession, stateDir: String): DataFrame =
@@ -50,7 +45,15 @@ object StreamingCupedBucketed {
       spark: SparkSession, batch: DataFrame, batchId: Long,
       stateDir: String): Boolean =
     BucketedState.processBatch(spark, stateDir, StateDdl, Buckets, batchId,
-      withBkt(graft.queries.EventAnalytics.cupedCells(batch)), merge)
+      withBkt(graft.queries.EventAnalytics.cupedCells(batch)), keys, aggs)
+
+  /** Stage without publishing — spec hook (see
+    * [[BucketedState.stageBatch]]). */
+  private[graft] def stageBatch(
+      spark: SparkSession, batch: DataFrame, batchId: Long,
+      stateDir: String): Boolean =
+    BucketedState.stageBatch(spark, stateDir, StateDdl, Buckets, batchId,
+      withBkt(graft.queries.EventAnalytics.cupedCells(batch)), keys, aggs)
 
   /** The CUPED report over the accumulated stream — batch q250's
     * columns, computed by the SHARED finalizer. */

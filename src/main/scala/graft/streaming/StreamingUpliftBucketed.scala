@@ -43,13 +43,9 @@ object StreamingUpliftBucketed {
     cells.withColumn("bkt", pmod(col("user_id"), lit(Buckets)))
 
   /** The sum/max cell merge — MERGEABLE under any chunking (the
-    * StreamingUplift contract), bucket recomputed from the key. */
-  private def merge(oldCells: DataFrame, bc: DataFrame): DataFrame =
-    oldCells.unionByName(bc.drop("bkt"))
-      .groupBy("user_id", "treat")
-      .agg(sum(col("score")).as("score"), max(col("conv")).as("conv"))
-      .select(lit("c").as("kind"), col("user_id"), col("treat"),
-        col("score"), col("conv"), pmod(col("user_id"), lit(Buckets)).as("bkt"))
+    * StreamingUplift contract). */
+  private val keys = Seq("user_id", "treat")
+  private val aggs = Seq(sum(col("score")).as("score"), max(col("conv")).as("conv"))
 
   /** The maintained uplift cells (all buckets). */
   def cells(spark: SparkSession, stateDir: String): DataFrame =
@@ -61,7 +57,7 @@ object StreamingUpliftBucketed {
       spark: SparkSession, batch: DataFrame, batchId: Long,
       stateDir: String): Boolean =
     BucketedState.processBatch(spark, stateDir, StateDdl, Buckets, batchId,
-      withBkt(graft.queries.EventAnalytics.upliftCells(batch)), merge)
+      withBkt(graft.queries.EventAnalytics.upliftCells(batch)), keys, aggs)
 
   /** Stage without publishing — spec hook for crash simulation on the
     * real code path (see [[BucketedState.stageBatch]]). */
@@ -69,7 +65,7 @@ object StreamingUpliftBucketed {
       spark: SparkSession, batch: DataFrame, batchId: Long,
       stateDir: String): Boolean =
     BucketedState.stageBatch(spark, stateDir, StateDdl, Buckets, batchId,
-      withBkt(graft.queries.EventAnalytics.upliftCells(batch)), merge)
+      withBkt(graft.queries.EventAnalytics.upliftCells(batch)), keys, aggs)
 
   private[graft] def publishStaged(
       fs: FileSystem, stateDir: String, maxBuckets: Int): Unit =

@@ -203,6 +203,19 @@ class PipelineLoggerSpec extends SparkSpec {
     written.count() shouldBe 800
     written.groupBy("tablename").count().collect().map(_.getLong(1)).toSet shouldBe Set(100L)
   }
+
+  test("each flush appends exactly one parquet file") {
+    val path = tmpDir("plog-files") + "/logs"
+    val logger = new PipelineLogger(spark, path, () => Timestamp.valueOf("2025-01-01 00:00:00"))
+    def parquetFiles(): Int =
+      Option(new java.io.File(path).list()).map(_.count(_.endsWith(".parquet"))).getOrElse(0)
+    (1 to 3).foreach { flush =>
+      (0 until 50).foreach(i => logger.info(s"event $i", "step", s"f$flush"))
+      logger.flush()
+      parquetFiles() shouldBe flush
+    }
+    spark.read.parquet(path).count() shouldBe 150
+  }
 }
 
 class PipelineRunnerSpec extends SparkSpec {

@@ -22,6 +22,28 @@ class QualityStageSpec extends SparkSpec {
     out.unpersist()
   }
 
+  test("nullText agrees with LOWER(x) = 'null' on case variants, near misses and look-alikes") {
+    val caseVariants = for {
+      n <- Seq("n", "N"); u <- Seq("u", "U"); l1 <- Seq("l", "L"); l2 <- Seq("l", "L")
+    } yield n + u + l1 + l2
+    caseVariants.distinct should have size 16
+    val others = Seq("nul", "nulls", " null", "null\n",
+      "\uFF4E\uFF55\uFF4C\uFF4C", // fullwidth null
+      "\u0149ull", // n preceded by apostrophe, then ull
+      "\u0130", // dotted capital I: lower-cases to two chars
+      "\u212A", // Kelvin sign: lower-cases to ASCII k
+      "")
+    val in = (caseVariants ++ others).map(Option(_)) :+ None
+    val got = in.toDF("x")
+      .select(col("x"), (lower(col("x")) === "null").as("old"),
+        QualityStage.nullText(col("x")).as("now"))
+      .collect().map(r => (Option(r.getString(0)), Option(r.get(1)), Option(r.get(2))))
+    got should have size in.size
+    got.foreach { case (x, old, now) => withClue(s"x = $x: ") { now shouldBe old } }
+    got.count(_._2.contains(true)) shouldBe 16
+    got.filter(_._1.isEmpty).map(_._3) shouldBe Array(None)
+  }
+
   test("critical columns also quarantine; good rows pass") {
     val src = Seq(("1", "a@x.com"), ("2", null), ("3", "null")).toDF("id", "email")
     val out = QualityStage(EntitySpec(
