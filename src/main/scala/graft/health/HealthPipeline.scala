@@ -4,6 +4,7 @@ import java.sql.Timestamp
 import java.time.LocalDate
 
 import graft.ingest._
+import graft.ops.LocalFs
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -57,8 +58,7 @@ final class HealthPipeline(
   val audit = new AuditLog(spark, auditPath)
   val logger = new PipelineLogger(spark, logsPath, clock)
 
-  private val fs =
-    new Path(workRoot).getFileSystem(spark.sparkContext.hadoopConfiguration)
+  private val fs = LocalFs.fsOf(spark, workRoot)
   private def exists(path: String): Boolean = fs.exists(new Path(path))
 
   private def bronzePath(t: String) = s"$workRoot/bronze/$t"
@@ -90,7 +90,7 @@ final class HealthPipeline(
     val tmp = graft.ops.TableSwap.tmpPath(path)
     val dst = new Path(path)
     graft.ops.TableSwap.recover(fs, dst, tmp)
-    df.write.mode("overwrite").parquet(tmp.toString)
+    LocalFs.write(df).mode("overwrite").parquet(tmp.toString)
     graft.ops.TableSwap.publish(fs, dst, tmp)
   }
 
@@ -118,7 +118,7 @@ final class HealthPipeline(
           .when(input_file_name().contains("hospital1"), "hosa")
           .otherwise("None"))
       .dropDuplicates()
-    df.write.mode("overwrite").parquet(bronzePath("claims"))
+    LocalFs.write(df).mode("overwrite").parquet(bronzePath("claims"))
   }
 
   /** Bronze CPT codes: header CSV + the column rename fold
@@ -127,7 +127,7 @@ final class HealthPipeline(
     val raw = spark.read.option("header", "true").csv(s"$fixturesRoot/cptcodes/cptcodes.csv")
     val renamed = raw.columns.foldLeft(raw)((d, c) =>
       d.withColumnRenamed(c, c.replace(" ", "_").toLowerCase))
-    renamed.write.mode("overwrite").parquet(bronzePath("cpt_codes"))
+    LocalFs.write(renamed).mode("overwrite").parquet(bronzePath("cpt_codes"))
   }
 
   /** Bronze view of this run's landed data: landing JSON for the EMR

@@ -1,6 +1,7 @@
 package graft.ingest
 
 import java.sql.Timestamp
+import graft.ops.LocalFs
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
@@ -23,25 +24,31 @@ final class AuditLog(spark: SparkSession, path: String) {
   /** The reference's epoch default for never-loaded tables (:134). */
   val DefaultWatermark: Timestamp = Timestamp.valueOf("1900-01-01 00:00:00")
 
-  private def exists: Boolean =
-    new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
-      .exists(new Path(path))
+  private def exists: Boolean = LocalFs.fsOf(spark, path).exists(new Path(path))
 
   /** S11: append audit rows as one single-file write (none: no write). */
   def append(recs: AuditRecord*): Unit =
-    if (recs.nonEmpty) recs.toDS().coalesce(1).write.mode(SaveMode.Append).parquet(path)
+    if (recs.nonEmpty)
+      LocalFs.write(recs.toDS().coalesce(1)).mode(SaveMode.Append).parquet(path)
 
   def all(): org.apache.spark.sql.DataFrame =
     if (exists) spark.read.parquet(path)
     else spark.emptyDataset[AuditRecord].toDF()
 
+  /** J5/A6: latest successful load watermark of every table of
+    * `datasource` that has one, in one grouped aggregate. A table never
+    * loaded successfully is absent (its watermark is
+    * [[DefaultWatermark]]). */
+  def latestWatermarks(datasource: String): Map[String, Timestamp] =
+    all()
+      .filter(col("data_source") === datasource && col("status") === "SUCCESS")
+      .groupBy(col("tablename")).agg(max(col("load_timestamp")))
+      .as[(String, Option[Timestamp])]
+      .collect()
+      .collect { case (table, Some(ts)) => table -> ts }
+      .toMap
+
   /** J5/A6: latest successful load watermark for (datasource, table). */
   def latestWatermark(datasource: String, table: String): Timestamp =
-    all()
-      .filter(col("data_source") === datasource && col("tablename") === table &&
-        col("status") === "SUCCESS")
-      .agg(max(col("load_timestamp")))
-      .as[Option[Timestamp]]
-      .head()
-      .getOrElse(DefaultWatermark)
+    latestWatermarks(datasource).getOrElse(table, DefaultWatermark)
 }

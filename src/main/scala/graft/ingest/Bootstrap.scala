@@ -1,5 +1,6 @@
 package graft.ingest
 
+import graft.ops.LocalFs
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{SaveMode, SparkSession}
 
@@ -11,11 +12,9 @@ object Bootstrap {
 
   private def ensure[T: org.apache.spark.sql.Encoder](
       spark: SparkSession, path: String): Boolean = {
-    val p = new Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(p)) false
+    if (LocalFs.fsOf(spark, path).exists(new Path(path))) false
     else {
-      spark.emptyDataset[T].write.mode(SaveMode.ErrorIfExists).parquet(path)
+      LocalFs.write(spark.emptyDataset[T]).mode(SaveMode.ErrorIfExists).parquet(path)
       true
     }
   }

@@ -2,6 +2,7 @@ package graft.ingest
 
 import java.sql.Timestamp
 import java.time.LocalDate
+import scala.util.{Success, Try}
 
 /** Outcome of one table-load attempt (per-table failure isolation:
   * reference hospitalA_mysqlToLanding.py:249-251 catches, logs, and
@@ -51,16 +52,21 @@ final class IngestionRunner(
     logger: PipelineLogger,
     clock: () => Timestamp) {
 
+  private def incremental(entry: LoadConfigEntry): Boolean =
+    entry.loadtype.equalsIgnoreCase("incremental")
+
   /** Load one table and append its audit row. */
   def loadTable(entry: LoadConfigEntry, runDate: LocalDate): TableLoadResult = {
-    val (result, rec) = extract(entry, runDate)
+    val (result, rec) =
+      extract(entry, runDate, audit.latestWatermark(entry.datasource, entry.tablename))
     audit.append(rec)
     result
   }
 
-  /** Archive, extract and land one table; returns its outcome and the
-    * audit row to append. */
-  private def extract(entry: LoadConfigEntry, runDate: LocalDate)
+  /** Archive, extract and land one table (an incremental one past
+    * `since`, evaluated only then, inside the table's failure
+    * isolation); returns its outcome and the audit row to append. */
+  private def extract(entry: LoadConfigEntry, runDate: LocalDate, since: => Timestamp)
       : (TableLoadResult, AuditRecord) = {
     val table = entry.tablename
     try {
@@ -70,10 +76,8 @@ final class IngestionRunner(
 
       logger.info("Starting extraction", "extract", table)
       val df =
-        if (entry.loadtype.equalsIgnoreCase("incremental")) {
-          val since = audit.latestWatermark(entry.datasource, table)
-          source.readIncremental(spark, table, entry.watermark, since)
-        } else source.read(spark, table)
+        if (incremental(entry)) source.readIncremental(spark, table, entry.watermark, since)
+        else source.read(spark, table)
 
       // ONE source scan: the row count rides the write itself
       // (observe/CollectMetrics — ops/Observed) instead of a separate
@@ -103,12 +107,20 @@ final class IngestionRunner(
   }
 
   /** The per-table loads over active config rows (:236-257), run
-    * concurrently; results in config order, audit rows in one append. */
+    * concurrently; results in config order, audit rows in one append.
+    * The watermarks are read once, before the loads: the run appends
+    * its audit rows only after every load has finished. A failed read
+    * fails each incremental table, as a failed per-table read would. */
   def run(config: Seq[LoadConfigEntry], datasource: String, runDate: LocalDate)
       : Seq[TableLoadResult] = {
     logger.info("Pipeline started", "start")
-    val loads = graft.ops.Concurrently.run(spark)(
-      LoadConfig.active(config, datasource).map(e => () => extract(e, runDate)))
+    val entries = LoadConfig.active(config, datasource)
+    val marks =
+      if (entries.exists(incremental)) Try(audit.latestWatermarks(datasource))
+      else Success(Map.empty[String, Timestamp])
+    val loads = graft.ops.Concurrently.run(spark)(entries.map { e =>
+      () => extract(e, runDate, marks.get.getOrElse(e.tablename, audit.DefaultWatermark))
+    })
     audit.append(loads.map(_._2): _*)
     val results = loads.map(_._1)
     if (results.forall(_.status == "SUCCESS"))

@@ -2,6 +2,7 @@ package graft.ingest
 
 import java.time.LocalDate
 import java.time.format.DateTimeFormatter
+import graft.ops.LocalFs
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types.StructType
@@ -20,13 +21,13 @@ import org.apache.spark.sql.types.StructType
   */
 final class LandingZone(spark: SparkSession, root: String) {
 
-  private val fs = new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
+  private val fs = LocalFs.fsOf(spark, root)
 
   def tableDir(datasource: String, table: String): String = s"$root/$datasource/$table"
 
   /** S4: distributed JSON-lines write (overwrite = the per-run file). */
   def write(df: DataFrame, datasource: String, table: String): Unit =
-    df.write.mode("overwrite")
+    LocalFs.write(df).mode("overwrite")
       .option("timestampFormat", "yyyy-MM-dd'T'HH:mm:ss.SSSXXX")
       .json(tableDir(datasource, table))
 
@@ -41,7 +42,7 @@ final class LandingZone(spark: SparkSession, root: String) {
     tableDir(datasource, table) + "__staged"
 
   def writeStaged(df: DataFrame, datasource: String, table: String): Unit =
-    df.write.mode("overwrite")
+    LocalFs.write(df).mode("overwrite")
       .option("timestampFormat", "yyyy-MM-dd'T'HH:mm:ss.SSSXXX")
       .json(stagedDir(datasource, table))
 

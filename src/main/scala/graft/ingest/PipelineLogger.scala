@@ -42,7 +42,7 @@ final class PipelineLogger(spark: SparkSession, path: String, clock: () => Times
   def flush(): Unit = {
     val batch = buf.synchronized { val b = buf.toSeq; buf.clear(); b }
     if (batch.nonEmpty)
-      try batch.toDS().coalesce(1).write.mode(SaveMode.Append).parquet(path)
+      try graft.ops.LocalFs.write(batch.toDS().coalesce(1)).mode(SaveMode.Append).parquet(path)
       catch {
         case e: Throwable =>
           buf.synchronized { buf.prependAll(batch) }

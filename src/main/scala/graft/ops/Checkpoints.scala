@@ -145,8 +145,7 @@ object Checkpoints {
     dfs.foreach { df =>
       fileOf(df).foreach { f =>
         val path = new org.apache.hadoop.fs.Path(f)
-        val fs = path.getFileSystem(
-          df.sparkSession.sparkContext.hadoopConfiguration)
+        val fs = LocalFs.fsOf(df.sparkSession, f)
         if (fs.exists(path)) fs.delete(path, true)
       }
     }
@@ -162,7 +161,7 @@ object Checkpoints {
     memos.remove(spark)
     spark.conf.getOption(DirKey).filter(_.nonEmpty).foreach { dir =>
       val path = new org.apache.hadoop.fs.Path(dir)
-      val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      val fs = LocalFs.fsOf(spark, dir)
       if (fs.exists(path)) {
         fs.listStatus(path).foreach(st => fs.delete(st.getPath, true))
       }

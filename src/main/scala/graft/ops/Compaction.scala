@@ -22,7 +22,7 @@ object Compaction {
   def compactParquet(spark: SparkSession, path: String, targetBytes: Long): Int = {
     require(targetBytes > 0, "targetBytes must be positive")
     val dir = new Path(path)
-    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = LocalFs.fsOf(spark, path)
     val tmp = TableSwap.tmpPath(path)
     // finish a swap interrupted between delete and rename by a prior
     // crashed compaction — tmp then holds the only copy of the table
@@ -33,7 +33,7 @@ object Compaction {
     val total = dataFiles.map(_.getLen).sum
     val n = math.max(1, math.ceil(total.toDouble / targetBytes).toInt)
 
-    spark.read.parquet(path).coalesce(n).write.mode("overwrite").parquet(tmp.toString)
+    LocalFs.write(spark.read.parquet(path).coalesce(n)).mode("overwrite").parquet(tmp.toString)
     TableSwap.publish(fs, dir, tmp)
     n
   }

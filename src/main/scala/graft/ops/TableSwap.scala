@@ -23,6 +23,10 @@ import org.apache.hadoop.fs.{FileSystem, Path}
   * rename restores exactly the table the interrupted run had already
   * merged. Callers run `recover` before every read-or-swap of the
   * table (cheap: two metadata probes).
+  *
+  * Every caller passes a handle from [[LocalFs.fsOf]] and writes the
+  * temp dir through [[LocalFs.write]], so on the local filesystem a
+  * recovery or publish that falls back to a copy forks no `chmod`.
   */
 object TableSwap {
 

@@ -1,7 +1,8 @@
 package graft.streaming
 
+import graft.ops.LocalFs
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Encoders, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
@@ -113,7 +114,7 @@ private[graft] object BucketedState {
   private[graft] def readBuckets(
       spark: SparkSession, stateDir: String, ddl: String,
       only: Option[Seq[Long]]): DataFrame = {
-    val fs = ParquetState.fsOf(spark, stateDir)
+    val fs = LocalFs.fsOf(spark, stateDir)
     val root = new Path(stateDir)
     val dirs =
       if (!fs.exists(root)) Array.empty[String]
@@ -153,9 +154,10 @@ private[graft] object BucketedState {
     * generically: the touched buckets' existing markers are preserved
     * and the new applied marker is appended in bucket `batchId mod B`,
     * distributed by `bkt` the same way (at most one markers file per
-    * bucket, however many batches it has seen). Returns false when
-    * the batch was already applied (nothing staged). Reads ONLY the
-    * touched bucket dirs. */
+    * bucket, however many batches it has seen). `batchCells` is
+    * persisted for the call, so the touched-bucket collect and the
+    * write compute it once. Returns false when the batch was already
+    * applied (nothing staged). Reads ONLY the touched bucket dirs. */
   private[graft] def stageBatch(
       spark: SparkSession, stateDir: String, ddl: String, buckets: Long,
       batchId: Long, batchCells: DataFrame,
@@ -164,22 +166,29 @@ private[graft] object BucketedState {
     if (ParquetState.applied(readBuckets(spark, stateDir, ddl, Some(Seq(mb))), batchId))
       return false
 
-    // control-plane: ≤B touched bucket ids (+ the marker's bucket)
-    val touched = (batchCells.select("bkt").distinct().collect()
-      .map(_.getLong(0)) :+ mb).distinct.toSeq
-    val old = readBuckets(spark, stateDir, ddl, Some(touched))
-    val schema = StructType.fromDDL(ddl + ", bkt BIGINT")
-    val parts = math.min(touched.size, spark.sparkContext.defaultParallelism)
-    val cells = ParquetState.ofKind(old, "c").unionByName(batchCells)
-      .repartition(parts, col("bkt"))
-      .groupBy((col("bkt") +: keys.map(col)): _*).agg(aggs.head, aggs.tail: _*)
-      .withColumn("kind", lit("c"))
-    val markers = old.filter(col("kind") === "b")
-      .unionByName(ParquetState.markerRow(spark, schema, batchId, "bkt" -> mb))
-      .repartition(parts, col("bkt"))
-    ParquetState.conform(cells, schema).unionByName(markers)
-      .write.mode("overwrite").partitionBy("bkt")
-      .parquet(tmpRoot(stateDir).toString)
+    // the batch's cells feed both the touched-bucket collect and the
+    // staging write: computed once. The state itself stays uncached.
+    val batch = batchCells.persist()
+    try {
+      // control-plane: ≤B touched bucket ids (+ the marker's bucket),
+      // distinct per partition and merged here: no shuffle, so one job
+      // over the built cache where distinct() runs two
+      val touched = (batch.select("bkt").as(Encoders.scalaLong)
+        .mapPartitions(_.toSet.iterator)(Encoders.scalaLong).collect() :+ mb).distinct.toSeq
+      val old = readBuckets(spark, stateDir, ddl, Some(touched))
+      val schema = StructType.fromDDL(ddl + ", bkt BIGINT")
+      val parts = math.min(touched.size, spark.sparkContext.defaultParallelism)
+      val cells = ParquetState.ofKind(old, "c").unionByName(batch)
+        .repartition(parts, col("bkt"))
+        .groupBy((col("bkt") +: keys.map(col)): _*).agg(aggs.head, aggs.tail: _*)
+        .withColumn("kind", lit("c"))
+      val markers = old.filter(col("kind") === "b")
+        .unionByName(ParquetState.markerRow(spark, schema, batchId, "bkt" -> mb))
+        .repartition(parts, col("bkt"))
+      LocalFs.write(ParquetState.conform(cells, schema).unionByName(markers))
+        .mode("overwrite").partitionBy("bkt")
+        .parquet(tmpRoot(stateDir).toString)
+    } finally batch.unpersist()
     true
   }
 
@@ -190,7 +199,7 @@ private[graft] object BucketedState {
       spark: SparkSession, stateDir: String, ddl: String, buckets: Long,
       batchId: Long, batchCells: DataFrame,
       keys: Seq[String], aggs: Seq[Column]): Boolean = {
-    val fs = ParquetState.fsOf(spark, stateDir)
+    val fs = LocalFs.fsOf(spark, stateDir)
     recoverPending(fs, stateDir)
     if (!stageBatch(spark, stateDir, ddl, buckets, batchId, batchCells,
         keys, aggs)) return false
@@ -201,7 +210,7 @@ private[graft] object BucketedState {
   /** The maintained cells (all buckets), data columns only. */
   private[graft] def cells(
       spark: SparkSession, stateDir: String, ddl: String): DataFrame = {
-    recoverPending(ParquetState.fsOf(spark, stateDir), stateDir)
+    recoverPending(LocalFs.fsOf(spark, stateDir), stateDir)
     ParquetState.ofKind(readBuckets(spark, stateDir, ddl, None), "c").drop("bkt")
   }
 }

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.ops.TableSwap
+import graft.ops.{LocalFs, TableSwap}
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions.{col, lit}
@@ -31,14 +31,14 @@ import org.apache.spark.sql.types.StructType
   * conform step defined here. Existence probes go through the Hadoop
   * FileSystem API (a java.io.File check is false for every non-local
   * scheme); recover and the probes are metadata calls, not Spark jobs.
+  * Handles come from [[LocalFs.fsOf]] and state writes go through
+  * [[LocalFs.write]], so a local state's files are created without a
+  * forked `chmod` each.
   */
 private[graft] object ParquetState {
 
-  private[graft] def fsOf(spark: SparkSession, dir: String): FileSystem =
-    new Path(dir).getFileSystem(spark.sessionState.newHadoopConf())
-
   def exists(spark: SparkSession, dir: String): Boolean =
-    fsOf(spark, dir).exists(new Path(dir))
+    LocalFs.fsOf(spark, dir).exists(new Path(dir))
 
   /** Read a parquet state directory, or an empty relation of the
     * declared schema when it does not exist yet. The schema is ALWAYS
@@ -58,7 +58,7 @@ private[graft] object ParquetState {
   def republish(spark: SparkSession, dir: String)(build: => Option[DataFrame]): Boolean = {
     val fs = recovered(spark, dir)
     build.fold(false) { df =>
-      df.write.mode("overwrite").parquet(TableSwap.tmpPath(dir).toString)
+      LocalFs.write(df).mode("overwrite").parquet(TableSwap.tmpPath(dir).toString)
       TableSwap.publish(fs, new Path(dir), TableSwap.tmpPath(dir))
       true
     }
@@ -67,7 +67,7 @@ private[graft] object ParquetState {
   /** Finish an interrupted swap of `dir` (two metadata probes when
     * there is nothing to finish); returns the dir's FileSystem. */
   private def recovered(spark: SparkSession, dir: String): FileSystem = {
-    val fs = fsOf(spark, dir)
+    val fs = LocalFs.fsOf(spark, dir)
     TableSwap.recover(fs, new Path(dir), TableSwap.tmpPath(dir))
     fs
   }

@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.ops.LocalFs
 import graft.queries.LlmPipeline
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -134,11 +135,11 @@ object StreamingNearDup {
       // be caught — dropping suppressed sigs would break dup chains.
       // `sig` is persisted, so these writes read the cache, not the
       // index paths being appended.
-      sig.select(col("doc_id"), explode(LlmPipeline.bandSigArray).as("bsig"))
-        .write.mode("append").parquet(s"$indexDir/bands")
-      sig.select(col("doc_id"), col("hs"), col("n"))
-        .write.mode("append").parquet(s"$indexDir/sigs")
-      novelIds.write.mode("append").parquet(outDir)
+      LocalFs.write(sig.select(col("doc_id"), explode(LlmPipeline.bandSigArray).as("bsig")))
+        .mode("append").parquet(s"$indexDir/bands")
+      LocalFs.write(sig.select(col("doc_id"), col("hs"), col("n")))
+        .mode("append").parquet(s"$indexDir/sigs")
+      LocalFs.write(novelIds).mode("append").parquet(outDir)
       novelIds.count()
     } finally sig.unpersist()
   }

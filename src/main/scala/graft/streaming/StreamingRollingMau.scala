@@ -63,7 +63,7 @@ object StreamingRollingMau {
       contributions(batch)
         .join(idx, Seq("window_day", "user_id"), "left_anti"))
     val n = novel.count()
-    if (n > 0) novel.write.mode("append").parquet(indexDir)
+    if (n > 0) graft.ops.LocalFs.write(novel).mode("append").parquet(indexDir)
 
     // counts are DERIVED state: recompute from the index and swap —
     // self-healing after any crash between append and publish

@@ -47,6 +47,32 @@ class AuditLogSpec extends SparkSpec {
     // FAILED rows and other tables/datasources must not advance it
     audit.latestWatermark("src", "t") shouldBe fixed("2024-03-01 00:00:00")
   }
+
+  test("latestWatermarks equals the per-table lookups in one map") {
+    val audit = new AuditLog(spark, tmpDir("audit") + "/log")
+    audit.latestWatermarks("src") shouldBe empty
+    audit.append(
+      AuditRecord("src", "t", "Incremental", 5, fixed("2024-01-01 00:00:00"), "SUCCESS"),
+      AuditRecord("src", "t", "Incremental", 7, fixed("2024-03-01 00:00:00"), "SUCCESS"),
+      AuditRecord("src", "t", "Incremental", 0, fixed("2024-06-01 00:00:00"), "FAILED"),
+      AuditRecord("src", "u", "Full", 2, fixed("2024-02-01 00:00:00"), "SUCCESS"),
+      AuditRecord("src", "failed_only", "Full", 0, fixed("2024-08-01 00:00:00"), "FAILED"),
+      AuditRecord("src2", "t", "Full", 1, fixed("2024-09-01 00:00:00"), "SUCCESS"),
+      AuditRecord("src2", "v", "Full", 1, fixed("2024-09-01 00:00:00"), "SUCCESS"))
+    val marks = audit.latestWatermarks("src")
+    marks shouldBe Map("t" -> fixed("2024-03-01 00:00:00"), "u" -> fixed("2024-02-01 00:00:00"))
+    // the per-table aggregate, computed independently of the map
+    def lookup(table: String): Timestamp =
+      Option(audit.all().filter(col("data_source") === "src" &&
+          col("tablename") === table && col("status") === "SUCCESS")
+        .agg(max(col("load_timestamp"))).head().getTimestamp(0))
+        .getOrElse(audit.DefaultWatermark)
+    for (table <- Seq("t", "u", "failed_only", "v", "never_loaded")) {
+      marks.getOrElse(table, audit.DefaultWatermark) shouldBe lookup(table)
+      audit.latestWatermark("src", table) shouldBe lookup(table)
+    }
+    audit.latestWatermark("src", "never_loaded") shouldBe fixed("1900-01-01 00:00:00")
+  }
 }
 
 class LandingZoneSpec extends SparkSpec {
