@@ -5,50 +5,38 @@ import org.apache.spark.sql.functions._
 import java.nio.file.{Files, Paths}
 
 /** Benchmark main. Runs every SparkEntry query on
-  * `SPARK_GRAFT_SF_DIR` (default sf0.1) and emits ONE JSON line
-  * `{"metric":"total","value":N,"unit":"sec","queries":{...},"sf":...}`.
+  * `SPARK_GRAFT_SF_DIR` (default sf0.1) in a [[LocalSession]] of
+  * `SPARK_GRAFT_CPUS` cores (default 32) and prints two lines: a compact
+  * `{"total":…,"n":…,"failed":…,"mode":…}` summary, then LAST the full
+  * `{"metric":"total","value":N,"unit":"sec","queries":{...},…,"sf":…}`
+  * line, so a tail-truncated capture keeps every per-query number. The
+  * full line is also written to `SPARK_GRAFT_BENCH_OUT` (default
+  * /tmp/graft_bench.json) and to target/bench_full.json.
   *
-  * Harness fixes from the round-2 verdict:
-  *  - the JSON line is ALSO written to a file — `SPARK_GRAFT_BENCH_OUT`
-  *    if set, else /tmp/graft_bench.json — so the driver never has to
-  *    fish it out of sbt log noise;
-  *  - failures are recorded per-query in `"failed"` instead of being
-  *    swallowed as a fake timing;
-  *  - the measured action hashes every column of every row
+  * What a run does:
+  *  - each query's measured action hashes every column of every row
   *    (xxhash64 → sum), so pure projections are materialized rather
-  *    than pruned to a row count;
-  *  - two timed iterations per query, best-of reported, to damp
-  *    JIT/page-cache noise.
-  *
-  * Round-7 additions:
-  *  - the LAST stdout line is a compact `{"total":…,"n":…,"failed":…}`
-  *    summary, so any tail-truncated capture of the run still carries
-  *    the headline numbers (the full per-query line precedes it and is
-  *    also written to the out file);
-  *  - `SPARK_GRAFT_BENCH_ISOLATE=1` releases the shared-cache registry
-  *    and clears the session cache between queries, so each timing is
-  *    attributable to its own query instead of the first toucher of a
-  *    shared materialization paying for the group;
-  *  - after the loop, the measured shared-cache footprint (one stderr
-  *    line per cached relation) documents the declared memory budget.
-  *
-  * Round-8: BOTH modes in one artifact. The default run is now two
-  * passes — shared-cache (the headline `"queries"`/`"value"`, unchanged
-  * shape for the driver) followed by isolate (added as
-  * `"isolate_queries"`/`"isolate_total"`) — so per-query numbers are
-  * attributable without a second judge run. `SPARK_GRAFT_BENCH_MODE`
-  * = `shared` | `isolate` | `both` (default `both`) selects passes;
-  * the legacy `SPARK_GRAFT_BENCH_ISOLATE=1` still forces isolate-only.
-  *
-  * Round-13 (r12 verdict items 1/6 — the r12 artifact was ~1.8×
-  * host-inflated with nothing in the artifact saying so): a fixed
-  * data-independent CPU+shuffle sentinel runs before AND after the
-  * board; the JSON carries `sentinel_pre_sec`/`sentinel_post_sec`,
-  * the committed clean-host `sentinel_ref_sec`, a derived
-  * `host_degraded` flag (min(sentinels) > 1.3× ref), and a free-text
-  * `context` field (`SPARK_GRAFT_BENCH_CONTEXT`). Artifact diffs are
-  * self-describing: normalize wall-clocks by the sentinel ratio
-  * before reading any delta as a code regression.
+  *    than pruned to a row count; each query runs
+  *    `SPARK_GRAFT_BENCH_ITERS` times (default 2) and the best time is
+  *    reported; a failure is listed in `"failed"`, never timed;
+  *  - `SPARK_GRAFT_BENCH_MODE` = `shared` | `isolate` | `both` (default
+  *    `both`; `SPARK_GRAFT_BENCH_ISOLATE=1` forces `isolate`) picks the
+  *    passes. The shared pass keeps caches across queries and gives
+  *    `"queries"`/`"value"`; the isolate pass releases the shared-cache
+  *    registry, the checkpoints and the session cache before each query
+  *    and gives `"isolate_queries"`/`"isolate_total"`;
+  *  - a frozen anchor block of fixed query ids (`AnchorIds`) runs
+  *    best-of-3 in isolate discipline after the board, unless
+  *    `SPARK_GRAFT_BENCH_ONLY` filters the run to named queries;
+  *  - a data-independent CPU+shuffle sentinel and a lineitem scan
+  *    sentinel run before and after the board. The JSON carries both
+  *    pairs, their clean-host references and calibration point, a
+  *    `host_degraded` flag (only at the calibration point),
+  *    `sentinel_ratio`, the sentinel-normalized `normalized_queries` /
+  *    `normalized_anchors`, and free-text `context`
+  *    (`SPARK_GRAFT_BENCH_CONTEXT`);
+  *  - after the loop, one stderr line per cached relation records the
+  *    shared caches' measured footprint.
   */
 object Bench {
 
@@ -59,9 +47,7 @@ object Bench {
     ()
   }
 
-  /** Round-13 noise sentinel (r12 verdict item 1: the committed r12
-    * artifact was ~1.8× host-inflated and nothing in the artifact
-    * said so). A fixed, data-independent CPU+shuffle probe — hash
+  /** Host noise sentinel: a fixed, data-independent CPU+shuffle probe — hash
     * 20M longs across 32 partitions, shuffle into 64 groups, fold —
     * run 3× before and 3× after the board (min reported, steady-state
     * JIT). Its timing measures the HOST, not the engine: diffing two
@@ -77,17 +63,15 @@ object Bench {
         .agg(sum(xxhash64(col("g"), col("s"), col("c")))).collect()
       (System.nanoTime() - t0) / 1e9
     }
-    once() // discarded warmup: the r13 board showed pre 1.21s vs post
-           // 0.24s from JVM-start JIT alone — min-of-3 doesn't absorb it
+    once() // discarded warmup: JVM-start JIT alone can make the first
+           // probe ~5× slower, more than min-of-3 absorbs
     (1 to 3).map(_ => once()).min
   }
 
   /** Parquet-scan sentinel: full scan + per-column hash of the SF
     * dir's lineitem — the I/O+decode mode the CPU probe can't see
-    * (r13 calibration found the CPU probe reading clean while real
-    * queries ran ~1.4× the r11 wall-clocks, fresh JVM or warm; scan
-    * pressure is the prime suspect, so the artifact now certifies
-    * BOTH modes). Comparable across rounds at the SAME sf dir. */
+    * (the CPU probe can read clean while scan-heavy queries run
+    * slow). Comparable across runs at the SAME sf dir. */
   private def scanSentinel(spark: SparkSession, sfDir: String): Double = {
     def once(): Double = {
       val t0 = System.nanoTime()
@@ -100,18 +84,14 @@ object Bench {
 
   /** Clean-host references for the two sentinels: the BEST host state
     * ever observed at the calibration point (local[32], same probes;
-    * scan ref is for sf0.1) — r14 recalibration: the r13 refs
-    * (0.60/0.35) were measured on what turned out to be a still-
-    * degraded host (the r14 board measured 0.258/0.249 on identical
-    * probes), so "ref = best observed" is the stable convention:
-    * sentinel_ratio reads ≥~1, normalized wall-clocks are
-    * best-host-equivalents, and host_degraded keeps meaning "slower
-    * than the machine has demonstrably been". An artifact whose
-    * sentinels are ≫ these was taken on a degraded host and its
-    * wall-clocks are inflated by ~the same factor. r14 (r13 ADVICE):
-    * the calibration POINT is part of the artifact — the CPU ref
-    * binds only at `CalCpus` cores and the scan ref only at a dir
-    * ending in `CalSfSuffix`; off the calibration point the
+    * scan ref is for sf0.1). "Ref = best observed" keeps
+    * sentinel_ratio ≥~1, normalized wall-clocks best-host-equivalents,
+    * and host_degraded meaning "slower than the machine has
+    * demonstrably been". An artifact whose sentinels are ≫ these was
+    * taken on a degraded host and its wall-clocks are inflated by ~the
+    * same factor. The calibration POINT is part of the artifact — the
+    * CPU ref binds only at `CalCpus` cores and the scan ref only at a
+    * dir ending in `CalSfSuffix`; off the calibration point the
     * host_degraded flag is withheld (JSON null) instead of firing
     * spuriously. */
   private val SentinelRefSec = 0.26
@@ -119,14 +99,14 @@ object Bench {
   private val CalCpus = "32"
   private val CalSfSuffix = "sf0.1"
 
-  /** Frozen cross-round anchor block (r13 verdict item 2): ~20 FIXED
+  /** Frozen anchor block: ~20 FIXED
     * query ids spanning the board's plan shapes — scan, broadcast and
     * multiway joins, SCD2 merge, agg, window, interval join, exact /
     * MinHash dedup, ANN (brute, LSH, IVF, IVF-PQ), k-means, sketch,
     * skew profile, drift, k-core, dedup yield, distributed rank.
     * Measured best-of-3 in isolate discipline after the board; the
-    * set is APPEND-ONLY across rounds so `anchors`/`normalized_anchors`
-    * diff field-for-field between BENCH_FULL_r{N} artifacts. */
+    * set is APPEND-ONLY so `anchors`/`normalized_anchors` diff
+    * field-for-field between BENCH_FULL artifacts. */
   private val AnchorIds = Seq(
     "q01_pruned_scan", "q06_join_left_broadcast", "q08_join_multiway_fanout",
     "q12_agg_kpi_dashboard", "q17_scd2_merge", "q20_dedup_exact",
@@ -140,18 +120,7 @@ object Bench {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val iters = sys.env.getOrElse("SPARK_GRAFT_BENCH_ITERS", "2").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      // benched plans run with the engine's optimizer rule + function
-      // registry installed (same session shape Verify gates on)
-      .withExtensions(new graft.functions.GraftExtensions)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession(cpus)
 
     // SPARK_GRAFT_BENCH_ONLY: comma-separated name filter for A/B runs
     val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY").map(_.split(",").toSet)
@@ -243,10 +212,9 @@ object Bench {
     val isolateFields = isolatePass.map { case (t, _) =>
       s""","isolate_total":${f"${t.values.sum}%.3f"},"isolate_queries":${qjson(t)}"""
     }.getOrElse("")
-    // self-describing noise fields (r12 verdict items 1/6): sentinel
-    // pre/post + the committed clean-host reference + a derived flag,
-    // plus optional free-text context (SPARK_GRAFT_BENCH_CONTEXT).
-    // r14 (r13 ADVICE): the flag is derived ONLY at the calibration
+    // self-describing noise fields: sentinel pre/post + the committed
+    // clean-host reference + a derived flag, plus optional free-text
+    // context (SPARK_GRAFT_BENCH_CONTEXT). The flag is derived ONLY at the calibration
     // point the refs were measured at (CalCpus / CalSfSuffix) — off it
     // (other core count / other sf dir) the corresponding comparison
     // is withheld rather than spuriously fired, and the calibration
@@ -260,7 +228,7 @@ object Bench {
         (scanCal && math.min(scanPre, scanPost) > 1.3 * ScanSentinelRefSec))
     val ctx = sys.env.getOrElse("SPARK_GRAFT_BENCH_CONTEXT", "")
       .replaceAll("[\"\\\\\\n\\r\\t]", " ")
-    // r14 (r13 verdict item 2): self-normalizing wall-clocks — each
+    // self-normalizing wall-clocks — each
     // timing divided by the HOST factor min(sentinel_pre, sentinel_post)
     // / sentinel_ref (the CPU probe; data-independent, so it binds
     // whenever the core count matches calibration). Cross-round diffs
@@ -287,10 +255,9 @@ object Bench {
         s""","context":"$ctx""""
     val json =
       s"""{"metric":"total","value":${f"$total%.3f"},"unit":"sec","mode":"$mode","queries":${qjson(timings)}$isolateFields$sentinelFields,"failed":$fl,"sf":"$sfDir"}"""
-    // TWO file copies: the driver-pointed one, and a durable repo-local
+    // TWO file copies: the SPARK_GRAFT_BENCH_OUT one, and a durable repo-local
     // one (target/bench_full.json) so every per-query number survives
-    // even when the round artifact captures only the stdout tail —
-    // commit it as BENCH_FULL_r{N}.json alongside the round artifacts
+    // even when a capture keeps only the stdout tail
     val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "/tmp/graft_bench.json")
     Seq(outPath, "target/bench_full.json").foreach { p =>
       try {
@@ -300,15 +267,8 @@ object Bench {
         System.err.println(s"[bench] write $p: ${e.getMessage}")
       }
     }
-    // r15 (r14 verdict item 5): the FULL metric line is now the LAST
-    // stdout line. The r13 round artifact was tail-captured down to
-    // the compact summary alone — the summary printed after the metric
-    // line, so a tail parser kept totals and lost every per-query
-    // number, which zeroed PERF_r14's round-over-round comparison
-    // (n_common: 0). Order swapped, nothing else: both lines still
-    // print, the file copies still carry the full JSON, and any
-    // tail-truncated capture now degrades to the RICH line instead of
-    // the poor one.
+    // the FULL metric line is the LAST stdout line, after the compact
+    // summary: a tail-truncated capture keeps every per-query number
     val allFailed = (failed ++ isolatePass.map(_._2).getOrElse(Nil)).distinct
     println(s"""{"total":${f"$total%.3f"},"n":${timings.size},"failed":${allFailed.size},"mode":"$mode"}""")
     println(json)

@@ -1,12 +1,17 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Ad-hoc plan auditor: prints the formatted physical plan of the named
   * queries (all of them if no names given) at the given sf dir. Not a
   * driver surface — a builder tool for the scale review loop
   * (`.explain` every operator and iterate until it's the plan you'd
   * want, per SURVEY §4.2).
+  *
+  * It audits the session Bench and Verify run ([[LocalSession]] at 4
+  * cores: the engine's extensions, so `DotProductRewrite` shows in the
+  * plans; ANSI off; AQE on; 4 shuffle partitions). With `PLAN_SIMPLE=1`
+  * it prints `executedPlan.toString` of that session, which is NOT the
+  * string `PlanQualitySpec` pins: the spec plans in `SparkSpec`'s
+  * session (ANSI on, no extensions).
   *
   * Usage: sbt 'runMain graft.PlanAudit /root/testdata/sf0.01 q34 q37'
   */
@@ -14,23 +19,12 @@ object PlanAudit {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val wanted = args.drop(1).toSet
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      // r15: audit the SAME session shape Bench/Verify run — without
-      // the extensions the dumped plans silently miss the engine's
-      // optimizer rule (DotProductRewrite) and so can't evidence
-      // rewrites that fire in every measured session
-      .withExtensions(new graft.functions.GraftExtensions)
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession("4")
     SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
       if (wanted.isEmpty || wanted.exists(name.startsWith)) {
         println(s"\n========== $name ==========")
-        // PLAN_SIMPLE=1 prints executedPlan.toString — the exact string
-        // PlanQualitySpec pins against — instead of formatted mode
+        // PLAN_SIMPLE=1 prints executedPlan.toString instead of
+        // formatted mode
         if (sys.env.get("PLAN_SIMPLE").contains("1"))
           println(fn(spark, sfDir).queryExecution.executedPlan.toString)
         else fn(spark, sfDir).explain("formatted")

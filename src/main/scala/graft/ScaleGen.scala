@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SaveMode}
 import org.apache.spark.sql.functions._
 
 /** Scale-validation data generator: writes a ~10× replica of an input
@@ -34,11 +34,8 @@ object ScaleGen {
     val src = args(0)
     val out = args(1)
     val replicas = if (args.length > 2) args(2).toInt else 10
-    val spark = SparkSession.builder()
+    val spark = LocalSession.builder(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
       .appName("graft-scalegen")
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
       // events.ts dual-encoding (see Tables.events): a TIMESTAMP(NANOS)
       // source reads as nanosecond LONG under this conf and the replica
       // writes it back as plain BIGINT (nanos branch downstream); a

@@ -1,18 +1,9 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Replicates the driver's t1 smoke: SparkEntry.entry rows > 0. */
 object Smoke {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .withExtensions(new graft.functions.GraftExtensions)
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession("4")
     val n = SparkEntry.entry(spark).count()
     println(s"[smoke] entry rows=$n ${if (n > 0) "PASS" else "FAIL"}")
     spark.stop()

@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.Tables
+import graft.ops.Exact._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -31,9 +32,6 @@ import org.apache.spark.sql.functions._
   */
 object Analytics {
   private type Q = (SparkSession, String) => DataFrame
-
-  private def sumE2(c: Column): Column = sum(round(c * lit(100.0), 0).cast("long"))
-  private def sumE4(c: Column): Column = sum(round(c * lit(10000.0), 0).cast("long"))
 
   /** Benford expected first-digit mass, ppm: round(1e6·log₁₀(1+1/d)).
     * Computed once on the driver and baked as the SAME literal into
@@ -85,7 +83,7 @@ object Analytics {
     * running total — all over one (o_custkey, o_orderdate, o_orderkey)
     * sort. Monetary values in exact cents. */
   val q38MovingWindow: Q = (s, d) => {
-    val cents = round(col("o_totalprice") * lit(100.0), 0).cast("long")
+    val cents = e2(col("o_totalprice"))
     val order = Window.partitionBy("o_custkey").orderBy(col("o_orderdate"), col("o_orderkey"))
     val roll3 = order.rowsBetween(-2, Window.currentRow)
     val run = order.rowsBetween(Window.unboundedPreceding, Window.currentRow)
@@ -271,8 +269,7 @@ object Analytics {
       .agg(count(lit(1)).as("zone_pairs"))
     // bloom leg: per-file bit sets, all-k-bits-present probe
     val bitArr = (k: Column) => array((0 until FileBloomHashes).map(j =>
-      conv(substring(md5(concat(lit(s"fb$j|"), k.cast("string"))), 1, 12),
-        16, 10).cast("long") % FileBloomBits): _*)
+      md5Draw(concat(lit(s"fb$j|"), k.cast("string")), 1, 12) % FileBloomBits): _*)
     val bloomBits = fileKeys
       .select(col("f"), explode(bitArr(col("k"))).as("bit"))
       .distinct()
@@ -398,9 +395,9 @@ object Analytics {
     Tables.lineitem(s, d)
       .filter(col("l_shipdate") >= lit("1998-06-01"))
       .select(col("l_orderkey"), col("l_linenumber"),
-        round(col("l_extendedprice") * 100, 0).cast("long").as("extendedprice_e2"),
-        round(col("l_discount") * 10000, 0).cast("long").as("discount_e4"),
-        round(col("l_tax") * 10000, 0).cast("long").as("tax_e4"))
+        e2(col("l_extendedprice")).as("extendedprice_e2"),
+        e4(col("l_discount")).as("discount_e4"),
+        e4(col("l_tax")).as("tax_e4"))
       .unpivot(
         Array(col("l_orderkey"), col("l_linenumber")),
         Array(col("extendedprice_e2"), col("discount_e4"), col("tax_e4")),
@@ -419,7 +416,7 @@ object Analytics {
     val w = Window.partitionBy("c_mktsegment").orderBy(col("bal_e2"), col("c_custkey"))
     Tables.customer(s, d)
       .select(col("c_custkey"), col("c_mktsegment"),
-        round(col("c_acctbal") * 100, 0).cast("long").as("bal_e2"))
+        e2(col("c_acctbal")).as("bal_e2"))
       .withColumn("decile", ntile(10).over(w).cast("long"))
   }
 
@@ -460,7 +457,7 @@ object Analytics {
     val cw = Window.partitionBy("c_mktsegment")
     Tables.customer(s, d)
       .select(col("c_mktsegment"), col("c_custkey"),
-        round(col("c_acctbal") * 100, 0).cast("long").as("bal_e2"))
+        e2(col("c_acctbal")).as("bal_e2"))
       .withColumn("rn", row_number().over(w).cast("long"))
       .withColumn("cnt", count(lit(1)).over(cw))
       .withColumn("lo", expr("(cnt + 1) div 2"))
@@ -542,7 +539,7 @@ object Analytics {
   val q82LatestPerKey: Q = (s, d) =>
     Tables.orders(s, d)
       .select(col("o_custkey"), col("o_orderkey"), col("o_orderdate"),
-        round(col("o_totalprice") * 100, 0).cast("long").as("price_e2"))
+        e2(col("o_totalprice")).as("price_e2"))
       .groupBy(col("o_custkey"))
       .agg(
         count(lit(1)).as("n_orders"),
@@ -572,7 +569,7 @@ object Analytics {
   val q86NestedExport: Q = (s, d) =>
     Tables.orders(s, d)
       .select(col("o_custkey"), col("o_orderkey"), col("o_orderdate"),
-        round(col("o_totalprice") * 100, 0).cast("long").as("price_e2"))
+        e2(col("o_totalprice")).as("price_e2"))
       .groupBy(col("o_custkey"))
       .agg(sort_array(collect_list(
         struct(col("o_orderdate"), col("o_orderkey"), col("price_e2")))).as("ords"))
@@ -606,7 +603,7 @@ object Analytics {
     * verified against an independent plan, not another JSON stack. */
   val q88JsonRoundtrip: Q = (s, d) => {
     val li = Tables.lineitem(s, d).select(col("l_orderkey"),
-      round(col("l_extendedprice") * 100, 0).cast("long").as("amount_e2"))
+      e2(col("l_extendedprice")).as("amount_e2"))
     val payload = li
       .join(Tables.orders(s, d).select(col("o_orderkey"), col("o_custkey"),
         date_format(col("o_orderdate"), "yyyy-MM-dd").as("d")),
@@ -643,7 +640,7 @@ object Analytics {
   val q89MapSpend: Q = (s, d) =>
     Tables.orders(s, d)
       .select(col("o_custkey"), year(col("o_orderdate")).cast("long").as("yr"),
-        round(col("o_totalprice") * 100, 0).cast("long").as("price_e2"))
+        e2(col("o_totalprice")).as("price_e2"))
       .groupBy(col("o_custkey"), col("yr"))
       .agg(sum(col("price_e2")).as("spend_e2"))
       .groupBy(col("o_custkey"))
@@ -675,7 +672,7 @@ object Analytics {
   val q93AboveAvg: Q = (s, d) => {
     val o = Tables.orders(s, d)
       .select(col("o_orderkey"), col("o_custkey"),
-        round(col("o_totalprice") * 100, 0).cast("long").as("price_e2"))
+        e2(col("o_totalprice")).as("price_e2"))
     val stats = o.groupBy(col("o_custkey"))
       .agg(count(lit(1)).as("n_cust_orders"), sum(col("price_e2")).as("cust_total_e2"))
     o.join(stats, "o_custkey")
@@ -702,7 +699,7 @@ object Analytics {
   val q94OutlierFlags: Q = (s, d) => {
     val o = Tables.orders(s, d)
       .select(col("o_orderkey"), col("o_custkey"),
-        round(col("o_totalprice") * 100, 0).cast("long").as("price_e2"))
+        e2(col("o_totalprice")).as("price_e2"))
     val stats = o.groupBy(col("o_custkey"))
       .agg(count(lit(1)).as("n_orders"), sum(col("price_e2")).as("s1"),
         sum(col("price_e2") * col("price_e2")).as("s2"))
@@ -732,7 +729,7 @@ object Analytics {
     val w = Window.partitionBy("c_mktsegment").orderBy(col("bal_e2"))
     Tables.customer(s, d)
       .select(col("c_custkey"), col("c_mktsegment"),
-        round(col("c_acctbal") * 100, 0).cast("long").as("bal_e2"))
+        e2(col("c_acctbal")).as("bal_e2"))
       .select(col("c_custkey"), col("c_mktsegment"), col("bal_e2"),
         dense_rank().over(w).cast("long").as("drank"),
         percent_rank().over(w).as("prank"),
@@ -789,7 +786,7 @@ object Analytics {
   val q104CdcApply: Q = (s, d) => {
     val o = Tables.orders(s, d)
       .select(col("o_orderkey").as("key"),
-        round(col("o_totalprice") * 100, 0).cast("long").as("price_e2"))
+        e2(col("o_totalprice")).as("price_e2"))
     val updates = o.filter(col("key") % 3 === 0)
       .select(col("key"), lit("U").as("op"), (col("price_e2") + 10000L).as("new_price_e2"),
         lit(2L).as("seq"))
@@ -832,7 +829,7 @@ object Analytics {
     val w = Window.partitionBy("c_mktsegment").orderBy(col("bal_e2"), col("c_custkey"))
     val ranked = Tables.customer(s, d)
       .select(col("c_mktsegment"), col("c_custkey"),
-        round(col("c_acctbal") * 100, 0).cast("long").as("bal_e2"))
+        e2(col("c_acctbal")).as("bal_e2"))
       .withColumn("rn", row_number().over(w).cast("long"))
       .withColumn("n", count(lit(1)).over(Window.partitionBy("c_mktsegment")))
     val thresholds = ranked
@@ -879,7 +876,7 @@ object Analytics {
       .filter(col("o_orderdate") > cd ||
         (col("o_orderdate") === cd && col("o_orderkey") > CursorKey))
       .select(col("o_orderkey"), col("o_orderdate"),
-        round(col("o_totalprice") * 100, 0).cast("long").as("price_e2"))
+        e2(col("o_totalprice")).as("price_e2"))
       .orderBy(col("o_orderdate"), col("o_orderkey"))
       .limit(PageSize)
   }
@@ -909,7 +906,7 @@ object Analytics {
   val q123MadOutliers: Q = (s, d) => {
     val base = Tables.customer(s, d)
       .select(col("c_custkey"), col("c_mktsegment"),
-        round(col("c_acctbal") * 100, 0).cast("long").as("bal_e2"))
+        e2(col("c_acctbal")).as("bal_e2"))
       .transform(graft.ops.SharedCache.persist) // median pass + deviation pass + output
     val med = base.groupBy("c_mktsegment")
       .agg(median(col("bal_e2")).as("seg_median_e2"))
@@ -951,7 +948,7 @@ object Analytics {
     val sameSize = Window.partitionBy("p_brand", "p_size")
     Tables.part(s, d)
       .select(col("p_partkey"), col("p_brand"), col("p_size").cast("long").as("p_size"),
-        round(col("p_retailprice") * 100, 0).cast("long").as("price_e2"))
+        e2(col("p_retailprice")).as("price_e2"))
       .withColumn("min_larger_e2", min(col("price_e2")).over(larger))
       .withColumn("min_same_e2", min(col("price_e2")).over(sameSize))
       .select(col("p_partkey"), col("p_brand"), col("p_size"), col("price_e2"),
@@ -1025,7 +1022,7 @@ object Analytics {
     Tables.orders(s, d)
       .filter(col("o_totalprice") > 0)
       .select(col("o_orderpriority"),
-        round(col("o_totalprice") * 100, 0).cast("long").as("cents"))
+        e2(col("o_totalprice")).as("cents"))
       .withColumn("digit",
         expr("cents div CAST(pow(10, length(CAST(cents AS STRING)) - 1) AS BIGINT)"))
       .groupBy("o_orderpriority", "digit")
@@ -1097,7 +1094,7 @@ object Analytics {
       .agg(sum(round(col("o_totalprice"), 0).cast("long")).as("spend_e0"))
     val joined = spend
       .join(Tables.customer(s, d).select(col("c_custkey"), col("c_nationkey"),
-        round(col("c_acctbal") * 100, 0).cast("long").as("bal_e2")),
+        e2(col("c_acctbal")).as("bal_e2")),
         col("o_custkey") === col("c_custkey"))
       .join(broadcast(Tables.nation(s, d).select(col("n_nationkey"), col("n_name"))),
         col("c_nationkey") === col("n_nationkey"))
@@ -1440,8 +1437,7 @@ object Analytics {
     val perKey = Tables.lineitem(s, d)
       .select(col("l_partkey").cast("long").as("k"))
       .withColumn("b",
-        conv(substring(md5(concat(lit("jc|"), col("k").cast("string"))), 1, 12),
-          16, 10).cast("long") % JcBuckets)
+        md5Draw(concat(lit("jc|"), col("k").cast("string")), 1, 12) % JcBuckets)
       .groupBy("b", "k").agg(count(lit(1)).as("f"))
       .transform(graft.ops.SharedCache.persist)
     val est = perKey
@@ -1518,7 +1514,7 @@ object Analytics {
     * shared verbatim with [[graft.streaming.StreamingBootstrap]]. */
   private[graft] def bootBaseRows(orders: DataFrame): DataFrame =
     orders.select(col("o_orderpriority").as("priority"), col("o_orderkey"),
-      round(col("o_totalprice") * 100.0, 0).cast("long").as("x_e2"))
+      e2(col("o_totalprice")).as("x_e2"))
 
   /** The additive exact-leg partials (priority, n_orders, sum_e2) —
     * mergeable by +; shared with the streaming twin. */
@@ -1536,9 +1532,8 @@ object Analytics {
           val j = r / 3
           val t = r % 3
           struct(lit(r.toLong).as("r"),
-            (conv(substring(md5(concat(lit(s"boot$j|"),
-              col("o_orderkey").cast("string"))), t * 10 + 1, 10), 16, 10)
-              .cast("long") % 1000000L).as("u"))
+            (md5Draw(concat(lit(s"boot$j|"),
+              col("o_orderkey").cast("string")), t * 10 + 1, 10) % 1000000L).as("u"))
         }: _*)).as("e"))
       .select(col("priority"), col("e.r").as("r"),
         bootWeight(col("e.u")).as("w"), col("x_e2"))

@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.Tables
+import graft.ops.Exact._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -41,12 +42,6 @@ import org.apache.spark.sql.functions._
 object Curation {
   private type Q = (SparkSession, String) => DataFrame
 
-  /** Whitespace-normalized lowercase tokens (LlmPipeline convention;
-    * package-visible so q193's cluster-yield join reuses the exact
-    * same tokenizer). */
-  private[queries] def tokens(c: Column): Column =
-    split(trim(regexp_replace(lower(c), "\\s+", " ")), " ")
-
   /** Word n-grams as space-joined strings; empty below n tokens.
     * Built as a zip_with chain over shifted slices — every reference
     * to `tk` is a HOF *argument* (evaluated once per row), never
@@ -70,12 +65,11 @@ object Curation {
     * Distinct salts give independent-in-practice streams, so e.g. the
     * q42 train/test split and the q49 sample never correlate. */
   private def hash16(salt: String, key: Column): Column =
-    conv(substring(md5(concat(lit(salt), key.cast("string"))), 1, 4), 16, 10)
-      .cast("long")
+    md5Draw(concat(lit(salt), key.cast("string")), 1, 4)
 
   /** q42's split bucket (no salt — must match Profiling.q42 exactly). */
   private def splitBucket(key: Column): Column =
-    conv(substring(md5(key.cast("string")), 1, 4), 16, 10).cast("long") % 10
+    md5Draw(key.cast("string"), 1, 4) % 10
 
   private def e6Frac(num: Column, den: Column): Column =
     round(lit(1e6) * num.cast("double") / den.cast("double"), 0).cast("long")
@@ -147,7 +141,7 @@ object Curation {
       .select(col("doc_id"), splitBucket(col("doc_id")).as("b"),
         explode(array_distinct(ngrams(tokens(col("text")), ContamN))).as("g"))
       .select(col("doc_id"), col("b"),
-        conv(substring(md5(col("g")), 1, 12), 16, 10).cast("long").as("gh"))
+        md5Draw(col("g"), 1, 12).as("gh"))
       .transform(graft.ops.SharedCache.persist)
 
   val q47Decontaminate: Q = (s, d) => {
@@ -425,9 +419,9 @@ object Curation {
     // the two ring families, relationally (cfg = vnodes per bucket)
     val pts = s.range(24L * 64L).select(
       (col("id") % 24L).as("bkt"), expr("id div 24L").as("v"))
-      .withColumn("pt", conv(substring(md5(
+      .withColumn("pt", md5Draw(
         concat(lit("ring#"), col("bkt").cast("string"), lit("#"),
-          col("v").cast("string"))), 1, 12), 16, 10).cast("long"))
+          col("v").cast("string")), 1, 12))
     val ring = pts.filter(col("v") < 8L).withColumn("cfg", lit(8L))
       .unionByName(pts.withColumn("cfg", lit(64L)))
 
@@ -925,7 +919,7 @@ object Curation {
     val perDoc = Tables.documents(s, d)
       .select(col("doc_id"), explode(ngrams(tokens(col("text")), 2)).as("g"))
       .select(col("doc_id"),
-        conv(substring(md5(col("g")), 1, 12), 16, 10).cast("long").as("gh"))
+        md5Draw(col("g"), 1, 12).as("gh"))
       .groupBy("doc_id", "gh").agg(count(lit(1)).as("c"))
       .transform(graft.ops.SharedCache.persist)
     val df = perDoc.groupBy("gh").agg(count(lit(1)).as("df_docs"))
@@ -972,7 +966,7 @@ object Curation {
       .select(col("source"), explode(array_distinct(
         ngrams(tokens(col("text")), ContamN))).as("g"))
       .select(col("source"),
-        conv(substring(md5(col("g")), 1, 12), 16, 10).cast("long").as("gh"))
+        md5Draw(col("g"), 1, 12).as("gh"))
       .distinct()
 
   private def sourceGrams(s: SparkSession, d: String): DataFrame =
@@ -1173,7 +1167,7 @@ object Curation {
   val q113QualityClassifier: Q = (s, d) => {
     val tk = tokens(col("text"))
     val wShift = (t: Column) =>
-      (conv(substring(md5(t), 1, 2), 16, 10).cast("long") * ClsMix) % ClsRange
+      (md5Draw(t, 1, 2) * ClsMix) % ClsRange
     Tables.documents(s, d)
       .select(col("doc_id"),
         size(tk).cast("long").as("n_tokens"),
@@ -1286,7 +1280,7 @@ object Curation {
       .select(col("source"), tokens(col("text")).as("tk"))
       .select(col("source"), size(col("tk")).cast("long").as("n_tok"),
         aggregate(col("tk"), lit(0L), (acc, t) =>
-          acc + (conv(substring(md5(t), 1, 2), 16, 10).cast("long") * ClsMix) % ClsRange)
+          acc + (md5Draw(t, 1, 2) * ClsMix) % ClsRange)
           .as("sum_shift"))
       .groupBy("source")
       .agg(sum(col("n_tok")).as("n_tokens"), sum(col("sum_shift")).as("ss"))
@@ -1334,7 +1328,7 @@ object Curation {
       .select(col("source"), tokens(col("text")).as("tk"))
       .select(col("source"), size(col("tk")).cast("long").as("n_tok"),
         aggregate(col("tk"), lit(0L), (acc, t) =>
-          acc + (conv(substring(md5(t), 1, 2), 16, 10).cast("long") * ClsMix) % ClsRange)
+          acc + (md5Draw(t, 1, 2) * ClsMix) % ClsRange)
           .as("sum_shift"))
       .groupBy("source")
       .agg(sum(col("n_tok")).as("n_tokens"), sum(col("sum_shift")).as("ss"))
@@ -1497,8 +1491,7 @@ object Curation {
   val q128PrioritySample: Q = (s, d) =>
     Tables.documents(s, d)
       .select(col("doc_id"), col("source"), col("n_chars"),
-        conv(substring(md5(concat(lit("prio"), col("doc_id").cast("string"))),
-          1, 12), 16, 10).cast("long").as("h48"))
+        md5Draw(concat(lit("prio"), col("doc_id").cast("string")), 1, 12).as("h48"))
       .withColumn("priority", expr("h48 div greatest(n_chars, 1L)"))
       .orderBy(col("priority"), col("doc_id"))
       .limit(PrioritySampleK)

@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.Tables
+import graft.ops.Exact._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -44,7 +45,7 @@ object EventAnalytics {
       .agg(
         count(lit(1)).as("n_events"),
         countDistinct(col("user_id")).as("n_users"),
-        sum(round(col("value") * 100, 0).cast("long")).as("value_sum_e2"),
+        sumE2(col("value")).as("value_sum_e2"),
         sum(col("k")).as("k_sum"))
       .select(col("w.start").as("window_start"), col("event_type"),
         col("n_events"), col("n_users"), col("value_sum_e2"), col("k_sum"))
@@ -75,7 +76,7 @@ object EventAnalytics {
         max(col("ts")).as("session_end"),
         (unix_micros(max(col("ts"))) - unix_micros(min(col("ts")))).as("duration_us"),
         count(lit(1)).as("n_events"),
-        sum(round(col("value") * 100, 0).cast("long")).as("value_sum_e2"))
+        sumE2(col("value")).as("value_sum_e2"))
   }
 
   val q35Sessionize: Q = (s, d) => sessionizeBatch(Tables.events(s, d))
@@ -157,7 +158,7 @@ object EventAnalytics {
       .select(col("purchase_id"), col("user_id"), col("ts").as("purchase_ts"),
         col("attr_click_id"),
         (unix_micros(col("ts")) - col("attr_click_us")).as("gap_micros"),
-        round(col("value") * 100, 0).cast("long").as("value_e2"))
+        e2(col("value")).as("value_e2"))
   }
 
   // -- q62: time-RANGE window frame (trailing 1 hour) ------------------
@@ -179,7 +180,7 @@ object EventAnalytics {
     Tables.events(s, d)
       .select(col("event_id"), col("user_id"), col("ts"),
         unix_micros(col("ts")).as("ts_us"),
-        round(col("value") * 100, 0).cast("long").as("value_e2"))
+        e2(col("value")).as("value_e2"))
       .select(col("event_id"), col("user_id"), col("ts"),
         count(lit(1)).over(w).as("n_1h"),
         sum(col("value_e2")).over(w).as("sum_e2_1h"))
@@ -411,7 +412,7 @@ object EventAnalytics {
       .select(col("event_id"), col("user_id"), col("event_type"),
         unix_micros(col("ts")).as("us"),
         when(col("event_type") === "purchase",
-          round(col("value") * 100, 0).cast("long")).as("p_e2"))
+          e2(col("value"))).as("p_e2"))
       .select(col("event_id"), col("user_id"), col("event_type"), col("us"),
         last(col("p_e2"), ignoreNulls = true).over(w).as("last_purchase_e2"),
         (col("us") - last(when(col("p_e2").isNotNull, col("us")), ignoreNulls = true)
@@ -439,7 +440,7 @@ object EventAnalytics {
     val w = Window.partitionBy("user_id").orderBy(col("us"), col("event_id"))
     Tables.events(s, d)
       .select(col("event_id"), col("user_id"), unix_micros(col("ts")).as("us"),
-        round(col("value") * 100, 0).cast("long").as("v_e2"))
+        e2(col("value")).as("v_e2"))
       .select(col("event_id"), col("user_id"), col("us"), col("v_e2"),
         lag(col("us"), 1).over(w).as("pus"), lag(col("v_e2"), 1).over(w).as("pv"),
         lead(col("us"), 1).over(w).as("nus"), lead(col("v_e2"), 1).over(w).as("nv"))
@@ -693,7 +694,7 @@ object EventAnalytics {
         when(v.isNotNull, lit(weight)).otherwise(lit(0L)))
     }
     Tables.events(s, d)
-      .withColumn("v_e2", round(col("value") * 100, 0).cast("long"))
+      .withColumn("v_e2", e2(col("value")))
       .withColumn("num", taps.map(_._1).reduce(_ + _))
       .withColumn("den", taps.map(_._2).reduce(_ + _))
       .select(col("event_id"), col("user_id"), col("ts"), col("v_e2"),
@@ -741,7 +742,7 @@ object EventAnalytics {
   private[graft] def forecastDaily(events: DataFrame): DataFrame =
     events
       .select(col("event_type"), to_date(col("ts")).as("day"),
-        round(col("value") * 100, 0).cast("long").as("cents"))
+        e2(col("value")).as("cents"))
       .groupBy("event_type", "day")
       .agg(sum(col("cents")).as("y"))
 
@@ -1288,7 +1289,7 @@ object EventAnalytics {
   val q132Autocorr: Q = (s, d) => {
     val daily = Tables.events(s, d)
       .groupBy(col("event_type"), date_trunc("DAY", col("ts")).as("day"))
-      .agg(sum(round(col("value") * 100, 0).cast("long")).as("x"))
+      .agg(sumE2(col("value")).as("x"))
     val w = Window.partitionBy("event_type").orderBy("day")
     val pairs = daily
       .withColumn("prev_day", lag(col("day"), 1).over(w))
@@ -1330,7 +1331,7 @@ object EventAnalytics {
     val e = Tables.events(s, d).select(
       col("event_type"),
       (col("user_id") % 2 === 1).as("treat"),
-      round(col("value") * 100, 0).cast("long").as("v"))
+      e2(col("value")).as("v"))
     e.groupBy("event_type")
       .agg(
         sum(when(!col("treat"), 1L).otherwise(0L)).as("n0"),
@@ -1386,7 +1387,7 @@ object EventAnalytics {
     events
       .select(col("event_type"), col("user_id"),
         (col("user_id") % 2 === 1).as("treat"),
-        round(col("value") * 100, 0).cast("long").as("v"))
+        e2(col("value")).as("v"))
       .groupBy("event_type", "user_id", "treat")
       .agg(count(lit(1)).as("n"), sum(col("v")).as("sv"))
 
@@ -1410,9 +1411,8 @@ object EventAnalytics {
           val j = r / 48
           val t = r % 48
           struct(lit(r.toLong).as("r"),
-            shiftright(conv(substring(md5(concat(lit(s"perm$j|"),
-              col("user_id").cast("string"))), 1, 12), 16, 10)
-              .cast("long"), t).bitwiseAND(lit(1L)).as("b"))
+            shiftright(md5Draw(concat(lit(s"perm$j|"),
+              col("user_id").cast("string")), 1, 12), t).bitwiseAND(lit(1L)).as("b"))
         }: _*)).as("e"))
       .groupBy(col("event_type"), col("e.r").as("r"))
       .agg(sum(when(col("e.b") === 0L, col("n")).otherwise(0L)).as("pn0"),
@@ -1512,7 +1512,7 @@ object EventAnalytics {
     events
       .select(col("event_type"),
         (col("user_id") % 2 === 1).as("treat"),
-        round(col("value") * 100, 0).cast("long").as("v"))
+        e2(col("value")).as("v"))
       .groupBy("event_type", "v")
       .agg(sum(when(!col("treat"), 1L).otherwise(0L)).as("n0v"),
         sum(when(col("treat"), 1L).otherwise(0L)).as("n1v"))
@@ -1855,7 +1855,7 @@ object EventAnalytics {
       .select(col("event_type"), col("user_id"),
         (col("user_id") % 2 === 1).as("treat"),
         (datediff(col("ts"), lit("1970-01-01")) % 2 === 0).as("pre"),
-        round(col("value") * 100, 0).cast("long").as("v"))
+        e2(col("value")).as("v"))
       .groupBy("event_type", "user_id", "treat")
       .agg(sum(when(col("pre"), col("v")).otherwise(0L)).as("x"),
         sum(when(!col("pre"), col("v")).otherwise(0L)).as("y"))
@@ -1931,7 +1931,7 @@ object EventAnalytics {
   val q251MdeLadder: Q = (s, d) => {
     val m = Tables.events(s, d)
       .select(col("event_type"),
-        round(col("value") * 100, 0).cast("long").as("v"))
+        e2(col("value")).as("v"))
       .groupBy("event_type")
       .agg(count(lit(1)).as("n"), sum(col("v")).as("sv"),
         sum(col("v") * col("v")).as("qv"))
@@ -2056,18 +2056,22 @@ object EventAnalytics {
           col("fp") - col("fv"))
           .otherwise(col("le") - col("fv")).as("dur"))
 
-  /** The q254 curve over the cell relation — shared with the
-    * streaming twin so its answer is this exact code path. */
-  private[graft] def kmFinalize(cells: DataFrame): DataFrame = {
+  /** The Kaplan–Meier product-limit table over the cell relation —
+    * q254's pooled curve, or with `byArm` q259's one independent fold
+    * per treatment arm (windows partitioned by `treat`, the arm
+    * surfaced as BIGINT 0/1). Shared with the streaming twin so its
+    * answers are this exact code path. */
+  private[graft] def kmFinalize(cells: DataFrame, byArm: Boolean = false): DataFrame = {
+    val arm = if (byArm) Seq(col("treat")) else Nil
     val days = survivalDurations(cells)
-      .groupBy(col("dur").as("day"))
+      .groupBy(arm :+ col("dur").as("day"): _*)
       .agg(sum(col("event")).as("d_conv"),
         sum(lit(1L) - col("event")).as("n_censored"))
-    val wPrev = Window.orderBy("day")
+    val wAll = Window.partitionBy(arm: _*)
+    val wPrev = wAll.orderBy("day")
       .rowsBetween(Window.unboundedPreceding, -1)
-    val wPfx = Window.orderBy("day")
+    val wPfx = wAll.orderBy("day")
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val wAll = Window.partitionBy()
     days
       .withColumn("n_total", sum(col("d_conv") + col("n_censored")).over(wAll))
       .withColumn("gone",
@@ -2077,11 +2081,12 @@ object EventAnalytics {
         collect_list(struct(col("n_risk").as("n"), col("d_conv").as("d")))
           .over(wPfx))
       .filter(col("d_conv") > 0) // the KM table lists event times only
-      .select(col("day"), col("n_risk"), col("d_conv"), col("n_censored"),
-        expr("""aggregate(pfx, CAST(1000000000 AS BIGINT),
-               | (acc, s) -> CASE WHEN s.d > 0
-               |   THEN acc * (s.n - s.d) div s.n ELSE acc END)""".stripMargin)
-          .as("surv_e9"))
+      .select(arm.map(a => when(a, 1L).otherwise(0L).as("arm")) ++
+        Seq(col("day"), col("n_risk"), col("d_conv"), col("n_censored"),
+          expr("""aggregate(pfx, CAST(1000000000 AS BIGINT),
+                 | (acc, s) -> CASE WHEN s.d > 0
+                 |   THEN acc * (s.n - s.d) div s.n ELSE acc END)""".stripMargin)
+            .as("surv_e9")): _*)
   }
 
   /** The q254 event-day curve relation — SharedCache'd (q257's RMST
@@ -2117,42 +2122,15 @@ object EventAnalytics {
     * arm over the ≤2·|days| curve relation. Served from the SAME
     * streaming state by [[graft.streaming.StreamingSurvival.armCurves]]
     * — the fourth report off one maintained relation. */
-  private[graft] def kmArmFinalize(cells: DataFrame): DataFrame = {
-    val days = survivalDurations(cells)
-      .groupBy(col("treat"), col("dur").as("day"))
-      .agg(sum(col("event")).as("d_conv"),
-        sum(lit(1L) - col("event")).as("n_censored"))
-    val wPrev = Window.partitionBy("treat").orderBy("day")
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val wPfx = Window.partitionBy("treat").orderBy("day")
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val wAll = Window.partitionBy("treat")
-    days
-      .withColumn("n_total", sum(col("d_conv") + col("n_censored")).over(wAll))
-      .withColumn("gone",
-        coalesce(sum(col("d_conv") + col("n_censored")).over(wPrev), lit(0L)))
-      .withColumn("n_risk", col("n_total") - col("gone"))
-      .withColumn("pfx",
-        collect_list(struct(col("n_risk").as("n"), col("d_conv").as("d")))
-          .over(wPfx))
-      .filter(col("d_conv") > 0) // the KM table lists event times only
-      .select(when(col("treat"), 1L).otherwise(0L).as("arm"),
-        col("day"), col("n_risk"), col("d_conv"), col("n_censored"),
-        expr("""aggregate(pfx, CAST(1000000000 AS BIGINT),
-               | (acc, s) -> CASE WHEN s.d > 0
-               |   THEN acc * (s.n - s.d) div s.n ELSE acc END)""".stripMargin)
-          .as("surv_e9"))
-  }
+  val q259KmByArm: Q = (s, d) => kmArmCurve(s, d)
 
   /** The q259 arm-split curve relation — SharedCache'd (q260's RMST
     * difference integrates exactly this relation, and in shared mode
     * CacheManager's canonical-plan dedup serves q260's internal
     * rebuild from this cache). */
   private[graft] def kmArmCurve(s: SparkSession, d: String): DataFrame =
-    kmArmFinalize(survivalCells(Tables.events(s, d)))
+    kmFinalize(survivalCells(Tables.events(s, d)), byArm = true)
       .transform(graft.ops.SharedCache.persist)
-
-  val q259KmByArm: Q = (s, d) => kmArmCurve(s, d)
 
   // -- q260: per-arm RMST + difference -------------------------------------
 
@@ -2182,7 +2160,7 @@ object EventAnalytics {
     * twin so its answer is this exact code path. */
   private[graft] def rmstArmFinalize(cells: DataFrame): DataFrame = {
     val wLead = Window.partitionBy("arm").orderBy("day")
-    val perArm = kmArmFinalize(cells)
+    val perArm = kmFinalize(cells, byArm = true)
       .withColumn("next_day",
         coalesce(lead(col("day"), 1).over(wLead), lit(RmstHorizonDays)))
       .select(col("arm"),
@@ -2407,7 +2385,7 @@ object EventAnalytics {
       .select(col("event_type"), col("user_id"),
         (col("user_id") % 2 === 1).as("treat"),
         (datediff(col("ts"), lit("1970-01-01")) % 2 === 0).as("pre"),
-        round(col("value") * 100, 0).cast("long").as("v"))
+        e2(col("value")).as("v"))
       .groupBy("user_id", "treat")
       .agg(sum(when(col("pre"), col("v")).otherwise(0L)).as("score"),
         max(when(col("event_type") === "purchase", 1L).otherwise(0L))
@@ -2863,7 +2841,7 @@ object EventAnalytics {
       .filter(col("event_type").isin("view", "click", "purchase"))
       .select(col("event_id"), col("user_id"), col("event_type"),
         unix_micros(col("ts")).as("us"),
-        round(col("value") * 100, 0).cast("long").as("value_e2"))
+        e2(col("value")).as("value_e2"))
       .select(col("*"),
         // empty trailing frame → sum is NULL, not 0, on both engines
         coalesce(sum(when(col("event_type") === "view", 1L).otherwise(0L)).over(w),
@@ -3151,7 +3129,7 @@ object EventAnalytics {
   val q187DailyValueBands: Q = (s, d) => {
     val cells = Tables.events(s, d)
       .select(col("event_type"), date_trunc("DAY", col("ts")).as("day"),
-        round(col("value") * 100, 0).cast("long").as("v_e2"))
+        e2(col("value")).as("v_e2"))
       .groupBy("event_type", "day", "v_e2").agg(count(lit(1)).as("cnt"))
     val wRun = Window.partitionBy("event_type", "day").orderBy("v_e2")
     val wAll = Window.partitionBy("event_type", "day")

@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.Tables
+import graft.ops.Exact._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -22,9 +23,6 @@ import org.apache.spark.sql.functions._
   */
 object GoldMarts {
   private type Q = (SparkSession, String) => DataFrame
-
-  private def sumE4(c: Column): Column = sum(round(c * lit(10000.0), 0).cast("long"))
-  private def sumE2(c: Column): Column = sum(round(c * lit(100.0), 0).cast("long"))
 
   /** C4 mart 2: patient_history analog (gold.sql:55-82) — the 4-way
     * left-join denormalized fan-out: patient ⟕ encounters ⟕

@@ -1,5 +1,6 @@
 package graft.queries
 
+import graft.ops.Exact._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -816,8 +817,7 @@ object Graph {
   val q207SplitLeakage: Q = (s, d) => {
     val withSplit = q55DupClusters(s, d)
       .withColumn("bucket",
-        conv(substring(md5(col("doc_id").cast("string")), 1, 4), 16, 10)
-          .cast("long") % 10)
+        md5Draw(col("doc_id").cast("string"), 1, 4) % 10)
       .withColumn("split",
         when(col("bucket") < 8, "train")
           .when(col("bucket") === 8, "val").otherwise("test"))
@@ -909,7 +909,7 @@ object Graph {
     * math — nothing beyond q55's own cost. */
   val q211LeakFreeSplits: Q = (s, d) => {
     def bucketOf(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-      conv(substring(md5(c.cast("string")), 1, 4), 16, 10).cast("long") % 10
+      md5Draw(c.cast("string"), 1, 4) % 10
     def splitOf(b: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
       when(b < 8, "train").when(b === 8, "val").otherwise("test")
     graft.Tables.documents(s, d).select(col("doc_id"))
@@ -941,7 +941,7 @@ object Graph {
   val q193DedupYield: Q = (s, d) => {
     val toks = graft.Tables.documents(s, d)
       .select(col("doc_id"), col("source"),
-        size(Curation.tokens(col("text"))).cast("long").as("t"))
+        size(tokens(col("text"))).cast("long").as("t"))
     val removable = q55DupClusters(s, d)
       .filter(!col("is_keeper"))
       .select(col("doc_id"), lit(1L).as("rm"))

@@ -1,6 +1,8 @@
 package graft.queries
 
 import graft.Tables
+import graft.functions.VectorFunctions.{dotLong, quantE4}
+import graft.ops.Exact._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -37,10 +39,6 @@ object LlmPipeline {
   private type Q = (SparkSession, String) => DataFrame
 
   // -- shared text primitives ---------------------------------------
-
-  /** Whitespace-normalized lowercase tokens of `text`. */
-  private def tokens(c: Column): Column =
-    split(trim(regexp_replace(lower(c), "\\s+", " ")), " ")
 
   /** Word n-gram shingles as space-joined strings; empty below n
     * tokens. zip_with chain over shifted slices (Curation.ngrams
@@ -292,13 +290,19 @@ object LlmPipeline {
   private val StopFr = Seq("le", "la", "et", "les", "un")
   private val StopEs = Seq("el", "los", "y", "en", "que")
 
+  /** Stopword hits of a token array (the q22 language-ID score). */
+  private def scoreIn(tk: Column, words: Seq[String]): Column =
+    size(filter(tk, t => t.isin(words: _*)))
+
+  /** The oracle side's quoted stopword list, for `x IN (...)`. */
+  private def inList(ws: Seq[String]): String =
+    ws.map(w => s"'$w'").mkString(", ")
+
   /** Per-document text statistics: char/token/charset counts, BPE-ish
     * token count, stopword-based language ID, quality flag. All
     * integer arithmetic + one exact division — fully codegen'd, no
     * shuffle at all (narrow map over the scan). */
   val q22TextStats: Q = (s, d) => {
-    def scoreIn(tk: Column, words: Seq[String]): Column =
-      size(filter(tk, t => t.isin(words: _*)))
     val base = Tables.documents(s, d)
       .withColumn("tk", tokens(col("text")))
       .withColumn("lo", lower(col("text")))
@@ -334,23 +338,6 @@ object LlmPipeline {
 
   // -- q23: brute-force cosine top-k (ANN baseline) -----------------
 
-  /** e4-quantized integer copy of a float embedding: makes dot/norm
-    * sums exact integers — order-independent, hence identical across
-    * engines and shuffle schedules. */
-  private def quant(c: Column): Column = // r15: fused kernel, see QuantE4
-    graft.functions.VectorFunctions.quantE4(c)
-
-  /** Fused codegen'd integer dot (graft.functions.DotProductLong) —
-    * same value as the aggregate(zip_with(...)) composition it
-    * replaced, minus the per-pair intermediate array. Callers must
-    * VectorFunctions.register the session first. */
-  private def dotL(a: Column, b: Column): Column =
-    graft.functions.VectorFunctions.dotLong(a, b)
-
-  private def cosE6(dot: Column, sa: Column, sb: Column): Column =
-    round(lit(1e6) * dot.cast("double") /
-      (sqrt(sa.cast("double")) * sqrt(sb.cast("double"))), 0).cast("long")
-
   /** Brute-force cosine top-5 for query vectors (vec_id % 25 == 0)
     * against the full table. The query side is broadcast, so the big
     * side is one shuffle-free streaming pass; quadratic work is the
@@ -358,13 +345,13 @@ object LlmPipeline {
   val q23AnnBruteForce: Q = (s, d) => {
     graft.functions.VectorFunctions.register(s)
     val e = Tables.embeddings(s, d)
-      .select(col("vec_id"), quant(col("embedding")).as("q"))
-      .withColumn("sq", dotL(col("q"), col("q")))
+      .select(col("vec_id"), quantE4(col("embedding")).as("q"))
+      .withColumn("sq", dotLong(col("q"), col("q")))
     val queries = e.filter(col("vec_id") % 25 === 0)
       .select(col("vec_id").as("q_id"), col("q").as("qq"), col("sq").as("qsq"))
     val scored = e.join(broadcast(queries), col("vec_id") =!= col("q_id"))
       .select(col("q_id"), col("vec_id").as("neighbor_id"),
-        cosE6(dotL(col("q"), col("qq")), col("sq"), col("qsq")).as("cos_e6"))
+        cosE6(dotLong(col("q"), col("qq")), col("sq"), col("qsq")).as("cos_e6"))
     // map-side top-k: the shuffle carries <= 5 rows per query per input
     // partition instead of the full |queries|x|table| score stream
     graft.functions.TopK.topKPerGroup(scored, "q_id", "neighbor_id", "cos_e6", 5)
@@ -409,7 +396,7 @@ object LlmPipeline {
     graft.functions.VectorFunctions.register(s)
     def bucket(t: Int): Column =
       (0 until LshPlanesPerTable).map { p =>
-        when(dotL(col("q"), typedlit(planeWeightsE6(t, p))) >= 0, lit(1 << p))
+        when(dotLong(col("q"), typedlit(planeWeightsE6(t, p))) >= 0, lit(1 << p))
           .otherwise(lit(0))
       }.reduce(_ + _)
 
@@ -421,8 +408,8 @@ object LlmPipeline {
     // they attach by vec_id equi-join after the pair dedup, so each
     // array crosses exactly two shuffles regardless of L.
     val e = Tables.embeddings(s, d)
-      .select(col("vec_id"), quant(col("embedding")).as("q"))
-      .withColumn("sq", dotL(col("q"), col("q")))
+      .select(col("vec_id"), quantE4(col("embedding")).as("q"))
+      .withColumn("sq", dotLong(col("q"), col("q")))
     val tb = array((0 until LshTables).map(t =>
       struct(lit(t).as("t"), bucket(t).as("b"))): _*)
     val buckets = e
@@ -441,7 +428,7 @@ object LlmPipeline {
       .join(e.select(col("vec_id").as("e_qid"), col("q").as("qq"), col("sq").as("qsq")),
         col("q_id") === col("e_qid"))
       .select(col("q_id"), col("neighbor_id"),
-        cosE6(dotL(col("q"), col("qq")), col("sq"), col("qsq")).as("cos_e6"))
+        cosE6(dotLong(col("q"), col("qq")), col("sq"), col("qsq")).as("cos_e6"))
     graft.functions.TopK.topKPerGroup(scored, "q_id", "neighbor_id", "cos_e6", 5)
   }
 
@@ -458,7 +445,7 @@ object LlmPipeline {
       .distinct()
       .groupBy("doc_id").agg(min(md5(col("sh"))).as("minhash_fp"))
     val toks = docs.select(col("doc_id"), explode(col("tk")).as("t"))
-      .withColumn("h", conv(substring(md5(col("t")), 1, 4), 16, 10).cast("long"))
+      .withColumn("h", md5Draw(col("t"), 1, 4))
     val bitAgg = toks.groupBy("doc_id").agg(
       sum(when(shiftright(col("h"), 0).bitwiseAND(lit(1L)) === 1L, 1L).otherwise(-1L)).as("b0"),
       (1 until 16).map(i =>
@@ -974,8 +961,8 @@ object LlmPipeline {
   val q163NdcgAudit: Q = (s, d) => {
     graft.functions.VectorFunctions.register(s)
     val e = Tables.embeddings(s, d)
-      .select(col("vec_id"), col("label"), quant(col("embedding")).as("q"))
-      .withColumn("sq", dotL(col("q"), col("q")))
+      .select(col("vec_id"), col("label"), quantE4(col("embedding")).as("q"))
+      .withColumn("sq", dotLong(col("q"), col("q")))
       .transform(graft.ops.SharedCache.persist) // scoring + labels + counts
     val queries = e.filter(col("vec_id") % 25 === 0)
       .select(col("vec_id").as("q_id"), col("label").as("q_label"),
@@ -983,7 +970,7 @@ object LlmPipeline {
     val scored = e.join(broadcast(queries.select("q_id", "qq", "qsq")),
         col("vec_id") =!= col("q_id"))
       .select(col("q_id"), col("vec_id").as("neighbor_id"),
-        cosE6(dotL(col("q"), col("qq")), col("sq"), col("qsq")).as("cos_e6"))
+        cosE6(dotLong(col("q"), col("qq")), col("sq"), col("qsq")).as("cos_e6"))
     val top = graft.functions.TopK.topKPerGroup(scored, "q_id", "neighbor_id", "cos_e6", NdcgK)
     val lblCnt = e.groupBy(col("label")).agg(count(lit(1)).as("n_label"))
     val qmeta = queries.select(col("q_id"), col("q_label"))
@@ -1016,8 +1003,6 @@ object LlmPipeline {
     * aggregate — the filter runs before the dedup shuffle so junk
     * never ships. */
   val q43CuratedCorpus: Q = (s, d) => {
-    def scoreIn(tk: Column, words: Seq[String]): Column =
-      size(filter(tk, t => t.isin(words: _*)))
     val st = Tables.documents(s, d)
       .withColumn("tk", tokens(col("text")))
       .withColumn("lo", lower(col("text")))
@@ -1030,8 +1015,7 @@ object LlmPipeline {
         scoreIn(col("tk"), StopFr).as("score_fr"),
         scoreIn(col("tk"), StopEs).as("score_es"),
         md5(trim(regexp_replace(col("lo"), "\\s+", " "))).as("content_hash"),
-        (conv(substring(md5(col("doc_id").cast("string")), 1, 4), 16, 10)
-          .cast("long") % 10).as("bucket"))
+        (md5Draw(col("doc_id").cast("string"), 1, 4) % 10).as("bucket"))
       .withColumn("lang_guess",
         when(col("score_en") > 0 && col("score_en") >= col("score_de") &&
           col("score_en") >= col("score_fr") && col("score_en") >= col("score_es"), "en")
@@ -1131,8 +1115,6 @@ object LlmPipeline {
     * tables; the oracle restates every stage (mounting q21's pair CTEs
     * unchanged) and agrees on the exact surviving chunk set. */
   val q100PretrainPipeline: Q = (s, d) => {
-    def scoreIn(tk: Column, words: Seq[String]): Column =
-      size(filter(tk, t => t.isin(words: _*)))
     val st = Tables.documents(s, d)
       .withColumn("tk", tokens(col("text")))
       .withColumn("lo", lower(col("text")))
@@ -1145,8 +1127,7 @@ object LlmPipeline {
         scoreIn(col("tk"), StopFr).as("score_fr"),
         scoreIn(col("tk"), StopEs).as("score_es"),
         md5(trim(regexp_replace(col("lo"), "\\s+", " "))).as("content_hash"),
-        (conv(substring(md5(col("doc_id").cast("string")), 1, 4), 16, 10)
-          .cast("long") % 10).as("bucket"))
+        (md5Draw(col("doc_id").cast("string"), 1, 4) % 10).as("bucket"))
       .withColumn("lang_guess",
         when(col("score_en") > 0 && col("score_en") >= col("score_de") &&
           col("score_en") >= col("score_fr") && col("score_en") >= col("score_es"), "en")
@@ -1175,7 +1156,7 @@ object LlmPipeline {
       .select(col("doc_id"), col("bucket"),
         explode(array_distinct(shingles(col("tk"), ContamGramN))).as("g"))
       .select(col("doc_id"), col("bucket"),
-        conv(substring(md5(col("g")), 1, 12), 16, 10).cast("long").as("gh"))
+        md5Draw(col("g"), 1, 12).as("gh"))
       .transform(graft.ops.SharedCache.persist)
     val testGrams = grams.filter(col("bucket") === 9).select("gh").distinct()
     val contaminated = grams.filter(col("bucket") < 8)
@@ -1744,8 +1725,7 @@ object LlmPipeline {
          |JOIN tot tb ON tb.source = m.src_b""".stripMargin,
     // Same stopword scores + guess chain as the q22 oracle, collapsed
     // to (lang, guess) cells with both marginals joined back.
-    "q180_langid_confusion" -> {
-      def inList(ws: Seq[String]) = ws.map(w => s"'$w'").mkString(", ")
+    "q180_langid_confusion" ->
       s"""WITH $toksCte, base AS (
          |  SELECT d.lang,
          |    len(list_filter(t.tk, x -> x IN (${inList(StopEn)}))) AS score_en,
@@ -1770,10 +1750,8 @@ object LlmPipeline {
          |SELECT c.lang, c.lang_guess, c.n, t.n_truth, p.n_pred,
          |  c.n * 1000000 // t.n_truth AS truth_share_ppm,
          |  c.n * 1000000 // p.n_pred AS pred_share_ppm
-         |FROM cells c JOIN t USING (lang) JOIN p USING (lang_guess)""".stripMargin
-    },
-    "q22_text_stats" -> {
-      def inList(ws: Seq[String]) = ws.map(w => s"'$w'").mkString(", ")
+         |FROM cells c JOIN t USING (lang) JOIN p USING (lang_guess)""".stripMargin,
+    "q22_text_stats" ->
       s"""WITH $toksCte, base AS (
          |  SELECT d.doc_id, d.lang, d.text, lower(d.text) AS lo, t.tk
          |  FROM documents d JOIN toks t ON d.doc_id = t.doc_id
@@ -1801,8 +1779,7 @@ object LlmPipeline {
          |    WHEN score_es > 0 THEN 'es'
          |    ELSE 'unknown' END AS lang_guess,
          |  n_tokens >= 5 AND n_chars <= 10000 AND n_punct * 10 <= n_chars AS is_quality
-         |FROM stats""".stripMargin
-    },
+         |FROM stats""".stripMargin,
     "q23_ann_brute_force" ->
       """WITH q AS (
         |  SELECT vec_id,
@@ -2041,8 +2018,7 @@ object LlmPipeline {
         |FROM hashed""".stripMargin,
     // Same curation algebra restated: stats -> quality gate -> arg_min
     // dedup on the content hash -> hash split -> (lang, split) rollup.
-    "q43_curated_corpus" -> {
-      def inList(ws: Seq[String]) = ws.map(w => s"'$w'").mkString(", ")
+    "q43_curated_corpus" ->
       s"""WITH $toksCte, st AS (
          |  SELECT d.doc_id,
          |    len(t.tk) AS n_tokens,
@@ -2078,8 +2054,7 @@ object LlmPipeline {
          |  count(*) AS n_docs,
          |  CAST(sum(n_tokens) AS BIGINT) AS sum_tokens,
          |  CAST(sum(n_chars) AS BIGINT) AS sum_chars
-         |FROM dedup GROUP BY 1, 2""".stripMargin
-    },
+         |FROM dedup GROUP BY 1, 2""".stripMargin,
     "q44_vocab_top_df" ->
       s"""WITH $toksCte, ex AS (
          |  SELECT DISTINCT doc_id, u.t AS token

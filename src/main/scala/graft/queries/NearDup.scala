@@ -1,6 +1,8 @@
 package graft.queries
 
 import graft.Tables
+import graft.functions.VectorFunctions.{dotLong, quantE4}
+import graft.ops.Exact._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -47,12 +49,6 @@ object NearDup {
   private val BandBits = SimBits / SimBands
   private val MaxHamming = 3 // < SimBands, so banding is lossless
 
-  /** Whitespace-normalized lowercase tokens (same contract as
-    * LlmPipeline.tokens — duplicated privately to keep the two files
-    * independently readable). */
-  private def tokens(c: Column): Column =
-    split(trim(regexp_replace(lower(c), "\\s+", " ")), " ")
-
   /** Per-doc 60-bit SimHash: token hash = two 30-bit halves of
     * md5(token); bit i of the fingerprint is the sign of the
     * frequency-weighted sum of (±1) votes from bit i of the token
@@ -68,8 +64,8 @@ object NearDup {
       .select(col("doc_id"), explode(tokens(col("text"))).as("t"))
       .groupBy("doc_id", "t").agg(count(lit(1)).as("c"))
       .select(col("doc_id"), col("c"),
-        (conv(substring(md5(col("t")), 1, 8), 16, 10).cast("long") % (1L << 30)).as("h1"),
-        (conv(substring(md5(col("t")), 9, 8), 16, 10).cast("long") % (1L << 30)).as("h2"))
+        (md5Draw(col("t"), 1, 8) % (1L << 30)).as("h1"),
+        (md5Draw(col("t"), 9, 8) % (1L << 30)).as("h2"))
     val bitSums = (0 until SimBits).map { i =>
       val src = if (i < 30) col("h1") else col("h2")
       sum(when(shiftright(src, i % 30).bitwiseAND(lit(1L)) === 1L, col("c")).otherwise(-col("c"))).as(s"b$i")
@@ -173,7 +169,7 @@ object NearDup {
       .select(col("doc_id"), tokens(col("text")).as("tk"))
       .select(col("doc_id"), explode(shingles3(col("tk"))).as("sh"))
       .select(col("doc_id"),
-        conv(substring(md5(col("sh")), 1, 12), 16, 10).cast("long").as("h"))
+        md5Draw(col("sh"), 1, 12).as("h"))
       .distinct()
     // df via ONE window over the h partition (r14, guide §2.4): the
     // former groupBy(h)+equi-join-back shuffled the full (doc, h)
@@ -281,23 +277,8 @@ object NearDup {
   }
 
   // -- shared quantized-embedding primitives (q23/q24 conventions) ---
-
-  /** e4 fixed-point quantization — r15: the fused codegen'd
-    * [[graft.functions.QuantE4]] kernel (same multiply/round/cast per
-    * element as the retired transform lambda, which ran interpreted at
-    * the head of every vector scan); callers must
-    * VectorFunctions.register the session first. */
-  private def quant(c: Column): Column =
-    graft.functions.VectorFunctions.quantE4(c)
-
-  /** Fused codegen'd integer dot — see graft.functions.DotProductLong;
-    * callers must VectorFunctions.register the session first. */
-  private def dotL(a: Column, b: Column): Column =
-    graft.functions.VectorFunctions.dotLong(a, b)
-
-  private def cosE6(dot: Column, sa: Column, sb: Column): Column =
-    round(lit(1e6) * dot.cast("double") /
-      (sqrt(sa.cast("double")) * sqrt(sb.cast("double"))), 0).cast("long")
+  // quantE4 / dotLong are graft.functions' fused codegen'd kernels:
+  // callers must VectorFunctions.register the session first.
 
   /** One-row relation holding the whole coarse-centroid panel as ONE
     * sorted struct array — the r14 in-row cell-ranking rewrite (guide
@@ -331,8 +312,8 @@ object NearDup {
   private def quantized(s: SparkSession, d: String): DataFrame = {
     graft.functions.VectorFunctions.register(s)
     Tables.embeddings(s, d)
-      .select(col("vec_id"), quant(col("embedding")).as("q"))
-      .withColumn("s2", dotL(col("q"), col("q")))
+      .select(col("vec_id"), quantE4(col("embedding")).as("q"))
+      .withColumn("s2", dotLong(col("q"), col("q")))
   }
 
   // -- q228: int8 scalar-quantization audit ----------------------------
@@ -359,7 +340,7 @@ object NearDup {
   val q228SqAudit: Q = (s, d) => {
     graft.functions.VectorFunctions.register(s) // quant kernel (r15)
     val dims = Tables.embeddings(s, d)
-      .select(col("vec_id"), posexplode(quant(col("embedding"))).as(Seq("p", "v")))
+      .select(col("vec_id"), posexplode(quantE4(col("embedding"))).as(Seq("p", "v")))
       .select((col("p") + 1).cast("long").as("dim"), col("v"))
       .transform(graft.ops.SharedCache.persist)
     val ranges = dims.groupBy("dim")
@@ -497,8 +478,7 @@ object NearDup {
     val e = quantized(s, d)
     val probes = e
       .withColumn("hsel",
-        conv(substring(md5(col("vec_id").cast("string")), 1, 12), 16, 10)
-          .cast("long"))
+        md5Draw(col("vec_id").cast("string"), 1, 12))
       .orderBy(col("hsel"), col("vec_id")).limit(TruncQueryCount)
       .select(col("vec_id").as("q_id"), col("q").as("qq"))
     val scored = TruncDims.foldLeft(
@@ -577,7 +557,7 @@ object NearDup {
       .join(a, col("vec_a") === col("a_id"))
       .join(b, col("vec_b") === col("b_id"))
       .select(col("vec_a"), col("vec_b"),
-        cosE6(dotL(col("qa"), col("qb")), col("sa"), col("sb")).as("cos_e6"))
+        cosE6(dotLong(col("qa"), col("qb")), col("sa"), col("sb")).as("cos_e6"))
       .filter(col("cos_e6") >= CosDupThresholdE6)
   }
 
@@ -620,7 +600,7 @@ object NearDup {
     val scored = assign.join(probes, Seq("cell"))
       .filter(col("vec_id") =!= col("q_id"))
       .select(col("q_id"), col("vec_id").as("neighbor_id"),
-        cosE6(dotL(col("q"), col("qq")), col("s2"), col("qs2")).as("cos_e6"))
+        cosE6(dotLong(col("q"), col("qq")), col("s2"), col("qs2")).as("cos_e6"))
       .dropDuplicates("q_id", "neighbor_id")
     graft.functions.TopK.topKPerGroup(scored, "q_id", "neighbor_id", "cos_e6", 5)
   }
@@ -693,7 +673,7 @@ object NearDup {
       .join(ranked.select(col("vec_id").as("q_id"), col("q").as("qq"),
         col("s2").as("sq")), "q_id")
       .select(col("q_id"), col("neighbor_id"),
-        cosE6(dotL(col("qn"), col("qq")), col("sn"), col("sq")).as("cos_e6"))
+        cosE6(dotLong(col("qn"), col("qq")), col("sn"), col("sq")).as("cos_e6"))
     val twoTop = graft.functions.TopK
       .topKPerGroup(rerank, "q_id", "neighbor_id", "cos_e6", 5)
       .select(col("q_id"), col("neighbor_id"), lit(1L).as("ts_hit"))
@@ -758,12 +738,10 @@ object NearDup {
       s"CASE WHEN $sv >= 0 THEN $sv div $n ELSE -((-$sv) div $n) END"
     val cells = Tables.embeddings(s, d)
       .select(
-        when(conv(substring(md5(col("vec_id").cast("string")), 1, 4), 16, 10)
-          .cast("long") % 10 < 8, "train")
-          .when(conv(substring(md5(col("vec_id").cast("string")), 1, 4), 16, 10)
-            .cast("long") % 10 === 8, "val")
+        when(md5Draw(col("vec_id").cast("string"), 1, 4) % 10 < 8, "train")
+          .when(md5Draw(col("vec_id").cast("string"), 1, 4) % 10 === 8, "val")
           .otherwise("test").as("split"),
-        posexplode(quant(col("embedding"))).as(Seq("p", "v")))
+        posexplode(quantE4(col("embedding"))).as(Seq("p", "v")))
       .groupBy("split", "p")
       .agg(sum(col("v")).as("sv"), count(lit(1)).as("n"))
       .transform(graft.ops.SharedCache.persist)
@@ -832,7 +810,7 @@ object NearDup {
       .groupBy(col("q_id"), col("vec_id").as("neighbor_id"),
         // the cosine is a pure function of the pair, so grouping by it
         // is a no-op on cardinality — it just rides along exactly
-        cosE6(dotL(col("q"), col("qq")), col("s2"), col("qs2")).as("cos_e6"))
+        cosE6(dotLong(col("q"), col("qq")), col("s2"), col("qs2")).as("cos_e6"))
       .agg(min(col("prank")).as("mincrank"))
       .transform(graft.ops.SharedCache.persist)
     val truth = LlmPipeline.q23AnnBruteForce(s, d)
@@ -1296,14 +1274,14 @@ object NearDup {
     * method re-expressed over Spark relational ops. */
   val q58SemanticDedup: Q = (s, d) => {
     val a = kmeansAssignments(s, d)
-      .withColumn("s2", dotL(col("q"), col("q")))
+      .withColumn("s2", dotLong(col("q"), col("q")))
     val l = a.select(col("cluster"), col("vec_id").as("a_id"),
       col("q").as("qa"), col("s2").as("sa"))
     val r = a.select(col("cluster"), col("vec_id").as("b_id"),
       col("q").as("qb"), col("s2").as("sb"))
     val dropped = l.join(r, Seq("cluster")).filter(col("a_id") < col("b_id"))
       .select(col("b_id"),
-        cosE6(dotL(col("qa"), col("qb")), col("sa"), col("sb")).as("cos_e6"))
+        cosE6(dotLong(col("qa"), col("qb")), col("sa"), col("sb")).as("cos_e6"))
       .filter(col("cos_e6") >= SemDupThresholdE6)
       .select(col("b_id").as("vec_id")).distinct()
     a.select(col("vec_id"), col("cluster"))
@@ -1497,7 +1475,7 @@ object NearDup {
     val lbl = Graph.connectedComponentsBlocked(pairs)
     lbl
       .join(Tables.part(s, d).select(col("p_partkey"), col("p_name"),
-        round(col("p_retailprice") * 100, 0).cast("long").as("price_e2"),
+        e2(col("p_retailprice")).as("price_e2"),
         col("p_size").cast("long").as("p_size")),
         col("id") === col("p_partkey"))
       .groupBy(col("lbl").as("cluster_id"))
@@ -1707,7 +1685,7 @@ object NearDup {
     val counts = Tables.documents(s, d)
       .select(col("doc_id"), explode(tokens(col("text"))).as("tok"))
       .select(col("doc_id"),
-        conv(substring(md5(col("tok")), 1, 12), 16, 10).cast("long").as("th"))
+        md5Draw(col("tok"), 1, 12).as("th"))
       .groupBy("doc_id", "th").agg(count(lit(1)).as("c"))
       .transform(graft.ops.SharedCache.persist)
     val totals = counts.groupBy("doc_id").agg(sum(col("c")).as("n_tok"))
@@ -1843,8 +1821,8 @@ object NearDup {
     graft.functions.VectorFunctions.register(s)
     val vecs = Tables.embeddings(s, d)
       .select(col("label").cast("long").as("label"),
-        quant(col("embedding")).as("q"))
-      .withColumn("s2", dotL(col("q"), col("q")))
+        quantE4(col("embedding")).as("q"))
+      .withColumn("s2", dotLong(col("q"), col("q")))
       .transform(graft.ops.SharedCache.persist) // sums leg + cosine leg
     val dims = vecs
       .select(col("label"), posexplode(col("q")).as(Seq("pos", "x")))
@@ -1854,19 +1832,19 @@ object NearDup {
       .groupBy("label")
       .agg(sort_array(collect_list(struct(col("pos"), col("sx")))).as("pc"))
       .select(col("label"), transform(col("pc"), _.getField("sx")).as("cq"))
-      .withColumn("cs2", dotL(col("cq"), col("cq")))
+      .withColumn("cs2", dotLong(col("cq"), col("cq")))
     val g = dims.groupBy("pos").agg(sum(col("sx")).as("gx"))
       .orderBy("pos").collect().map(_.getLong(1)).toSeq
     val gq = typedLit(g)
     val gs2 = lit(g.map(x => x * x).sum)
     val tight = vecs.join(broadcast(cents), Seq("label"))
       .select(col("label"),
-        cosE6(dotL(col("q"), col("cq")), col("s2"), col("cs2")).as("cosc"))
+        cosE6(dotLong(col("q"), col("cq")), col("s2"), col("cs2")).as("cosc"))
       .groupBy("label")
       .agg(count(lit(1)).as("n_vecs"), sum(col("cosc")).as("sum_cos"))
     cents.join(tight, Seq("label"))
       .select(col("label"), col("n_vecs"),
-        cosE6(dotL(col("cq"), gq), col("cs2"), gs2).as("cos_to_global_e6"),
+        cosE6(dotLong(col("cq"), gq), col("cs2"), gs2).as("cos_to_global_e6"),
         expr("sum_cos div n_vecs").as("tightness_e6"))
   }
 

@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.Tables
+import graft.ops.Exact._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -108,7 +109,7 @@ object Profiling {
     * both engines: a Spark long cast to string == DuckDB BIGINT to
     * VARCHAR). */
   private def h40(v: Column): Column =
-    conv(substring(md5(v.cast("string")), 1, 10), 16, 10).cast("long")
+    md5Draw(v.cast("string"), 1, 10)
 
   private def meltExpr(cols: Seq[String]): String =
     s"stack(${cols.size}, " +
@@ -116,14 +117,13 @@ object Profiling {
 
   val q41ProfileSketch: Q = (s, d) => {
     import org.apache.spark.sql.expressions.Window
-    def e2(c: String) = round(col(c) * 100, 0).cast("long").as(c)
 
     // (1) n / n_null per column: ONE narrow single-row aggregate over
     // the scan — no shuffle of data rows, stacked to one row per column
     val countAggs = count(lit(1)).as("n_rows") +:
       ProfCols.map(c => count(col(c)).as(s"${c}_n"))
     val counts = Tables.lineitem(s, d)
-      .select(ProfCols.map(e2): _*)
+      .select(ProfCols.map(c => e2(col(c)).as(c)): _*)
       .agg(countAggs.head, countAggs.tail: _*)
       .selectExpr(s"stack(${ProfCols.size}, " +
         ProfCols.map(c => s"'$c', ${c}_n, n_rows - ${c}_n").mkString(", ") +
@@ -139,7 +139,7 @@ object Profiling {
     // rows sorted score-desc). Hash ties across distinct values leave
     // h_k unchanged (same multiset of h's in both engines).
     val dist = Tables.lineitem(s, d)
-      .select(ProfCols.map(e2): _*)
+      .select(ProfCols.map(c => e2(col(c)).as(c)): _*)
       .selectExpr(meltExpr(ProfCols))
       .filter(col("v").isNotNull)
       .distinct()
@@ -162,7 +162,7 @@ object Profiling {
     // is bounded. Unbounded columns surface as NULL via the left join.
     val byCol = Window.partitionBy("column_name")
     val pct = Tables.lineitem(s, d)
-      .select(ExactPctCols.map(e2): _*)
+      .select(ExactPctCols.map(c => e2(col(c)).as(c)): _*)
       .selectExpr(meltExpr(ExactPctCols))
       .filter(col("v").isNotNull)
       .groupBy(col("column_name"), col("v")).agg(count(lit(1)).as("cnt"))
@@ -198,7 +198,7 @@ object Profiling {
     * assignment parallelizes embarrassingly at any data size. */
   val q42TrainTestSplit: Q = (s, d) => {
     val bucket =
-      conv(substring(md5(col("doc_id").cast("string")), 1, 4), 16, 10).cast("long") % 10
+      md5Draw(col("doc_id").cast("string"), 1, 4) % 10
     Tables.documents(s, d)
       .select(col("doc_id"), bucket.as("bucket"))
       .withColumn("split",
@@ -308,7 +308,7 @@ object Profiling {
   val q98Expectations: Q = (s, d) => {
     import graft.ops.Expectations._
     val orders = Tables.orders(s, d)
-      .withColumn("price_e2", round(col("o_totalprice") * 100, 0).cast("long"))
+      .withColumn("price_e2", e2(col("o_totalprice")))
     val cust = Tables.customer(s, d)
     val oReport = graft.ops.Expectations.run(orders, Seq(
       NotNull("o_custkey"),
@@ -343,7 +343,7 @@ object Profiling {
     val keys = Seq("o_custkey")
     val o = Tables.orders(s, d)
       .select(col("o_custkey"), year(col("o_orderdate")).as("yr"),
-        round(col("o_totalprice") * 100, 0).cast("long").as("price_e2"))
+        e2(col("o_totalprice")).as("price_e2"))
     val batches = Seq(
       o.filter(col("yr") <= 1994),
       o.filter(col("yr") >= 1995 && col("yr") <= 1996),
@@ -440,9 +440,9 @@ object Profiling {
   val q118SourceDrift: Q = (s, d) => {
     val toks = Tables.documents(s, d)
       .select(col("source"),
-        explode(split(trim(regexp_replace(lower(col("text")), "\\s+", " ")), " ")).as("t"))
+        explode(tokens(col("text"))).as("t"))
       .select(col("source"),
-        conv(substring(md5(col("t")), 1, 12), 16, 10).cast("long").as("gh"))
+        md5Draw(col("t"), 1, 12).as("gh"))
       .transform(graft.ops.SharedCache.persist)
     val corpus = toks.groupBy("gh").agg(count(lit(1)).as("n_gh"))
       .withColumn("grp", lit(1))
@@ -491,14 +491,13 @@ object Profiling {
     * control plane. */
   val q213SplitDrift: Q = (s, d) => {
     val b =
-      conv(substring(md5(col("doc_id").cast("string")), 1, 4), 16, 10)
-        .cast("long") % 10
+      md5Draw(col("doc_id").cast("string"), 1, 4) % 10
     val toks = Tables.documents(s, d)
       .select(
         when(b < 8, "train").when(b === 8, "val").otherwise("test").as("split"),
-        explode(split(trim(regexp_replace(lower(col("text")), "\\s+", " ")), " ")).as("t"))
+        explode(tokens(col("text"))).as("t"))
       .select(col("split"),
-        conv(substring(md5(col("t")), 1, 12), 16, 10).cast("long").as("gh"))
+        md5Draw(col("t"), 1, 12).as("gh"))
       .transform(graft.ops.SharedCache.persist)
     val corpus = toks.groupBy("gh").agg(count(lit(1)).as("n_gh"))
       .withColumn("grp", lit(1))
@@ -557,8 +556,7 @@ object Profiling {
     * the batch cells and the q215 oracle transitively gates the
     * streaming estimates. */
   private[graft] def cmsHash(j: Int, t: Column): Column =
-    conv(substring(md5(concat(lit(s"cms$j|"), t)), 1, 12), 16, 10)
-      .cast("long") % CmsWidth
+    md5Draw(concat(lit(s"cms$j|"), t), 1, 12) % CmsWidth
 
   /** All CmsRows (row, col) coordinates of a token, in-row. */
   private[graft] def cmsRcArr(t: Column): Column =
@@ -567,8 +565,7 @@ object Profiling {
 
   /** Token stream of a documents batch (the engine tokenizer). */
   private[graft] def cmsTokens(batch: DataFrame): DataFrame =
-    batch.select(explode(split(trim(regexp_replace(lower(col("text")),
-      "\\s+", " ")), " ")).as("t"))
+    batch.select(explode(tokens(col("text"))).as("t"))
 
   /** The 4×1024 counter relation of a token batch (map-combined). */
   private[graft] def cmsCellPartials(toks: DataFrame): DataFrame =
@@ -622,8 +619,7 @@ object Profiling {
   val q129HllDistinct: Q = (s, d) => {
     val regs = graft.Tables.events(s, d)
       .select(col("event_type"),
-        conv(substring(md5(concat(lit("hll"), col("user_id").cast("string"))),
-          1, 12), 16, 10).cast("long").as("h48"))
+        md5Draw(concat(lit("hll"), col("user_id").cast("string")), 1, 12).as("h48"))
       .withColumn("bucket", expr(s"h48 div ${1L << 44}L"))
       .withColumn("w", expr(s"h48 % ${1L << 44}L"))
       // rank of the first set bit in the 44-bit suffix (1-based);
@@ -913,11 +909,10 @@ object Profiling {
     orders.select(
       (col("o_orderkey") % MerkleBuckets).as("bucket"),
       col("o_orderkey"),
-      conv(substring(md5(concat_ws("|",
+      md5Draw(concat_ws("|",
         col("o_orderkey"), col("o_custkey"), col("o_orderstatus"),
-        round(col("o_totalprice") * 100, 0).cast("long"),
-        date_format(col("o_orderdate"), "yyyy-MM-dd"))), 1, 12), 16, 10)
-        .cast("long").as("h48"))
+        e2(col("o_totalprice")),
+        date_format(col("o_orderdate"), "yyyy-MM-dd")), 1, 12).as("h48"))
 
   val q164MerkleFingerprint: Q = (s, d) => {
     val leaves = merkleLeaves(Tables.orders(s, d))
@@ -1299,8 +1294,8 @@ object Profiling {
   private[graft] def dpReleaseFromCells(cells: DataFrame): DataFrame =
     cells
       .withColumn("h",
-        conv(substring(md5(concat(lit("dpnoise"), col("source"), lit("|"),
-          col("lang"))), 1, 12), 16, 10).cast("long"))
+        md5Draw(concat(lit("dpnoise"), col("source"), lit("|"),
+          col("lang")), 1, 12))
       .withColumn("sgn", lit(1L) - lit(2L) * (col("h") % 2))
       .withColumn("hb", expr("h div 2"))
       .withColumn("mag",
@@ -1405,20 +1400,16 @@ object Profiling {
     * streaming membership answers. */
   private[graft] def bloomBitArr(t: Column): Column =
     array((0 until BloomHashes).map(j =>
-      conv(substring(md5(concat(lit(s"bloom$j|"), t)), 1, 12), 16, 10)
-        .cast("long") % BloomBits): _*)
+      md5Draw(concat(lit(s"bloom$j|"), t), 1, 12) % BloomBits): _*)
 
   val q221BloomPrecheck: Q = (s, d) => {
     val splitCol = when(
-      conv(substring(md5(col("doc_id").cast("string")), 1, 4), 16, 10)
-        .cast("long") % 10 < 8, "train")
-      .when(conv(substring(md5(col("doc_id").cast("string")), 1, 4), 16, 10)
-        .cast("long") % 10 === 8, "val")
+      md5Draw(col("doc_id").cast("string"), 1, 4) % 10 < 8, "train")
+      .when(md5Draw(col("doc_id").cast("string"), 1, 4) % 10 === 8, "val")
       .otherwise("test")
     val vocab = Tables.documents(s, d)
       .select(splitCol.as("split"),
-        explode(split(trim(regexp_replace(lower(col("text")), "\\s+", " ")),
-          " ")).as("t"))
+        explode(tokens(col("text"))).as("t"))
       .distinct()
       .transform(graft.ops.SharedCache.persist)
     val train = vocab.filter(col("split") === "train").select(col("t"))
@@ -1502,8 +1493,7 @@ object Profiling {
     * F2 estimates. */
   private[graft] def amsCounterPartials(toks: DataFrame): DataFrame = {
     val sign = (i: Int) =>
-      (conv(substring(md5(concat(lit(s"ams$i|"), col("t"))), 1, 12), 16, 10)
-        .cast("long") % 2) * 2 - 1
+      (md5Draw(concat(lit(s"ams$i|"), col("t")), 1, 12) % 2) * 2 - 1
     toks
       .select(explode(array((0 until AmsEstimators).map(i =>
         struct(lit(i.toLong).as("i"), sign(i).as("sg"))): _*)).as("e"))
@@ -1577,8 +1567,7 @@ object Profiling {
     import org.apache.spark.sql.expressions.Window
     val ev = graft.Tables.events(s, d)
       .select(to_date(col("ts")).as("day"),
-        conv(substring(md5(concat(lit("hll"), col("user_id").cast("string"))),
-          1, 12), 16, 10).cast("long").as("h48"))
+        md5Draw(concat(lit("hll"), col("user_id").cast("string")), 1, 12).as("h48"))
     val regs = ev
       .withColumn("bucket", expr(s"h48 div ${1L << 44}L"))
       .withColumn("rho",

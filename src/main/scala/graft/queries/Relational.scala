@@ -2,6 +2,7 @@ package graft.queries
 
 import graft.Tables
 import graft.ops.{QualityStage, Scd2Merge}
+import graft.ops.Exact._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -17,9 +18,9 @@ import org.apache.spark.sql.functions._
   *    orders and the 2-dp round can't absorb the difference at scale
   *    (q11 failed exactly this way at sf0.1 in rounds 1-2). Instead
   *    integer-scale to cents and sum exactly:
-  *    `sum(round(x*100,0).cast("long"))` / the `sumE2` helper;
+  *    `graft.ops.Exact.sumE2` = `sum(round(x*100,0).cast("long"))`;
   *  - sums of derived products (price × discount): scale to integer
-  *    first (`cast(round(x*1e4) as long)`) and sum exactly;
+  *    first (`Exact.e4`) and sum exactly (`Exact.sumE4`);
   *  - scalar math over identical inputs is IEEE-deterministic — emit
   *    raw, never re-round.
   */
@@ -27,12 +28,6 @@ object Relational {
   private type Q = (SparkSession, String) => DataFrame
 
   private def ts(s: String): Column = to_timestamp(lit(s))
-
-  /** Exact integer sum of a 4-dp-valued double expression. */
-  private def sumE4(c: Column): Column = sum(round(c * lit(10000.0), 0).cast("long"))
-
-  /** Exact integer (cents) sum of a 2-dp monetary double expression. */
-  private def sumE2(c: Column): Column = sum(round(c * lit(100.0), 0).cast("long"))
 
   // ---------------------------------------------------------------
   // Scans / filters / projections (SURVEY §2.1-2.2)
@@ -263,7 +258,7 @@ object Relational {
         (col("is_current") || col("modified_date") > col("probe_ts")),
       "left")
       .select(col("probe_key"), col("probe_ts"), col("status"),
-        round(col("price") * 100, 0).cast("long").as("price_e2"),
+        e2(col("price")).as("price_e2"),
         col("inserted_date").as("version_inserted"))
   }
 

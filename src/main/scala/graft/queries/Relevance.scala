@@ -1,6 +1,8 @@
 package graft.queries
 
 import graft.Tables
+import graft.functions.VectorFunctions.quantE4
+import graft.ops.Exact._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -32,10 +34,6 @@ import org.apache.spark.sql.functions._
   */
 object Relevance {
   private type Q = (SparkSession, String) => DataFrame
-
-  /** Whitespace-normalized lowercase tokens (LlmPipeline convention). */
-  private def tokens(c: Column): Column =
-    split(trim(regexp_replace(lower(c), "\\s+", " ")), " ")
 
   // -- q60: per-document TF-IDF keywords -----------------------------
 
@@ -169,13 +167,6 @@ object Relevance {
   private val RrfK = 60L // the standard RRF damping constant
   private val RrfTopN = 20
 
-  /** e4-quantized integer embedding (q23 convention — exact integer
-    * dots, order- and engine-independent). r15: the fused codegen'd
-    * [[graft.functions.QuantE4]] kernel; callers must
-    * VectorFunctions.register the session first. */
-  private def quantE(c: Column): Column =
-    graft.functions.VectorFunctions.quantE4(c)
-
   /** The fusion step alone, spec-testable on hand-built rank lists:
     * RRF(d) = Σ_legs 1e6 div (k + rank_leg(d)), absent legs contribute
     * 0 — the score that makes two incomparable score scales (BM25 vs
@@ -206,7 +197,7 @@ object Relevance {
       "g", "doc_id", "bm25_e6", RrfTopN)
       .select(col("doc_id").as("id"), col("rank").cast("long").as("lex_rank"))
     val e = Tables.embeddings(s, d)
-      .select(col("vec_id"), quantE(col("embedding")).as("q"))
+      .select(col("vec_id"), quantE4(col("embedding")).as("q"))
       .withColumn("s2",
         graft.functions.VectorFunctions.dotLong(col("q"), col("q")))
     // the query vector is a driver-hosted control-plane scalar (q57

@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.ops.Exact._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -48,8 +49,7 @@ object StreamingBloom {
       stateDir: String): Boolean =
     fold(spark, stateDir, StateDdl, batchId) { st =>
       val newBits = batch
-        .select(explode(split(trim(regexp_replace(lower(col("text")),
-          "\\s+", " ")), " ")).as("t"))
+        .select(explode(tokens(col("text"))).as("t"))
         .distinct()
         .select(explode(graft.queries.Profiling.bloomBitArr(col("t"))).as("bit"))
       ofKind(st, "s")

@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.ops.Exact._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
@@ -59,7 +60,7 @@ object StreamingCuration {
   /** Narrow quality predicate (q22's is_quality contract): enough
     * tokens, bounded length, bounded punctuation density. */
   def qualityGate(docs: DataFrame): DataFrame = {
-    val tk = split(trim(regexp_replace(lower(col("text")), "\\s+", " ")), " ")
+    val tk = tokens(col("text"))
     val lo = lower(col("text"))
     docs
       .withColumn("n_tokens_q", size(tk))

@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.ops.Exact._
 import java.sql.Timestamp
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
@@ -60,7 +61,7 @@ object StreamingEvents {
     * the events. */
   def ohlcBars(events: DataFrame): DataFrame =
     events
-      .withColumn("v_e2", round(col("value") * 100, 0).cast("long"))
+      .withColumn("v_e2", e2(col("value")))
       .groupBy(window(col("ts"), "1 hour").as("w"), col("event_type"))
       .agg(
         min_by(col("v_e2"), struct(col("ts"), col("event_id"))).as("open_e2"),
@@ -78,7 +79,7 @@ object StreamingEvents {
       .groupBy(window(col("ts"), "1 hour").as("w"), col("event_type"))
       .agg(
         count(lit(1)).as("n_events"),
-        sum(round(col("value") * 100, 0).cast("long")).as("value_sum_e2"),
+        sumE2(col("value")).as("value_sum_e2"),
         sum(col("k")).as("k_sum"))
       .select(col("w.start").as("window_start"), col("event_type"),
         col("n_events"), col("value_sum_e2"), col("k_sum"))

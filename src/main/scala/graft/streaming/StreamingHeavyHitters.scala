@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.ops.Exact._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -40,10 +41,6 @@ object StreamingHeavyHitters {
     * kind='m' → (tok, cnt) summary entries; kind='n' → total tokens
     * folded; kind='b' → applied-batch markers. */
   private val StateDdl = "kind STRING, tok STRING, cnt BIGINT, batch_id BIGINT"
-
-  /** q169's tokenization, verbatim (whitespace-normalized lowercase). */
-  private def tokens(c: org.apache.spark.sql.Column) =
-    split(trim(regexp_replace(lower(c), "\\s+", " ")), " ")
 
   /** Exact per-token counts of one micro-batch of `text` rows — the
     * only pass over batch volume. */

@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.ops.Exact._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -46,9 +47,8 @@ object StreamingHll {
     * set bit rank (45 for an all-zero suffix). */
   private[graft] def registerPartials(batch: DataFrame): DataFrame =
     batch
-      .select(conv(substring(md5(concat(lit("hll"),
-        col("user_id").cast("string"))), 1, 12), 16, 10)
-        .cast("long").as("h48"))
+      .select(md5Draw(concat(lit("hll"),
+        col("user_id").cast("string")), 1, 12).as("h48"))
       .withColumn("bucket", expr(s"h48 div ${1L << 44}L"))
       .withColumn("w", expr(s"h48 % ${1L << 44}L"))
       .withColumn("rho",

@@ -90,7 +90,7 @@ object StreamingSurvival {
     * q259's columns, by the SHARED finalizer (the fourth report off
     * the one maintained cell relation). */
   def armCurves(spark: SparkSession, stateDir: String): DataFrame =
-    graft.queries.EventAnalytics.kmArmFinalize(cells(spark, stateDir))
+    graft.queries.EventAnalytics.kmFinalize(cells(spark, stateDir), byArm = true)
 
   /** The RMST treatment-effect report over the accumulated stream —
     * batch q260's columns, by the SHARED finalizer (fifth report; an

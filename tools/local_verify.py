@@ -1,15 +1,23 @@
 #!/usr/bin/env python3
 """Local replica of the driver's correctness gate.
 
-Usage: python3 tools/local_verify.py <sfDir> <outDir>
+Usage: python3 tools/local_verify.py <sfDir> <outDir> [--tsv FILE]
   (run `sbt "runMain graft.Verify <sfDir> <outDir>"` first)
 
 For each <outDir>/<name> parquet dir, runs <outDir>/oracle_sql.json[name]
 in DuckDB with views named after the tables in <sfDir>, then compares:
 columns sorted by name, rows sorted by all columns, values canonicalized
 (floats via repr of float64, timestamps via ISO string), hashed.
+
+Every result line also carries the Spark side's own canonical hash
+(`spark=<sha256 prefix>`), computed before and independently of the
+oracle, so rows-only queries and queries whose oracle fails have one
+too. `--tsv FILE` writes `name<TAB>rows<TAB>hash` per Spark result
+(full sha256; `-` for a result that could not be read): diff two such
+files, e.g. from two checkouts' Verify outputs, to show the results are
+byte-identical.
 """
-import sys, os, json, glob, hashlib
+import sys, os, json, glob, hashlib, argparse
 import duckdb
 
 TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
@@ -77,9 +85,17 @@ def py_oracle_q119(con, sf_dir):
 PY_ORACLES = {"q119_compressibility": py_oracle_q119}
 
 
-def main(sf_dir, out_dir):
+def main(sf_dir, out_dir, tsv=None):
     oracle = json.load(open(os.path.join(out_dir, "oracle_sql.json")))
     results = {}
+    spark_side = {}  # name -> (rows, sha256) of the Spark result alone
+
+    def spark_hash(con, name, res_path):
+        spark_side[name] = None  # stays None if the result cannot be read
+        s = canon(con, con.sql(f"SELECT * FROM '{res_path}/*.parquet'"))
+        spark_side[name] = (s[2], s[3])
+        return s
+
     for name in sorted(set(oracle) | set(PY_ORACLES)):
         res_path = os.path.join(out_dir, name)
         if not glob.glob(os.path.join(res_path, "*.parquet")):
@@ -91,10 +107,7 @@ def main(sf_dir, out_dir):
             if os.path.exists(p):
                 con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{p}'")
         try:
-            spark_rel = con.sql(
-                f"SELECT * FROM '{res_path}/*.parquet'")
-            rel = spark_rel
-            s_cols, s_t, s_n, s_h, s_rows = canon(con, rel)
+            s_cols, s_t, s_n, s_h, s_rows = spark_hash(con, name, res_path)
             rel = (PY_ORACLES[name](con, sf_dir) if name in PY_ORACLES
                    else con.sql(oracle[name]))
             o_cols, o_t, o_n, o_h, o_rows = canon(con, rel)
@@ -123,7 +136,7 @@ def main(sf_dir, out_dir):
         if os.path.isdir(p) and d not in oracle and d not in PY_ORACLES:
             try:
                 con = duckdb.connect()
-                n = con.sql(f"SELECT count(*) FROM '{p}/*.parquet'").fetchone()[0]
+                n = spark_hash(con, d, p)[2]
                 results[d] = f"ROWS_ONLY rows={n}" + (" (EMPTY!)" if n == 0 else "")
                 con.close()
             except Exception as e:
@@ -133,11 +146,23 @@ def main(sf_dir, out_dir):
     def passed(v):
         return v.startswith("OK") or ("ROWS_ONLY rows" in v and "EMPTY" not in v)
     for k, v in results.items():
-        print(f"{'PASS' if passed(v) else 'FAIL':4} {k}: {v}")
+        side = spark_side.get(k)
+        tag = f" spark={side[1][:16]}" if side else ""
+        print(f"{'PASS' if passed(v) else 'FAIL':4} {k}: {v}{tag}")
     print(f"\n{ok}/{n_oracle} oracle-checked OK, {len(results)} total")
+    if tsv:
+        with open(tsv, "w") as f:
+            for k in sorted(results):
+                side = spark_side.get(k)
+                f.write(f"{k}\t{side[0]}\t{side[1]}\n" if side else f"{k}\t-\t-\n")
     # rows-only EMPTY/ERROR results are failures too, not just oracle misses
     return 0 if all(passed(v) for v in results.values()) and ok == n_oracle else 1
 
 
 if __name__ == "__main__":
-    sys.exit(main(sys.argv[1], sys.argv[2]))
+    ap = argparse.ArgumentParser(description=__doc__.split("\n")[0])
+    ap.add_argument("sf_dir")
+    ap.add_argument("out_dir")
+    ap.add_argument("--tsv", help="write name<TAB>rows<TAB>sha256 per Spark result")
+    a = ap.parse_args()
+    sys.exit(main(a.sf_dir, a.out_dir, a.tsv))
