@@ -7,8 +7,7 @@ import org.apache.spark.sql.SparkSession
   * extensions installed (`DotProductRewrite` and the function
   * registry), UTC session time, `spark.sql.ansi.enabled=false`, AQE on,
   * shuffle partitions equal to the core count, UI off. Each main picks
-  * its own core count; the test specs keep their own session
-  * (`SparkSpec`, ANSI on, as the specs are written against it).
+  * its own core count; the test specs run it on 4 cores.
   */
 object LocalSession {
 

@@ -25,6 +25,13 @@ import org.apache.spark.sql.functions._
   * Silver writes go through write-temp-then-swap, because a merge
   * result's plan reads the target's current files — an in-place
   * overwrite would delete its own input mid-job (SURVEY §7.3).
+  * Every read hands Spark a schema the pipeline already holds, so no
+  * read starts a Spark job to infer one: parquet tables through
+  * [[graft.ops.LocalFs.parquet]] (the footer of the first data file,
+  * read on the driver), the claims and CPT CSVs through
+  * [[graft.ops.LocalFs.csv]] (the header line), landing JSON through
+  * the schema [[graft.ingest.LandingZone]] records beside it, and the
+  * load config parsed on the driver ([[graft.ingest.LoadConfig]]).
   *
   * @param fixturesRoot source data root with the reference layout:
   *                     emr/hospital-a and emr/hospital-b per-table
@@ -73,13 +80,13 @@ final class HealthPipeline(
     * (graft.ops.TableSwap contract). */
   private def readRecovered(path: String): DataFrame = {
     graft.ops.TableSwap.recover(fs, new Path(path), graft.ops.TableSwap.tmpPath(path))
-    spark.read.parquet(path)
+    LocalFs.parquet(spark, path)
   }
 
   /** [[readRecovered]] for a table that may not exist yet. */
   private def recovered(path: String): Option[DataFrame] = {
     graft.ops.TableSwap.recover(fs, new Path(path), graft.ops.TableSwap.tmpPath(path))
-    if (exists(path)) Some(spark.read.parquet(path)) else None
+    if (exists(path)) Some(LocalFs.parquet(spark, path)) else None
   }
 
   /** Write-temp-then-swap (atomic table replace without reading and
@@ -112,7 +119,7 @@ final class HealthPipeline(
     * from the file path, exact-duplicate rows dropped
     * (claims.py:16-25). */
   def loadBronzeClaims(): Unit = {
-    val df = spark.read.option("header", "true").csv(s"$fixturesRoot/claims/*.csv")
+    val df = LocalFs.csv(spark, s"$fixturesRoot/claims/*.csv")
       .withColumn("datasource",
         when(input_file_name().contains("hospital2"), "hosb")
           .when(input_file_name().contains("hospital1"), "hosa")
@@ -124,7 +131,7 @@ final class HealthPipeline(
   /** Bronze CPT codes: header CSV + the column rename fold
     * (cpt_codes.py:15-20). */
   def loadBronzeCpt(): Unit = {
-    val raw = spark.read.option("header", "true").csv(s"$fixturesRoot/cptcodes/cptcodes.csv")
+    val raw = LocalFs.csv(spark, s"$fixturesRoot/cptcodes/cptcodes.csv")
     val renamed = raw.columns.foldLeft(raw)((d, c) =>
       d.withColumnRenamed(c, c.replace(" ", "_").toLowerCase))
     LocalFs.write(renamed).mode("overwrite").parquet(bronzePath("cpt_codes"))
@@ -146,7 +153,7 @@ final class HealthPipeline(
         Some(landing.read("hospital_b_db", t))
       else None
     case _ =>
-      if (exists(bronzePath(name))) Some(spark.read.parquet(bronzePath(name))) else None
+      if (exists(bronzePath(name))) Some(LocalFs.parquet(spark, bronzePath(name))) else None
   }
 
   /** Silver: reload the two type-1 dims and run each SCD2 merge over

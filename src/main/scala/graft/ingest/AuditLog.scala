@@ -17,6 +17,10 @@ import org.apache.spark.sql.functions._
   * never issued concurrently into `path`: concurrent `SaveMode.Append`
   * jobs into one parquet directory share its `_temporary` commit
   * directory and can clobber each other's commit.
+  *
+  * [[all]] reads the log with the schema of its first file's footer
+  * ([[LocalFs.parquet]]), so a watermark lookup runs its aggregate
+  * job only, not a schema-inference job before it.
   */
 final class AuditLog(spark: SparkSession, path: String) {
   import spark.implicits._
@@ -32,7 +36,7 @@ final class AuditLog(spark: SparkSession, path: String) {
       LocalFs.write(recs.toDS().coalesce(1)).mode(SaveMode.Append).parquet(path)
 
   def all(): org.apache.spark.sql.DataFrame =
-    if (exists) spark.read.parquet(path)
+    if (exists) LocalFs.parquet(spark, path)
     else spark.emptyDataset[AuditRecord].toDF()
 
   /** J5/A6: latest successful load watermark of every table of

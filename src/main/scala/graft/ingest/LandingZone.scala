@@ -1,11 +1,12 @@
 package graft.ingest
 
+import java.nio.charset.StandardCharsets
 import java.time.LocalDate
 import java.time.format.DateTimeFormatter
 import graft.ops.LocalFs
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{DataType, StringType, StructField, StructType}
 
 /** The landing-zone contract: JSON-lines files per
   * `<root>/<datasource>/<table>/`, with prior files archived to
@@ -18,6 +19,19 @@ import org.apache.spark.sql.types.StructType
   * `toPandas()` driver-collect anti-pattern is designed out
   * (SURVEY §4.3) while the JSON-lines + ISO-dates file contract is
   * kept (`timestampFormat` below).
+  *
+  * The schema travels with the data. A write of an all-string frame
+  * (what [[CsvSource]] lands) records the bronze schema in the landing
+  * dir as `_schema.json` (Spark's file listing skips `_` names): the
+  * written columns in name order, all nullable strings, the order and
+  * types JSON inference gives them. It moves with the dir on publish
+  * and archive, and [[read]] uses it, so a bronze read starts no
+  * inference job. It also keeps a column that is null in every row:
+  * the JSON writer omits null fields, so inference never sees such a
+  * column and a bronze read without the recorded schema drops it. A
+  * dir without `_schema.json` (a landing with a typed column, from a
+  * JDBC or ORC source, or one written before schemas were recorded)
+  * is read with inference.
   */
 final class LandingZone(spark: SparkSession, root: String) {
 
@@ -25,11 +39,36 @@ final class LandingZone(spark: SparkSession, root: String) {
 
   def tableDir(datasource: String, table: String): String = s"$root/$datasource/$table"
 
-  /** S4: distributed JSON-lines write (overwrite = the per-run file). */
-  def write(df: DataFrame, datasource: String, table: String): Unit =
+  private def schemaFile(dir: String) = new Path(dir, "_schema.json")
+
+  /** JSON-lines write of `df` into `dir`, recording its schema when
+    * every column is a string. */
+  private def land(df: DataFrame, dir: String): Unit = {
     LocalFs.write(df).mode("overwrite")
       .option("timestampFormat", "yyyy-MM-dd'T'HH:mm:ss.SSSXXX")
-      .json(tableDir(datasource, table))
+      .json(dir)
+    if (df.schema.forall(_.dataType == StringType)) {
+      val schema = StructType(df.schema.map(f => StructField(f.name, StringType)).sortBy(_.name))
+      val out = fs.create(schemaFile(dir), true)
+      try out.write(schema.json.getBytes(StandardCharsets.UTF_8)) finally out.close()
+    }
+  }
+
+  /** The schema recorded in a landing dir, if any. */
+  private def recordedSchema(dir: String): Option[StructType] = {
+    val f = schemaFile(dir)
+    if (!fs.exists(f)) None
+    else {
+      val in = fs.open(f)
+      try Some(DataType.fromJson(new String(in.readAllBytes(), StandardCharsets.UTF_8))
+        .asInstanceOf[StructType])
+      finally in.close()
+    }
+  }
+
+  /** S4: distributed JSON-lines write (overwrite = the per-run file). */
+  def write(df: DataFrame, datasource: String, table: String): Unit =
+    land(df, tableDir(datasource, table))
 
   /** Staged one-scan write support: the extract lands in a SIBLING
     * temp directory first, and only a non-empty result is promoted
@@ -42,9 +81,7 @@ final class LandingZone(spark: SparkSession, root: String) {
     tableDir(datasource, table) + "__staged"
 
   def writeStaged(df: DataFrame, datasource: String, table: String): Unit =
-    LocalFs.write(df).mode("overwrite")
-      .option("timestampFormat", "yyyy-MM-dd'T'HH:mm:ss.SSSXXX")
-      .json(stagedDir(datasource, table))
+    land(df, stagedDir(datasource, table))
 
   /** Promote a non-empty staged extract into the table dir. */
   def publishStaged(datasource: String, table: String): Unit =
@@ -59,11 +96,12 @@ final class LandingZone(spark: SparkSession, root: String) {
     ()
   }
 
-  /** S3: schema-on-read bronze scan over the landing JSON. An explicit
-    * schema skips the inference pass (one fewer full read at scale). */
+  /** S3: schema-on-read bronze scan over the landing JSON, with an
+    * explicit schema, else the dir's recorded one, else inference. */
   def read(datasource: String, table: String, schema: Option[StructType] = None): DataFrame = {
+    val dir = tableDir(datasource, table)
     val r = spark.read.option("timestampFormat", "yyyy-MM-dd'T'HH:mm:ss.SSSXXX")
-    schema.fold(r)(r.schema).json(tableDir(datasource, table))
+    schema.orElse(recordedSchema(dir)).fold(r)(r.schema).json(dir)
   }
 
   /** S10: move current landing files to the dated archive prefix

@@ -26,25 +26,20 @@ trait SourceConnector {
 
 /** Header-CSV source — stringly-typed like the reference's claims/CPT
   * reads (S2, claims.py:16, cpt_codes.py:15: `header=True`, no schema).
+  * The all-string schema comes from the header line, read on the
+  * driver ([[graft.ops.LocalFs.csv]]), so a read starts no Spark job.
   */
 final class CsvSource(dir: String) extends SourceConnector {
   def read(spark: SparkSession, table: String): DataFrame =
-    spark.read.option("header", "true").csv(s"$dir/$table.csv")
-}
-
-/** Parquet-backed source (the driver testdata layout). */
-final class ParquetSource(dir: String) extends SourceConnector {
-  def read(spark: SparkSession, table: String): DataFrame =
-    spark.read.parquet(s"$dir/$table.parquet")
+    graft.ops.LocalFs.csv(spark, s"$dir/$table.csv")
 }
 
 /** ORC-backed source — the second columnar format Spark ships a
-  * vectorized reader for (common in Hive-heritage warehouses). Same
-  * contract as [[ParquetSource]]: typed schema from the file footer,
-  * and the incremental watermark predicate reaches the ORC scan as a
-  * pushed filter + stripe-level min/max skipping (OrcSourceSpec pins
-  * `PushedFilters` in the plan), so a 100 TB incremental load reads
-  * only post-watermark stripes. */
+  * vectorized reader for (common in Hive-heritage warehouses): typed
+  * schema from the file footer, and the incremental watermark
+  * predicate reaches the ORC scan as a pushed filter + stripe-level
+  * min/max skipping (OrcSourceSpec pins `PushedFilters` in the plan),
+  * so a 100 TB incremental load reads only post-watermark stripes. */
 final class OrcSource(dir: String) extends SourceConnector {
   def read(spark: SparkSession, table: String): DataFrame =
     spark.read.orc(s"$dir/$table.orc")
@@ -60,7 +55,7 @@ final class OrcSource(dir: String) extends SourceConnector {
   * fails on engines that don't implicitly cast to TIMESTAMP).
   *
   * Tested against embedded Derby (JdbcSourceSpec), including an
-  * IngestionRunner run-over-run watermark cycle; the CSV/Parquet
+  * IngestionRunner run-over-run watermark cycle; the CSV and ORC
   * connectors remain the driver-testdata substitutes behind the same
   * trait. Derby has no sub-select alias keyword quirks, and Spark
   * wraps `dbtable` as `SELECT * FROM <dbtable> WHERE 1=0` for schema

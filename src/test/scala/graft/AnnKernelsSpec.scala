@@ -64,11 +64,10 @@ class AnnKernelsSpec extends SparkSpec {
   }
 
   test("kernel cosE6 pins the LEGACY zero-norm edge (NaN→0, ∞→Long.Max)") {
-    // the engine's sessions run spark.sql.ansi.enabled=false (Bench/
-    // Verify set it; this spec's shared session is Spark-4-default
-    // ANSI, where the retired HOF form would THROW on a zero divisor
-    // instead) — the kernel bakes in the legacy semantics the queries
-    // ship with, so the edge is pinned here at the JVM level
+    // the engine's sessions run spark.sql.ansi.enabled=false; under
+    // ANSI the retired HOF form would THROW on a zero divisor instead.
+    // The kernel bakes in the legacy semantics the queries ship with,
+    // whatever the session's mode, so the edge is pinned at the JVM level
     assert(graft.functions.AnnKernels.cosE6(5L, 0L, 100L) == Long.MaxValue) // 5/0 → ∞
     assert(graft.functions.AnnKernels.cosE6(0L, 0L, 0L) == 0L) // 0/0 → NaN → 0
     assert(graft.functions.AnnKernels.cosE6(-5L, 0L, 100L) == Long.MinValue)

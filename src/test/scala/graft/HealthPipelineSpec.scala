@@ -6,16 +6,21 @@ import java.sql.Timestamp
 import java.time.LocalDate
 
 import graft.health.HealthPipeline
-import graft.ingest.{PipelineRunner, Stage}
+import graft.ingest.{LoadConfig, PipelineRunner, Stage}
+import graft.ops.LocalFs
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DoubleType, TimestampType}
+import org.apache.spark.sql.types.{DoubleType, StructType, TimestampType}
 
 /** End-to-end medallion over the reference's own seed data (gold row
   * counts, quarantine counts, audit trail), plus a synthetic multi-run
   * spec pinning watermark-incremental extraction and the SCD2
   * close-then-insert run-over-run semantics (SURVEY §5.2 items 2-3,
   * §7.4 item 4), and a synthetic twin of the decimal-mode drift
-  * refusal that runs without the reference data.
+  * refusal that runs without the reference data. A generated-fixture
+  * twin of the reference run ([[MedallionFixtures]]) runs a full load
+  * and a daily run everywhere, and pins that every table the pipeline
+  * reads gets Spark's inferred schema without a Spark job.
   */
 class HealthPipelineSpec extends SparkSpec {
 
@@ -262,5 +267,179 @@ class HealthPipelineSpec extends SparkSpec {
     val cpt = pipe.silver("cpt_codes")
     cpt.count() shouldBe 3
     cpt.filter(col("cpt_codes") === "10060" && col("is_current")).count() shouldBe 1
+  }
+
+  test("a delta whose column is empty in every row keeps that column through bronze and silver") {
+    // the JSON writer omits null fields, so JSON inference over such a
+    // landing loses the column and silver's projection cannot resolve it
+    val root = tmpDir("health-allnull")
+    val srcDir = s"$root/emr/hospital-a"
+    Files.createDirectories(Paths.get(srcDir))
+    def writeTransactions(rows: String*): Unit =
+      Files.write(Paths.get(s"$srcDir/transactions.csv"), (
+        ("TransactionID,EncounterID,PatientID,ProviderID,DeptID,VisitDate,ServiceDate,PaidDate," +
+          "VisitType,Amount,AmountType,PaidAmount,ClaimID,PayorID,ProcedureCode,ICDCode," +
+          "LineOfBusiness,MedicaidID,MedicareID,InsertDate,ModifiedDate") +: rows)
+        .mkString("\n").getBytes(StandardCharsets.UTF_8))
+    def row(id: String, amount: String, medicaid: String, modified: String) =
+      s"$id,E1,P1,PROV1,DEPT1,2024-01-02,2024-01-02,2024-01-09,Outpatient,$amount,Co-pay," +
+        s"10.00,C1,PAY1,99213,I10,Commercial,$medicaid,MR1,2024-01-02,$modified"
+    val cfg = s"$root/load_config.csv"
+    Files.write(Paths.get(cfg),
+      ("database,datasource,tablename,loadtype,watermark,is_active,targetpath\n" +
+        "db,hospital_a_db,transactions,Incremental,ModifiedDate,1,hospital-a")
+        .getBytes(StandardCharsets.UTF_8))
+    var now = Timestamp.valueOf("2025-01-01 00:00:00")
+    val pipe = new HealthPipeline(spark, root, cfg, s"$root/work", () => now)
+    def ingestAndSilver(): Seq[graft.ingest.StageResult] = {
+      pipe.ingest("hospital_a_db", srcDir, runDate)
+      PipelineRunner.run(Seq(Stage("silver", () => pipe.runSilver())), pipe.logger, retries = 0)
+    }
+
+    writeTransactions(row("T1", "120.50", "MC1", "2024-01-02"), row("T2", "80.25", "MC2", "2024-01-03"))
+    ingestAndSilver().map(r => (r.status, r.error)) shouldBe Seq(("SUCCESS", None))
+
+    // the delta: T1 changed and T3 new, MedicaidID empty in both rows
+    now = Timestamp.valueOf("2025-02-01 00:00:00")
+    writeTransactions(row("T1", "130.50", "", "2025-01-20"), row("T2", "80.25", "MC2", "2024-01-03"),
+      row("T3", "55.00", "", "2025-01-21"))
+    ingestAndSilver().map(r => (r.status, r.error)) shouldBe Seq(("SUCCESS", None))
+    pipe.landing.read("hospital_a_db", "transactions").columns should contain("MedicaidID")
+
+    val tx = pipe.silver("transactions")
+    tx.count() shouldBe 3 // T1 closed (close-then-insert), T2 and T3 current
+    tx.filter(col("is_current")).select("SRC_TransactionID", "MedicaidID").collect()
+      .map(r => (r.getString(0), Option(r.getString(1)))).sortBy(_._1).toSeq shouldBe
+      Seq(("T2", Some("MC2")), ("T3", None))
+    tx.filter(!col("is_current")).select("MedicaidID").head().getString(0) shouldBe "MC1"
+  }
+
+  /** The number of Spark jobs `body` starts. Listener events arrive in
+    * order, so once a marker job's start is seen every job `body`
+    * started has been counted. */
+  private def jobsStartedBy(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val group = s"probe-${java.util.UUID.randomUUID()}"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val marker = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id"))) match {
+          case Some(`group`) => jobs.incrementAndGet()
+          case Some(g) if g == s"$group-marker" => marker.countDown()
+          case _ =>
+        }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "reads")
+      try body finally sc.clearJobGroup()
+      sc.setJobGroup(s"$group-marker", "marker")
+      try spark.range(1).count() finally sc.clearJobGroup()
+      marker.await(30, java.util.concurrent.TimeUnit.SECONDS) shouldBe true
+      jobs.get()
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("generated fixtures: full load and daily run, SCD2 counts, and every read's schema without a job") {
+    val gen = MedallionFixtures(seed = 11)
+    val root = Paths.get(tmpDir("health-gen"))
+    val work = root.resolve("work").toString
+    def pipeline(d: Int): HealthPipeline = {
+      val src = root.resolve(s"day-$d")
+      gen.write(src, d)
+      new HealthPipeline(spark, src.toString, s"$src/load_config.csv", work,
+        () => MedallionFixtures.clock(d))
+    }
+    for (d <- 0 to 1) {
+      val results = pipeline(d).run(MedallionFixtures.runDate(d), retryDelayMs = 0L)
+      results.map(r => (r.name, r.status, r.error)).filter(_._2 != "SUCCESS") shouldBe empty
+      results should have length 7
+    }
+    val src = root.resolve("day-1").toString
+    val pipe = new HealthPipeline(spark, src, s"$src/load_config.csv", work,
+      () => MedallionFixtures.clock(1))
+
+    val audit = pipe.audit.all()
+    audit.filter(col("status") === "SUCCESS").count() shouldBe 20 // 2 runs x 2 hospitals x 5
+    audit.filter(col("status") === "FAILED").count() shouldBe 0
+    audit.filter(col("load_timestamp") === MedallionFixtures.clock(1) &&
+      col("load_type") === "Incremental").agg(sum("record_count")).head().getLong(0) shouldBe
+      6L * gen.changed // the re-stamped rows of 3 tables x 2 hospitals
+
+    // SCD2 after the daily run: each re-stamped row closed its current
+    // version (close-then-insert); hospital B's NULL names quarantined
+    def scd2(t: String): (Long, Long, Long, Long) = {
+      val r = pipe.silver(t).agg(count(lit(1)), count(when(col("is_current"), 1)),
+        count(when(!col("is_current"), 1)), count(when(col("is_quarantined"), 1))).head()
+      (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))
+    }
+    val (p, f, k) = (gen.patients.toLong, gen.facts.toLong, gen.changed.toLong)
+    val nullNamed = (0 until gen.patients).count(gen.nullNamed).toLong
+    scd2("patients") shouldBe ((2 * p, 2 * p - 2 * k, 2 * k, nullNamed))
+    scd2("encounters") shouldBe ((2 * f, 2 * f - 2 * k, 2 * k, 0L))
+    scd2("transactions") shouldBe ((2 * f, 2 * f - 2 * k, 2 * k, 0L))
+    // both claims files share the ClaimID range: two current rows per
+    // key, one duplicate of each closed per later run
+    val claims = pipe.silver("claims").agg(count(lit(1)), count(when(col("is_current"), 1)),
+      countDistinct(col("Claim_Key"))).head()
+    (claims.getLong(0), claims.getLong(1), claims.getLong(2)) shouldBe ((4 * f, 2 * f, f))
+    pipe.silver("cpt_codes").count() shouldBe gen.cptRows
+    pipe.silver("cpt_codes").columns should contain("procedure_code_descriptions")
+
+    // gold: provider ids never match the facts' (the seed data's quirk)
+    pipe.gold("provider_charge_summary").count() shouldBe 0
+    pipe.gold("provider_performance").count() shouldBe pipe.silver("providers").count()
+    pipe.gold("department_performance").count() shouldBe 2 * gen.depts
+
+    // every table the pipeline reads: the helpers' schema is the one
+    // Spark infers from the same path, and reading starts no job
+    val ts = "yyyy-MM-dd'T'HH:mm:ss.SSSXXX"
+    val landed = for {
+      ds <- Seq("hospital_a_db", "hospital_b_db")
+      t <- Seq("patients", "encounters", "transactions", "providers", "departments")
+    } yield (ds, t)
+    landed.foreach { case (ds, t) =>
+      Files.isDirectory(Paths.get(pipe.landing.tableDir(ds, t))) shouldBe true
+    }
+    val parquetTables = Seq("bronze/claims", "bronze/cpt_codes", "audit_log", "pipeline_logs") ++
+      Seq("patients", "encounters", "transactions", "claims", "cpt_codes", "providers",
+        "departments").map("silver/" + _) ++
+      Seq("provider_charge_summary", "patient_history", "provider_performance",
+        "department_performance").map("gold/" + _)
+    val csvSources = (for {
+      h <- Seq("hospital-a", "hospital-b")
+      t <- Seq("patients", "encounters", "transactions", "providers", "departments")
+    } yield s"$src/emr/$h/$t.csv") ++ Seq(s"$src/claims/*.csv", s"$src/cptcodes/cptcodes.csv")
+
+    var read = Seq.empty[(String, StructType)]
+    jobsStartedBy {
+      read = landed.map { case (ds, t) => s"$ds/$t" -> pipe.landing.read(ds, t).schema } ++
+        parquetTables.map(t => t -> LocalFs.parquet(spark, s"$work/$t").schema) ++
+        csvSources.map(c => c -> LocalFs.csv(spark, c).schema)
+      LoadConfig.read(spark, s"$src/load_config.csv")
+    } shouldBe 0
+    val inferred: Seq[StructType] =
+      landed.map { case (ds, t) =>
+        spark.read.option("timestampFormat", ts).json(pipe.landing.tableDir(ds, t)).schema } ++
+        parquetTables.map(t => spark.read.parquet(s"$work/$t").schema) ++
+        csvSources.map(c => spark.read.option("header", "true").csv(c).schema)
+    read.map(_._1).zip(read.map(_._2).zip(inferred)).foreach {
+      case ("hospital_b_db/transactions", (got, want)) =>
+        // the documented difference: MedicaidID is null in every row of
+        // this delta, so inference drops it and the recorded schema keeps it
+        got.fieldNames should contain("MedicaidID")
+        want.fieldNames should not contain "MedicaidID"
+        StructType(got.filterNot(_.name == "MedicaidID")) shouldBe want
+      case (name, (got, want)) => withClue(name)(got shouldBe want)
+    }
+
+    // the load config parsed on the driver is the one Spark's read gives
+    val cfgRows = spark.read.option("header", "true").csv(s"$src/load_config.csv").collect()
+    LoadConfig.read(spark, s"$src/load_config.csv").map(e =>
+      Seq(e.database, e.datasource, e.tablename, e.loadtype, e.watermark,
+        if (e.isActive) "1" else "0", e.targetpath)) shouldBe
+      cfgRows.toSeq.map(r => Seq("database", "datasource", "tablename", "loadtype", "watermark",
+        "is_active", "targetpath").map(c => Option(r.getAs[String](c)).getOrElse("")))
   }
 }

@@ -147,4 +147,68 @@ class LocalFsSpec extends SparkSpec {
     spark.sparkContext.hadoopConfiguration.get("fs.file.impl") shouldBe before
     new Path("file:///").getFileSystem(spark.sparkContext.hadoopConfiguration) should not be a[LocalFs]
   }
+
+  private def put(path: String, lines: String*): String = {
+    Files.createDirectories(Paths.get(path).getParent)
+    Files.write(Paths.get(path), lines.mkString("\n").getBytes(StandardCharsets.UTF_8))
+    path
+  }
+
+  private def sparkCsv(path: String): DataFrame = spark.read.option("header", "true").csv(path)
+
+  test("LocalFs.csv reads the schema Spark infers, and the same rows") {
+    val dir = tmpDir("localfs-csv")
+    val quirky = put(s"$dir/quirky.csv",
+      "\uFEFFCode Status,\"Name, Full\",,dup,Dup,dup",
+      "",
+      "a,\"x, y\",1,2,3,4",
+      "b,,\"\",5",
+      "c,z,7,8,9,10,11")
+    LocalFs.csv(spark, quirky).schema shouldBe sparkCsv(quirky).schema
+    LocalFs.csv(spark, quirky).collect() shouldBe sparkCsv(quirky).collect()
+
+    // a glob whose files share a header reads it; one whose headers
+    // differ keeps inference, which takes the largest file's header
+    put(s"$dir/same/one.csv", "k,v", "1,a")
+    put(s"$dir/same/two.csv", "k,v", "2,b", "3,c")
+    put(s"$dir/drift/small.csv", "k,v", "1,a")
+    put(s"$dir/drift/large.csv", "key,value", "2,b", "3,c", "4,d")
+    put(s"$dir/empty/e.csv")
+    for (glob <- Seq(s"$dir/same/*.csv", s"$dir/drift/*.csv", s"$dir/empty/*.csv")) {
+      LocalFs.csv(spark, glob).schema shouldBe sparkCsv(glob).schema
+      LocalFs.csv(spark, glob).collect().sortBy(_.toString) shouldBe
+        sparkCsv(glob).collect().sortBy(_.toString)
+    }
+    sparkCsv(s"$dir/drift/*.csv").columns.toSeq shouldBe Seq("key", "value")
+    // a missing path fails as Spark's read does
+    val missing = intercept[org.apache.spark.sql.AnalysisException](sparkCsv(s"$dir/absent.csv"))
+    intercept[org.apache.spark.sql.AnalysisException](LocalFs.csv(spark, s"$dir/absent.csv"))
+      .getCondition shouldBe missing.getCondition
+  }
+
+  test("LocalFs.csvRows parses a control file as Spark's header read does") {
+    val path = put(s"${tmpDir("localfs-rows")}/cfg.csv",
+      "a,b,,a",
+      "1,\"x, y\",3,4",
+      "",
+      "5,,\"\"",
+      "  ",
+      "6,7,8,9,10")
+    val want = sparkCsv(path)
+    want.columns.toSeq shouldBe Seq("a0", "b", "_c2", "a3")
+    LocalFs.csvRows(spark, path) shouldBe
+      want.collect().toSeq.map(r => want.columns.map(c => c -> r.getAs[String](c)).toMap)
+  }
+
+  test("LocalFs.parquet reads the schema Spark infers, and falls back where it must") {
+    val dir = tmpDir("localfs-parquet")
+    rows.withColumn("d", lit(1.5)).write.parquet(s"$dir/multi")
+    spark.emptyDataset[(Long, String)].toDF("k", "v").write.parquet(s"$dir/empty")
+    rows.write.partitionBy("v").parquet(s"$dir/partitioned")
+    for (t <- Seq("multi", "empty", "partitioned")) {
+      LocalFs.parquet(spark, s"$dir/$t").schema shouldBe spark.read.parquet(s"$dir/$t").schema
+      LocalFs.parquet(spark, s"$dir/$t").count() shouldBe spark.read.parquet(s"$dir/$t").count()
+    }
+    LocalFs.parquet(spark, s"$dir/partitioned").columns.toSeq shouldBe Seq("k", "v")
+  }
 }

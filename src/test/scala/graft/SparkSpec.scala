@@ -4,16 +4,15 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.matchers.should.Matchers
 
-/** Shared local SparkSession for specs. One session per JVM (the test
-  * run is forked once), small shuffle parallelism for tiny data.
+/** Shared local SparkSession for specs: the session shape every main
+  * runs ([[LocalSession]] on 4 cores: engine extensions, UTC, ANSI off,
+  * AQE on), so plan and result pins hold for the plans the engine
+  * ships. One session per JVM (the test run is forked once). A spec
+  * that tests ANSI behaviour sets it inside that test and restores it.
   */
 object SparkSpec {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
+  lazy val spark: SparkSession = LocalSession.builder("4")
     .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
     .config("spark.sql.warehouse.dir",
       java.nio.file.Files.createTempDirectory("graft-wh").toString)
     .getOrCreate()

@@ -16,8 +16,14 @@ too. `--tsv FILE` writes `name<TAB>rows<TAB>hash` per Spark result
 (full sha256; `-` for a result that could not be read): diff two such
 files, e.g. from two checkouts' Verify outputs, to show the results are
 byte-identical.
+
+DuckDB runs with a memory limit of half the host's memory and spills
+into a temporary directory under /tmp, bounded to a quarter of that
+disk's free space and removed at exit (its defaults are 80% of memory
+and `.tmp` in the working directory). An oracle that does not fit in
+both is reported as NOT_CHECKED: not a pass, but not a wrong result.
 """
-import sys, os, json, glob, hashlib, argparse
+import sys, os, json, glob, hashlib, argparse, shutil, tempfile
 import duckdb
 
 TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
@@ -85,7 +91,28 @@ def py_oracle_q119(con, sf_dir):
 PY_ORACLES = {"q119_compressibility": py_oracle_q119}
 
 
+def duckdb_limits(tmp):
+    """Connection settings that bound DuckDB's memory and its spill."""
+    mem = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return {"memory_limit": f"{mem // 2 // 2**20}MB", "temp_directory": tmp,
+            "max_temp_directory_size": f"{shutil.disk_usage(tmp).free // 4 // 2**20}MB"}
+
+
+def does_not_fit(e):
+    """An error from exceeding the memory limit or the spill bound."""
+    return isinstance(e, duckdb.OutOfMemoryException) or (
+        isinstance(e, duckdb.IOException) and "temp" in str(e).lower())
+
+
 def main(sf_dir, out_dir, tsv=None):
+    tmp = tempfile.mkdtemp(prefix="local_verify-duckdb-", dir="/tmp")
+    try:
+        return check(sf_dir, out_dir, tsv, duckdb_limits(tmp))
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)
+
+
+def check(sf_dir, out_dir, tsv, limits):
     oracle = json.load(open(os.path.join(out_dir, "oracle_sql.json")))
     results = {}
     spark_side = {}  # name -> (rows, sha256) of the Spark result alone
@@ -101,7 +128,7 @@ def main(sf_dir, out_dir, tsv=None):
         if not glob.glob(os.path.join(res_path, "*.parquet")):
             results[name] = "MISSING_RESULT"
             continue
-        con = duckdb.connect()
+        con = duckdb.connect(config=limits)
         for t in TABLES:
             p = os.path.join(sf_dir, f"{t}.parquet")
             if os.path.exists(p):
@@ -112,7 +139,9 @@ def main(sf_dir, out_dir, tsv=None):
                    else con.sql(oracle[name]))
             o_cols, o_t, o_n, o_h, o_rows = canon(con, rel)
         except Exception as e:
-            results[name] = f"ERROR: {e}"
+            results[name] = (f"NOT_CHECKED (did not fit: {e})" if does_not_fit(e)
+                             else f"ERROR: {e}")
+            con.close()
             continue
         if s_cols != o_cols:
             results[name] = f"SCHEMA_MISMATCH spark={s_cols} oracle={o_cols}"
@@ -135,21 +164,24 @@ def main(sf_dir, out_dir, tsv=None):
         p = os.path.join(out_dir, d)
         if os.path.isdir(p) and d not in oracle and d not in PY_ORACLES:
             try:
-                con = duckdb.connect()
+                con = duckdb.connect(config=limits)
                 n = spark_hash(con, d, p)[2]
                 results[d] = f"ROWS_ONLY rows={n}" + (" (EMPTY!)" if n == 0 else "")
                 con.close()
             except Exception as e:
                 results[d] = f"ROWS_ONLY ERROR: {e}"
     ok = sum(1 for v in results.values() if v.startswith("OK"))
+    unchecked = sum(1 for v in results.values() if v.startswith("NOT_CHECKED"))
     n_oracle = len(set(oracle) | set(PY_ORACLES))
     def passed(v):
         return v.startswith("OK") or ("ROWS_ONLY rows" in v and "EMPTY" not in v)
     for k, v in results.items():
         side = spark_side.get(k)
         tag = f" spark={side[1][:16]}" if side else ""
-        print(f"{'PASS' if passed(v) else 'FAIL':4} {k}: {v}{tag}")
-    print(f"\n{ok}/{n_oracle} oracle-checked OK, {len(results)} total")
+        label = "PASS" if passed(v) else "SKIP" if v.startswith("NOT_CHECKED") else "FAIL"
+        print(f"{label:4} {k}: {v}{tag}")
+    print(f"\n{ok}/{n_oracle} oracle-checked OK, {unchecked} not checked "
+          f"(oracle did not fit), {len(results)} total")
     if tsv:
         with open(tsv, "w") as f:
             for k in sorted(results):
