@@ -33,7 +33,8 @@ import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType, S
   * Dense-array contract (the graft_dot_* convention): element values
   * are assumed non-null — every producer in this engine is a quant /
   * projection map over non-null input; a null ARRAY argument yields
-  * null (nullIntolerant).
+  * null (nullIntolerant). [[PqAdc]], whose LUT indexing would read a
+  * wrong entry on a malformed input, checks its inputs and throws.
   */
 object AnnKernels {
 
@@ -462,12 +463,30 @@ case class PqAdc(left: Expression, right: Expression)
         s"$prettyName requires (ARRAY<BIGINT>, ARRAY<INT>)")
     }
 
+  /** Fails, rather than returning a number, on a malformed input: no
+    * codes, a LUT whose length is not a multiple of the code count, a
+    * code outside `[0, K)`, or a null element in either array. */
   def kernel(lut: ArrayData, codes: ArrayData): Long = {
     val m = codes.numElements()
-    val k = lut.numElements() / m
-    var acc = 0L
+    val n = lut.numElements()
+    if (m == 0 || n % m != 0) throw new IllegalArgumentException(
+      s"$prettyName: LUT length $n is not a multiple of the code count $m (> 0)")
+    val k = n / m
     var i = 0
-    while (i < m) { acc += lut.getLong(i * k + codes.getInt(i)); i += 1 }
+    while (i < n) {
+      if (lut.isNullAt(i)) throw new IllegalArgumentException(s"$prettyName: null LUT entry $i")
+      i += 1
+    }
+    var acc = 0L
+    i = 0
+    while (i < m) {
+      if (codes.isNullAt(i)) throw new IllegalArgumentException(s"$prettyName: null code $i")
+      val c = codes.getInt(i)
+      if (c < 0 || c >= k) throw new IllegalArgumentException(
+        s"$prettyName: code $c at $i is outside [0, $k)")
+      acc += lut.getLong(i * k + c)
+      i += 1
+    }
     acc
   }
 

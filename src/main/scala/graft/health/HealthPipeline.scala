@@ -4,10 +4,11 @@ import java.sql.Timestamp
 import java.time.LocalDate
 
 import graft.ingest._
-import graft.ops.LocalFs
+import graft.ops.{Fingerprint, LocalFs, Scd2Merge, TableSwap}
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** End-to-end reference medallion: init → config-driven ingestion
   * (both hospitals) → claims/CPT bronze loads → silver (type-1 dims +
@@ -32,6 +33,36 @@ import org.apache.spark.sql.functions._
   * [[graft.ops.LocalFs.csv]] (the header line), landing JSON through
   * the schema [[graft.ingest.LandingZone]] records beside it, and the
   * load config parsed on the driver ([[graft.ingest.LoadConfig]]).
+  *
+  * A daily run skips the work its inputs did not change. Each skip
+  * compares a content fingerprint ([[graft.ops.Fingerprint]]) with a
+  * marker recorded beside the output when that output was written, so
+  * the marker commits with the data it describes:
+  *  - Landing: a full-load table whose source file is unchanged keeps
+  *    its landing dir, unarchived ([[graft.ingest.IngestionRunner]];
+  *    the `_source` marker of the landing dir).
+  *  - Bronze: [[loadBronzeClaims]] and [[loadBronzeCpt]] skip when
+  *    their CSV files are unchanged (`_source` in the bronze dir,
+  *    written after the write commits).
+  *  - Type-1 dims: silver departments and providers skip when their
+  *    landing inputs are unchanged (`_inputs`, written into the swap
+  *    temp dir before publish). A dim carries no run timestamp, so
+  *    the same inputs rebuild the same rows.
+  *  - SCD2 entities: a merge skips only at a proven fixpoint. Its
+  *    `_inputs` marker is written only when the merge inserted nothing
+  *    and closed nothing, and a merge that changes no row publishes
+  *    its target unchanged (every row carried as it was). Merging the
+  *    same source into that same target again therefore changes no
+  *    row either: skipping it is a no-op. `claims` never gets there:
+  *    its duplicate-key source closes a row per key on every run.
+  * A silver table's inputs are the `_source` markers of the bronze
+  * tables it reads and the schema of the frame it is built from; a
+  * flip of `spark.graft.decimalMoney` changes that schema, so a skip
+  * never hides the merge's refusal of a type flip. An input without a
+  * marker (a JDBC or ORC landing, or an incremental delta) has no
+  * known content, so its table is always rebuilt. Gold is always
+  * rebuilt. Markers record inputs, not code: after a change to how a
+  * table is derived, delete its markers to rebuild it.
   *
   * @param fixturesRoot source data root with the reference layout:
   *                     emr/hospital-a and emr/hospital-b per-table
@@ -79,26 +110,29 @@ final class HealthPipeline(
     * previous run's crash interrupted between delete and rename
     * (graft.ops.TableSwap contract). */
   private def readRecovered(path: String): DataFrame = {
-    graft.ops.TableSwap.recover(fs, new Path(path), graft.ops.TableSwap.tmpPath(path))
+    TableSwap.recover(fs, new Path(path), TableSwap.tmpPath(path))
     LocalFs.parquet(spark, path)
   }
 
   /** [[readRecovered]] for a table that may not exist yet. */
   private def recovered(path: String): Option[DataFrame] = {
-    graft.ops.TableSwap.recover(fs, new Path(path), graft.ops.TableSwap.tmpPath(path))
+    TableSwap.recover(fs, new Path(path), TableSwap.tmpPath(path))
     if (exists(path)) Some(LocalFs.parquet(spark, path)) else None
   }
 
   /** Write-temp-then-swap (atomic table replace without reading and
     * overwriting the same files in one job); recovers an interrupted
     * prior swap BEFORE overwriting the temp dir — that temp may be the
-    * only surviving copy of the table. */
-  private def writeSwap(df: DataFrame, path: String): Unit = {
-    val tmp = graft.ops.TableSwap.tmpPath(path)
+    * only surviving copy of the table. `inputs`, evaluated after the
+    * write, is recorded as the temp dir's `_inputs` marker before
+    * publish. */
+  private def writeSwap(df: DataFrame, path: String, inputs: => Option[String] = None): Unit = {
+    val tmp = TableSwap.tmpPath(path)
     val dst = new Path(path)
-    graft.ops.TableSwap.recover(fs, dst, tmp)
+    TableSwap.recover(fs, dst, tmp)
     LocalFs.write(df).mode("overwrite").parquet(tmp.toString)
-    graft.ops.TableSwap.publish(fs, dst, tmp)
+    inputs.foreach(Fingerprint.write(fs, tmp.toString, Fingerprint.InputsMarker, _))
+    TableSwap.publish(fs, dst, tmp)
   }
 
   /** Reference load config, with the hospital-B patients watermark
@@ -115,93 +149,160 @@ final class HealthPipeline(
     new IngestionRunner(spark, new CsvSource(dir), landing, audit, logger, clock)
       .run(config(), datasource, runDate)
 
+  /** Load a bronze table into its dir unless the dir's `_source`
+    * marker already records `source`, the fingerprint of the files the
+    * load reads; the marker is written after the load commits. */
+  private def loadBronze(table: String, source: Option[String])(load: String => Unit): Unit = {
+    val path = bronzePath(table)
+    if (source.isDefined && source == Fingerprint.read(fs, path, Fingerprint.SourceMarker))
+      logger.info("Source files unchanged since the last load; bronze kept", "skip", table)
+    else {
+      load(path)
+      source.foreach(Fingerprint.write(fs, path, Fingerprint.SourceMarker, _))
+    }
+  }
+
   /** Bronze claims: both hospital files in one scan, datasource tagged
     * from the file path, exact-duplicate rows dropped
-    * (claims.py:16-25). */
+    * (claims.py:16-25). The fingerprint labels each file with its tag,
+    * since the tag is all of its path that reaches the rows. */
   def loadBronzeClaims(): Unit = {
-    val df = LocalFs.csv(spark, s"$fixturesRoot/claims/*.csv")
-      .withColumn("datasource",
-        when(input_file_name().contains("hospital2"), "hosb")
-          .when(input_file_name().contains("hospital1"), "hosa")
-          .otherwise("None"))
-      .dropDuplicates()
-    LocalFs.write(df).mode("overwrite").parquet(bronzePath("claims"))
+    val glob = s"$fixturesRoot/claims/*.csv"
+    val sfs = LocalFs.fsOf(spark, glob)
+    val files = Option(sfs.globStatus(new Path(glob))).toSeq.flatten.map(_.getPath).sortBy(_.getName)
+    def tag(file: String) =
+      HealthPipeline.ClaimsTags.collectFirst { case (s, t) if file.contains(s) => t }.getOrElse("None")
+    loadBronze("claims",
+        Fingerprint.files(sfs, files.map(p => s"${tag(p.toString)}/${p.getName}" -> p))) { path =>
+      val file = input_file_name()
+      val df = LocalFs.csv(spark, glob)
+        .withColumn("datasource", HealthPipeline.ClaimsTags.foldRight(lit("None")) {
+          case ((s, t), otherwise) => when(file.contains(s), t).otherwise(otherwise)
+        })
+        .dropDuplicates()
+      LocalFs.write(df).mode("overwrite").parquet(path)
+    }
   }
 
   /** Bronze CPT codes: header CSV + the column rename fold
     * (cpt_codes.py:15-20). */
   def loadBronzeCpt(): Unit = {
-    val raw = LocalFs.csv(spark, s"$fixturesRoot/cptcodes/cptcodes.csv")
-    val renamed = raw.columns.foldLeft(raw)((d, c) =>
-      d.withColumnRenamed(c, c.replace(" ", "_").toLowerCase))
-    LocalFs.write(renamed).mode("overwrite").parquet(bronzePath("cpt_codes"))
+    val csv = s"$fixturesRoot/cptcodes/cptcodes.csv"
+    loadBronze("cpt_codes",
+        Fingerprint.files(LocalFs.fsOf(spark, csv), Seq("cptcodes.csv" -> new Path(csv)))) { path =>
+      val raw = LocalFs.csv(spark, csv)
+      val renamed = raw.columns.foldLeft(raw)((d, c) =>
+        d.withColumnRenamed(c, c.replace(" ", "_").toLowerCase))
+      LocalFs.write(renamed).mode("overwrite").parquet(path)
+    }
   }
+
+  /** The landing table a bronze name reads: the EMR tables carry a
+    * hospital suffix (_ha/_hb, per bronze.sql:3-63 naming). */
+  private def landed(name: String): Option[(String, String)] =
+    if (name.endsWith("_ha")) Some(("hospital_a_db", name.stripSuffix("_ha")))
+    else if (name.endsWith("_hb")) Some(("hospital_b_db", name.stripSuffix("_hb")))
+    else None
+
+  private def bronzeDir(name: String): String =
+    landed(name).fold(bronzePath(name)) { case (ds, t) => landing.tableDir(ds, t) }
 
   /** Bronze view of this run's landed data: landing JSON for the EMR
-    * tables (suffix _ha/_hb per bronze.sql:3-63 naming), parquet for
-    * claims/cpt. A table that landed nothing this run is simply absent
-    * — like a bronze external table over an empty prefix. */
-  private def bronzeTable(name: String): Option[DataFrame] = name match {
-    case _ if name.endsWith("_ha") =>
-      val t = name.stripSuffix("_ha")
-      if (exists(landing.tableDir("hospital_a_db", t)))
-        Some(landing.read("hospital_a_db", t))
-      else None
-    case _ if name.endsWith("_hb") =>
-      val t = name.stripSuffix("_hb")
-      if (exists(landing.tableDir("hospital_b_db", t)))
-        Some(landing.read("hospital_b_db", t))
-      else None
-    case _ =>
-      if (exists(bronzePath(name))) Some(LocalFs.parquet(spark, bronzePath(name))) else None
+    * tables, parquet for claims/cpt. A table that landed nothing this
+    * run is simply absent — like a bronze external table over an empty
+    * prefix. */
+  private def bronzeTable(name: String): Option[DataFrame] =
+    if (!exists(bronzeDir(name))) None
+    else Some(landed(name).fold(LocalFs.parquet(spark, bronzePath(name))) {
+      case (ds, t) => landing.read(ds, t)
+    })
+
+  /** The fingerprint of what silver `table` is built from: the
+    * `_source` markers of the bronze tables present and the schema of
+    * the frame it is built from. None when an input has no marker. */
+  private def inputsOf(table: String, bronze: Seq[String], schema: StructType): Option[String] = {
+    val sources = bronze.map(b =>
+      Fingerprint.read(fs, bronzeDir(b), Fingerprint.SourceMarker).map(s"$b=" + _))
+    if (sources.exists(_.isEmpty)) None
+    else Some(Fingerprint.of(table +: sources.flatten :+ schema.json))
   }
 
+  /** Whether silver `table`, after any interrupted swap is finished,
+    * records `inputs` in its `_inputs` marker; a skip is logged. */
+  private def unchanged(table: String, inputs: Option[String]): Boolean = {
+    val path = silverPath(table)
+    TableSwap.recover(fs, new Path(path), TableSwap.tmpPath(path))
+    val same = inputs.isDefined && inputs == Fingerprint.read(fs, path, Fingerprint.InputsMarker)
+    if (same) logger.info("Inputs unchanged since the last build; silver kept", "skip", table)
+    same
+  }
+
+  /** The current silver table of an SCD2 entity, or an empty one on
+    * the first run. */
+  private def mergeTarget(e: HealthSilver.Entity, staged: DataFrame): DataFrame =
+    recovered(silverPath(e.table)) match {
+      case Some(tgt) =>
+        // Refuse a type flip over standing history: merging decimal
+        // staging into float silver (or vice versa, after toggling
+        // spark.graft.decimalMoney mid-history) would NOT fail — the
+        // SCD2 union/join would silently widen back to double and
+        // void the exact-cents contract. Type drift is a migration,
+        // not a merge.
+        val drift = staged.schema
+          .filter(f => tgt.columns.contains(f.name))
+          .filter(f => tgt.schema(f.name).dataType != f.dataType)
+        if (drift.nonEmpty) throw new IllegalStateException(
+          s"silver.${e.table}: staged column types differ from the existing table " +
+            drift.map(f => s"${f.name}: ${tgt.schema(f.name).dataType.simpleString} -> " +
+              f.dataType.simpleString).mkString("(", ", ", ")") +
+            " — did spark.graft.decimalMoney flip mid-history? Migrate explicitly.")
+        tgt
+      case None => staged
+        .select((e.keyCol +: e.compareCols).map(col): _*)
+        .withColumn("inserted_date", lit(null).cast("timestamp"))
+        .withColumn("modified_date", lit(null).cast("timestamp"))
+        .withColumn("is_current", lit(true))
+        .limit(0)
+    }
+
   /** Silver: reload the two type-1 dims and run each SCD2 merge over
-    * whatever bronze data is present (silver.sql, whole file). The
+    * whatever bronze data is present (silver.sql, whole file), each
+    * skipped when its inputs are unchanged (see the class notes). The
     * seven tables are independent, so they are built concurrently
     * ([[graft.ops.Concurrently]]); one entity's failure does not stop
     * the others — they all finish and publish, then the stage fails
     * with the first failure in entity order. */
   def runSilver(): Unit = {
     val ts = clock()
-    val dims = Seq(
-      () => for {
-        ha <- bronzeTable("departments_ha")
-        hb <- bronzeTable("departments_hb")
-      } writeSwap(HealthSilver.departments(ha, hb), silverPath("departments")),
-      () => for {
-        ha <- bronzeTable("providers_ha")
-        hb <- bronzeTable("providers_hb")
-      } writeSwap(HealthSilver.providers(ha, hb), silverPath("providers")))
+    def dim(table: String, build: (DataFrame, DataFrame) => DataFrame) = () => for {
+      ha <- bronzeTable(s"${table}_ha")
+      hb <- bronzeTable(s"${table}_hb")
+    } {
+      val df = build(ha, hb)
+      val inputs = inputsOf(table, Seq(s"${table}_ha", s"${table}_hb"), df.schema)
+      if (!unchanged(table, inputs)) writeSwap(df, silverPath(table), inputs)
+    }
+    val dims = Seq(dim("departments", HealthSilver.departments), dim("providers", HealthSilver.providers))
     val merges = scd2Entities.map { e => () =>
       val bronze = e.bronzeTables.flatMap(t => bronzeTable(t).map(t -> _)).toMap
       if (bronze.nonEmpty) {
         val staged = e.stage(bronze)
-        val target = recovered(silverPath(e.table)) match {
-          case Some(tgt) =>
-            // Refuse a type flip over standing history: merging decimal
-            // staging into float silver (or vice versa, after toggling
-            // spark.graft.decimalMoney mid-history) would NOT fail — the
-            // SCD2 union/join would silently widen back to double and
-            // void the exact-cents contract. Type drift is a migration,
-            // not a merge (Warehouse.appendEvolving's rule).
-            val drift = staged.schema
-              .filter(f => tgt.columns.contains(f.name))
-              .filter(f => tgt.schema(f.name).dataType != f.dataType)
-            if (drift.nonEmpty) throw new IllegalStateException(
-              s"silver.${e.table}: staged column types differ from the existing table " +
-                drift.map(f => s"${f.name}: ${tgt.schema(f.name).dataType.simpleString} -> " +
-                  f.dataType.simpleString).mkString("(", ", ", ")") +
-                " — did spark.graft.decimalMoney flip mid-history? Migrate explicitly.")
-            tgt
-          case None => staged
-            .select((e.keyCol +: e.compareCols).map(col): _*)
-            .withColumn("inserted_date", lit(null).cast("timestamp"))
-            .withColumn("modified_date", lit(null).cast("timestamp"))
-            .withColumn("is_current", lit(true))
-            .limit(0)
+        val inputs = inputsOf(e.table, e.bronzeTables.filter(bronze.contains), staged.schema)
+        if (!unchanged(e.table, inputs)) {
+          // rows this merge inserted or closed: exactly those stamped
+          // with its clock (a carried row stamped by an earlier merge at
+          // the same instant counts too, which only forgoes a skip)
+          val changes = Observation(s"silver_${e.table}")
+          val stamped = col(Scd2Merge.InsertedDate) <=> lit(ts) ||
+            (!col(Scd2Merge.IsCurrent) && col(Scd2Merge.ModifiedDate) <=> lit(ts))
+          val merged = e.merge(lit(ts))(mergeTarget(e, staged), staged)
+            .observe(changes, count(when(stamped, 1)).as("changed"))
+          writeSwap(merged, silverPath(e.table), {
+            val changed = changes.get("changed").asInstanceOf[Long]
+            logger.info(s"Merged: $changed row(s) inserted or closed", "merge", e.table)
+            if (changed == 0) inputs else None
+          })
         }
-        writeSwap(e.merge(lit(ts))(target, staged), silverPath(e.table))
       }
     }
     graft.ops.Concurrently.run(spark)(dims ++ merges)
@@ -250,4 +351,8 @@ final class HealthPipeline(
 object HealthPipeline {
   /** Session conf key for the opt-in decimal monetary mode. */
   val DecimalMoneyKey = "spark.graft.decimalMoney"
+
+  /** The bronze claims tag of a file whose path contains the first
+    * string, in order; "None" when none matches (claims.py:19-23). */
+  private val ClaimsTags = Seq("hospital2" -> "hosb", "hospital1" -> "hosa")
 }

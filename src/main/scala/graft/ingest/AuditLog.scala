@@ -19,8 +19,8 @@ import org.apache.spark.sql.functions._
   * directory and can clobber each other's commit.
   *
   * [[all]] reads the log with the schema of its first file's footer
-  * ([[LocalFs.parquet]]), so a watermark lookup runs its aggregate
-  * job only, not a schema-inference job before it.
+  * ([[LocalFs.parquet]]), so a watermark lookup runs its scan job
+  * only, not a schema-inference job before it.
   */
 final class AuditLog(spark: SparkSession, path: String) {
   import spark.implicits._
@@ -40,17 +40,19 @@ final class AuditLog(spark: SparkSession, path: String) {
     else spark.emptyDataset[AuditRecord].toDF()
 
   /** J5/A6: latest successful load watermark of every table of
-    * `datasource` that has one, in one grouped aggregate. A table never
-    * loaded successfully is absent (its watermark is
-    * [[DefaultWatermark]]). */
+    * `datasource` that has one. A table never loaded successfully is
+    * absent (its watermark is [[DefaultWatermark]]). One filtered scan
+    * of `(tablename, load_timestamp)`, reduced to a per-table max on
+    * the driver: the log holds one row per table per run, and a
+    * grouped aggregate would run its map stage as a second job. */
   def latestWatermarks(datasource: String): Map[String, Timestamp] =
     all()
       .filter(col("data_source") === datasource && col("status") === "SUCCESS")
-      .groupBy(col("tablename")).agg(max(col("load_timestamp")))
+      .select(col("tablename"), col("load_timestamp"))
       .as[(String, Option[Timestamp])]
       .collect()
       .collect { case (table, Some(ts)) => table -> ts }
-      .toMap
+      .groupMapReduce(_._1)(_._2)((a, b) => if (a.after(b)) a else b)
 
   /** J5/A6: latest successful load watermark for (datasource, table). */
   def latestWatermark(datasource: String, table: String): Timestamp =

@@ -22,6 +22,15 @@ final case class TableLoadResult(
   * landing zone → one audit row. A failing table is audited FAILED and
   * does not stop the run.
   *
+  * A full-load table whose source fingerprint
+  * ([[SourceConnector.fingerprint]]) equals the one recorded in its
+  * landing dir ([[LandingZone.landedSource]]) is skipped before the
+  * archive: the snapshot it would land is already there. A skip is a
+  * SUCCESS audit row with `record_count` 0 plus a `skip` event in
+  * `pipeline_logs`. Incremental tables never consult a fingerprint
+  * (their watermark already names what is new), and a source whose
+  * fingerprint is None never skips.
+  *
   * `run` loads a datasource's tables concurrently
   * ([[graft.ops.Concurrently]]: each load is a few small jobs, so side
   * by side they share the slots instead of queueing) and then appends
@@ -65,44 +74,53 @@ final class IngestionRunner(
 
   /** Archive, extract and land one table (an incremental one past
     * `since`, evaluated only then, inside the table's failure
-    * isolation); returns its outcome and the audit row to append. */
+    * isolation), unless it is a full load whose source is unchanged
+    * since it was landed; returns its outcome and the audit row to
+    * append. */
   private def extract(entry: LoadConfigEntry, runDate: LocalDate, since: => Timestamp)
       : (TableLoadResult, AuditRecord) = {
     val table = entry.tablename
+    def outcome(status: String, n: Long, error: Option[String]) =
+      (TableLoadResult(table, status, n, error),
+        AuditRecord(entry.datasource, table, entry.loadtype, n, clock(), status))
     try {
-      val archived = landing.archive(entry.datasource, table, runDate)
-      if (archived == 0) logger.info("No existing files to archive", "archive", table)
-      else logger.info(s"Archived $archived existing file(s)", "archive", table)
-
-      logger.info("Starting extraction", "extract", table)
-      val df =
-        if (incremental(entry)) source.readIncremental(spark, table, entry.watermark, since)
-        else source.read(spark, table)
-
-      // ONE source scan: the row count rides the write itself
-      // (observe/CollectMetrics — ops/Observed) instead of a separate
-      // df.count() pass. The write is STAGED and only promoted when
-      // non-empty, so the "no file for an empty extract" contract
-      // holds in every crash interleaving (a crash before publish
-      // leaves the table dir untouched).
-      val (observed, obs) =
-        graft.ops.Observed.rowStats(df, s"ingest_${entry.datasource}_$table")
-      landing.writeStaged(observed, entry.datasource, table)
-      val n = graft.ops.Observed.stageMetrics(obs)("n_rows")
-      if (n == 0) {
-        landing.discardStaged(entry.datasource, table)
-        logger.log("WARNING", "No new records found", "extract", table)
+      val fingerprint = if (incremental(entry)) None else source.fingerprint(spark, table)
+      if (fingerprint.isDefined && fingerprint == landing.landedSource(entry.datasource, table)) {
+        logger.info("Source unchanged since it was landed; landing kept", "skip", table)
+        outcome("SUCCESS", 0L, None)
       } else {
-        landing.publishStaged(entry.datasource, table)
-        logger.info(s"Data written to landing zone ($n rows)", "write", table)
+        val archived = landing.archive(entry.datasource, table, runDate)
+        if (archived == 0) logger.info("No existing files to archive", "archive", table)
+        else logger.info(s"Archived $archived existing file(s)", "archive", table)
+
+        logger.info("Starting extraction", "extract", table)
+        val df =
+          if (incremental(entry)) source.readIncremental(spark, table, entry.watermark, since)
+          else source.read(spark, table)
+
+        // ONE source scan: the row count rides the write itself
+        // (observe/CollectMetrics — ops/Observed) instead of a separate
+        // df.count() pass. The write is STAGED and only promoted when
+        // non-empty, so the "no file for an empty extract" contract
+        // holds in every crash interleaving (a crash before publish
+        // leaves the table dir untouched).
+        val (observed, obs) =
+          graft.ops.Observed.rowStats(df, s"ingest_${entry.datasource}_$table")
+        landing.writeStaged(observed, entry.datasource, table, fingerprint)
+        val n = graft.ops.Observed.stageMetrics(obs)("n_rows")
+        if (n == 0) {
+          landing.discardStaged(entry.datasource, table)
+          logger.log("WARNING", "No new records found", "extract", table)
+        } else {
+          landing.publishStaged(entry.datasource, table)
+          logger.info(s"Data written to landing zone ($n rows)", "write", table)
+        }
+        outcome("SUCCESS", n, None)
       }
-      (TableLoadResult(table, "SUCCESS", n, None),
-        AuditRecord(entry.datasource, table, entry.loadtype, n, clock(), "SUCCESS"))
     } catch {
       case e: Exception =>
         logger.error("Extraction failed", "extract", table, e.toString)
-        (TableLoadResult(table, "FAILED", 0L, Some(e.toString)),
-          AuditRecord(entry.datasource, table, entry.loadtype, 0L, clock(), "FAILED"))
+        outcome("FAILED", 0L, Some(e.toString))
     }
   }
 

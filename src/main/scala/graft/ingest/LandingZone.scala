@@ -3,7 +3,7 @@ package graft.ingest
 import java.nio.charset.StandardCharsets
 import java.time.LocalDate
 import java.time.format.DateTimeFormatter
-import graft.ops.LocalFs
+import graft.ops.{Fingerprint, LocalFs}
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types.{DataType, StringType, StructField, StructType}
@@ -32,6 +32,14 @@ import org.apache.spark.sql.types.{DataType, StringType, StructField, StructType
   * dir without `_schema.json` (a landing with a typed column, from a
   * JDBC or ORC source, or one written before schemas were recorded)
   * is read with inference.
+  *
+  * A staged extract can also record where it came from: `_source`
+  * holds the source's fingerprint ([[SourceConnector.fingerprint]]),
+  * written into the staged dir before publish, so it moves with the
+  * dir as `_schema.json` does and names exactly the files beside it.
+  * [[landedSource]] reads it back. A full-load snapshot whose source
+  * still has that fingerprint stays in place: the loader neither
+  * archives nor re-lands it ([[IngestionRunner]]).
   */
 final class LandingZone(spark: SparkSession, root: String) {
 
@@ -42,8 +50,8 @@ final class LandingZone(spark: SparkSession, root: String) {
   private def schemaFile(dir: String) = new Path(dir, "_schema.json")
 
   /** JSON-lines write of `df` into `dir`, recording its schema when
-    * every column is a string. */
-  private def land(df: DataFrame, dir: String): Unit = {
+    * every column is a string, and its source's fingerprint if given. */
+  private def land(df: DataFrame, dir: String, source: Option[String] = None): Unit = {
     LocalFs.write(df).mode("overwrite")
       .option("timestampFormat", "yyyy-MM-dd'T'HH:mm:ss.SSSXXX")
       .json(dir)
@@ -52,6 +60,7 @@ final class LandingZone(spark: SparkSession, root: String) {
       val out = fs.create(schemaFile(dir), true)
       try out.write(schema.json.getBytes(StandardCharsets.UTF_8)) finally out.close()
     }
+    source.foreach(Fingerprint.write(fs, dir, Fingerprint.SourceMarker, _))
   }
 
   /** The schema recorded in a landing dir, if any. */
@@ -80,8 +89,13 @@ final class LandingZone(spark: SparkSession, root: String) {
   def stagedDir(datasource: String, table: String): String =
     tableDir(datasource, table) + "__staged"
 
-  def writeStaged(df: DataFrame, datasource: String, table: String): Unit =
-    land(df, stagedDir(datasource, table))
+  def writeStaged(df: DataFrame, datasource: String, table: String,
+      source: Option[String]): Unit =
+    land(df, stagedDir(datasource, table), source)
+
+  /** The source fingerprint recorded in a table's landing dir, if any. */
+  def landedSource(datasource: String, table: String): Option[String] =
+    Fingerprint.read(fs, tableDir(datasource, table), Fingerprint.SourceMarker)
 
   /** Promote a non-empty staged extract into the table dir. */
   def publishStaged(datasource: String, table: String): Unit =

@@ -12,6 +12,12 @@ import org.apache.spark.sql.functions._
   * pushes it into the reader (PushedFilters), which is the same
   * engine-side pruning the JDBC sub-select achieves; a real JDBC impl
   * would get it via the `dbtable` sub-select automatically.
+  *
+  * [[fingerprint]] lets the loader recognize a full-load snapshot it
+  * has already landed: a source that can name its content returns a
+  * digest of it, and a table whose digest matches the one recorded in
+  * its landing dir is not re-landed ([[IngestionRunner]]). The default
+  * is None: such a source is always re-landed.
   */
 trait SourceConnector {
 
@@ -22,16 +28,29 @@ trait SourceConnector {
   def readIncremental(
       spark: SparkSession, table: String, watermarkCol: String, since: Timestamp): DataFrame =
     read(spark, table).filter(col(watermarkCol) > lit(since))
+
+  /** A digest of `table`'s full content, computed without a Spark job,
+    * or None when the source cannot name it. Equal digests must mean
+    * that [[read]] returns the same rows. */
+  def fingerprint(spark: SparkSession, table: String): Option[String] = None
 }
 
 /** Header-CSV source — stringly-typed like the reference's claims/CPT
   * reads (S2, claims.py:16, cpt_codes.py:15: `header=True`, no schema).
   * The all-string schema comes from the header line, read on the
   * driver ([[graft.ops.LocalFs.csv]]), so a read starts no Spark job.
+  * Its fingerprint is a SHA-256 of the file's bytes, read on the
+  * driver: the full-load tables it serves are small snapshots.
   */
 final class CsvSource(dir: String) extends SourceConnector {
+  private def path(table: String) = s"$dir/$table.csv"
+
   def read(spark: SparkSession, table: String): DataFrame =
-    graft.ops.LocalFs.csv(spark, s"$dir/$table.csv")
+    graft.ops.LocalFs.csv(spark, path(table))
+
+  override def fingerprint(spark: SparkSession, table: String): Option[String] =
+    graft.ops.Fingerprint.files(graft.ops.LocalFs.fsOf(spark, path(table)),
+      Seq(s"$table.csv" -> new org.apache.hadoop.fs.Path(path(table))))
 }
 
 /** ORC-backed source — the second columnar format Spark ships a

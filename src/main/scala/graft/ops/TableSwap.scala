@@ -6,9 +6,8 @@ import org.apache.hadoop.fs.{FileSystem, Path}
   * shared by the streaming state layer (`graft.streaming.ParquetState`:
   * every whole-state streaming twin's fold, the SCD2 streaming target
   * of StreamingIngest and StreamingRollingMau's counts), the health
-  * medallion's silver/gold publishes (HealthPipeline), small-files
-  * compaction (Compaction) and the landing zone's staged-extract
-  * promotion (LandingZone, `publish` only).
+  * medallion's silver/gold publishes (HealthPipeline) and the landing
+  * zone's staged-extract promotion (LandingZone, `publish` only).
   *
   * The swap itself (delete dst → rename tmp over it) has an
   * unavoidable window on filesystems without atomic directory

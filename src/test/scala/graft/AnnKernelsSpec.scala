@@ -176,6 +176,31 @@ class AnnKernelsSpec extends SparkSpec {
     }
   }
 
+  test("PqAdc fails loudly on a malformed LUT, code or null element instead of returning a number") {
+    import org.apache.spark.sql.catalyst.expressions.Literal
+    import org.apache.spark.sql.catalyst.util.GenericArrayData
+    val adc = graft.functions.PqAdc(Literal(null), Literal(null))
+    def longs(xs: Any*) = new GenericArrayData(xs.toArray)
+    val lut = longs(1L, 2L, 3L, 4L, 5L, 6L) // m = 2 subspaces, K = 3
+    adc.kernel(lut, longs(2, 0)) shouldBe 3L + 4L // the well-formed input still sums
+    val malformed = Seq(
+      "no codes" -> (lut, longs()),
+      "a LUT length that is not a multiple of m" -> (longs(1L, 2L, 3L, 4L, 5L), longs(0, 0)),
+      "a code below 0" -> (lut, longs(-1, 0)),
+      "a code at K" -> (lut, longs(0, 3)),
+      "a null code" -> (lut, longs(0, null)),
+      "a null LUT entry" -> (longs(1L, null, 3L, 4L, 5L, 6L), longs(0, 0)))
+    malformed.foreach { case (what, (l, c)) =>
+      withClue(what)(an[IllegalArgumentException] should be thrownBy adc.kernel(l, c))
+    }
+    // through a query too, on the codegen path: the task fails
+    val q = Seq((Seq(1L, 2L, 3L, 4L, 5L, 6L), Seq(0, 3))).toDF("lut", "codes")
+      .select(VectorFunctions.pqAdc(col("lut"), col("codes")))
+    val e = intercept[Exception](q.collect())
+    Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(_.getMessage.contains("outside [0, 3)")) shouldBe true
+  }
+
   test("kernels survive the codegen path (projection over them stays whole-stage)") {
     val base = df(32, 14)
     val cents = base.filter(col("vec_id") < K)

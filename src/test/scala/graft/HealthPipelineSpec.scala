@@ -8,7 +8,6 @@ import java.time.LocalDate
 import graft.health.HealthPipeline
 import graft.ingest.{LoadConfig, PipelineRunner, Stage}
 import graft.ops.LocalFs
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, StructType, TimestampType}
 
@@ -312,33 +311,6 @@ class HealthPipelineSpec extends SparkSpec {
       .map(r => (r.getString(0), Option(r.getString(1)))).sortBy(_._1).toSeq shouldBe
       Seq(("T2", Some("MC2")), ("T3", None))
     tx.filter(!col("is_current")).select("MedicaidID").head().getString(0) shouldBe "MC1"
-  }
-
-  /** The number of Spark jobs `body` starts. Listener events arrive in
-    * order, so once a marker job's start is seen every job `body`
-    * started has been counted. */
-  private def jobsStartedBy(body: => Unit): Int = {
-    val sc = spark.sparkContext
-    val group = s"probe-${java.util.UUID.randomUUID()}"
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val marker = new java.util.concurrent.CountDownLatch(1)
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id"))) match {
-          case Some(`group`) => jobs.incrementAndGet()
-          case Some(g) if g == s"$group-marker" => marker.countDown()
-          case _ =>
-        }
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup(group, "reads")
-      try body finally sc.clearJobGroup()
-      sc.setJobGroup(s"$group-marker", "marker")
-      try spark.range(1).count() finally sc.clearJobGroup()
-      marker.await(30, java.util.concurrent.TimeUnit.SECONDS) shouldBe true
-      jobs.get()
-    } finally sc.removeSparkListener(listener)
   }
 
   test("generated fixtures: full load and daily run, SCD2 counts, and every read's schema without a job") {

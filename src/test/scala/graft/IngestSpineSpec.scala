@@ -5,6 +5,7 @@ import java.nio.file.{Files, Paths}
 import java.sql.Timestamp
 import java.time.LocalDate
 
+import graft.health.HealthPipeline
 import graft.ingest._
 import org.apache.spark.sql.functions._
 
@@ -72,6 +73,8 @@ class AuditLogSpec extends SparkSpec {
       audit.latestWatermark("src", table) shouldBe lookup(table)
     }
     audit.latestWatermark("src", "never_loaded") shouldBe fixed("1900-01-01 00:00:00")
+    // one scan, reduced on the driver: a single Spark job
+    jobsStartedBy(audit.latestWatermarks("src")) shouldBe 1
   }
 }
 
@@ -198,6 +201,108 @@ class IngestionRunnerSpec extends SparkSpec {
       .map(r => (r.getString(0), r.getString(1), r.getLong(2))).sorted
     rows.toSeq shouldBe
       Seq(("alpha", "SUCCESS", 1L), ("beta", "SUCCESS", 2L), ("missing", "FAILED", 0L))
+  }
+
+  /** `read` of a [[CsvSource]]; its fingerprint is the connector's
+    * default (None) unless `fingerprinted`, and every fingerprint call
+    * is counted. */
+  private class Probe(dir: String, fingerprinted: Boolean) extends SourceConnector {
+    private val csv = new CsvSource(dir)
+    val calls = new java.util.concurrent.atomic.AtomicInteger
+    def read(spark: org.apache.spark.sql.SparkSession, table: String) = csv.read(spark, table)
+    override def fingerprint(spark: org.apache.spark.sql.SparkSession, table: String) = {
+      calls.incrementAndGet()
+      if (fingerprinted) csv.fingerprint(spark, table) else super.fingerprint(spark, table)
+    }
+  }
+
+  private def archivedOn(work: String, table: String, d: LocalDate): Boolean =
+    Files.isDirectory(Paths.get(s"$work/landing/src/archive/$table/" +
+      d.format(java.time.format.DateTimeFormatter.ofPattern("yyyy/MM/dd"))))
+
+  test("an incremental table never consults a fingerprint") {
+    val src = tmpDir("ing-src")
+    writeCsv(src, "alpha", Seq("id,ModifiedDate", "1,2024-01-01"))
+    val work = tmpDir("ing-work")
+    val probe = new Probe(src, fingerprinted = true)
+    for ((d, n) <- Seq((day, 1L), (day.plusDays(1), 0L))) {
+      val clock = () => Timestamp.valueOf(d.atStartOfDay())
+      val runner = new IngestionRunner(spark, probe, new LandingZone(spark, s"$work/landing"),
+        new AuditLog(spark, s"$work/audit"), new PipelineLogger(spark, s"$work/logs", clock), clock)
+      runner.run(Seq(entry("alpha", "Incremental", "ModifiedDate")), "src", d)
+        .map(r => (r.status, r.records)) shouldBe Seq(("SUCCESS", n))
+    }
+    probe.calls.get() shouldBe 0
+    archivedOn(work, "alpha", day.plusDays(1)) shouldBe true // the day-1 landing moved on
+  }
+
+  test("a full load from a source without a fingerprint is archived and re-landed every run") {
+    val src = tmpDir("ing-src")
+    writeCsv(src, "alpha", Seq("id,name", "1,a", "2,b"))
+    val work = tmpDir("ing-work")
+    val probe = new Probe(src, fingerprinted = false)
+    for (d <- Seq(day, day.plusDays(1))) {
+      val clock = () => Timestamp.valueOf(d.atStartOfDay())
+      val logger = new PipelineLogger(spark, s"$work/logs", clock)
+      val runner = new IngestionRunner(spark, probe, new LandingZone(spark, s"$work/landing"),
+        new AuditLog(spark, s"$work/audit"), logger, clock)
+      runner.run(Seq(entry("alpha")), "src", d).map(r => (r.status, r.records)) shouldBe
+        Seq(("SUCCESS", 2L))
+      logger.pending.exists(_.step == "skip") shouldBe false
+    }
+    probe.calls.get() shouldBe 2
+    archivedOn(work, "alpha", day.plusDays(1)) shouldBe true
+  }
+
+  test("an unchanged full-load CSV is kept in place; an edited one is archived, re-landed and re-derived") {
+    val root = tmpDir("ing-dims")
+    for (h <- Seq("a", "b")) writeCsv(s"$root/emr/hospital-$h", "departments",
+      Seq("DeptID,Name", "DEPT001,Emergency", "DEPT002,Cardiology"))
+    Files.write(Paths.get(s"$root/load_config.csv"), (Seq(
+      "database,datasource,tablename,loadtype,watermark,is_active,targetpath") ++
+      Seq("a", "b").map(h => s"db,hospital_${h}_db,departments,Full,,1,hospital-$h"))
+      .mkString("\n").getBytes(StandardCharsets.UTF_8))
+    var now = day
+    val pipe = new HealthPipeline(spark, root, s"$root/load_config.csv", s"$root/work",
+      () => Timestamp.valueOf(now.atStartOfDay()))
+    val work = s"$root/work"
+    def landingFiles = new java.io.File(s"$work/landing/hospital_a_db/departments").list().toSet
+    def silverFiles = new java.io.File(s"$work/silver/departments").list().toSet
+    def daily(): Seq[TableLoadResult] = {
+      val loads = Seq("a", "b").flatMap(h =>
+        pipe.ingest(s"hospital_${h}_db", s"$root/emr/hospital-$h", now))
+      pipe.runSilver()
+      pipe.logger.flush()
+      loads
+    }
+    def names = pipe.silver("departments").filter(col("datasource") === "hosa")
+      .select("Name").collect().map(_.getString(0)).sorted.toSeq
+
+    daily().map(_.records) shouldBe Seq(2L, 2L)
+    val (landed, built) = (landingFiles, silverFiles)
+
+    now = day.plusDays(1) // unchanged: no archive, no landing write, no silver write
+    daily().map(r => (r.status, r.records)) shouldBe Seq(("SUCCESS", 0L), ("SUCCESS", 0L))
+    Files.exists(Paths.get(s"$work/landing/hospital_a_db/archive/departments")) shouldBe false
+    (landingFiles, silverFiles) shouldBe ((landed, built))
+    val skips = spark.read.parquet(s"$work/pipeline_logs")
+      .filter(col("step") === "skip" && col("log_timestamp") === Timestamp.valueOf(now.atStartOfDay()))
+      .select("tablename").collect().map(_.getString(0)).toSeq
+    skips.sorted shouldBe Seq("departments", "departments", "departments") // 2 landings, 1 dim
+    pipe.audit.all().filter(col("load_timestamp") === Timestamp.valueOf(now.atStartOfDay()))
+      .select("status", "record_count").collect().map(r => (r.getString(0), r.getLong(1)))
+      .toSeq shouldBe Seq(("SUCCESS", 0L), ("SUCCESS", 0L))
+
+    // hospital A renames a department
+    now = day.plusDays(2)
+    writeCsv(s"$root/emr/hospital-a", "departments",
+      Seq("DeptID,Name", "DEPT001,Emergency", "DEPT002,Cardiology and Vascular"))
+    daily().map(_.records) shouldBe Seq(2L, 0L)
+    Files.isDirectory(Paths.get(s"$work/landing/hospital_a_db/archive/departments/" +
+      now.format(java.time.format.DateTimeFormatter.ofPattern("yyyy/MM/dd")))) shouldBe true
+    landingFiles should not be landed
+    silverFiles should not be built
+    names shouldBe Seq("Cardiology and Vascular", "Emergency")
   }
 
   test("inactive and other-datasource config rows are skipped") {
