@@ -465,26 +465,25 @@ case class PqAdc(left: Expression, right: Expression)
 
   /** Fails, rather than returning a number, on a malformed input: no
     * codes, a LUT whose length is not a multiple of the code count, a
-    * code outside `[0, K)`, or a null element in either array. */
+    * code outside `[0, K)`, a null code, or a null LUT entry that a
+    * code selects. Only the `m` selected entries are checked: the
+    * others do not reach the sum. */
   def kernel(lut: ArrayData, codes: ArrayData): Long = {
     val m = codes.numElements()
     val n = lut.numElements()
     if (m == 0 || n % m != 0) throw new IllegalArgumentException(
       s"$prettyName: LUT length $n is not a multiple of the code count $m (> 0)")
     val k = n / m
-    var i = 0
-    while (i < n) {
-      if (lut.isNullAt(i)) throw new IllegalArgumentException(s"$prettyName: null LUT entry $i")
-      i += 1
-    }
     var acc = 0L
-    i = 0
+    var i = 0
     while (i < m) {
       if (codes.isNullAt(i)) throw new IllegalArgumentException(s"$prettyName: null code $i")
       val c = codes.getInt(i)
       if (c < 0 || c >= k) throw new IllegalArgumentException(
         s"$prettyName: code $c at $i is outside [0, $k)")
-      acc += lut.getLong(i * k + c)
+      val j = i * k + c
+      if (lut.isNullAt(j)) throw new IllegalArgumentException(s"$prettyName: null LUT entry $j")
+      acc += lut.getLong(j)
       i += 1
     }
     acc

@@ -4,9 +4,9 @@ import java.sql.Timestamp
 import java.time.LocalDate
 
 import graft.ingest._
-import graft.ops.{Fingerprint, LocalFs, Scd2Merge, TableSwap}
+import graft.ops.{Fingerprint, LocalFs, TableSwap}
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
@@ -48,21 +48,17 @@ import org.apache.spark.sql.types.StructType
   *    landing inputs are unchanged (`_inputs`, written into the swap
   *    temp dir before publish). A dim carries no run timestamp, so
   *    the same inputs rebuild the same rows.
-  *  - SCD2 entities: a merge skips only at a proven fixpoint. Its
-  *    `_inputs` marker is written only when the merge inserted nothing
-  *    and closed nothing, and a merge that changes no row publishes
-  *    its target unchanged (every row carried as it was). Merging the
-  *    same source into that same target again therefore changes no
-  *    row either: skipping it is a no-op. `claims` never gets there:
-  *    its duplicate-key source closes a row per key on every run.
-  * A silver table's inputs are the `_source` markers of the bronze
-  * tables it reads and the schema of the frame it is built from; a
-  * flip of `spark.graft.decimalMoney` changes that schema, so a skip
-  * never hides the merge's refusal of a type flip. An input without a
-  * marker (a JDBC or ORC landing, or an incremental delta) has no
-  * known content, so its table is always rebuilt. Gold is always
-  * rebuilt. Markers record inputs, not code: after a change to how a
-  * table is derived, delete its markers to rebuild it.
+  * SCD2 merges and gold always run. A silver dim's inputs are the
+  * `_source` markers of the landing tables it reads and the schema of
+  * the frame it is built from; an input without a marker (a JDBC or
+  * ORC landing) has no known content, so its dim is always rebuilt.
+  *
+  * Markers record code as well as data: each fingerprint includes a
+  * derivation version, [[HealthPipeline.Derivation]] for the bronze
+  * loads and the dims and [[graft.ingest.LandingZone.Derivation]] for
+  * a landing (which a dim's inputs carry on). Bump the version with
+  * the code that derives those tables, and the next run rebuilds them
+  * instead of keeping what older code wrote.
   *
   * @param fixturesRoot source data root with the reference layout:
   *                     emr/hospital-a and emr/hospital-b per-table
@@ -123,10 +119,9 @@ final class HealthPipeline(
   /** Write-temp-then-swap (atomic table replace without reading and
     * overwriting the same files in one job); recovers an interrupted
     * prior swap BEFORE overwriting the temp dir — that temp may be the
-    * only surviving copy of the table. `inputs`, evaluated after the
-    * write, is recorded as the temp dir's `_inputs` marker before
-    * publish. */
-  private def writeSwap(df: DataFrame, path: String, inputs: => Option[String] = None): Unit = {
+    * only surviving copy of the table. `inputs`, if given, is recorded
+    * as the temp dir's `_inputs` marker before publish. */
+  private def writeSwap(df: DataFrame, path: String, inputs: Option[String] = None): Unit = {
     val tmp = TableSwap.tmpPath(path)
     val dst = new Path(path)
     TableSwap.recover(fs, dst, tmp)
@@ -150,10 +145,12 @@ final class HealthPipeline(
       .run(config(), datasource, runDate)
 
   /** Load a bronze table into its dir unless the dir's `_source`
-    * marker already records `source`, the fingerprint of the files the
-    * load reads; the marker is written after the load commits. */
-  private def loadBronze(table: String, source: Option[String])(load: String => Unit): Unit = {
+    * marker already records `files`, the fingerprint of the files the
+    * load reads, under this [[HealthPipeline.Derivation]]; the marker
+    * is written after the load commits. */
+  private def loadBronze(table: String, files: Option[String])(load: String => Unit): Unit = {
     val path = bronzePath(table)
+    val source = files.map(f => Fingerprint.of(Seq(HealthPipeline.Derivation, f)))
     if (source.isDefined && source == Fingerprint.read(fs, path, Fingerprint.SourceMarker))
       logger.info("Source files unchanged since the last load; bronze kept", "skip", table)
     else {
@@ -218,13 +215,14 @@ final class HealthPipeline(
     })
 
   /** The fingerprint of what silver `table` is built from: the
-    * `_source` markers of the bronze tables present and the schema of
-    * the frame it is built from. None when an input has no marker. */
+    * `_source` markers of its bronze tables, the schema of the frame it
+    * is built from and the [[HealthPipeline.Derivation]]. None when an
+    * input has no marker. */
   private def inputsOf(table: String, bronze: Seq[String], schema: StructType): Option[String] = {
     val sources = bronze.map(b =>
       Fingerprint.read(fs, bronzeDir(b), Fingerprint.SourceMarker).map(s"$b=" + _))
     if (sources.exists(_.isEmpty)) None
-    else Some(Fingerprint.of(table +: sources.flatten :+ schema.json))
+    else Some(Fingerprint.of(HealthPipeline.Derivation +: table +: sources.flatten :+ schema.json))
   }
 
   /** Whether silver `table`, after any interrupted swap is finished,
@@ -266,8 +264,8 @@ final class HealthPipeline(
     }
 
   /** Silver: reload the two type-1 dims and run each SCD2 merge over
-    * whatever bronze data is present (silver.sql, whole file), each
-    * skipped when its inputs are unchanged (see the class notes). The
+    * whatever bronze data is present (silver.sql, whole file); a dim
+    * is skipped when its inputs are unchanged (see the class notes). The
     * seven tables are independent, so they are built concurrently
     * ([[graft.ops.Concurrently]]); one entity's failure does not stop
     * the others — they all finish and publish, then the stage fails
@@ -287,22 +285,7 @@ final class HealthPipeline(
       val bronze = e.bronzeTables.flatMap(t => bronzeTable(t).map(t -> _)).toMap
       if (bronze.nonEmpty) {
         val staged = e.stage(bronze)
-        val inputs = inputsOf(e.table, e.bronzeTables.filter(bronze.contains), staged.schema)
-        if (!unchanged(e.table, inputs)) {
-          // rows this merge inserted or closed: exactly those stamped
-          // with its clock (a carried row stamped by an earlier merge at
-          // the same instant counts too, which only forgoes a skip)
-          val changes = Observation(s"silver_${e.table}")
-          val stamped = col(Scd2Merge.InsertedDate) <=> lit(ts) ||
-            (!col(Scd2Merge.IsCurrent) && col(Scd2Merge.ModifiedDate) <=> lit(ts))
-          val merged = e.merge(lit(ts))(mergeTarget(e, staged), staged)
-            .observe(changes, count(when(stamped, 1)).as("changed"))
-          writeSwap(merged, silverPath(e.table), {
-            val changed = changes.get("changed").asInstanceOf[Long]
-            logger.info(s"Merged: $changed row(s) inserted or closed", "merge", e.table)
-            if (changed == 0) inputs else None
-          })
-        }
+        writeSwap(e.merge(lit(ts))(mergeTarget(e, staged), staged), silverPath(e.table))
       }
     }
     graft.ops.Concurrently.run(spark)(dims ++ merges)
@@ -351,6 +334,13 @@ final class HealthPipeline(
 object HealthPipeline {
   /** Session conf key for the opt-in decimal monetary mode. */
   val DecimalMoneyKey = "spark.graft.decimalMoney"
+
+  /** The version of the code that derives the bronze claims and CPT
+    * tables and the silver departments and providers dims, part of
+    * every fingerprint their skips compare. Bump it with that code: a
+    * marker recorded under another version does not match, so the
+    * next run rebuilds them. */
+  val Derivation = "health-derivation-1"
 
   /** The bronze claims tag of a file whose path contains the first
     * string, in order; "None" when none matches (claims.py:19-23). */

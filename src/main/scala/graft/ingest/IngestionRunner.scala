@@ -23,9 +23,10 @@ final case class TableLoadResult(
   * does not stop the run.
   *
   * A full-load table whose source fingerprint
-  * ([[SourceConnector.fingerprint]]) equals the one recorded in its
-  * landing dir ([[LandingZone.landedSource]]) is skipped before the
-  * archive: the snapshot it would land is already there. A skip is a
+  * ([[SourceConnector.fingerprint]], under the current
+  * [[LandingZone.Derivation]]) equals the one recorded in its landing
+  * dir ([[LandingZone.landedSource]]) is skipped before the archive:
+  * the snapshot it would land is already there. A skip is a
   * SUCCESS audit row with `record_count` 0 plus a `skip` event in
   * `pipeline_logs`. Incremental tables never consult a fingerprint
   * (their watermark already names what is new), and a source whose
@@ -84,7 +85,10 @@ final class IngestionRunner(
       (TableLoadResult(table, status, n, error),
         AuditRecord(entry.datasource, table, entry.loadtype, n, clock(), status))
     try {
-      val fingerprint = if (incremental(entry)) None else source.fingerprint(spark, table)
+      val fingerprint =
+        if (incremental(entry)) None
+        else source.fingerprint(spark, table)
+          .map(f => graft.ops.Fingerprint.of(Seq(LandingZone.Derivation, f)))
       if (fingerprint.isDefined && fingerprint == landing.landedSource(entry.datasource, table)) {
         logger.info("Source unchanged since it was landed; landing kept", "skip", table)
         outcome("SUCCESS", 0L, None)

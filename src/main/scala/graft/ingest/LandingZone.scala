@@ -34,9 +34,10 @@ import org.apache.spark.sql.types.{DataType, StringType, StructField, StructType
   * is read with inference.
   *
   * A staged extract can also record where it came from: `_source`
-  * holds the source's fingerprint ([[SourceConnector.fingerprint]]),
-  * written into the staged dir before publish, so it moves with the
-  * dir as `_schema.json` does and names exactly the files beside it.
+  * holds the source's fingerprint ([[SourceConnector.fingerprint]])
+  * combined with [[LandingZone.Derivation]], written into the staged
+  * dir before publish, so it moves with the dir as `_schema.json` does
+  * and names exactly the files beside it.
   * [[landedSource]] reads it back. A full-load snapshot whose source
   * still has that fingerprint stays in place: the loader neither
   * archives nor re-lands it ([[IngestionRunner]]).
@@ -145,4 +146,13 @@ final class LandingZone(spark: SparkSession, root: String) {
     fs.delete(src, true)
     files.length
   }
+}
+
+object LandingZone {
+
+  /** The version of the code that lands an extract (the JSON-lines
+    * write and its `_schema.json`), part of every `_source` marker.
+    * Bump it with that code: a landing recorded under another version
+    * does not match, so the next run re-lands it. */
+  val Derivation = "landing-derivation-1"
 }

@@ -183,13 +183,15 @@ class AnnKernelsSpec extends SparkSpec {
     def longs(xs: Any*) = new GenericArrayData(xs.toArray)
     val lut = longs(1L, 2L, 3L, 4L, 5L, 6L) // m = 2 subspaces, K = 3
     adc.kernel(lut, longs(2, 0)) shouldBe 3L + 4L // the well-formed input still sums
+    // only the selected entries are read, so only they are checked
+    adc.kernel(longs(1L, null, 3L, 4L, 5L, 6L), longs(0, 0)) shouldBe 1L + 4L
     val malformed = Seq(
       "no codes" -> (lut, longs()),
       "a LUT length that is not a multiple of m" -> (longs(1L, 2L, 3L, 4L, 5L), longs(0, 0)),
       "a code below 0" -> (lut, longs(-1, 0)),
       "a code at K" -> (lut, longs(0, 3)),
       "a null code" -> (lut, longs(0, null)),
-      "a null LUT entry" -> (longs(1L, null, 3L, 4L, 5L, 6L), longs(0, 0)))
+      "a null LUT entry that a code selects" -> (longs(1L, null, 3L, 4L, 5L, 6L), longs(1, 0)))
     malformed.foreach { case (what, (l, c)) =>
       withClue(what)(an[IllegalArgumentException] should be thrownBy adc.kernel(l, c))
     }

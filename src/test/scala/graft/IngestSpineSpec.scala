@@ -305,6 +305,38 @@ class IngestionRunnerSpec extends SparkSpec {
     names shouldBe Seq("Cardiology and Vascular", "Emergency")
   }
 
+  test("a marker recorded under another derivation version does not match: the work is redone") {
+    val src = tmpDir("ing-src")
+    writeCsv(src, "alpha", Seq("id,name", "1,a", "2,b"))
+    writeCsv(s"$src/cptcodes", "cptcodes", Seq("CPT Codes,Code Status", "10001,Added"))
+    val work = tmpDir("ing-work")
+    var now = day
+    val clock = () => Timestamp.valueOf(now.atStartOfDay())
+    val pipe = new HealthPipeline(spark, src, s"$src/load_config.csv", work, clock)
+    val runner = new IngestionRunner(spark, new CsvSource(src), pipe.landing, pipe.audit, pipe.logger, clock)
+    def land() = { now = now.plusDays(1); runner.run(Seq(entry("alpha")), "src", now).map(_.records) }
+    val fs = graft.ops.LocalFs.fsOf(spark, work)
+    val (landingDir, bronzeDir) = (pipe.landing.tableDir("src", "alpha"), s"$work/bronze/cpt_codes")
+
+    land() shouldBe Seq(2L)
+    pipe.loadBronzeCpt()
+    land() shouldBe Seq(0L) // unchanged under the current versions
+    jobsStartedBy(pipe.loadBronzeCpt()) shouldBe 0
+
+    // the markers older code would have left for the same files
+    val csv = new CsvSource(src).fingerprint(spark, "alpha").get
+    val cpt = graft.ops.Fingerprint.files(fs,
+      Seq("cptcodes.csv" -> new org.apache.hadoop.fs.Path(s"$src/cptcodes/cptcodes.csv"))).get
+    graft.ops.Fingerprint.write(fs, landingDir, graft.ops.Fingerprint.SourceMarker,
+      graft.ops.Fingerprint.of(Seq("landing-derivation-0", csv)))
+    graft.ops.Fingerprint.write(fs, bronzeDir, graft.ops.Fingerprint.SourceMarker,
+      graft.ops.Fingerprint.of(Seq("health-derivation-0", cpt)))
+    land() shouldBe Seq(2L)
+    jobsStartedBy(pipe.loadBronzeCpt()) should be > 0
+    land() shouldBe Seq(0L) // the redone work recorded the current versions
+    jobsStartedBy(pipe.loadBronzeCpt()) shouldBe 0
+  }
+
   test("inactive and other-datasource config rows are skipped") {
     val src = tmpDir("ing-src")
     writeCsv(src, "alpha", Seq("id,ModifiedDate", "1,2024-01-01"))

@@ -1,6 +1,9 @@
 package graft
 
-import java.nio.file.{Files, Path, Paths}
+import java.nio.charset.StandardCharsets
+import java.nio.file.{Files, Path, Paths, StandardOpenOption}
+
+import scala.jdk.CollectionConverters._
 
 import graft.health.HealthPipeline
 import org.apache.spark.sql.Row
@@ -11,21 +14,26 @@ import org.apache.spark.sql.Row
   * gold table identical to the same runs made after deleting every
   * `_source` and `_inputs` marker, which forces each step to redo its
   * work. The day-2 snapshot equals day 1's, so day 2 lands no
-  * incremental delta.
+  * incremental delta. The CPT file repeats a code with another status,
+  * so its SCD2 merge sees a duplicate source key on every run.
   *
   * It also pins which work is skipped: the bronze loads start no Spark
-  * job on either daily run, the type-1 dims are not written, and
-  * `cpt_codes` is written on day 1 (its day-0 merge inserted every
-  * row, so it was no fixpoint yet) but not on day 2. `claims` is
-  * written every day: its duplicate-key merge closes rows on every
-  * run, so it never reaches a fixpoint.
+  * job on either daily run and the type-1 dims are not written, while
+  * the SCD2 merges of `claims` and `cpt_codes`, whose bronze inputs
+  * are unchanged, are written every day and record no marker.
   */
 class MedallionSkipSpec extends SparkSpec {
 
   private val gen = MedallionFixtures(seed = 23)
   private lazy val root: Path = {
     val r = Paths.get(tmpDir("medallion-skip"))
-    (0 to 2).foreach(d => gen.write(r.resolve(s"day-$d"), d))
+    (0 to 2).foreach { d =>
+      gen.write(r.resolve(s"day-$d"), d)
+      val cpt = r.resolve(s"day-$d/cptcodes/cptcodes.csv")
+      val last = Files.readAllLines(cpt).asScala.last
+      val repeat = last.take(last.lastIndexOf(',')) + ",Deleted\n" // same key, other status
+      Files.write(cpt, repeat.getBytes(StandardCharsets.UTF_8), StandardOpenOption.APPEND)
+    }
     r
   }
 
@@ -77,13 +85,11 @@ class MedallionSkipSpec extends SparkSpec {
         .filter(_.status != "SUCCESS") shouldBe empty
     }
 
-    // day 0's merges inserted rows: no SCD2 table is at a fixpoint yet
-    Files.exists(Paths.get(s"$skipping/silver/cpt_codes/_inputs")) shouldBe false
     Files.exists(Paths.get(s"$skipping/silver/departments/_inputs")) shouldBe true
 
     val expectedWrites = Map(
       1 -> (Set("patients", "encounters", "transactions", "claims", "cpt_codes"), silverTables.toSet),
-      2 -> (Set("claims"), Set("departments", "providers", "claims", "cpt_codes")))
+      2 -> (Set("claims", "cpt_codes"), Set("departments", "providers", "claims", "cpt_codes")))
     for (d <- 1 to 2) {
       val (skipBronzeJobs, skipWrites) = daily(skipping, d)
       markers(forced) should not be empty
@@ -94,11 +100,13 @@ class MedallionSkipSpec extends SparkSpec {
         skipBronzeJobs shouldBe 0
         forcedBronzeJobs should be > 0
         (skipWrites, forcedWrites) shouldBe expectedWrites(d)
-        Files.exists(Paths.get(s"$skipping/silver/claims/_inputs")) shouldBe false
-        Files.exists(Paths.get(s"$skipping/silver/cpt_codes/_inputs")) shouldBe true
+        for (t <- Seq("patients", "encounters", "transactions", "claims", "cpt_codes"))
+          Files.exists(Paths.get(s"$skipping/silver/$t/_inputs")) shouldBe false
         val (a, b) = (pipeline(skipping, d), pipeline(forced, d))
         for (t <- silverTables) withClue(s"silver.$t")(rows(a, "silver", t) shouldBe rows(b, "silver", t))
         for (t <- goldTables) withClue(s"gold.$t")(rows(a, "gold", t) shouldBe rows(b, "gold", t))
+        val cpt = a.silver("cpt_codes") // the repeated code is there
+        cpt.count() should be > cpt.select("cpt_codes").distinct().count()
       }
     }
   }
