@@ -8,10 +8,10 @@ package graft
   *
   * It audits the session Bench and Verify run ([[LocalSession]] at 4
   * cores: the engine's extensions, so `DotProductRewrite` shows in the
-  * plans; ANSI off; AQE on; 4 shuffle partitions). With `PLAN_SIMPLE=1`
-  * it prints `executedPlan.toString` of that session, which is NOT the
-  * string `PlanQualitySpec` pins: the spec plans in `SparkSpec`'s
-  * session (ANSI on, no extensions).
+  * plans; ANSI off; AQE on; 4 shuffle partitions), the session shape
+  * `PlanQualitySpec` plans in too. With `PLAN_SIMPLE=1` it prints
+  * `executedPlan.toString`, the string the spec pins, and
+  * `tools/plan_diff.py` compares two such outputs query by query.
   *
   * Usage: sbt 'runMain graft.PlanAudit /root/testdata/sf0.01 q34 q37'
   */

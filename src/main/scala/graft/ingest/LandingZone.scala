@@ -1,6 +1,5 @@
 package graft.ingest
 
-import java.nio.charset.StandardCharsets
 import java.time.LocalDate
 import java.time.format.DateTimeFormatter
 import graft.ops.{Fingerprint, LocalFs}
@@ -48,7 +47,7 @@ final class LandingZone(spark: SparkSession, root: String) {
 
   def tableDir(datasource: String, table: String): String = s"$root/$datasource/$table"
 
-  private def schemaFile(dir: String) = new Path(dir, "_schema.json")
+  private val SchemaMarker = "_schema.json"
 
   /** JSON-lines write of `df` into `dir`, recording its schema when
     * every column is a string, and its source's fingerprint if given. */
@@ -58,23 +57,14 @@ final class LandingZone(spark: SparkSession, root: String) {
       .json(dir)
     if (df.schema.forall(_.dataType == StringType)) {
       val schema = StructType(df.schema.map(f => StructField(f.name, StringType)).sortBy(_.name))
-      val out = fs.create(schemaFile(dir), true)
-      try out.write(schema.json.getBytes(StandardCharsets.UTF_8)) finally out.close()
+      Fingerprint.write(fs, dir, SchemaMarker, schema.json)
     }
     source.foreach(Fingerprint.write(fs, dir, Fingerprint.SourceMarker, _))
   }
 
   /** The schema recorded in a landing dir, if any. */
-  private def recordedSchema(dir: String): Option[StructType] = {
-    val f = schemaFile(dir)
-    if (!fs.exists(f)) None
-    else {
-      val in = fs.open(f)
-      try Some(DataType.fromJson(new String(in.readAllBytes(), StandardCharsets.UTF_8))
-        .asInstanceOf[StructType])
-      finally in.close()
-    }
-  }
+  private def recordedSchema(dir: String): Option[StructType] =
+    Fingerprint.read(fs, dir, SchemaMarker).map(DataType.fromJson(_).asInstanceOf[StructType])
 
   /** S4: distributed JSON-lines write (overwrite = the per-run file). */
   def write(df: DataFrame, datasource: String, table: String): Unit =

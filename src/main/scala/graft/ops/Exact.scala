@@ -1,14 +1,17 @@
 package graft.ops
 
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, DataFrame, RelationalGroupedDataset}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** The shared building blocks of the query families: fixed-point
-  * scaling, md5 hash draws, the whitespace tokenizer and the cosine
-  * score. Every one of these formats is mirrored byte for byte by a
-  * DuckDB oracle, so each lives here once and every Spark-side query
-  * and streaming fold calls it (`ExactSpec` pins the formats against
-  * values computed outside Spark).
+  * scaling, md5 hash draws, the whitespace tokenizer, the cosine
+  * score, the nearest-rank quantile and the bivariate moment sums.
+  * Every one of these formats is mirrored byte for byte by a DuckDB
+  * oracle, so each lives here once and every Spark-side query and
+  * streaming fold calls it (`ExactSpec` pins the formats against
+  * values computed outside Spark, `ExactStatsSpec` the two statistics
+  * against the same statistics computed on the driver).
   *
   * Cross-engine rules the helpers encode:
   *  - monetary and derived doubles are summed as exact integers, never
@@ -19,7 +22,14 @@ import org.apache.spark.sql.functions._
   *    DuckDB's `round` on the same doubles), then cast to long;
   *  - a hash draw is a hex slice of md5 read as a long — DuckDB's
   *    `CAST('0x' || substr(md5(s), from, n) AS BIGINT)`. Callers keep
-  *    their own `% k` / `shiftright` / ppm arithmetic.
+  *    their own `% k` / `shiftright` / ppm arithmetic;
+  *  - an order statistic is a nearest rank, never an interpolation:
+  *    the ⌈p·n⌉-th value of the group's total order, found with
+  *    integer predicates over a running count (`nearestRank`);
+  *  - a correlation or regression is one fixed-shape double expression
+  *    over exact integer moment sums (`moments`): integer addition
+  *    commutes, so partition order cannot perturb the inputs, and IEEE
+  *    ÷/×/√ are correctly rounded in both engines.
   *
   * `e2`/`e4` expect a double: there `c * 100` folds to `c * 100.0`, the
   * same expression as `c * lit(100.0)`, while a decimal or long column
@@ -58,4 +68,49 @@ object Exact {
   def cosE6(dot: Column, sa: Column, sb: Column): Column =
     round(lit(1e6) * dot.cast("double") /
       (sqrt(sa.cast("double")) * sqrt(sb.cast("double"))), 0).cast("long")
+
+  /** Nearest-rank quantiles per group of `rel`. For each
+    * `(name, num, den)`, the smallest `value` whose running `weight`
+    * count reaches num/den of the group total n: the ⌈n·num/den⌉-th
+    * value of the group's rows, each row repeated `weight` times.
+    * `weight` is a frequency relation's count column, or `lit(1L)`
+    * over plain rows, where this is the value that a `row_number()`
+    * pick of rank ⌈n·num/den⌉ reads over any tie-break order (ties
+    * share the value). The running count and n are windows over `rel`,
+    * so the result is one grouped aggregate: `keys`, then `aggs` (the
+    * caller's own aggregates over `rel`), then one column per rank.
+    * No `keys` makes it a global aggregate. A NULL `value` would count
+    * toward n but never be picked, so callers pass non-null values. */
+  def nearestRank(rel: DataFrame, keys: Seq[String], value: String,
+      weight: Column, ranks: Seq[(String, Int, Int)], aggs: Column*): DataFrame = {
+    val group = Window.partitionBy(keys.map(col): _*)
+    val picks = ranks.map { case (name, num, den) =>
+      min(when(col("_running") * den >= col("_n") * num, col(value))).as(name)
+    }
+    val all = aggs ++ picks
+    rel.withColumn("_running", sum(weight).over(group.orderBy(value)))
+      .withColumn("_n", sum(weight).over(group))
+      .groupBy(keys.map(col): _*)
+      .agg(all.head, all.tail: _*)
+  }
+
+  /** The exact bivariate moment aggregates of integer columns `x` and
+    * `y` per group of `grouped`: the keys, then `n`, `sx` = Σx, `sy` =
+    * Σy, `sxy` = Σxy, `sxx` = Σx², `syy` = Σy², the three terms a
+    * correlation or a regression divides by or into, `cxy` =
+    * n·Σxy − Σx·Σy, `vx` = n·Σx² − (Σx)² and `vy` = n·Σy² − (Σy)², and
+    * last the caller's own `aggs`. `vx`/`vy` are NULL unless positive,
+    * so a formula that divides by them is NULL for a zero-variance
+    * group (and for n = 1) with no CASE of its own. All are long and
+    * wrap past 2^63 (the session runs ANSI off), so each caller
+    * documents its own overflow ceiling. */
+  def moments(grouped: RelationalGroupedDataset, x: Column, y: Column,
+      aggs: Column*): DataFrame = {
+    val n = count(lit(1))
+    val (sx, sy, sxy, sxx, syy) = (sum(x), sum(y), sum(x * y), sum(x * x), sum(y * y))
+    def positive(c: Column) = when(c > 0, c)
+    grouped.agg(n.as("n"), Seq(sx.as("sx"), sy.as("sy"), sxy.as("sxy"), sxx.as("sxx"),
+      syy.as("syy"), (n * sxy - sx * sy).as("cxy"), positive(n * sxx - sx * sx).as("vx"),
+      positive(n * syy - sy * sy).as("vy")) ++ aggs: _*)
+  }
 }

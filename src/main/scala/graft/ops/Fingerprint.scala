@@ -71,7 +71,8 @@ object Fingerprint {
     }
   }
 
-  /** The fingerprint recorded in `dir`'s marker `name`, if any. */
+  /** The fingerprint (or other UTF-8 text) recorded in `dir`'s marker
+    * `name`, if any. */
   def read(fs: FileSystem, dir: String, name: String): Option[String] = {
     val p = new Path(dir, name)
     if (!fs.exists(p)) None
@@ -81,7 +82,8 @@ object Fingerprint {
     }
   }
 
-  /** Record `fingerprint` in `dir`'s marker `name`. */
+  /** Record `fingerprint` (or other UTF-8 text) in `dir`'s marker
+    * `name`. */
   def write(fs: FileSystem, dir: String, name: String, fingerprint: String): Unit = {
     val out = fs.create(new Path(dir, name), true)
     try out.write(fingerprint.getBytes(StandardCharsets.UTF_8)) finally out.close()

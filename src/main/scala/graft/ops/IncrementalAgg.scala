@@ -17,12 +17,6 @@ import org.apache.spark.sql.functions._
   * sum merge by +, min/max by min/max — associative and commutative,
   * so batch boundaries and arrival order cannot change the result; avg
   * is served as sum/count at READ time, never stored).
-  *
-  * Exactly-once: `mergeOnce` tracks applied batch ids in a SEPARATE
-  * single-column relation alongside the state. A re-delivered batch id
-  * is a NO-OP (at-least-once delivery upstream becomes exactly-once
-  * state), pinned by IncrementalAggSpec replay tests — same discipline
-  * as the streaming near-dup index (X47).
   */
 object IncrementalAgg {
 
@@ -51,32 +45,5 @@ object IncrementalAgg {
   def merge(state: DataFrame, batchAgg: DataFrame, keys: Seq[String], m: Metrics): DataFrame = {
     val aggs = m.mergeAgg
     state.unionByName(batchAgg).groupBy(keys.map(col): _*).agg(aggs.head, aggs.tail: _*)
-  }
-
-  /** Exactly-once fold of a RAW batch: no-op when `batchId` was already
-    * applied. The applied-set lives in `appliedBatches` — a separate
-    * one-row-per-applied-id relation returned alongside the state (the
-    * state rows themselves carry only keys + metrics); persist both
-    * together when checkpointing. */
-  def mergeOnce(
-      state: DataFrame,
-      appliedBatches: DataFrame, // single column: __batch_id
-      batch: DataFrame,
-      batchId: String,
-      keys: Seq[String],
-      m: Metrics): (DataFrame, DataFrame) = {
-    val already = appliedBatches.filter(col("__batch_id") === batchId).limit(1).count() > 0
-    if (already) (state, appliedBatches)
-    else {
-      val next = merge(state, aggregate(batch, keys, m), keys, m)
-      val nextApplied = appliedBatches.unionByName(
-        batch.sparkSession.createDataFrame(
-          java.util.List.of[org.apache.spark.sql.Row](
-            org.apache.spark.sql.Row(batchId)),
-          org.apache.spark.sql.types.StructType(Seq(
-            org.apache.spark.sql.types.StructField("__batch_id",
-              org.apache.spark.sql.types.StringType)))))
-      (next, nextApplied)
-    }
   }
 }

@@ -819,25 +819,18 @@ object Analytics {
     * p10/p90 rank values, then average — the outlier-robust location
     * estimate (q94 FLAGS outliers; this SUMMARIZES robustly despite
     * them; q75's median is the 50%-trim extreme). Exact integer
-    * end-to-end: rank thresholds via the q75 dual-rank idiom
-    * (ceil(0.1n) / ceil(0.9n) positions over a total order), clamp
-    * in-row after a broadcast-back of the tiny per-segment threshold
-    * relation, mean as floor-divided cents. One window sort per
-    * segment + one partial-aggregated re-pass — no sketch, no float
-    * percentile semantics to reconcile cross-engine. */
+    * end-to-end: the thresholds are the nearest-rank ⌈0.1n⌉ / ⌈0.9n⌉
+    * values (`Exact.nearestRank`), clamp in-row after a
+    * broadcast-back of the tiny per-segment threshold relation, mean
+    * as floor-divided cents. One window sort per segment + one
+    * partial-aggregated re-pass — no sketch, no float percentile
+    * semantics to reconcile cross-engine. */
   val q105WinsorizedMean: Q = (s, d) => {
-    val w = Window.partitionBy("c_mktsegment").orderBy(col("bal_e2"), col("c_custkey"))
-    val ranked = Tables.customer(s, d)
-      .select(col("c_mktsegment"), col("c_custkey"),
-        e2(col("c_acctbal")).as("bal_e2"))
-      .withColumn("rn", row_number().over(w).cast("long"))
-      .withColumn("n", count(lit(1)).over(Window.partitionBy("c_mktsegment")))
-    val thresholds = ranked
-      .groupBy(col("c_mktsegment"))
-      .agg(
-        max(when(col("rn") === expr("(n + 9) div 10"), col("bal_e2"))).as("p10_e2"),
-        max(when(col("rn") === expr("(9 * n + 9) div 10"), col("bal_e2"))).as("p90_e2"))
-    ranked.join(broadcast(thresholds), "c_mktsegment")
+    val bal = Tables.customer(s, d)
+      .select(col("c_mktsegment"), e2(col("c_acctbal")).as("bal_e2"))
+    val thresholds = nearestRank(bal, Seq("c_mktsegment"), "bal_e2", lit(1L),
+      Seq(("p10_e2", 1, 10), ("p90_e2", 9, 10)))
+    bal.join(broadcast(thresholds), "c_mktsegment")
       .withColumn("clamped", greatest(least(col("bal_e2"), col("p90_e2")), col("p10_e2")))
       .groupBy(col("c_mktsegment"))
       .agg(
@@ -1376,21 +1369,9 @@ object Analytics {
         datediff(col("l_shipdate"), col("o_orderdate")).cast("long")
           .as("days"))
     val freq = lat.groupBy("priority", "days").agg(count(lit(1)).as("cnt"))
-    val wRun = Window.partitionBy("priority").orderBy("days")
-    val wAll = Window.partitionBy("priority")
-    freq
-      .withColumn("running", sum(col("cnt")).over(wRun))
-      .withColumn("n", sum(col("cnt")).over(wAll))
-      .withColumn("sumd", sum(col("days") * col("cnt")).over(wAll))
-      .groupBy("priority")
-      .agg(max(col("n")).as("n_items"),
-        max(col("sumd")).as("sum_days"),
-        min(when(col("running") * 2 >= col("n"), col("days")))
-          .as("p50_days"),
-        min(when(col("running") * 10 >= col("n") * 9, col("days")))
-          .as("p90_days"),
-        min(when(col("running") * 100 >= col("n") * 99, col("days")))
-          .as("p99_days"))
+    nearestRank(freq, Seq("priority"), "days", col("cnt"),
+      Seq(("p50_days", 1, 2), ("p90_days", 9, 10), ("p99_days", 99, 100)),
+      sum(col("cnt")).as("n_items"), sum(col("days") * col("cnt")).as("sum_days"))
       .select(col("priority"), col("n_items"),
         expr("sum_days * 1000 div n_items").as("mean_days_e3"),
         col("p50_days"), col("p90_days"), col("p99_days"))

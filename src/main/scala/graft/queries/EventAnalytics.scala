@@ -289,16 +289,9 @@ object EventAnalytics {
       .filter(col("funnel_stage") === 3L)
       .select(expr("(t_purchase_us - t_view_us) div 1000000").as("lat_s"))
       .groupBy("lat_s").agg(count(lit(1)).as("cnt"))
-    freq
-      .withColumn("running", sum(col("cnt")).over(Window.orderBy("lat_s")))
-      .withColumn("n", sum(col("cnt")).over(Window.partitionBy()))
-      .withColumn("sums",
-        sum(col("lat_s") * col("cnt")).over(Window.partitionBy()))
-      .agg(max(col("n")).as("n_converted"),
-        max(col("sums")).as("sum_lat_s"),
-        min(when(col("running") * 2 >= col("n"), col("lat_s"))).as("p50_s"),
-        min(when(col("running") * 10 >= col("n") * 9, col("lat_s"))).as("p90_s"),
-        min(when(col("running") * 100 >= col("n") * 99, col("lat_s"))).as("p99_s"))
+    nearestRank(freq, Nil, "lat_s", col("cnt"),
+      Seq(("p50_s", 1, 2), ("p90_s", 9, 10), ("p99_s", 99, 100)),
+      sum(col("cnt")).as("n_converted"), sum(col("lat_s") * col("cnt")).as("sum_lat_s"))
       .select(col("n_converted"),
         expr("sum_lat_s * 1000 div n_converted").as("mean_s_e3"),
         col("p50_s"), col("p90_s"), col("p99_s"))
@@ -1268,6 +1261,17 @@ object EventAnalytics {
 
   // -- q132: lag-1 autocorrelation of the daily series ------------------
 
+  /** Pearson r over `Exact.moments`, unrounded: cxy / (√vx·√vy). */
+  private val PearsonR =
+    "CAST(cxy AS DOUBLE) / (sqrt(CAST(vx AS DOUBLE)) * sqrt(CAST(vy AS DOUBLE)))"
+
+  /** The least-squares slope of y on x, cxy / vx, in millionths. */
+  private val ThetaE6 = "CAST(round(CAST(cxy AS DOUBLE) / vx * 1000000, 0) AS BIGINT)"
+
+  /** r² = cxy² / (vx·vy) in millionths: no square root. */
+  private val R2E6 =
+    "CAST(round((CAST(cxy AS DOUBLE) * cxy) / (CAST(vx AS DOUBLE) * vy) * 1000000, 0) AS BIGINT)"
+
   /** SERIAL-CORRELATION PROFILE: Pearson autocorrelation at lag 1 day
     * of each event type's daily total value — the time-series health
     * check behind seasonality detection and forecast-model selection
@@ -1296,20 +1300,8 @@ object EventAnalytics {
       .withColumn("y", lag(col("x"), 1).over(w))
       .filter(col("prev_day").isNotNull &&
         col("day") === col("prev_day") + expr("INTERVAL 1 DAY"))
-    pairs.groupBy("event_type")
-      .agg(
-        count(lit(1)).as("n_pairs"),
-        sum(col("x")).as("sx"), sum(col("y")).as("sy"),
-        sum(col("x") * col("y")).as("sxy"),
-        sum(col("x") * col("x")).as("sxx"),
-        sum(col("y") * col("y")).as("syy"))
-      .withColumn("acf1",
-        expr("""CASE WHEN n_pairs * sxx - sx * sx > 0 AND n_pairs * syy - sy * sy > 0
-               | THEN (CAST(n_pairs * sxy - sx * sy AS DOUBLE))
-               |      / (sqrt(CAST(n_pairs * sxx - sx * sx AS DOUBLE))
-               |         * sqrt(CAST(n_pairs * syy - sy * sy AS DOUBLE)))
-               | END""".stripMargin))
-      .select("event_type", "n_pairs", "acf1")
+    moments(pairs.groupBy("event_type"), col("x"), col("y"))
+      .select(col("event_type"), col("n").as("n_pairs"), expr(PearsonR).as("acf1"))
   }
 
   // -- q133: deterministic-split A/B z-test -----------------------------
@@ -1863,37 +1855,24 @@ object EventAnalytics {
   /** The q250 report tail over the cell relation — shared with the
     * streaming twin so its answer is this exact code path. */
   private[graft] def cupedFinalize(ucells: DataFrame): DataFrame =
-    ucells.groupBy("event_type")
-      .agg(count(lit(1)).as("n"),
+    moments(ucells.groupBy("event_type"), col("x"), col("y"),
         sum(when(!col("treat"), 1L).otherwise(0L)).as("n0"),
         sum(when(col("treat"), 1L).otherwise(0L)).as("n1"),
-        sum(col("x")).as("sx"), sum(col("y")).as("sy"),
-        sum(col("x") * col("y")).as("sxy"),
-        sum(col("x") * col("x")).as("sxx"),
-        sum(col("y") * col("y")).as("syy"),
         sum(when(!col("treat"), col("x")).otherwise(0L)).as("sx0"),
         sum(when(col("treat"), col("x")).otherwise(0L)).as("sx1"),
         sum(when(!col("treat"), col("y")).otherwise(0L)).as("sy0"),
         sum(when(col("treat"), col("y")).otherwise(0L)).as("sy1"))
       .select(col("event_type"), col("n"), col("n0"), col("n1"),
-        expr("""CASE WHEN n * sxx - sx * sx > 0 THEN
-               | CAST(round(CAST(n * sxy - sx * sy AS DOUBLE)
-               |   / (n * sxx - sx * sx) * 1000000, 0) AS BIGINT)
-               | END""".stripMargin).as("theta_e6"),
+        expr(ThetaE6).as("theta_e6"),
         expr("""CASE WHEN n0 > 0 AND n1 > 0 THEN
                | CAST(sy1 AS DOUBLE) / n1 - CAST(sy0 AS DOUBLE) / n0
                | END""".stripMargin).as("diff_raw"),
-        expr("""CASE WHEN n0 > 0 AND n1 > 0 AND n * sxx - sx * sx > 0 THEN
+        expr("""CASE WHEN n0 > 0 AND n1 > 0 THEN
                | (CAST(sy1 AS DOUBLE) / n1 - CAST(sy0 AS DOUBLE) / n0)
-               | - (CAST(n * sxy - sx * sy AS DOUBLE) / (n * sxx - sx * sx))
+               | - (CAST(cxy AS DOUBLE) / vx)
                |   * (CAST(sx1 AS DOUBLE) / n1 - CAST(sx0 AS DOUBLE) / n0)
                | END""".stripMargin).as("diff_cuped"),
-        expr("""CASE WHEN n * sxx - sx * sx > 0 AND n * syy - sy * sy > 0 THEN
-               | CAST(round(
-               |   (CAST(n * sxy - sx * sy AS DOUBLE) * (n * sxy - sx * sy))
-               |   / (CAST(n * sxx - sx * sx AS DOUBLE) * (n * syy - sy * sy))
-               |   * 1000000, 0) AS BIGINT)
-               | END""".stripMargin).as("var_red_e6"))
+        expr(R2E6).as("var_red_e6"))
 
   val q250Cuped: Q = (s, d) =>
     cupedFinalize(cupedCells(Tables.events(s, d)))
@@ -2932,23 +2911,9 @@ object EventAnalytics {
       .groupBy(col("event_type"), date_trunc("DAY", col("ts")).as("day"))
       .agg(count(lit(1)).as("y"))
       .withColumn("x", expr("CAST(datediff(day, TIMESTAMP '1970-01-01 00:00:00') AS BIGINT)"))
-    daily.groupBy("event_type")
-      .agg(count(lit(1)).as("n_days"),
-        sum(col("x")).as("sx"), sum(col("y")).as("sy"),
-        sum(col("x") * col("y")).as("sxy"),
-        sum(col("x") * col("x")).as("sxx"),
-        sum(col("y") * col("y")).as("syy"))
-      .select(col("event_type"), col("n_days"),
-        expr("""CASE WHEN n_days * sxx - sx * sx > 0 THEN
-               | CAST(round(CAST(n_days * sxy - sx * sy AS DOUBLE)
-               |   / (n_days * sxx - sx * sx) * 1000000, 0) AS BIGINT)
-               | END""".stripMargin).as("slope_e6"),
-        expr("""CASE WHEN n_days * sxx - sx * sx > 0 AND n_days * syy - sy * sy > 0 THEN
-               | CAST(round(
-               |   (CAST(n_days * sxy - sx * sy AS DOUBLE) * (n_days * sxy - sx * sy))
-               |   / (CAST(n_days * sxx - sx * sx AS DOUBLE) * (n_days * syy - sy * sy))
-               |   * 1000000, 0) AS BIGINT)
-               | END""".stripMargin).as("r2_e6"))
+    moments(daily.groupBy("event_type"), col("x"), col("y"))
+      .select(col("event_type"), col("n").as("n_days"),
+        expr(ThetaE6).as("slope_e6"), expr(R2E6).as("r2_e6"))
   }
 
   // -- q155: lead–lag cross-correlation ---------------------------------
@@ -2984,23 +2949,11 @@ object EventAnalytics {
         (0 to XcorrMaxLag).map(l => s"${l}L, y$l").mkString(", ") +
         ") AS (lag, y)"))
       .filter(col("y").isNotNull)
-    val moments = stacked.groupBy("lag")
-      .agg(count(lit(1)).as("n_pairs"),
-        sum(col("x")).as("sx"), sum(col("y")).as("sy"),
-        sum(col("x") * col("y")).as("sxy"),
-        sum(col("x") * col("x")).as("sxx"),
-        sum(col("y") * col("y")).as("syy"))
-      .withColumn("r_e6",
-        expr("""CASE WHEN n_pairs * sxx - sx * sx > 0 AND n_pairs * syy - sy * sy > 0
-               | THEN CAST(round(CAST(n_pairs * sxy - sx * sy AS DOUBLE)
-               |   / (sqrt(CAST(n_pairs * sxx - sx * sx AS DOUBLE))
-               |      * sqrt(CAST(n_pairs * syy - sy * sy AS DOUBLE))) * 1000000, 0)
-               |   AS BIGINT)
-               | END""".stripMargin))
-    moments
+    moments(stacked.groupBy("lag"), col("x"), col("y"))
+      .withColumn("r_e6", expr(s"CAST(round($PearsonR * 1000000, 0) AS BIGINT)"))
       .withColumn("best_rank", row_number().over(
         Window.orderBy(coalesce(abs(col("r_e6")), lit(-1L)).desc, col("lag").asc)))
-      .select(col("lag"), col("n_pairs"), col("r_e6"),
+      .select(col("lag"), col("n").as("n_pairs"), col("r_e6"),
         (col("best_rank") === 1).as("is_best_lag"))
   }
 
@@ -3131,19 +3084,9 @@ object EventAnalytics {
       .select(col("event_type"), date_trunc("DAY", col("ts")).as("day"),
         e2(col("value")).as("v_e2"))
       .groupBy("event_type", "day", "v_e2").agg(count(lit(1)).as("cnt"))
-    val wRun = Window.partitionBy("event_type", "day").orderBy("v_e2")
-    val wAll = Window.partitionBy("event_type", "day")
-    cells
-      .withColumn("running", sum(col("cnt")).over(wRun))
-      .withColumn("n", sum(col("cnt")).over(wAll))
-      .withColumn("sv", sum(col("v_e2") * col("cnt")).over(wAll))
-      .groupBy("event_type", "day")
-      .agg(max(col("n")).as("n_events"),
-        max(col("sv")).as("sum_e2"),
-        min(when(col("running") * 2 >= col("n"), col("v_e2")))
-          .as("p50_e2"),
-        min(when(col("running") * 10 >= col("n") * 9, col("v_e2")))
-          .as("p90_e2"))
+    nearestRank(cells, Seq("event_type", "day"), "v_e2", col("cnt"),
+      Seq(("p50_e2", 1, 2), ("p90_e2", 9, 10)),
+      sum(col("cnt")).as("n_events"), sum(col("v_e2") * col("cnt")).as("sum_e2"))
       .select(col("event_type"), col("day"), col("n_events"),
         expr("sum_e2 div n_events").as("mean_e2"),
         col("p50_e2"), col("p90_e2"))

@@ -1013,12 +1013,9 @@ object Graph {
         .localCheckpoint(true) // read by the union AND next round's joins
       nFrontier = next.count()
       if (nFrontier > 0) {
-        val settled = dist.unionByName(next).localCheckpoint(true)
-        graft.ops.Checkpoints.drop(dist)
-        graft.ops.Checkpoints.drop(frontier)
-        dist = settled
+        dist = dist.unionByName(next).localCheckpoint(true)
         frontier = next
-      } else graft.ops.Checkpoints.drop(next)
+      }
     }
     nodes.join(dist, Seq("node"), "left")
       .select(coalesce(col("dist"), lit(-1L)).as("dist"))

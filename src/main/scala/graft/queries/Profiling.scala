@@ -116,8 +116,6 @@ object Profiling {
       cols.map(c => s"'$c', $c").mkString(", ") + ") AS (column_name, v)"
 
   val q41ProfileSketch: Q = (s, d) => {
-    import org.apache.spark.sql.expressions.Window
-
     // (1) n / n_null per column: ONE narrow single-row aggregate over
     // the scan — no shuffle of data rows, stacked to one row per column
     val countAggs = count(lit(1)).as("n_rows") +:
@@ -160,20 +158,13 @@ object Profiling {
     // relation of ≤ ~61 rows, window sort bounded by that domain —
     // the honest cost of exact order statistics, paid only where it
     // is bounded. Unbounded columns surface as NULL via the left join.
-    val byCol = Window.partitionBy("column_name")
-    val pct = Tables.lineitem(s, d)
+    val pctFreq = Tables.lineitem(s, d)
       .select(ExactPctCols.map(c => e2(col(c)).as(c)): _*)
       .selectExpr(meltExpr(ExactPctCols))
       .filter(col("v").isNotNull)
       .groupBy(col("column_name"), col("v")).agg(count(lit(1)).as("cnt"))
-      .withColumn("n", sum(col("cnt")).over(byCol))
-      .withColumn("running", sum(col("cnt")).over(byCol.orderBy("v")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-      .groupBy(col("column_name"))
-      .agg(
-        min(when(col("running") * 2 >= col("n"), col("v"))).as("p50_e2"),
-        min(when(col("running") * 10 >= col("n") * 9, col("v"))).as("p90_e2"),
-        min(when(col("running") * 100 >= col("n") * 99, col("v"))).as("p99_e2"))
+    val pct = nearestRank(pctFreq, Seq("column_name"), "v", col("cnt"),
+      Seq(("p50_e2", 1, 2), ("p90_e2", 9, 10), ("p99_e2", 99, 100)))
 
     // LEFT joins from counts: an all-NULL column has no distinct (or
     // pct) group, but a profiler must still report it (n=0 non-null,
@@ -241,28 +232,20 @@ object Profiling {
     * the fact table to the (key, cnt) frequency relation — one
     * partial-aggregated shuffle, the only pass over facts. Phase 2
     * ranks that relation (|keys| rows, orders of magnitude smaller
-    * than facts) with the q75 dual-rank idiom to read exact p50/p99
-    * frequencies, top-1 count, and the ppm share of the hottest key —
+    * than facts) to read the nearest-rank p50/p99 frequencies
+    * (`Exact.nearestRank`), top-1 count, and the ppm share of the hottest key —
     * all integer math. The single-partition sort of the frequency
     * relation is the honest cost of EXACT order statistics and is
     * bounded by key cardinality, not data volume; the q41 sketch path
     * is the unbounded-cardinality alternative. */
   val q87KeySkewProfile: Q = (s, d) => {
-    import org.apache.spark.sql.expressions.Window
     val freq = Tables.lineitem(s, d)
       .groupBy(col("l_suppkey")).agg(count(lit(1)).as("cnt"))
-    val w = Window.orderBy(col("cnt"), col("l_suppkey"))
-    freq
-      .withColumn("rn", row_number().over(w).cast("long"))
-      .withColumn("n_keys", count(lit(1)).over(Window.partitionBy()))
-      .withColumn("p50_rn", expr("(n_keys + 1) div 2"))
-      .withColumn("p99_rn", expr("(n_keys * 99 + 99) div 100"))
-      .agg(
-        max(col("n_keys")).as("n_keys"),
-        sum(col("cnt")).as("n_rows"),
-        max(col("cnt")).as("top1_cnt"),
-        sum(when(col("rn") === col("p50_rn"), col("cnt")).otherwise(0L)).as("p50_cnt"),
-        sum(when(col("rn") === col("p99_rn"), col("cnt")).otherwise(0L)).as("p99_cnt"))
+    // n_keys is sum(1), not count: NULL over no keys, as the oracle's
+    // max(count(*) OVER ())
+    nearestRank(freq, Nil, "cnt", lit(1L),
+      Seq(("p50_cnt", 1, 2), ("p99_cnt", 99, 100)),
+      sum(lit(1L)).as("n_keys"), sum(col("cnt")).as("n_rows"), max(col("cnt")).as("top1_cnt"))
       .withColumn("top1_share_ppm", expr("top1_cnt * 1000000 div n_rows"))
       .withColumn("skew_p99_over_p50_e2", expr("p99_cnt * 100 div p50_cnt"))
   }
@@ -334,8 +317,7 @@ object Profiling {
     * state must equal the one-shot recompute the oracle states. The
     * per-run cost of this pattern is O(batch + touched keys),
     * independent of history age — the 100 TB daily-mart play;
-    * IncrementalAggSpec additionally pins fold-order invariance and
-    * exactly-once batch replay. */
+    * IncrementalAggSpec additionally pins fold-order invariance. */
   val q99IncrementalRollup: Q = (s, d) => {
     import graft.ops.IncrementalAgg
     import graft.ops.IncrementalAgg.Metrics

@@ -6,8 +6,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Pins incremental aggregate maintenance: batch-wise folds must equal
-  * a full recompute regardless of how history is split into batches,
-  * and replaying a batch id must be a no-op.
+  * a full recompute regardless of how history is split into batches.
   */
 class IncrementalAggSpec extends SparkSpec {
 
@@ -41,21 +40,6 @@ class IncrementalAggSpec extends SparkSpec {
       IncrementalAgg.merge(IncrementalAgg.aggregate(first, keys, m),
         IncrementalAgg.aggregate(second, keys, m), keys, m)
     asMap(fold(b1, b2)) shouldBe asMap(fold(b2, b1))
-  }
-
-  test("mergeOnce replays are no-ops: at-least-once in, exactly-once state") {
-    val empty = IncrementalAgg.aggregate(raw(), keys, m)
-    val noneApplied = Seq.empty[String].toDF("__batch_id")
-    val b1 = raw("a" -> 1L, "b" -> 2L)
-    val (s1, a1) = IncrementalAgg.mergeOnce(empty, noneApplied, b1, "batch-1", keys, m)
-    // redelivery of batch-1 (same id, even different payload) is ignored
-    val (s2, a2) = IncrementalAgg.mergeOnce(s1, a1, raw("a" -> 999L), "batch-1", keys, m)
-    asMap(s2) shouldBe asMap(s1)
-    a2.count() shouldBe 1L
-    // a genuinely new batch still lands
-    val (s3, a3) = IncrementalAgg.mergeOnce(s2, a2, raw("a" -> 4L), "batch-2", keys, m)
-    asMap(s3)("a") shouldBe ((2L, 5L, 1L, 4L))
-    a3.count() shouldBe 2L
   }
 
   test("random batch splits always equal the one-shot recompute (property)") {

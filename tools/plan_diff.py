@@ -1,0 +1,98 @@
+#!/usr/bin/env python3
+"""Diff two PlanAudit outputs query by query and print the queries whose
+physical plans moved.
+
+    PLAN_SIMPLE=1 sbt 'runMain graft.PlanAudit SF_DIR' > a.txt 2>&1
+    # ... the same in the other checkout into b.txt, then:
+    python3 tools/plan_diff.py a.txt b.txt          # names of moved queries
+    python3 tools/plan_diff.py a.txt b.txt --show   # plus a unified diff of each
+
+Each query's plan is the text between its `========== name ==========`
+header and the next one. Lines that are not plan text are dropped: Spark
+log lines (`yy/MM/dd HH:mm:ss LEVEL ...`), sbt's own `[info]`/`[warn]`/
+`[success]`/`[error]` lines and blank lines; a log record that stderr
+wrote into the middle of a plan line is cut out and the line rejoined.
+What differs between two runs of the same code is masked before
+comparing: expression ids (`#123`), object hashes (`@1a2b3c`), lambda
+class names (`$Lambda$5486/0x00007f...`) and exchange plan ids
+(`plan_id=12`). A query present on one side only is
+reported as added or removed. The exit code is 1 when any plan moved,
+0 otherwise. Both sides must come from the same PlanAudit session shape
+and the same sf dir.
+"""
+import argparse
+import difflib
+import re
+import sys
+
+HEADER = re.compile(r"^=+ (\S+) =+$")
+LOG = re.compile(r"\d\d/\d\d/\d\d \d\d:\d\d:\d\d [A-Z]+ ")
+NOISE = re.compile(r"^(\[(info|warn|success|error)\] |WARNING: |SLF4J)")
+MASKS = [
+    (re.compile(r"#\d+L?"), "#N"),
+    (re.compile(r"@[0-9a-f]{4,}\b"), "@H"),
+    (re.compile(r"\$Lambda\$\d+/0x[0-9a-f]+"), "$Lambda$N"),
+    (re.compile(r"plan_id=\d+"), "plan_id=N"),
+]
+
+
+def mask(line):
+    for pat, rep in MASKS:
+        line = pat.sub(rep, line)
+    return line.rstrip()
+
+
+def plans(path):
+    """Map query name -> list of masked plan lines, in file order."""
+    out = {}
+    cur = None
+    pending = ""  # plan text cut off by a log record written mid-line
+    with open(path, encoding="utf-8", errors="replace") as f:
+        for raw in f:
+            line = pending + raw.rstrip("\n")
+            pending = ""
+            log = LOG.search(line)
+            if log:
+                pending = line[:log.start()]
+                continue
+            m = HEADER.match(line.strip())
+            if m:
+                cur = m.group(1)
+                out[cur] = []
+            elif cur is not None and line.strip() and not NOISE.match(line):
+                out[cur].append(mask(line))
+    return out
+
+
+def main():
+    ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
+    ap.add_argument("a", help="PlanAudit output of the first checkout")
+    ap.add_argument("b", help="PlanAudit output of the second checkout")
+    ap.add_argument("--show", action="store_true",
+                    help="print a unified diff of every moved plan")
+    args = ap.parse_args()
+    a, b = plans(args.a), plans(args.b)
+    if not a or not b:
+        sys.exit(f"no `========== name ==========` sections in "
+                 f"{args.a if not a else args.b}")
+    moved = 0
+    for name in sorted(set(a) | set(b)):
+        if name not in b:
+            print(f"removed {name}")
+        elif name not in a:
+            print(f"added   {name}")
+        elif a[name] != b[name]:
+            print(f"moved   {name}")
+            if args.show:
+                sys.stdout.writelines(
+                    l + "\n" for l in difflib.unified_diff(
+                        a[name], b[name], args.a, args.b, lineterm="", n=2))
+        else:
+            continue
+        moved += 1
+    print(f"{moved} of {len(set(a) | set(b))} plans moved")
+    sys.exit(1 if moved else 0)
+
+
+if __name__ == "__main__":
+    main()
