@@ -50,8 +50,8 @@ import org.apache.spark.sql.types.StructType
   *    the same inputs rebuild the same rows.
   * SCD2 merges and gold always run. A silver dim's inputs are the
   * `_source` markers of the landing tables it reads and the schema of
-  * the frame it is built from; an input without a marker (a JDBC or
-  * ORC landing) has no known content, so its dim is always rebuilt.
+  * the frame it is built from; an input without a marker (a JDBC
+  * landing) has no known content, so its dim is always rebuilt.
   *
   * Markers record code as well as data: each fingerprint includes a
   * derivation version, [[HealthPipeline.Derivation]] for the bronze

@@ -29,8 +29,8 @@ import org.apache.spark.sql.types.{DataType, StringType, StructField, StructType
   * the JSON writer omits null fields, so inference never sees such a
   * column and a bronze read without the recorded schema drops it. A
   * dir without `_schema.json` (a landing with a typed column, from a
-  * JDBC or ORC source, or one written before schemas were recorded)
-  * is read with inference.
+  * JDBC source, or one written before schemas were recorded) is read
+  * with inference.
   *
   * A staged extract can also record where it came from: `_source`
   * holds the source's fingerprint ([[SourceConnector.fingerprint]])

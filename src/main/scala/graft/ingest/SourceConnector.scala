@@ -53,17 +53,6 @@ final class CsvSource(dir: String) extends SourceConnector {
       Seq(s"$table.csv" -> new org.apache.hadoop.fs.Path(path(table))))
 }
 
-/** ORC-backed source — the second columnar format Spark ships a
-  * vectorized reader for (common in Hive-heritage warehouses): typed
-  * schema from the file footer, and the incremental watermark
-  * predicate reaches the ORC scan as a pushed filter + stripe-level
-  * min/max skipping (OrcSourceSpec pins `PushedFilters` in the plan),
-  * so a 100 TB incremental load reads only post-watermark stripes. */
-final class OrcSource(dir: String) extends SourceConnector {
-  def read(spark: SparkSession, table: String): DataFrame =
-    spark.read.orc(s"$dir/$table.orc")
-}
-
 /** Real JDBC source (S1; reference hospitalA_mysqlToLanding.py:155-163,
   * query built :148-152). The incremental path pushes the watermark
   * predicate down as a `dbtable` sub-select, exactly like the
@@ -74,10 +63,10 @@ final class OrcSource(dir: String) extends SourceConnector {
   * fails on engines that don't implicitly cast to TIMESTAMP).
   *
   * Tested against embedded Derby (JdbcSourceSpec), including an
-  * IngestionRunner run-over-run watermark cycle; the CSV and ORC
-  * connectors remain the driver-testdata substitutes behind the same
-  * trait. Derby has no sub-select alias keyword quirks, and Spark
-  * wraps `dbtable` as `SELECT * FROM <dbtable> WHERE 1=0` for schema
+  * IngestionRunner run-over-run watermark cycle; the CSV connector
+  * remains the driver-testdata substitute behind the same trait.
+  * Derby has no sub-select alias keyword quirks, and Spark wraps
+  * `dbtable` as `SELECT * FROM <dbtable> WHERE 1=0` for schema
   * probing, so the alias is mandatory.
   *
   * @param url   JDBC URL, e.g. jdbc:mysql://host:3306/db

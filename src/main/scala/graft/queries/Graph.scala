@@ -18,11 +18,9 @@ import org.apache.spark.sql.functions._
   * shrink per level — see its scaladoc); [[connectedComponentsBlocked]]
   * exploits a blocking key that components provably never cross
   * (q125's per-brand window) to close everything in ONE shuffle +
-  * per-partition union-find. Lineage of the iterative path is
-  * truncated per level via [[graft.ops.Checkpoints.cut]]: executor-
-  * local by default, durable `checkpoint()` for executor-loss
-  * recovery when `spark.graft.checkpointDir` points at cluster
-  * storage — the mode a 100 TB run must use.
+  * per-partition union-find. Lineage of the iterative path is cut
+  * per level by [[graft.ops.Checkpoints.cut]]: a parquet write under
+  * `spark.graft.checkpointDir` and a fresh scan of it.
   *
   * Oracle: an independent DuckDB restatement — WITH RECURSIVE
   * min-label reachability over the same pair relation (q21's oracle
@@ -35,13 +33,12 @@ object Graph {
   /** Connected components of an undirected graph given as (a, b)
     * pairs; returns (id, lbl) with lbl = min node id reachable.
     *
-    * GRAPH CONTRACTION (the round-9 rewrite — the previous min-label
-    * + pointer-jump loop needed ~28 rounds / 17.7 s on q144's merge
-    * chains because a jump lands on the ARGMIN of the covered window,
-    * which is its own fixpoint almost immediately: measured, extra
-    * jumps beyond the second made zero additional progress, so every
-    * round degenerated to the one-hop hook — flood fill in disguise).
-    * Per LEVEL:
+    * GRAPH CONTRACTION. A min-label + pointer-jump loop needs ~28
+    * rounds / 17.7 s on q144's merge chains, because a jump lands on
+    * the ARGMIN of the covered window, which is its own fixpoint
+    * almost immediately: measured, extra jumps beyond the second make
+    * zero additional progress, so every round degenerates to the
+    * one-hop hook — flood fill in disguise. Per LEVEL:
     *   1. hook: m(v) = min(v, neighbors(v)) — one map-combined
     *      aggregate over the symmetric edge list, no join (the first
     *      hook's labels are the identity, so the usual edge⋈label
@@ -60,19 +57,18 @@ object Graph {
     * O(log diameter) with GEOMETRICALLY decreasing work — the per-unit
     * scale shape of the alternating-star family (Kiveris et al.,
     * MapReduce CC), not 28 flat full-size rounds. q144 measured
-    * 4 levels where the old loop ran 30 rounds.
+    * 4 levels where the pointer-jump loop ran 30 rounds.
     *
-    * Durability/lineage discipline: the driver recursion is control
-    * plane (depth = levels, one isEmpty scalar each). Each level's
-    * contracted edge list is durably checkpoint-cut (severs the
-    * cross-level RDD object chain that melted the old loop from
-    * ~round 18 — see Checkpoints.ensureDurable) and its files are
-    * reclaimed as soon as the child level returns; within a level the
+    * Lineage discipline: the driver recursion is control plane
+    * (depth = levels, one isEmpty scalar each). Each level's
+    * contracted edge list is cut to files (severs the cross-level RDD
+    * object chain that grows the driver's work per round — see
+    * [[graft.ops.Checkpoints]]) and its files are reclaimed as soon
+    * as the child level returns; within a level the
     * hooked labels use a LAZY localCheckpoint (plan-tree truncation
     * for the self-joins, no extra job, lineage ends at the level's
     * own file scan). Only the final composed labeling keeps files. */
   private[graft] def connectedComponents(pairs: DataFrame): DataFrame = {
-    graft.ops.Checkpoints.ensureDurable(pairs.sparkSession)
     // materialized BEFORE symmetrization: the union references it
     // twice, and without the checkpoint the whole upstream
     // pair-detection plan (q21's joins, for q55) would run per leg
@@ -175,9 +171,9 @@ object Graph {
   val q55DupClusters: Q = (s, d) => {
     val pairs = LlmPipeline.q21DedupMinhashLsh(s, d)
       .select(col("doc_a").as("a"), col("doc_b").as("b"))
-    // memoized (r14): the contraction's checkpoint-cut output can't be
-    // shared by plan canonicalization (fresh files per run), so the
-    // ~9 consumer queries each re-ran the whole driver recursion even
+    // memoized: the contraction's cut output can't be shared by plan
+    // canonicalization (fresh files per run), so without the memo the
+    // ~9 consumer queries each re-run the whole driver recursion even
     // in shared mode; the memo serves one labeling per (session, dir)
     // until the Checkpoints.releaseAll boundary
     val lbl = graft.ops.Checkpoints.memo(s, s"cc:q21pairs:$d") {
@@ -285,7 +281,7 @@ object Graph {
     val share1 = r0 * nDangling / n // uniform start: closed form
     val r1 = prStep(nodes, wedges, base, share1)(
         nodes.select(col("node"), lit(r0).as("rank_e9")))
-      .transform(graft.ops.Checkpoints.cut) // read by d2 sum + step 2
+      .localCheckpoint(true) // read by d2 sum + step 2
     val d2 = r1.join(srcs, Seq("node"), "left_anti")
       .agg(coalesce(sum(col("rank_e9")), lit(0L)).as("s"))
       .first().getLong(0)
@@ -374,7 +370,7 @@ object Graph {
     * contributes almost nothing because nearly all its edges point
     * INTO it. Edge building reuses q96's in-row pair expansion (one
     * shuffle on l_orderkey, no self-join on raw lineitem); the edge
-    * relation is checkpoint-cut once and re-read by the degree pass
+    * relation is checkpointed once and re-read by the degree pass
     * and all three join legs. Everything downstream is equi-joins and
     * partial-aggregated counts on bounded keys — no cartesian, no
     * driver-side state. */
@@ -383,11 +379,11 @@ object Graph {
     * edge listed once. Exposed for spec fixtures (K4, paths). */
   private[graft] def triangleStats(pairs: DataFrame): DataFrame = {
     val edges = pairs.select(col("x"), col("y"))
-      .transform(graft.ops.Checkpoints.cut) // reused: degrees + three join legs
+      .localCheckpoint(true) // reused: degrees + three join legs
     val deg = edges.select(col("x").as("node"))
       .union(edges.select(col("y").as("node")))
       .groupBy("node").agg(count(lit(1)).as("deg"))
-      .transform(graft.ops.Checkpoints.cut) // reused: orientation + final join
+      .localCheckpoint(true) // reused: orientation + final join
     // (deg, id) total order; struct comparison is lexicographic in both
     // engines (DuckDB row-value compare in the oracle)
     val xFirst = struct(col("dx"), col("x")) < struct(col("dy"), col("y"))
@@ -398,7 +394,7 @@ object Graph {
         when(xFirst, col("x")).otherwise(col("y")).as("src"),
         when(xFirst, col("y")).otherwise(col("x")).as("dst"),
         when(xFirst, col("dy")).otherwise(col("dx")).as("ddeg"))
-      .transform(graft.ops.Checkpoints.cut) // three self-join legs below
+      .localCheckpoint(true) // three self-join legs below
     val wedges = oriented.as("e1").join(oriented.as("e2"),
         col("e1.src") === col("e2.src") &&
           struct(col("e1.ddeg"), col("e1.dst")) <
@@ -419,11 +415,11 @@ object Graph {
 
   /** The COUNTED co-purchase pair relation (x, y, n_orders), built
     * with the in-row pair expansion — one shuffle on l_orderkey, no
-    * self-join on raw lineitem — and SharedCache'd (r12): FOUR graph
+    * self-join on raw lineitem — and SharedCache'd: FOUR graph
     * queries derive their edge list from it (q121 triangles and
     * q162 LPA and q175 modularity at ≥[[TriMinSupport]] support, q138
-    * k-core at all pairs), and before the registration each one
-    * re-ran the basket expansion; the cached relation is three longs
+    * k-core at all pairs), and without the registration each one
+    * re-runs the basket expansion; the cached relation is three longs
     * per distinct pair — key-space-sized, never lineitem-sized.
     * Isolate mode releases it between queries as always. */
   private[graft] def copurchasePairCounts(s: SparkSession, d: String): DataFrame = {
@@ -555,12 +551,12 @@ object Graph {
     * (x, y) pairs, each edge listed once. Returns surviving nodes
     * with their residual in-core degree. Exposed for spec fixtures.
     *
-    * INCREMENTAL-DEGREE rewrite (round 9b — measured 5.8 s → ~1.5 s
-    * peel at sf0.1): the original loop re-aggregated degrees over the
-    * FULL edge list and semi-joined it twice against the (large) keep
-    * set every round, i.e. O(|E|) shuffle work × rounds even though a
-    * round typically removes a sliver. This version maintains the
-    * degree relation incrementally — per round:
+    * INCREMENTAL DEGREES: re-aggregating degrees over the FULL edge
+    * list and semi-joining it twice against the (large) keep set every
+    * round costs O(|E|) shuffle work × rounds, though a round
+    * typically removes a sliver (measured 5.8 s against ~1.5 s for
+    * this peel at sf0.1). This loop maintains the degree relation
+    * incrementally — per round:
     *   1. dropped = deg < k (typically TINY after round 1; AQE
     *      broadcasts it, so the edge pass is map-side, no |E| shuffle);
     *   2. one pass over e LEFT-flags each endpoint against dropped:
@@ -571,12 +567,12 @@ object Graph {
     * The maintained deg ≡ degrees(e) is the loop invariant (pinned by
     * GraphSpec's cascade fixtures), so the final answer needs no
     * closing re-aggregate either. Driver state: one isEmpty scalar per
-    * round. Lineage: e'/deg' localCheckpoint eagerly on shallow rounds
-    * (the X146 driver-side blowup only bites past ~18) and fall back
-    * to durable file-backed cuts on pathological cascades, same
-    * discipline as [[connectedComponents]]. */
+    * round. Lineage: e is cut to files once; deg' localCheckpoints
+    * eagerly on shallow rounds (the driver-side RDD-chain growth
+    * [[graft.ops.Checkpoints]] describes only bites past ~18) and is
+    * cut to files on pathological cascades, as in
+    * [[connectedComponents]]. */
   private[graft] def kcorePeel(edges0: DataFrame, k: Int): DataFrame = {
-    graft.ops.Checkpoints.ensureDurable(edges0.sparkSession)
     val e = edges0.transform(graft.ops.Checkpoints.cut) // immutable, scanned per round
     var deg = e.select(col("x").as("node")).union(e.select(col("y").as("node")))
       .groupBy("node").agg(count(lit(1)).as("deg"))
@@ -615,10 +611,10 @@ object Graph {
           .join(delta, Seq("node"), "left")
           .select(col("node"),
             (col("deg") - coalesce(col("d"), lit(0L))).as("deg"))
-        // shallow rounds take the cheap in-memory cut (the X146
-        // driver-side blowup only bites past ~18 rounds); pathological
-        // cascades fall back to durable file-backed cuts. Both modes
-        // are eager, so the superseded deg is safe to drop.
+        // shallow rounds take the cheap in-memory cut (the driver-side
+        // RDD-chain growth only bites past ~18 rounds); pathological
+        // cascades fall back to file-backed cuts. Both are eager, so
+        // the superseded deg is safe to drop.
         val nextDeg =
           if (round <= 12) nextDeg0.localCheckpoint(true)
           else nextDeg0.transform(graft.ops.Checkpoints.cut)
@@ -629,7 +625,7 @@ object Graph {
     // one greppable line per peel: the ScaleGen certification reads
     // this to show the DRIVER ROUND COUNT stays flat as data scales
     // (the cascade depth is a property of the graph's degeneracy
-    // structure, not its size — the r12 30× measurement's claim)
+    // structure, not its size)
     System.err.println(s"[kcore] k=$k driver_rounds=$round " +
       s"peel_rounds=${round - 1}")
     deg.select(col("node"), col("deg").as("deg_in_core"))
@@ -643,11 +639,11 @@ object Graph {
     * counts (q121) and centrality (q90) each miss in their own way
     * (the support-floored q121 graph is near-forest at sf0.1, hence
     * ALL pairs here). Peeling is the textbook Matula–Beck reduction,
-    * run by [[kcorePeel]] as a true convergence loop (round-9 fix:
-    * the old FOUR fixed rounds silently under-peeled — full
-    * convergence here takes 5 cascades at sf0.01/sf0.1, and the old
-    * k=90 actually peels to EMPTY once run to fixpoint, the measured
-    * co-purchase degeneracy being 82–84; k=80 keeps a real core of
+    * run by [[kcorePeel]] as a true convergence loop (four fixed
+    * rounds would silently under-peel: full convergence here takes 5
+    * cascades at sf0.01/sf0.1, and k=90 peels to EMPTY once run to
+    * fixpoint, the measured co-purchase degeneracy being 82–84;
+    * k=80 keeps a real core of
     * ~1.9k/18.9k parts). The oracle restates [[KCoreOracleRounds]]
     * unrolled CTE rounds — past-convergence rounds are exact no-ops,
     * and a dataset cascading deeper than the unroll fails the gate
@@ -702,7 +698,7 @@ object Graph {
         .filter(col("rn") === 1)
         .select(col("node"), col("nlbl").as("lbl"))
     }
-    // r14 (guide §2.4): the final label relation is persisted — q175
+    // the final label relation is persisted — q175
     // consumes it through THREE plan branches (both intra-edge endpoint
     // maps + the degree join), each of which otherwise replays all
     // `rounds` join+aggregate+window rounds; the relation is |V| rows

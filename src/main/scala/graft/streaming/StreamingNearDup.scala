@@ -118,18 +118,18 @@ object StreamingNearDup {
         .union(verified(candNew).select("doc_id")).distinct()
 
       // novel = every batch doc without a verified partner (including
-      // sub-shingle-width docs, which have no sig row at all).
-      // Checkpoints.cut — NOT persist — because the plan reads the
-      // index parquet paths we are about to append to: Spark's
+      // sub-shingle-width docs, which have no sig row at all). An
+      // eager localCheckpoint — NOT persist — because the plan reads
+      // the index parquet paths we are about to append to: Spark's
       // recacheByPath invalidates and RECOMPUTES any cache whose plan
       // scans a written path, and the recomputation would re-read the
       // just-appended bands and classify every novel doc as a
       // duplicate of itself. Checkpointing truncates the lineage to
       // the materialized rows, so the subsequent index writes cannot
       // change the novel set mid-batch.
-      val novelIds = graft.ops.Checkpoints.cut(
-        batch.select(col("doc_id")).distinct()
-          .join(dupIds, Seq("doc_id"), "left_anti"))
+      val novelIds = batch.select(col("doc_id")).distinct()
+        .join(dupIds, Seq("doc_id"), "left_anti")
+        .localCheckpoint(true)
       // index EVERY batch doc (novel and suppressed): a future doc
       // whose only near-dup partner was itself suppressed must still
       // be caught — dropping suppressed sigs would break dup chains.

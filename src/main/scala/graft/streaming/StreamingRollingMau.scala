@@ -56,12 +56,12 @@ object StreamingRollingMau {
   def processBatch(
       spark: SparkSession, batch: DataFrame, indexDir: String, countsDir: String): Long = {
     val idx = readOrEmpty(spark, indexDir, "window_day DATE, user_id BIGINT")
-    // Checkpoints.cut: the plan reads the index path this batch is
-    // about to append to (StreamingNearDup pitfall — a cached plan over
-    // a written path recomputes against the NEW files)
-    val novel = graft.ops.Checkpoints.cut(
-      contributions(batch)
-        .join(idx, Seq("window_day", "user_id"), "left_anti"))
+    // an eager localCheckpoint: the plan reads the index path this
+    // batch is about to append to (StreamingNearDup pitfall — a cached
+    // plan over a written path recomputes against the NEW files)
+    val novel = contributions(batch)
+      .join(idx, Seq("window_day", "user_id"), "left_anti")
+      .localCheckpoint(true)
     val n = novel.count()
     if (n > 0) graft.ops.LocalFs.write(novel).mode("append").parquet(indexDir)
 

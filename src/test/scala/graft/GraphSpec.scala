@@ -97,18 +97,18 @@ class GraphSpec extends SparkSpec {
   }
 
   test("durable-checkpoint mode (spark.graft.checkpointDir) agrees with local mode") {
+    // the conf names where cuts go; the labels are the same wherever
     val dir = java.nio.file.Files.createTempDirectory("graft-ckpt").toString
-    val local = cc((5L, 2L), (2L, 9L), (30L, 40L))
+    val expected = Map(5L -> 2L, 2L -> 2L, 9L -> 2L, 30L -> 30L, 40L -> 30L)
     spark.conf.set(graft.ops.Checkpoints.DirKey, dir)
     try {
-      val durable = cc((5L, 2L), (2L, 9L), (30L, 40L))
-      durable shouldBe local
-      // reliable checkpoint() actually wrote partitions to the dir
+      cc((5L, 2L), (2L, 9L), (30L, 40L)) shouldBe expected
+      // the cuts wrote their parquet files under the dir
       def files() = java.nio.file.Files.walk(java.nio.file.Paths.get(dir))
         .filter(java.nio.file.Files.isRegularFile(_)).count()
       files() should be > 0L
-      // owner-drawn boundary: checkpoint files are not GC'd by Spark,
-      // releaseAll reclaims them once no checkpointed DF is still read
+      // owner-drawn boundary: cut files are not GC'd by Spark,
+      // releaseAll reclaims them once no cut DF is still read
       graft.ops.Checkpoints.releaseAll(spark)
       files() shouldBe 0L
     } finally spark.conf.unset(graft.ops.Checkpoints.DirKey)

@@ -155,6 +155,15 @@ class IngestionRunnerSpec extends SparkSpec {
     a.head.getAs[Long]("record_count") shouldBe 2L
   }
 
+  test("CsvSource incremental read filters strictly after the watermark") {
+    val src = tmpDir("ing-src")
+    writeCsv(src, "alpha", Seq("id,ModifiedDate",
+      "1,2024-01-01 00:00:00", "2,2024-02-01 00:00:00", "3,2024-03-01 00:00:00"))
+    new CsvSource(src).readIncremental(spark, "alpha", "ModifiedDate", fixed("2024-02-01 00:00:00"))
+      .select("id").as[String](org.apache.spark.sql.Encoders.STRING)
+      .collect().toSeq shouldBe Seq("3") // the row AT the watermark was already loaded
+  }
+
   test("zero-row incremental short-circuits: no landing write, audit still SUCCESS") {
     val src = tmpDir("ing-src")
     writeCsv(src, "alpha", Seq("id,ModifiedDate", "1,2024-01-01"))

@@ -14,9 +14,10 @@ log lines (`yy/MM/dd HH:mm:ss LEVEL ...`), sbt's own `[info]`/`[warn]`/
 wrote into the middle of a plan line is cut out and the line rejoined.
 What differs between two runs of the same code is masked before
 comparing: expression ids (`#123`), object hashes (`@1a2b3c`), lambda
-class names (`$Lambda$5486/0x00007f...`) and exchange plan ids
-(`plan_id=12`). A query present on one side only is
-reported as added or removed. The exit code is 1 when any plan moved,
+class names (`$Lambda$5486/0x00007f...`), exchange plan ids
+(`plan_id=12`) and the directory of a `Checkpoints.cut` scan
+(`graft-ckpt-<n>/<uuid>`, which Spark may cut short with `...`). A
+query present on one side only is reported as added or removed. The exit code is 1 when any plan moved,
 0 otherwise. Both sides must come from the same PlanAudit session shape
 and the same sf dir.
 """
@@ -33,6 +34,7 @@ MASKS = [
     (re.compile(r"@[0-9a-f]{4,}\b"), "@H"),
     (re.compile(r"\$Lambda\$\d+/0x[0-9a-f]+"), "$Lambda$N"),
     (re.compile(r"plan_id=\d+"), "plan_id=N"),
+    (re.compile(r"graft-ckpt-[0-9a-f/-]*(\.\.\.)?"), "graft-ckpt-N"),
 ]
 
 
