@@ -4,7 +4,7 @@ import java.sql.Timestamp
 import java.time.LocalDate
 
 import graft.ingest._
-import graft.ops.{Fingerprint, LocalFs, TableSwap}
+import graft.ops.{Fingerprint, Interpreted, LocalFs, TableSwap}
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -53,6 +53,28 @@ import org.apache.spark.sql.types.StructType
   * the frame it is built from; an input without a marker (a JDBC
   * landing) has no known content, so its dim is always rebuilt.
   *
+  * Every plan this instance builds (ingest extracts, audit and log
+  * appends, the watermark scan, bronze, the silver merges, gold, and
+  * the [[silver]]/[[gold]] reads) runs interpreted, in
+  * [[graft.ops.Interpreted.session]]: a clone of `spark`, made once
+  * by the constructor, with whole-stage and expression codegen off. On
+  * a few thousand rows per table, Janino-compiling the ~170 generated
+  * classes of a daily run, then JIT-compiling them, costs more than
+  * the rows do (interpreted, about 10 remain: Spark generates a text
+  * scan's row projection and a partial aggregate's row joiner whatever
+  * the conf); measured on 4 cores over generated fixtures of 0.6 to
+  * 265 MB, the interpreted full load and daily run had the lower
+  * median time at every size. `spark` is
+  * never changed: the clone forwards each execution to the query
+  * execution listeners registered on `spark` when it ends, so a
+  * listener added after construction still sees every plan. The
+  * clone's SQL conf is `spark`'s as of construction: a conf set on
+  * `spark` later (time zone, shuffle partitions, ANSI mode) does not
+  * reach this instance's plans, so build a new pipeline to pick it
+  * up. The decimal mode alone stays read from `spark`'s conf per run.
+  * One `plan` INFO event in `pipeline_logs` records the session the
+  * plans run in.
+  *
   * Markers record code as well as data: each fingerprint includes a
   * derivation version, [[HealthPipeline.Derivation]] for the bronze
   * loads and the dims and [[graft.ingest.LandingZone.Derivation]] for
@@ -86,11 +108,17 @@ final class HealthPipeline(
       HealthSilver.scd2EntitiesWith(HealthSilver.MoneyDecimal)
     else HealthSilver.scd2Entities
 
+  /** The session every plan of this instance runs in (see the class
+    * notes). */
+  private val session: SparkSession = Interpreted.session(spark)
+
   private val auditPath = s"$workRoot/audit_log"
   private val logsPath = s"$workRoot/pipeline_logs"
-  val landing = new LandingZone(spark, s"$workRoot/landing")
-  val audit = new AuditLog(spark, auditPath)
-  val logger = new PipelineLogger(spark, logsPath, clock)
+  val landing = new LandingZone(session, s"$workRoot/landing")
+  val audit = new AuditLog(session, auditPath)
+  val logger = new PipelineLogger(session, logsPath, clock)
+
+  logger.info("Interpreted session: whole-stage and expression codegen off", "plan")
 
   private val fs = LocalFs.fsOf(spark, workRoot)
   private def exists(path: String): Boolean = fs.exists(new Path(path))
@@ -107,13 +135,13 @@ final class HealthPipeline(
     * (graft.ops.TableSwap contract). */
   private def readRecovered(path: String): DataFrame = {
     TableSwap.recover(fs, new Path(path), TableSwap.tmpPath(path))
-    LocalFs.parquet(spark, path)
+    LocalFs.parquet(session, path)
   }
 
   /** [[readRecovered]] for a table that may not exist yet. */
   private def recovered(path: String): Option[DataFrame] = {
     TableSwap.recover(fs, new Path(path), TableSwap.tmpPath(path))
-    if (exists(path)) Some(LocalFs.parquet(spark, path)) else None
+    if (exists(path)) Some(LocalFs.parquet(session, path)) else None
   }
 
   /** Write-temp-then-swap (atomic table replace without reading and
@@ -134,14 +162,14 @@ final class HealthPipeline(
     * pointed at the seed CSV's actual header (`Updated_Date`; the
     * hospital-B DDL says `ModifiedDate` — SURVEY §1.3 drift note). */
   def config(): Seq[LoadConfigEntry] =
-    LoadConfig.read(spark, configPath).map { e =>
+    LoadConfig.read(session, configPath).map { e =>
       if (e.datasource == "hospital_b_db" && e.tablename == "patients")
         e.copy(watermark = "Updated_Date")
       else e
     }
 
   def ingest(datasource: String, dir: String, runDate: LocalDate): Seq[TableLoadResult] =
-    new IngestionRunner(spark, new CsvSource(dir), landing, audit, logger, clock)
+    new IngestionRunner(session, new CsvSource(dir), landing, audit, logger, clock)
       .run(config(), datasource, runDate)
 
   /** Load a bronze table into its dir unless the dir's `_source`
@@ -172,7 +200,7 @@ final class HealthPipeline(
     loadBronze("claims",
         Fingerprint.files(sfs, files.map(p => s"${tag(p.toString)}/${p.getName}" -> p))) { path =>
       val file = input_file_name()
-      val df = LocalFs.csv(spark, glob)
+      val df = LocalFs.csv(session, glob)
         .withColumn("datasource", HealthPipeline.ClaimsTags.foldRight(lit("None")) {
           case ((s, t), otherwise) => when(file.contains(s), t).otherwise(otherwise)
         })
@@ -187,7 +215,7 @@ final class HealthPipeline(
     val csv = s"$fixturesRoot/cptcodes/cptcodes.csv"
     loadBronze("cpt_codes",
         Fingerprint.files(LocalFs.fsOf(spark, csv), Seq("cptcodes.csv" -> new Path(csv)))) { path =>
-      val raw = LocalFs.csv(spark, csv)
+      val raw = LocalFs.csv(session, csv)
       val renamed = raw.columns.foldLeft(raw)((d, c) =>
         d.withColumnRenamed(c, c.replace(" ", "_").toLowerCase))
       LocalFs.write(renamed).mode("overwrite").parquet(path)
@@ -210,7 +238,7 @@ final class HealthPipeline(
     * prefix. */
   private def bronzeTable(name: String): Option[DataFrame] =
     if (!exists(bronzeDir(name))) None
-    else Some(landed(name).fold(LocalFs.parquet(spark, bronzePath(name))) {
+    else Some(landed(name).fold(LocalFs.parquet(session, bronzePath(name))) {
       case (ds, t) => landing.read(ds, t)
     })
 
@@ -288,7 +316,7 @@ final class HealthPipeline(
         writeSwap(e.merge(lit(ts))(mergeTarget(e, staged), staged), silverPath(e.table))
       }
     }
-    graft.ops.Concurrently.run(spark)(dims ++ merges)
+    graft.ops.Concurrently.run(session)(dims ++ merges)
     ()
   }
 
@@ -301,7 +329,7 @@ final class HealthPipeline(
     val c = silver("claims")
     val pr = silver("providers")
     val d = silver("departments")
-    graft.ops.Concurrently.run(spark)(Seq(
+    graft.ops.Concurrently.run(session)(Seq(
       () => writeSwap(HealthGold.providerChargeSummary(t, pr, d), goldPath("provider_charge_summary")),
       () => writeSwap(HealthGold.patientHistory(p, e, t, c), goldPath("patient_history")),
       () => writeSwap(HealthGold.providerPerformance(pr, e, t, c), goldPath("provider_performance")),
@@ -319,7 +347,7 @@ final class HealthPipeline(
       retryDelayMs: Long = PipelineRunner.DefaultRetryDelayMs,
       sleep: Long => Unit = Thread.sleep): Seq[StageResult] =
     PipelineRunner.run(Seq(
-      Stage("init", () => { Bootstrap.ensureTables(spark, auditPath, logsPath); () }),
+      Stage("init", () => { Bootstrap.ensureTables(session, auditPath, logsPath); () }),
       Stage("ingest_hospital_a",
         () => { ingest("hospital_a_db", s"$fixturesRoot/emr/hospital-a", runDate); () }),
       Stage("ingest_hospital_b",

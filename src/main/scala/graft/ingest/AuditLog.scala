@@ -12,8 +12,9 @@ import org.apache.spark.sql.functions._
   * at :134).
   *
   * Stored as parquet at `path`. An ingest run appends all its tables'
-  * rows in one write, so the log grows by one small file per run
-  * (compaction is a maintenance concern, not a hot path). Appends are
+  * rows in one write, so each append adds one small file, and nothing
+  * compacts the log: the file count, and with it the watermark scan,
+  * grows with the number of runs (bounding it is ROADMAP D9). Appends are
   * never issued concurrently into `path`: concurrent `SaveMode.Append`
   * jobs into one parquet directory share its `_temporary` commit
   * directory and can clobber each other's commit.

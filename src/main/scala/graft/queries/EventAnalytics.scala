@@ -1440,7 +1440,7 @@ object EventAnalytics {
   }
 
   val q245PermutationTest: Q = (s, d) => {
-    // SharedCache (r12c): the cells feed BOTH partial legs within this
+    // SharedCache: the cells feed BOTH partial legs within this
     // query, and q252's BH step-up re-derives the identical plans —
     // CacheManager's canonical-plan dedup turns its whole p-value
     // source into a |types|·(B+1)-row cache hit in shared mode.
@@ -1467,11 +1467,11 @@ object EventAnalytics {
     * Exactness: doubled average ranks 2·r̄_v = 2·cumbefore_v + t_v + 1
     * are exact BIGINTs (the q149 trick), so 2·U₁ is an exact integer
     * accumulator; the tie term Σ(t³−t) and its zero-variance guard
-    * N(N²−1) accumulate in DECIMAL(38,0) (r13, from the r12 ADVICE:
-    * the BIGINT forms wrapped at only ~2.1×10⁶ rows per type — far
-    * below the family's ~10⁹ ceilings — and Spark wraps silently
-    * where DuckDB widens, so the cross-engine equality would have
-    * broken SILENTLY past the ceiling; decimal is exact to ~10³⁸.
+    * N(N²−1) accumulate in DECIMAL(38,0) (BIGINT forms would wrap at
+    * only ~2.1×10⁶ rows per type — far below the family's ~10⁹
+    * ceilings — and Spark wraps silently where DuckDB widens, so the
+    * cross-engine equality would break SILENTLY past the ceiling;
+    * decimal is exact to ~10³⁸.
     * Past that unreachable ceiling the engines diverge in FAILURE
     * MODE, not in emitted values: Spark's non-ANSI decimal overflow
     * yields NULL tie3/z for the row while DuckDB's HUGEINT raises —
@@ -1520,11 +1520,11 @@ object EventAnalytics {
       .groupBy("event_type")
       .agg(sum(col("n0v")).as("n0"), sum(col("n1v")).as("n1"),
         sum(col("n1v") * col("two_r")).as("sum_two_r1"),
-        // r13 (r12 ADVICE): the tie term and its zero-variance guard
-        // accumulate in DECIMAL(38,0) — exact to t ≈ 4.6×10¹² per
-        // value cell vs the old BIGINT wrap at ~2.1×10⁶ rows/type,
-        // where Spark wrapped silently while DuckDB widened to
-        // HUGEINT and the declared cross-engine equality broke
+        // the tie term and its zero-variance guard accumulate in
+        // DECIMAL(38,0) — exact to t ≈ 4.6×10¹² per value cell, where
+        // BIGINT would wrap at ~2.1×10⁶ rows/type, silently in Spark
+        // while DuckDB widens to HUGEINT, breaking the declared
+        // cross-engine equality
         sum((col("t").cast("decimal(38,0)") * col("t") * col("t")
           - col("t")).cast("decimal(38,0)")).as("tie3d"))
       .select(col("event_type"), col("n0"), col("n1"),
@@ -1977,8 +1977,8 @@ object EventAnalytics {
     * when that earliest purchase falls at-or-after the first view;
     * a user whose earliest purchase PRECEDES their first view is
     * censored at their last observed event day EVEN IF they purchase
-    * again later (r13 clarification, from the r12 ADVICE: such a
-    * user already owned the product before the view, so the later
+    * again later (such a user already owned the product before the
+    * view, so the later
     * purchase is a repeat, not the view→conversion transition this
     * curve estimates — and, operationally, it is the rule a bounded
     * (min fv, min fp, max le) MERGEABLE state can compute; "first
@@ -2079,7 +2079,7 @@ object EventAnalytics {
   // -- q259: per-arm Kaplan–Meier curves ----------------------------------
 
   /** ARM-SPLIT KAPLAN–MEIER CURVES — the two-curve overlay an
-    * experiment review actually reads (r12 verdict item 5): q254
+    * experiment review actually reads: q254
     * pools the arms and only q256's log-rank compares them as ONE
     * scalar; this is the per-arm product-limit table itself — one
     * independent KM fold per treatment arm over the arm's own risk
@@ -2126,7 +2126,7 @@ object EventAnalytics {
     * Exactness: q257's pure-integer span·S fold per arm — exact
     * e9·days BIGINTs, one subtraction, no division anywhere. An arm
     * WITH at-risk users but NO conversions yet coalesces to exactly
-    * τ·1e9 (S ≡ 1, the q257 r13 degenerate rule — the arm spine
+    * τ·1e9 (S ≡ 1, q257's degenerate rule — the arm spine
     * comes from the duration cells, not the curve, so
     * present-but-eventless and absent arms stay distinct); an arm
     * with no at-risk users at all is NULL, as is the diff.
@@ -2274,7 +2274,7 @@ object EventAnalytics {
     * convention). Median NULL when the curve never crosses ½. An
     * EMPTY curve (no conversions observed yet — the streaming twin's
     * first batches) means S ≡ 1 on [0, τ], so RMST coalesces to
-    * exactly τ·1e9 rather than NULL (r13, from the r12 ADVICE);
+    * exactly τ·1e9 rather than NULL;
     * median stays NULL, which is correct — the curve never reached ½. */
   /** The q257 tail over a KM curve relation — shared with the
     * streaming twin. */
@@ -2296,7 +2296,7 @@ object EventAnalytics {
       .select(lit(RmstHorizonDays).as("tau_days"),
         // degenerate curve (no conversion days yet — the streaming
         // twin early in a stream): S ≡ 1 on [0, τ], so RMST = τ, not
-        // NULL (r12 ADVICE); the empty-curve aggregate yields NULL
+        // NULL; the empty-curve aggregate yields NULL
         // sums/mins and the coalesce restores the identity
         coalesce(
           col("tail_e9") +
@@ -2329,7 +2329,7 @@ object EventAnalytics {
     * BIGINT with NO division at all (the q148 cross-product
     * discipline), so the curve ranks models engine-exactly.
     *
-    * Plan (r13 — the r12 watch-grade retired): one map-combined
+    * Plan: one map-combined
     * shuffle to per-user cells, then a DISTRIBUTED exact decile rank
     * over the USER DIMENSION — the q102 two-phase prefix discipline
     * adapted to a semantic total order, so NO single task ever sorts
@@ -2374,7 +2374,7 @@ object EventAnalytics {
     * rank + closed-form decile + 10-row table) — shared with the
     * streaming twin so its answer is this exact code path.
     *
-    * MUST NOT cache `cells` itself (r13 ADVICE-high): when invoked
+    * MUST NOT cache `cells` itself: when invoked
     * from [[graft.streaming.StreamingUplift.report]] the cells are a
     * path-based read of the MUTABLE state dir, and Spark's
     * CacheManager canonicalizes parquet reads by root path — a
@@ -2389,7 +2389,7 @@ object EventAnalytics {
     // cent SUMS — near-unique in practice — so the distinct-score
     // relation can approach user cardinality and one unpartitioned
     // prefix window over it would re-create the single-task sort this
-    // decomposition exists to retire (r13 ADVICE). Two levels, the
+    // decomposition exists to retire. Two levels, the
     // same shape as the uid leg: score buckets of width 2²⁰ cents
     // give an outer frequency relation bounded by score_domain/2²⁰
     // (one tiny window) and inner per-bucket partitions of ≤2²⁰
@@ -2475,15 +2475,15 @@ object EventAnalytics {
     * Exactness: counts are exact BIGINTs; χ² is surfaced as the
     * exact truncating ppm (n₀−n₁)²·1e6 div (n₀+n₁), computed in the
     * SPLIT-DIVISION form q div m·1e6 + (q mod m)·1e6 div m (identical
-    * value, never materializes diff²·1e6 — the r12 ADVICE overflow
-    * fix), and the flag is the exact integer comparison
+    * value, never materializes diff²·1e6, which would overflow),
+    * and the flag is the exact integer comparison
     * (n₀−n₁)² > 3841·(n₀+n₁) div 1000 ⟺ 1000·(n₀−n₁)² > 3841·(n₀+n₁)
     * ⟺ χ² > 3.841 (floor-equivalence: both sides integers) — no float
     * anywhere. Overflow ceilings (q224 documentation convention):
     * |n₀−n₁| < 3.0×10⁹ (the square) and n₀+n₁ < 2.4×10¹⁵ (the flag's
     * 3841 product) / 9.2×10¹² (the split division's mod·1e6 term) —
-    * the ~3×10⁹ sibling-family ceiling, vs ~3×10⁶ before the r13
-    * restructure.
+    * the ~3×10⁹ sibling-family ceiling, vs ~3×10⁶ for the unsplit
+    * form.
     *
     * Both granularities ship: USERS (the unit the split assigns —
     * the real SRM) and raw events (whose imbalance is expected from
@@ -2617,7 +2617,7 @@ object EventAnalytics {
     * consecutive-pair explode — text never shuffles, one user-keyed
     * aggregate); the matrix is a ≤(|channels|+2)²-row relation,
     * collected once as declared control plane (the k-means centroid
-    * convention) and value-iterated ON THE DRIVER (r14 — the matrix is
+    * convention) and value-iterated ON THE DRIVER (the matrix is
     * bounded by the channel domain, not data volume, so the 10
     * fixed-point steps are data-independent arithmetic, not Spark
     * jobs; see the in-body note for the exactness argument). */
@@ -2651,22 +2651,22 @@ object EventAnalytics {
         sum(col("n")).over(Window.partitionBy("prev")))
       .select(col("prev"), col("next"),
         expr("n * 1000000000 div src_total").as("rate_ppb"))
-      // single consumer since the r14 driver-side fold below (it used
-      // to feed 10 iteration joins) — no persist needed
+      // single consumer: the driver-side fold below — no persist
+      // needed
     val channels = RemovalChannels
-    // r14 optimization (guide §5 — the driver should do almost no data
-    // work, and conversely: data-INDEPENDENT work should not run as
-    // Spark jobs). The value iteration runs over the transition MATRIX,
-    // a ≤(|channels|+2)²-row relation bounded by the declared channel
-    // domain at ANY corpus size — control plane by the same convention
-    // that already collected the per-scenario values below. The old
-    // formulation ran RemovalIters=10 Spark jobs (each a join + agg +
-    // eager localCheckpoint over ~30 rows, ~1.3 s of pure scheduling at
-    // any scale); collecting the matrix once and folding on the driver
-    // is arithmetic-identical: per edge `rate_ppb · v div 1e9` with all
+    // data-INDEPENDENT work does not run as Spark jobs. The value
+    // iteration runs over the transition MATRIX, a ≤(|channels|+2)²-row
+    // relation bounded by the declared channel domain at ANY corpus
+    // size — control plane by the same convention that collects the
+    // per-scenario values below. Run as Spark, it would be
+    // RemovalIters=10 jobs (each a join + agg + eager localCheckpoint
+    // over ~30 rows, ~1.3 s of pure scheduling at any scale);
+    // collecting the matrix once and folding on the driver is
+    // arithmetic-identical: per edge `rate_ppb · v div 1e9` with all
     // operands non-negative, so Spark's floor-div equals Scala `/`,
     // then the same per-(scenario, prev) sum. Measured 2.33 s → ~1.0 s
-    // isolate at sf0.1 with byte-identical output (oracle re-gated).
+    // isolate at sf0.1 against the job-per-step form, with
+    // byte-identical output.
     val tRows = trans.select(col("prev"), col("next"), col("rate_ppb"))
       .collect().map(r => (r.getString(0), r.getString(1), r.getLong(2)))
     val convPpb = tRows.filter(_._2 == "conv").map(t => t._1 -> t._3).toMap
@@ -4793,7 +4793,7 @@ object EventAnalytics {
         |SELECT prev_type, next_type, n_trans,
         |  CAST(n_trans * 1000000 // sum(n_trans) OVER (PARTITION BY prev_type) AS BIGINT) AS rate_ppm
         |FROM c""".stripMargin,
-    // Dual-encoding contract (see Tables.events): with the round-7+
+    // Dual-encoding contract (see Tables.events): with the
     // TIMESTAMP(MICROS) files DuckDB's CAST(ts AS TIMESTAMP) is a
     // no-op on the same micros Spark loads; with the older
     // TIMESTAMP(NANOS) files DuckDB reads TIMESTAMP_NS and the CAST

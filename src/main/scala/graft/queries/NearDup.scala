@@ -82,7 +82,7 @@ object NearDup {
     * same-key docs, expand i<j pairs in-row (the q21 pattern), verify
     * with bit_count(xor). Lossless by pigeonhole — see object doc. */
   val q31DedupSimhash: Q = (s, d) => {
-    // persisted (r14, the q21 sig discipline): sim is referenced three
+    // persisted, as q21 persists its signatures: sim is referenced three
     // times (buckets, a-side, b-side) and each reference otherwise
     // replays the whole simhash60 pipeline — tokenize + (doc, token)
     // aggregate + the 60-way bit-vote aggregate, two shuffles each
@@ -171,12 +171,12 @@ object NearDup {
       .select(col("doc_id"),
         md5Draw(col("sh"), 1, 12).as("h"))
       .distinct()
-    // df via ONE window over the h partition (r14, guide §2.4): the
-    // former groupBy(h)+equi-join-back shuffled the full (doc, h)
-    // relation by h for the join AND paid the frequency aggregate's
-    // own exchange + the join itself; the window needs just the one
-    // h-shuffle and a partition count — identical df values, one
-    // fewer pass of the shingle relation through an exchange
+    // df via ONE window over the h partition: a groupBy(h) joined
+    // back would shuffle the full (doc, h) relation by h for the join
+    // AND pay the frequency aggregate's own exchange + the join
+    // itself; the window needs just the one h-shuffle and a partition
+    // count — identical df values, one fewer pass of the shingle
+    // relation through an exchange
     exh.withColumn("df",
         count(lit(1)).over(Window.partitionBy("h")))
       .select(col("doc_id"),
@@ -220,12 +220,12 @@ object NearDup {
       .filter(col("jaccard_e6") >= JaccardThresholdE6)
   }
 
-  /** q39's exact-truth pair relation, SharedCache'd (r11 verdict
-    * item 3): the calibration family — q146 recall, q225 S-curve,
-    * q226 threshold sweep, q235 weighted-Jaccard, q194 cluster
-    * agreement, q237's banding sweep — each consume this truth, and
-    * before this entry every one re-ran the PPJoin verification
-    * (~2 s/query in shared mode). The relation is dup-PAIR-sized
+  /** q39's exact-truth pair relation, SharedCache'd: the calibration
+    * family — q146 recall, q225 S-curve, q226 threshold sweep, q235
+    * weighted-Jaccard, q194 cluster agreement, q237's banding sweep —
+    * each consume this truth, and without the cache entry every one
+    * re-runs the PPJoin verification (~2 s/query in shared mode).
+    * The relation is dup-PAIR-sized
     * (five longs per qualifying pair), orders of magnitude below the
     * shingle-set cache it derives from, so registering it is strictly
     * cheaper than one recompute. Isolate mode still releases it
@@ -281,13 +281,13 @@ object NearDup {
   // callers must VectorFunctions.register the session first.
 
   /** One-row relation holding the whole coarse-centroid panel as ONE
-    * sorted struct array — the r14 in-row cell-ranking rewrite (guide
-    * §2.3/§2.4) shared by q33/q191/q231/q241. The old shape scored
-    * cells with a K-row broadcast join and ranked them with
-    * `row_number` over `Window.partitionBy(vec_id)`: an Exchange +
-    * Sort over K·|V| rows, each carrying the full 64-long vector —
-    * the widest shuffle in the ANN family, moved only to rank K=16
-    * constants. With the panel folded to a single broadcast row,
+    * sorted struct array, the in-row cell ranking shared by
+    * q33/q191/q231/q241. Scoring cells with a K-row broadcast join and
+    * ranking them with `row_number` over `Window.partitionBy(vec_id)`
+    * would need an Exchange + Sort over K·|V| rows, each carrying the
+    * full 64-long vector — the widest shuffle in the ANN family, moved
+    * only to rank K=16 constants. With the panel folded to a single
+    * broadcast row,
     * ranking happens INSIDE the vector's own row (array_sort over a
     * K-element array) — zero exchange, zero sort, scan-speed at any
     * |V|. Centroids stay DATA flowing through the plan (the q33
@@ -300,10 +300,10 @@ object NearDup {
   /** Ranked (ncos, c_id) struct array over the joined `cents` panel:
     * ascending (−cos, c_id) == the window's (c_cos desc, c_id asc) —
     * identical rank order, identical cosE6 operands, so results are
-    * row-for-row equal to the retired window formulation. r15: the
-    * array_sort∘transform HOF pair (interpreted lambda bodies — never
-    * codegen'd) is fused into the [[graft.functions.RankCellsCos]]
-    * kernel: one JIT'd loop per row, same (−cos, c_id) order, same
+    * row-for-row equal to the window formulation. The ranking is the
+    * [[graft.functions.RankCellsCos]] kernel, not an
+    * array_sort∘transform HOF pair (interpreted lambda bodies, never
+    * codegen'd): one JIT'd loop per row, same (−cos, c_id) order, same
     * round/cast semantics, inside WholeStageCodegen. */
   private def cellsRankedCol(q: Column, s2: Column): Column =
     graft.functions.VectorFunctions.rankCellsCos(q, s2, col("cents"))
@@ -338,7 +338,7 @@ object NearDup {
     * map-combined error aggregate; nothing after the explode exceeds
     * 64 rows. */
   val q228SqAudit: Q = (s, d) => {
-    graft.functions.VectorFunctions.register(s) // quant kernel (r15)
+    graft.functions.VectorFunctions.register(s) // the quant kernel
     val dims = Tables.embeddings(s, d)
       .select(col("vec_id"), posexplode(quantE4(col("embedding"))).as(Seq("p", "v")))
       .select((col("p") + 1).cast("long").as("dim"), col("v"))
@@ -395,11 +395,11 @@ object NearDup {
 
   /** The 16-long JL projection of an e4 vector column — shared by
     * q230 (the distortion audit) and q231 (the coarse re-rank stage).
-    * r15: was 16 separate zip_with+aggregate folds, which stayed
-    * INTERPRETED (DotProductRewrite requires containsNull = false and
-    * the quantized array type carries the parquet schema's nullable
-    * elements); now one [[graft.functions.JlProject]] kernel pass over
-    * the same sign literals — and its output IS dense, so the
+    * One [[graft.functions.JlProject]] kernel pass over the sign
+    * literals, not 16 separate zip_with+aggregate folds, which would
+    * stay INTERPRETED (DotProductRewrite requires containsNull = false
+    * and the quantized array type carries the parquet schema's
+    * nullable elements) — and its output IS dense, so the
     * downstream coarse dot in q231 fuses to graft_dot_long via the
     * optimizer rule as well. */
   private def jlProjArr(q: Column): Column =
@@ -422,7 +422,7 @@ object NearDup {
         when(col("dx2") > 0, expr(s"dy2 * 1000 div (${JlDims}L * dx2)")))
     pairs.agg(count(lit(1)).as("n_pairs"),
         sum(when(col("dx2") === 0, 1L).otherwise(0L)).as("n_degenerate"),
-        // greatest(...,1) guard (r11 advice): on an all-degenerate
+        // greatest(...,1) guard: on an all-degenerate
         // corpus (every dx2 = 0) the unguarded count is 0 — Spark's
         // div yields NULL but DuckDB's // raises, an engine-behavior
         // divergence on the empty edge. Guarded, both sides agree on
@@ -574,8 +574,8 @@ object NearDup {
     * real DuckDB oracle.
     *
     * Plan: the K-centroid panel is ONE broadcast row and every vector
-    * ranks its cells IN-ROW (array_sort over K structs — r14, see
-    * [[centPanel]]; the previous window formulation shuffled K·|V|
+    * ranks its cells IN-ROW (array_sort over K structs, see
+    * [[centPanel]]; a window formulation would shuffle K·|V|
     * vector-carrying rows just to rank them); candidates come from an
     * equi-join on cell id. At scale the vec_id<K seed convention is
     * replaced by centroids from an actual Lloyd run — q57 below
@@ -630,15 +630,14 @@ object NearDup {
     * get — the whole point of the pattern at 100 TB. */
   val q231TwoStageRetrieval: Q = (s, d) => {
     val e = quantized(s, d)
-    // r15 (guide §2.4 intra-run sharing): `ranked` is built EXACTLY as
-    // q33/q241 build theirs — from the bare quantized relation, cents
-    // included — so CacheManager plan-canonicalization lands all three
-    // (plus the q33 run this audit itself triggers below for ivfTop)
-    // on ONE cache entry. The r14 shape threaded the JL column through
-    // the ranking relation, which made q231's ranked a PRIVATE cache
-    // that rebuilt the whole ranking pass q33 had already paid; the JL
-    // projection now rides its own slim (vec_id, y) relation, which is
-    // all the coarse legs ever read.
+    // `ranked` is built EXACTLY as q33/q241 build theirs — from the
+    // bare quantized relation, cents included — so CacheManager
+    // plan-canonicalization lands all three (plus the q33 run this
+    // audit itself triggers below for ivfTop) on ONE cache entry.
+    // Threading the JL column through the ranking relation would make
+    // q231's ranked a PRIVATE cache that rebuilds the whole ranking
+    // pass q33 already paid; the JL projection rides its own slim
+    // (vec_id, y) relation, which is all the coarse legs ever read.
     val cents = e.filter(col("vec_id") < IvfCells)
       .select(col("vec_id").as("c_id"), col("q").as("cq"), col("s2").as("cs2"))
     val ranked = e.join(broadcast(centPanel(cents)))
@@ -698,9 +697,9 @@ object NearDup {
         max(col("n_reranked")).as("n_reranked"))
       .select(col("n_exact"), col("n_ivf_hit"), col("n_two_stage_hit"),
         col("n_candidates"), col("n_reranked"),
-        // greatest(n_exact, 1) guard (r11 advice): a corpus with no
-        // brute-force truth edges made Spark's div return NULL while
-        // DuckDB's // errored; guarded, both report 0 recall — the
+        // greatest(n_exact, 1) guard: on a corpus with no brute-force
+        // truth edges Spark's div returns NULL while DuckDB's //
+        // errors; guarded, both report 0 recall — the
         // same guard style as n_candidates ratios in this select list
         expr("n_ivf_hit * 1000000 div greatest(n_exact, 1)")
           .as("ivf_recall_ppm"),
@@ -733,7 +732,7 @@ object NearDup {
     * from the split cells, no second scan); everything after is
     * arithmetic over ≤192 rows. */
   val q232SplitShift: Q = (s, d) => {
-    graft.functions.VectorFunctions.register(s) // quant kernel (r15)
+    graft.functions.VectorFunctions.register(s) // the quant kernel
     val signedDiv = (sv: String, n: String) =>
       s"CASE WHEN $sv >= 0 THEN $sv div $n ELSE -((-$sv) div $n) END"
     val cells = Tables.embeddings(s, d)
@@ -786,10 +785,9 @@ object NearDup {
     val e = quantized(s, d)
     val cents = e.filter(col("vec_id") < IvfCells)
       .select(col("vec_id").as("c_id"), col("q").as("cq"), col("s2").as("cs2"))
-    // in-row cell ranking over the one-row centroid panel (r14, see
-    // centPanel — replaces the K·|V|-row window shuffle); prank is the
-    // 1-based position in the ranked array, identical to the retired
-    // row_number crank
+    // in-row cell ranking over the one-row centroid panel (see
+    // centPanel — no K·|V|-row window shuffle); prank is the 1-based
+    // position in the ranked array, identical to a row_number crank
     val ranked = e.join(broadcast(centPanel(cents)))
       .withColumn("sc", cellsRankedCol(col("q"), col("s2")))
       .transform(graft.ops.SharedCache.persist) // assign + probes branch
@@ -860,8 +858,8 @@ object NearDup {
     val e = quantized(s, d)
     val cents = e.filter(col("vec_id") < IvfCells)
       .select(col("vec_id").as("c_id"), col("q").as("cq"), col("s2").as("cs2"))
-    // in-row argmax assignment over the one-row centroid panel (r14,
-    // see centPanel — replaces the K·|V|-row window shuffle)
+    // in-row argmax assignment over the one-row centroid panel (see
+    // centPanel — no K·|V|-row window shuffle)
     val counts = e.join(broadcast(centPanel(cents)))
       .select(element_at(cellsRankedCol(col("q"), col("s2")), 1)
         .getField("c_id").as("cell"))
@@ -955,12 +953,12 @@ object NearDup {
     // a nested literal trips Spark 4's lambda-variable resolution)
     val flatCb = typedlit(for { m <- 0 until PqM; (_, sub) <- cbs(m) }
       yield (m.toLong * PqDsub, sub))
-    // r15: the whole per-row PQ pipeline — cell ranking, residual,
-    // the 16×64 subspace-distance sweep, per-block argmin encode, and
-    // the 16-lookup ADC fold — ran through INTERPRETED HOF lambdas
-    // (1024 zip_with+aggregate folds and ~2k transient arrays per
-    // row; ArrayTransform/ArrayAggregate bodies never whole-stage-
-    // codegen). Each stage is now a fused codegen'd kernel over the
+    // the whole per-row PQ pipeline — cell ranking, residual, the
+    // 16×64 subspace-distance sweep, per-block argmin encode, and the
+    // 16-lookup ADC fold — as HOF lambdas would run INTERPRETED (1024
+    // zip_with+aggregate folds and ~2k transient arrays per row;
+    // ArrayTransform/ArrayAggregate bodies never whole-stage-codegen).
+    // Each stage is instead a fused codegen'd kernel over the
     // SAME literals with bit-identical integer math and the same
     // first-minimum tie rule — see graft.functions.{RankCellsL2,
     // PqEncode, PqLut, PqAdc}; AnnKernelsSpec pins kernel ≡ HOF on real
@@ -1007,8 +1005,8 @@ object NearDup {
   private def kmK(n: Long): Long =
     math.max(1L, math.ceil(math.sqrt(n.toDouble)).toLong)
 
-  /** Loud-failure ceiling on the DRIVER-HOSTED centroid state (r13
-    * verdict watch-grade → r14): the Lloyd pipeline embeds all K
+  /** Loud-failure ceiling on the DRIVER-HOSTED centroid state: the
+    * Lloyd pipeline embeds all K
     * centroids as ONE `typedlit` array (K·dim longs — data, not
     * operators, the MLlib broadcast convention), so the data path is
     * clean at any K, but past ~10⁶–10⁷ literal values the PLAN itself
@@ -1461,11 +1459,11 @@ object NearDup {
     * q125's sorted-neighborhood window is per-brand, so no component
     * ever crosses a brand — [[graft.queries.Graph
     * .connectedComponentsBlocked]] co-locates each brand's edges with
-    * ONE shuffle and closes them with in-partition union-find (round-9
-    * rewrite: the general iterative CC here cost 28 global rounds /
-    * 17.7 s for a closure the blocking key hands us in one pass; the
-    * generic contraction CC remains the fallback for unblocked pair
-    * graphs like q55's). Singletons (never linked) are not emitted —
+    * ONE shuffle and closes them with in-partition union-find (the
+    * general iterative CC here costs 28 global rounds / 17.7 s for a
+    * closure the blocking key hands us in one pass; the generic
+    * contraction CC remains the fallback for unblocked pair graphs
+    * like q55's). Singletons (never linked) are not emitted —
     * at scale they are the overwhelming majority and carry no merge
     * decision (q55 convention). */
   val q144Survivorship: Q = (s, d) => {
