@@ -8,16 +8,15 @@ import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType, StructField, StructType}
 
-/** Fused codegen'd kernels for the ANN family's per-row hot loops
-  * (r15; guide §1.2 step 2 "per-task work" + §4.1 "prefer built-ins /
-  * codegen"). The r14 in-row rewrites removed the K·|V|-row shuffles
-  * but left the arithmetic in Catalyst higher-order functions, whose
-  * lambda bodies are INTERPRETED — ArrayTransform / ArraySort /
+/** Fused codegen'd kernels for the ANN family's per-row hot loops.
+  * The in-row formulations avoid K·|V|-row shuffles, but written as
+  * Catalyst higher-order functions their arithmetic would run in
+  * lambda bodies, which are INTERPRETED — ArrayTransform / ArraySort /
   * ArrayAggregate never enter whole-stage codegen, so every vector
-  * paid per-element lambda dispatch plus one intermediate array per
-  * HOF layer (q114's encode walked 16 subspaces × 64 codebook entries
-  * × one 4-element zip+fold each — 1024 interpreted folds and 2048
-  * transient arrays PER ROW). Each kernel below fuses one HOF
+  * would pay per-element lambda dispatch plus one intermediate array
+  * per HOF layer (q114's encode walks 16 subspaces × 64 codebook
+  * entries × one 4-element zip+fold each — 1024 interpreted folds and
+  * 2048 transient arrays PER ROW). Each kernel below fuses one HOF
   * composition into a single JVM loop reached through a codegen'd
   * call (the [[DotProductLong]] precedent), so the enclosing
   * projection stays inside WholeStageCodegen and the loop JITs.

@@ -143,7 +143,7 @@ object VectorFunctions {
   private val functions: Seq[(String, Seq[Expression] => Expression)] = Seq(
     "graft_dot_long" -> (es => DotProductLong(es(0), es(1))),
     "graft_dot_double" -> (es => DotProductDouble(es(0), es(1))),
-    // r15 fused ANN kernels — see graft.functions.AnnKernels
+    // fused ANN kernels — see graft.functions.AnnKernels
     "graft_quant_e4" -> (es => QuantE4(es(0))),
     "graft_rank_cells_cos" -> (es => RankCellsCos(es(0), es(1), es(2))),
     "graft_jl_proj" -> (es => JlProject(es(0), es(1))),
@@ -168,7 +168,7 @@ object VectorFunctions {
   /** Fused double dot product (codegen'd; see [[DotProductDouble]]). */
   def dotDouble(a: Column, b: Column): Column = call_function("graft_dot_double", a, b)
 
-  // r15 fused ANN kernels (codegen'd; see graft.functions.AnnKernels) —
+  // fused ANN kernels (codegen'd; see graft.functions.AnnKernels) —
   // same registration requirement as dotLong/dotDouble.
   def quantE4(v: Column): Column = call_function("graft_quant_e4", v)
   def rankCellsCos(q: Column, s2: Column, cents: Column): Column =
@@ -277,7 +277,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       new FunctionIdentifier("graft_dot_double"),
       new ExpressionInfo(classOf[DotProductDouble].getName, "graft_dot_double"),
       (es: Seq[Expression]) => DotProductDouble(es(0), es(1))))
-    // r15 fused ANN kernels — see graft.functions.AnnKernels
+    // fused ANN kernels — see graft.functions.AnnKernels
     ext.injectFunction((
       new FunctionIdentifier("graft_quant_e4"),
       new ExpressionInfo(classOf[QuantE4].getName, "graft_quant_e4"),

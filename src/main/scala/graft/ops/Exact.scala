@@ -5,8 +5,10 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** The shared building blocks of the query families: fixed-point
-  * scaling, md5 hash draws, the whitespace tokenizer, the cosine
-  * score, the nearest-rank quantile and the bivariate moment sums.
+  * scaling, md5 hash draws, the whitespace tokenizer and its word
+  * n-grams, the train/val/test hash split, the in-row i<j pair
+  * expansion and the per-bucket pairs built on it, the cosine score,
+  * the nearest-rank quantile and the bivariate moment sums.
   * Every one of these formats is mirrored byte for byte by a DuckDB
   * oracle, so each lives here once and every Spark-side query and
   * streaming fold calls it (`ExactSpec` pins the formats against
@@ -61,6 +63,53 @@ object Exact {
     * (an empty text gives one empty token). */
   def tokens(c: Column): Column =
     split(trim(regexp_replace(lower(c), "\\s+", " ")), " ")
+
+  /** Word n-grams of a token array as space-joined strings, in token
+    * order; empty below n tokens. A zip_with chain over shifted
+    * slices: every reference to `tk` is a higher-order function's
+    * argument, evaluated once per row, never inside a lambda body (a
+    * `transform(sequence(...), i => slice(tk, ...))` form gets the
+    * tokenizer inlined into the lambda and re-tokenizes per gram).
+    * Trailing positions with fewer than n tokens zip against null,
+    * null-propagate through `concat`, and are filtered out. */
+  def ngrams(tk: Column, n: Int): Column = {
+    val chained = (1 until n).foldLeft(tk) { (g, k) =>
+      zip_with(g, slice(tk, lit(k + 1), greatest(size(tk) - k, lit(0))),
+        (a, b) => concat(a, lit(" "), b))
+    }
+    filter(chained, x => x.isNotNull)
+  }
+
+  /** The 0–9 bucket of a hash split: the first 4 hex digits of
+    * md5(id as string), mod 10. */
+  def splitBucket(id: Column): Column = md5Draw(id.cast("string"), 1, 4) % 10
+
+  /** The split of a `splitBucket`: 0–7 train, 8 val, 9 test. */
+  def splitOf(bucket: Column): Column =
+    when(bucket < 8, "train").when(bucket === 8, "val").otherwise("test")
+
+  /** Every pair (x, y) of an array's elements at positions i < j, as an
+    * array of structs in position order: over a sorted array of
+    * distinct values, each pair once with x < y. The expansion is
+    * in-row, quadratic in the array's size only. */
+  def pairs(items: Column): Column =
+    flatten(transform(items, (x, i) =>
+      transform(slice(items, i + lit(2), size(items)), y =>
+        struct(x.as("x"), y.as("y")))))
+
+  /** The distinct pairs (`a`, `b`), a < b, of the `id`s that share a
+    * value of `bucket` in `rel`: each bucket's ids are collected and
+    * sorted, a bucket of one id gives none, and a pair that shares
+    * several buckets is reported once. An id repeated within one
+    * bucket would pair with itself, so callers pass (bucket, id) rows
+    * without repeats. */
+  def bucketPairs(rel: DataFrame, bucket: String, id: String, a: String,
+      b: String): DataFrame =
+    rel.groupBy(bucket).agg(sort_array(collect_list(col(id))).as("ids"))
+      .filter(size(col("ids")) >= 2)
+      .select(explode(pairs(col("ids"))).as("p"))
+      .select(col("p.x").as(a), col("p.y").as(b))
+      .distinct()
 
   /** Cosine similarity in millionths from an exact integer dot product
     * and the two squared norms: round(1e6·dot / (√sa·√sb), 0) cast

@@ -139,8 +139,11 @@ object LocalFs {
     * line. Spark's inference reads the first non-empty line of the
     * largest matched file, so a glob whose files do not all have the
     * same header (or a path matching no file or a directory, or a file
-    * with no line) keeps the inference read, and with it Spark's error
-    * for a missing path. */
+    * with no line) keeps the inference read. The read takes the paths
+    * the glob matched, so Spark never looks up the glob itself as a
+    * path (its metadata-directory check would log a missing file); a
+    * path matching nothing is read as given, and fails with Spark's
+    * error for a missing path. */
   def csv(spark: SparkSession, path: String): DataFrame = {
     val options = headerOptions(spark)
     val matched = Option(fsOf(spark, path).globStatus(new Path(path))).map(_.toSeq).getOrElse(Nil)
@@ -149,10 +152,11 @@ object LocalFs {
       else matched.map(s => CSVUtils.readHeaderLine(s.getPath, options, hadoopConf(spark))
         .map(headerNames(spark, options, _).toSeq))
     val read = spark.read.option("header", "true")
+    val paths = if (matched.isEmpty) Seq(path) else matched.map(_.getPath.toString)
     headers.distinct match {
       case Seq(Some(names)) =>
-        read.schema(StructType(names.map(StructField(_, StringType)))).csv(path)
-      case _ => read.csv(path)
+        read.schema(StructType(names.map(StructField(_, StringType)))).csv(paths: _*)
+      case _ => read.csv(paths: _*)
     }
   }
 

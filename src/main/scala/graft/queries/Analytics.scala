@@ -2,7 +2,7 @@ package graft.queries
 
 import graft.Tables
 import graft.ops.Exact._
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, RelationalGroupedDataset, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -97,6 +97,24 @@ object Analytics {
 
   // -- q54: CUBE over (lang, source-group) -----------------------------
 
+  /** (lang, src_grp, n_chars) per document: `src_grp` is the numeric
+    * source index mod 4. */
+  private def langSourceDocs(s: SparkSession, d: String): DataFrame =
+    Tables.documents(s, d).select(
+      col("lang"),
+      (substring(col("source"), 4, 10).cast("int") % 4).cast("long").as("src_grp"),
+      col("n_chars"))
+
+  /** Doc count and char sum per (lang, src_grp) grouping of
+    * [[langSourceDocs]], a grouped-out column shown as its sentinel
+    * ('ALL' / -1). */
+  private def docTotals(g: RelationalGroupedDataset): DataFrame =
+    g.agg(count(lit(1)).as("n_docs"), sum(col("n_chars")).as("chars_sum"))
+      .select(
+        coalesce(col("lang"), lit("ALL")).as("lang_g"),
+        coalesce(col("src_grp"), lit(-1L)).as("src_grp_g"),
+        col("n_docs"), col("chars_sum"))
+
   /** Corpus totals at ALL FOUR grouping levels — (lang, src_grp),
     * (lang), (src_grp), grand — in one pass: `cube` completes the
     * grouping-sets family next to q36's `rollup`. Catalyst compiles it
@@ -107,18 +125,8 @@ object Analytics {
     * markers are coalesced to sentinels ('ALL' / -1) so both engines
     * agree on the marker representation (q36 convention; lang and the
     * source suffix are never NULL in the data). */
-  val q54CubeComposition: Q = (s, d) => {
-    val base = Tables.documents(s, d).select(
-      col("lang"),
-      (substring(col("source"), 4, 10).cast("int") % 4).cast("long").as("src_grp"),
-      col("n_chars"))
-    base.cube(col("lang"), col("src_grp"))
-      .agg(count(lit(1)).as("n_docs"), sum(col("n_chars")).as("chars_sum"))
-      .select(
-        coalesce(col("lang"), lit("ALL")).as("lang_g"),
-        coalesce(col("src_grp"), lit(-1L)).as("src_grp_g"),
-        col("n_docs"), col("chars_sum"))
-  }
+  val q54CubeComposition: Q = (s, d) =>
+    docTotals(langSourceDocs(s, d).cube(col("lang"), col("src_grp")))
 
   // -- registry ------------------------------------------------------
 
@@ -509,21 +517,19 @@ object Analytics {
     * shuffle; grouped-out columns surface as NULL and coalesce to the
     * q36/q54 sentinels ('ALL' / -1 — unambiguous, the columns are
     * never NULL in data). */
-  val q80GroupingSets: Q = (s, d) => {
-    val base = Tables.documents(s, d).select(
-      col("lang"),
-      (substring(col("source"), 4, 10).cast("int") % 4).cast("long").as("src_grp"),
-      col("n_chars"))
-    base
-      .groupingSets(Seq(Seq(col("lang")), Seq(col("src_grp"))), col("lang"), col("src_grp"))
-      .agg(count(lit(1)).as("n_docs"), sum(col("n_chars")).as("chars_sum"))
-      .select(
-        coalesce(col("lang"), lit("ALL")).as("lang_g"),
-        coalesce(col("src_grp"), lit(-1L)).as("src_grp_g"),
-        col("n_docs"), col("chars_sum"))
-  }
+  val q80GroupingSets: Q = (s, d) =>
+    docTotals(langSourceDocs(s, d)
+      .groupingSets(Seq(Seq(col("lang")), Seq(col("src_grp"))), col("lang"), col("src_grp")))
 
   // -- q82: CDC latest-per-key compaction (max_by aggregate) -------------
+
+  /** Orders grouped per customer: orderkey, orderdate and the price in
+    * cents (`price_e2`). */
+  private def customerOrders(s: SparkSession, d: String): RelationalGroupedDataset =
+    Tables.orders(s, d)
+      .select(col("o_custkey"), col("o_orderkey"), col("o_orderdate"),
+        e2(col("o_totalprice")).as("price_e2"))
+      .groupBy(col("o_custkey"))
 
   /** LATEST-PER-KEY: each customer's most recent order — the CDC/log
     * compaction primitive ("collapse the change stream to current
@@ -537,10 +543,7 @@ object Analytics {
     * orderkey is unique — so the pick is deterministic; the DuckDB
     * oracle is the independent row_number restatement. */
   val q82LatestPerKey: Q = (s, d) =>
-    Tables.orders(s, d)
-      .select(col("o_custkey"), col("o_orderkey"), col("o_orderdate"),
-        e2(col("o_totalprice")).as("price_e2"))
-      .groupBy(col("o_custkey"))
+    customerOrders(s, d)
       .agg(
         count(lit(1)).as("n_orders"),
         max_by(struct(col("o_orderkey"), col("o_orderdate"), col("price_e2")),
@@ -567,10 +570,7 @@ object Analytics {
     * array order — and therefore the signature string — is total and
     * engine-independent (oracle: string_agg ORDER BY the same keys). */
   val q86NestedExport: Q = (s, d) =>
-    Tables.orders(s, d)
-      .select(col("o_custkey"), col("o_orderkey"), col("o_orderdate"),
-        e2(col("o_totalprice")).as("price_e2"))
-      .groupBy(col("o_custkey"))
+    customerOrders(s, d)
       .agg(sort_array(collect_list(
         struct(col("o_orderdate"), col("o_orderkey"), col("price_e2")))).as("ords"))
       .select(
@@ -657,6 +657,12 @@ object Analytics {
 
   // -- q93: correlated scalar subquery, decorrelated ---------------------
 
+  /** (o_orderkey, o_custkey, price_e2) per order, the price in cents. */
+  private def orderPrices(s: SparkSession, d: String): DataFrame =
+    Tables.orders(s, d)
+      .select(col("o_orderkey"), col("o_custkey"),
+        e2(col("o_totalprice")).as("price_e2"))
+
   /** ABOVE-OWN-AVERAGE filter — the canonical correlated scalar
     * subquery ("orders larger than this customer's average order").
     * Spark-first DECORRELATION: one partial-aggregated pass computes
@@ -670,9 +676,7 @@ object Analytics {
     * the decorrelated plan is checked against the semantics it claims
     * to implement, not a copy of itself. */
   val q93AboveAvg: Q = (s, d) => {
-    val o = Tables.orders(s, d)
-      .select(col("o_orderkey"), col("o_custkey"),
-        e2(col("o_totalprice")).as("price_e2"))
+    val o = orderPrices(s, d)
     val stats = o.groupBy(col("o_custkey"))
       .agg(count(lit(1)).as("n_cust_orders"), sum(col("price_e2")).as("cust_total_e2"))
     o.join(stats, "o_custkey")
@@ -697,9 +701,7 @@ object Analytics {
     * partial-aggregated pass for stats + a broadcast-back join; facts
     * never shuffle twice. */
   val q94OutlierFlags: Q = (s, d) => {
-    val o = Tables.orders(s, d)
-      .select(col("o_orderkey"), col("o_custkey"),
-        e2(col("o_totalprice")).as("price_e2"))
+    val o = orderPrices(s, d)
     val stats = o.groupBy(col("o_custkey"))
       .agg(count(lit(1)).as("n_orders"), sum(col("price_e2")).as("s1"),
         sum(col("price_e2") * col("price_e2")).as("s2"))
@@ -753,17 +755,10 @@ object Analytics {
     * in both engines. Oracle: the independent self-join restatement
     * (b ⋈ b on order, a < b). */
   val q96BasketPairs: Q = (s, d) =>
-    Tables.lineitem(s, d)
-      // no pre-distinct: collect_set dedups per group map-side, so one
-      // shuffle on l_orderkey does the whole collapse
-      .select(col("l_orderkey"), col("l_partkey"))
-      .groupBy(col("l_orderkey"))
-      .agg(sort_array(collect_set(col("l_partkey"))).as("items"))
+    graft.queries.Graph.basketItems(s, d)
       .filter(size(col("items")) >= 2)
-      .select(explode(flatten(transform(col("items"), (x, i) =>
-        transform(slice(col("items"), i + lit(2), size(col("items"))), y =>
-          struct(x.as("a"), y.as("b")))))).as("p"))
-      .groupBy(col("p.a").as("part_a"), col("p.b").as("part_b"))
+      .select(explode(pairs(col("items"))).as("p"))
+      .groupBy(col("p.x").as("part_a"), col("p.y").as("part_b"))
       .agg(count(lit(1)).as("n_orders"))
       .orderBy(col("n_orders").desc, col("part_a"), col("part_b"))
       .limit(BasketTopK)
@@ -1127,7 +1122,7 @@ object Analytics {
       .transform(graft.ops.SharedCache.persist) // N scalar + supports
     val nOrders = items.select(col("l_orderkey")).distinct().count()
     val supp = items.groupBy(col("l_partkey")).agg(count(lit(1)).as("n_item"))
-    // r14: the symmetric pair counts ARE the graph family's shared
+    // the symmetric pair counts ARE the graph family's shared
     // copurchase relation (collect_set dedupes identically whether fed
     // raw lineitem or the distinct items; each order contributes one
     // row per pair either way) — riding it drops q152's private pair
@@ -1221,6 +1216,24 @@ object Analytics {
 
   // -- q160: Theil–Sen robust slope -------------------------------------
 
+  /** Per (event_type, day): the event count `x` and `t`, the day as an
+    * epoch-day long; SharedCache'd, as each consumer reads it twice or
+    * more. */
+  private def dailyCounts(s: SparkSession, d: String): DataFrame =
+    Tables.events(s, d)
+      .groupBy(col("event_type"), date_trunc("DAY", col("ts")).as("day"))
+      .agg(count(lit(1)).as("x"))
+      .withColumn("t", datediff(col("day"), lit("1970-01-01")).cast("long"))
+      .transform(graft.ops.SharedCache.persist)
+
+  /** Every pair of a type's [[dailyCounts]] days, t1 < t2, with both
+    * counts. */
+  private def dailyCountPairs(daily: DataFrame): DataFrame = {
+    val a = daily.select(col("event_type"), col("t").as("t1"), col("x").as("x1"))
+    val b = daily.select(col("event_type"), col("t").as("t2"), col("x").as("x2"))
+    a.join(b, Seq("event_type")).filter(col("t1") < col("t2"))
+  }
+
   /** THEIL–SEN ESTIMATOR: per event type, the median of ALL pairwise
     * slopes (x_j − x_i)/(t_j − t_i) over the daily count series — the
     * 29%-breakdown regression complement to q150's OLS (one outlier
@@ -1236,21 +1249,12 @@ object Analytics {
     * the data: 10 years of dailies is ~6.7M pairs per type, constant
     * with corpus size, because the daily rollup (the only pass over
     * raw events, map-side combined) collapses volume first. */
-  val q160TheilSen: Q = (s, d) => {
-    val daily = Tables.events(s, d)
-      .groupBy(col("event_type"), date_trunc("DAY", col("ts")).as("day"))
-      .agg(count(lit(1)).as("x"))
-      .withColumn("t", datediff(col("day"), lit("1970-01-01")).cast("long"))
-      .transform(graft.ops.SharedCache.persist) // both sides of the pair join
-    val a = daily.select(col("event_type"), col("t").as("t1"), col("x").as("x1"))
-    val b = daily.select(col("event_type"), col("t").as("t2"), col("x").as("x2"))
-    a.join(b, Seq("event_type"))
-      .filter(col("t1") < col("t2"))
+  val q160TheilSen: Q = (s, d) =>
+    dailyCountPairs(dailyCounts(s, d))
       .withColumn("slope",
         (col("x2") - col("x1")).cast("double") / (col("t2") - col("t1")).cast("double"))
       .groupBy("event_type")
       .agg(count(lit(1)).as("n_pairs"), median(col("slope")).as("ts_slope"))
-  }
 
   // -- q253: Mann–Kendall trend test --------------------------------------
 
@@ -1280,15 +1284,8 @@ object Analytics {
     * domain-bounded aggregate on (type, count-value), and the final
     * relation is |types| rows. */
   val q253MannKendall: Q = (s, d) => {
-    val daily = Tables.events(s, d)
-      .groupBy(col("event_type"), date_trunc("DAY", col("ts")).as("day"))
-      .agg(count(lit(1)).as("x"))
-      .withColumn("t", datediff(col("day"), lit("1970-01-01")).cast("long"))
-      .transform(graft.ops.SharedCache.persist) // pair sides + tie groups
-    val a = daily.select(col("event_type"), col("t").as("t1"), col("x").as("x1"))
-    val b = daily.select(col("event_type"), col("t").as("t2"), col("x").as("x2"))
-    val pairs = a.join(b, Seq("event_type"))
-      .filter(col("t1") < col("t2"))
+    val daily = dailyCounts(s, d) // pair sides + tie groups
+    val pairs = dailyCountPairs(daily)
       .groupBy("event_type")
       .agg(count(lit(1)).as("n_pairs"),
         sum(signum(col("x2") - col("x1")).cast("long")).as("s_stat"))
@@ -1395,7 +1392,7 @@ object Analytics {
     *
     * Integer contract: per-bucket est n_b² div d_b and naive N² div D
     * are truncating integer ops, computed via the EXACT pre-divided
-    * decomposition (r11 advice — the naive n*n product overflows
+    * decomposition (the naive n*n product overflows
     * BIGINT at n > ~3.0e9 rows, i.e. exactly the 100 TB regime this
     * statistic is framed for): with q = n div d, r = n mod d,
     *   n² div d = q²·d + 2·q·r + (r² div d)

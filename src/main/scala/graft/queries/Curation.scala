@@ -42,34 +42,12 @@ import org.apache.spark.sql.functions._
 object Curation {
   private type Q = (SparkSession, String) => DataFrame
 
-  /** Word n-grams as space-joined strings; empty below n tokens.
-    * Built as a zip_with chain over shifted slices — every reference
-    * to `tk` is a HOF *argument* (evaluated once per row), never
-    * inside a lambda body. The obvious
-    * `transform(sequence(...), i => slice(tk, i+1, n))` form gets the
-    * whole tokenizer (regexp_replace + split) inlined into the lambda
-    * by CollapseProject and re-tokenizes PER GRAM — measured 3.5×
-    * slower on the gram-generation hot path. Trailing positions with
-    * fewer than n tokens zip against null, null-propagate through
-    * `concat`, and are filtered, so no size guard is needed. */
-  private def ngrams(tk: Column, n: Int): Column = {
-    val chained = (1 until n).foldLeft(tk) { (g, k) =>
-      zip_with(g, slice(tk, lit(k + 1), greatest(size(tk) - k, lit(0))),
-        (a, b) => concat(a, lit(" "), b))
-    }
-    filter(chained, x => x.isNotNull)
-  }
-
   /** First 16 bits of md5(salt || key) as a long in [0, 65536) — the
     * deterministic uniform hash behind sampling/splitting/sharding.
     * Distinct salts give independent-in-practice streams, so e.g. the
     * q42 train/test split and the q49 sample never correlate. */
   private def hash16(salt: String, key: Column): Column =
     md5Draw(concat(lit(salt), key.cast("string")), 1, 4)
-
-  /** q42's split bucket (no salt — must match Profiling.q42 exactly). */
-  private def splitBucket(key: Column): Column =
-    md5Draw(key.cast("string"), 1, 4) % 10
 
   private def e6Frac(num: Column, den: Column): Column =
     round(lit(1e6) * num.cast("double") / den.cast("double"), 0).cast("long")
@@ -239,8 +217,24 @@ object Curation {
   private val MigOldBuckets = 16L
   private val MigNewBuckets = 24L
 
-  /** DEDUP-STATE MIGRATION (r13 verdict item 7 — the operational gap
-    * between q48 and q78): q48's incremental dedup consults a
+  /** (content_hash, si) per document: the whitespace-normalized
+    * content hash and the numeric source index (`src<si>`). Sources
+    * below 10 are the existing state, the rest the incoming feed. */
+  private def sourcedHashes(s: SparkSession, d: String): DataFrame =
+    Tables.documents(s, d).select(
+      md5(trim(regexp_replace(lower(col("text")), "\\s+", " ")))
+        .as("content_hash"),
+      substring(col("source"), 4, 10).cast("int").as("si"))
+
+  /** The distinct content hashes of the state (sources below 10), each
+    * with `h48`, the first 12 hex digits of the hash as a long. */
+  private def stateHashes(s: SparkSession, d: String): DataFrame =
+    sourcedHashes(s, d).filter(col("si") < 10).select("content_hash").distinct()
+      .withColumn("h48",
+        conv(substring(col("content_hash"), 1, 12), 16, 10).cast("long"))
+
+  /** DEDUP-STATE MIGRATION (the operational gap between q48 and q78):
+    * q48's incremental dedup consults a
     * persistent "seen" state of distinct content hashes, physically
     * laid out in routing buckets so each incoming batch's anti-join
     * only touches the buckets its hashes route to. When the layout is
@@ -270,10 +264,7 @@ object Curation {
     * manifest stays ≤72 rows no matter the corpus; the state-sized
     * stages are the same distinct/anti-join q48 already pays. */
   val q265StateMigration: Q = (s, d) => {
-    val h = Tables.documents(s, d).select(
-      md5(trim(regexp_replace(lower(col("text")), "\\s+", " ")))
-        .as("content_hash"),
-      substring(col("source"), 4, 10).cast("int").as("si"))
+    val h = sourcedHashes(s, d)
     val state = h.filter(col("si") < 10).select("content_hash").distinct()
     val inserts = h.filter(col("si") >= 10).select("content_hash").distinct()
       .join(state, Seq("content_hash"), "left_anti")
@@ -347,13 +338,7 @@ object Curation {
     * narrow per-key policy flags → one map-combined 4-row aggregate
     * (policy × target size), unpivoted via stack. Zero joins. */
   val q266ReshardPolicy: Q = (s, d) => {
-    val h = Tables.documents(s, d).select(
-      md5(trim(regexp_replace(lower(col("text")), "\\s+", " ")))
-        .as("content_hash"),
-      substring(col("source"), 4, 10).cast("int").as("si"))
-    val state = h.filter(col("si") < 10).select("content_hash").distinct()
-      .withColumn("h48",
-        conv(substring(col("content_hash"), 1, 12), 16, 10).cast("long"))
+    val state = stateHashes(s, d)
 
     def ringAssign(buckets: Long): Column = {
       val ring = typedlit(ringEncoded(buckets))
@@ -407,13 +392,7 @@ object Curation {
     * are control-plane-sized; the only data-scaled stage is the state
     * distinct + one map-combined 48-cell aggregate. */
   val q267RingBalance: Q = (s, d) => {
-    val h = Tables.documents(s, d).select(
-      md5(trim(regexp_replace(lower(col("text")), "\\s+", " ")))
-        .as("content_hash"),
-      substring(col("source"), 4, 10).cast("int").as("si"))
-    val state = h.filter(col("si") < 10).select("content_hash").distinct()
-      .withColumn("h48",
-        conv(substring(col("content_hash"), 1, 12), 16, 10).cast("long"))
+    val state = stateHashes(s, d)
       .transform(graft.ops.SharedCache.persist) // probed once per cfg
 
     // the two ring families, relationally (cfg = vnodes per bucket)
@@ -481,6 +460,12 @@ object Curation {
 
   private val ShardBudgetChars = 20000L
 
+  /** The running frame of a per-language stream in `hk` hash order
+    * (ties by doc_id): the packing order of q50 and q56. */
+  private val hashOrderRun = Window.partitionBy("lang")
+    .orderBy(col("hk"), col("doc_id"))
+    .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+
   /** Training-shard assignment: documents are packed into ~20k-char
     * shards per language by a running-sum window over a deterministic
     * hash order (so packing is reproducible and independent of scan
@@ -492,13 +477,10 @@ object Curation {
   /** The shard assignment with each doc's size retained — shared by
     * q50 (the assignment surface) and q227 (the balance audit). */
   private def shardPack(s: SparkSession, d: String): DataFrame = {
-    val w = Window.partitionBy("lang")
-      .orderBy(col("hk"), col("doc_id"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     Tables.documents(s, d)
       .select(col("doc_id"), col("lang"), col("n_chars"),
         md5(concat(lit("shard"), col("doc_id").cast("string"))).as("hk"))
-      .withColumn("cum_chars", sum("n_chars").over(w))
+      .withColumn("cum_chars", sum("n_chars").over(hashOrderRun))
       .withColumn("shard",
         floor((col("cum_chars") - col("n_chars")).cast("double") /
           lit(ShardBudgetChars.toDouble)).cast("long"))
@@ -663,23 +645,19 @@ object Curation {
     * both engines agree exactly. At 100 TB the stratum key becomes
     * (lang, shard) so each stream's sort stays bounded; sequence ids
     * are stream-local, exactly how a multi-host tokenizer run works. */
-  val q56SequencePack: Q = (s, d) => {
-    val w = Window.partitionBy("lang")
-      .orderBy(col("hk"), col("doc_id"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+  val q56SequencePack: Q = (s, d) =>
     Tables.documents(s, d)
       .select(col("doc_id"), col("lang"),
         size(tokens(col("text"))).cast("long").as("n_tok"),
         md5(concat(lit("seqpack"), col("doc_id").cast("string"))).as("hk"))
       .filter(col("n_tok") > 0)
-      .withColumn("cum", sum("n_tok").over(w))
+      .withColumn("cum", sum("n_tok").over(hashOrderRun))
       .withColumn("tok_off", col("cum") - col("n_tok"))
       .withColumn("seq_id", explode(sequence(
         expr(s"tok_off div $SeqLen"), expr(s"(cum - 1) div $SeqLen"))))
       .select(col("doc_id"), col("lang"), col("seq_id"),
         greatest(lit(0L), col("seq_id") * SeqLen - col("tok_off")).as("tok_begin"),
         least(col("n_tok"), (col("seq_id") + lit(1L)) * SeqLen - col("tok_off")).as("tok_end"))
-  }
 
   // -- q59: duplicate-span (chunk-level) dedup -----------------------
 
@@ -1257,6 +1235,18 @@ object Curation {
   /** Budget share: keep the best half of the corpus by tokens. */
   private val KnapsackBudgetPpm = 500000L
 
+  /** Per source: `n_tokens` and `ss`, the sum over its tokens of each
+    * token's classifier shift `(md5Draw(t, 1, 2) · ClsMix) % ClsRange`. */
+  private def sourceShifts(s: SparkSession, d: String): DataFrame =
+    Tables.documents(s, d)
+      .select(col("source"), tokens(col("text")).as("tk"))
+      .select(col("source"), size(col("tk")).cast("long").as("n_tok"),
+        aggregate(col("tk"), lit(0L), (acc, t) =>
+          acc + (md5Draw(t, 1, 2) * ClsMix) % ClsRange)
+          .as("sum_shift"))
+      .groupBy("source")
+      .agg(sum(col("n_tok")).as("n_tokens"), sum(col("sum_shift")).as("ss"))
+
   /** QUALITY-KNAPSACK MIX — the third mixing policy, completing the
     * set: q68 reweights by size temperature, q184 waterfills to
     * equalize, THIS maximizes quality under a token budget — the
@@ -1276,14 +1266,7 @@ object Curation {
     * relation (q205's curve discipline). */
   val q218QualityKnapsack: Q = (s, d) => {
     import org.apache.spark.sql.expressions.Window
-    val perSrc = Tables.documents(s, d)
-      .select(col("source"), tokens(col("text")).as("tk"))
-      .select(col("source"), size(col("tk")).cast("long").as("n_tok"),
-        aggregate(col("tk"), lit(0L), (acc, t) =>
-          acc + (md5Draw(t, 1, 2) * ClsMix) % ClsRange)
-          .as("sum_shift"))
-      .groupBy("source")
-      .agg(sum(col("n_tok")).as("n_tokens"), sum(col("sum_shift")).as("ss"))
+    val perSrc = sourceShifts(s, d)
       .withColumn("mean_margin_e3",
         expr("(ss * 1000 div n_tokens) - 1000000"))
     val ord = Window.orderBy(col("mean_margin_e3").desc, col("source"))
@@ -1324,14 +1307,7 @@ object Curation {
   val q220SourceAblation: Q = (s, d) => {
     import org.apache.spark.sql.expressions.Window
     val all = Window.partitionBy()
-    Tables.documents(s, d)
-      .select(col("source"), tokens(col("text")).as("tk"))
-      .select(col("source"), size(col("tk")).cast("long").as("n_tok"),
-        aggregate(col("tk"), lit(0L), (acc, t) =>
-          acc + (md5Draw(t, 1, 2) * ClsMix) % ClsRange)
-          .as("sum_shift"))
-      .groupBy("source")
-      .agg(sum(col("n_tok")).as("n_tokens"), sum(col("sum_shift")).as("ss"))
+    sourceShifts(s, d)
       .withColumn("t_ss", sum(col("ss")).over(all))
       .withColumn("t_tok", sum(col("n_tokens")).over(all))
       .select(col("source"), col("n_tokens"),

@@ -2,7 +2,7 @@ package graft.queries
 
 import graft.Tables
 import graft.ops.Exact._
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -54,6 +54,20 @@ object EventAnalytics {
 
   private val SessionGapMicros = 30L * 60 * 1000000 // 30 minutes
 
+  /** `events` plus `session_seq`: per user, in (ts, event_id) order,
+    * the running count of session openers (a user's first event, or
+    * one more than 30 minutes after the user's previous event). */
+  private def sessionSeq(events: DataFrame): DataFrame = {
+    val order = Window.partitionBy("user_id").orderBy(col("ts"), col("event_id"))
+    events
+      .withColumn("prev_us", lag(unix_micros(col("ts")), 1).over(order))
+      .withColumn("new_session",
+        when(col("prev_us").isNull ||
+          unix_micros(col("ts")) - col("prev_us") > SessionGapMicros, 1L).otherwise(0L))
+      .withColumn("session_seq", sum(col("new_session"))
+        .over(order.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
+  }
+
   /** Per-user sessions split on >30-minute inactivity gaps: session id
     * = running count of gap-openers over (user_id, ts, event_id), then
     * one aggregate per session (bounds, duration in microseconds,
@@ -61,15 +75,7 @@ object EventAnalytics {
     * EventStreamSpec can pin the streaming sessionizer against it on
     * the same input. */
   private[graft] def sessionizeBatch(events: DataFrame): DataFrame = {
-    val order = Window.partitionBy("user_id").orderBy(col("ts"), col("event_id"))
-    val run = Window.partitionBy("user_id").orderBy(col("ts"), col("event_id"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    events
-      .withColumn("prev_us", lag(unix_micros(col("ts")), 1).over(order))
-      .withColumn("new_session",
-        when(col("prev_us").isNull ||
-          unix_micros(col("ts")) - col("prev_us") > SessionGapMicros, 1L).otherwise(0L))
-      .withColumn("session_seq", sum(col("new_session")).over(run))
+    sessionSeq(events)
       .groupBy(col("user_id"), col("session_seq"))
       .agg(
         min(col("ts")).as("session_start"),
@@ -97,15 +103,7 @@ object EventAnalytics {
     * any corpus size, ties at the cut break by path asc in both
     * engines. */
   val q117SessionPaths: Q = (s, d) => {
-    val order = Window.partitionBy("user_id").orderBy(col("ts"), col("event_id"))
-    val run = Window.partitionBy("user_id").orderBy(col("ts"), col("event_id"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val paths = Tables.events(s, d)
-      .withColumn("prev_us", lag(unix_micros(col("ts")), 1).over(order))
-      .withColumn("new_session",
-        when(col("prev_us").isNull ||
-          unix_micros(col("ts")) - col("prev_us") > SessionGapMicros, 1L).otherwise(0L))
-      .withColumn("session_seq", sum(col("new_session")).over(run))
+    val paths = sessionSeq(Tables.events(s, d))
       .groupBy(col("user_id"), col("session_seq"))
       .agg(sort_array(collect_list(struct(
         unix_micros(col("ts")).as("us"), col("event_id").as("eid"),
@@ -488,15 +486,19 @@ object EventAnalytics {
     * divides by the source-state total on that tiny relation (window,
     * no extra shuffle of facts). Rates are integer floor-divided ppm —
     * exact in both engines. */
-  val q84TransitionMatrix: Q = (s, d) => {
+  val q84TransitionMatrix: Q = (s, d) => transitionRates(s, d)
+
+  /** Per (prev_type, next_type) pair of a user's consecutive events in
+    * (ts, event_id) order: `n_trans` and `rate_ppm`, its integer ppm
+    * share of the transitions out of prev_type. */
+  private def transitionRates(s: SparkSession, d: String): DataFrame = {
     val order = Window.partitionBy("user_id").orderBy(col("ts"), col("event_id"))
-    val counts = Tables.events(s, d)
+    Tables.events(s, d)
       .select(col("user_id"), col("ts"), col("event_id"), col("event_type"))
       .withColumn("prev_type", lag(col("event_type"), 1).over(order))
       .filter(col("prev_type").isNotNull)
       .groupBy(col("prev_type"), col("event_type").as("next_type"))
       .agg(count(lit(1)).as("n_trans"))
-    counts
       .withColumn("src_total", sum(col("n_trans")).over(Window.partitionBy("prev_type")))
       .withColumn("rate_ppm", expr("n_trans * 1000000 div src_total"))
       .drop("src_total")
@@ -528,17 +530,8 @@ object EventAnalytics {
     * — corpus volume is touched exactly once, like q165's dictionary
     * rounds. */
   val q204StationaryMix: Q = (s, d) => {
-    val order = Window.partitionBy("user_id").orderBy(col("ts"), col("event_id"))
-    val trans = Tables.events(s, d)
-      .select(col("user_id"), col("ts"), col("event_id"), col("event_type"))
-      .withColumn("prev_type", lag(col("event_type"), 1).over(order))
-      .filter(col("prev_type").isNotNull)
-      .groupBy(col("prev_type"), col("event_type").as("next_type"))
-      .agg(count(lit(1)).as("n_trans"))
-      .withColumn("src_total",
-        sum(col("n_trans")).over(Window.partitionBy("prev_type")))
-      .select(col("prev_type"), col("next_type"),
-        expr("n_trans * 1000000 div src_total").as("rate_ppm"))
+    val trans = transitionRates(s, d)
+      .select(col("prev_type"), col("next_type"), col("rate_ppm"))
       .transform(graft.ops.SharedCache.persist) // read every iteration
     val types = trans.select(col("prev_type").as("node"))
       .unionByName(trans.select(col("next_type").as("node")))
@@ -773,9 +766,7 @@ object EventAnalytics {
   private[graft] def holtForecastFinalize(daily: DataFrame): DataFrame = {
     val (lN, bN) = holtStep("acc.l", "acc.b", "s.y * 1000000", "div")
     val folded = daily
-      .groupBy("event_type")
-      .agg(count(lit(1)).as("n_days"),
-        sort_array(collect_list(struct(col("day"), col("y")))).as("ys"))
+      .transform(dailySeries)
       .select(col("event_type"), col("n_days"),
         expr(s"""aggregate(ys,
                |  named_struct('l', CAST(0 AS BIGINT), 'b', CAST(0 AS BIGINT),
@@ -903,6 +894,80 @@ object EventAnalytics {
     * fitted trend. Declared, mirrored by the oracle. */
   private val BacktestMinOrigin = 3L
 
+  /** The day-ordered series of a daily relation per event type:
+    * `n_days` and `ys`, the sorted (day, y) structs. */
+  private def dailySeries(daily: DataFrame): DataFrame =
+    daily.groupBy("event_type")
+      .agg(count(lit(1)).as("n_days"),
+        sort_array(collect_list(struct(col("day"), col("y")))).as("ys"))
+
+  /** `hist`, the [[holtStep]] state history over `ys`: element rn is
+    * the (l, b) state fitted on y_1..y_rn, so a rolling-origin refit is
+    * an array read. */
+  private def holtHistory: Column = {
+    val (lN, bN) = holtStep("acc.l", "acc.b", "s.y * 1000000", "div")
+    expr(s"""aggregate(ys,
+            |  named_struct('l', CAST(0 AS BIGINT), 'b', CAST(0 AS BIGINT),
+            |    'n', CAST(0 AS BIGINT),
+            |    'hist', CAST(array() AS ARRAY<STRUCT<l: BIGINT, b: BIGINT>>)),
+            |  (acc, s) -> CASE WHEN acc.n = 0
+            |    THEN named_struct('l', s.y * 1000000L, 'b', CAST(0 AS BIGINT),
+            |      'n', 1L, 'hist', array(named_struct('l', s.y * 1000000L,
+            |                                          'b', CAST(0 AS BIGINT))))
+            |    ELSE named_struct('l', $lN, 'b', $bN, 'n', acc.n + 1L,
+            |      'hist', array_append(acc.hist,
+            |        named_struct('l', $lN, 'b', $bN)))
+            |  END).hist""".stripMargin).as("hist")
+  }
+
+  /** `sad`, the in-sample one-step naive error Σ|y_t − y_{t−1}| of `ys`:
+    * the MASE denominator. */
+  private def naiveSad: Column =
+    expr("""aggregate(sequence(2, CAST(size(ys) AS INT)), CAST(0 AS BIGINT),
+           |  (a, i) -> a + abs(element_at(ys, i).y
+           |                    - element_at(ys, i - 1).y))""".stripMargin)
+      .as("sad")
+
+  /** One row per backtest origin `rn`, [[BacktestMinOrigin]] ≤ rn <
+    * n_days. Spark's sequence() descends when stop < start, so a
+    * shorter series gets an empty array: no origins, not a reversed
+    * ramp. */
+  private def origins: Column =
+    explode(expr(s"CASE WHEN n_days - 1 >= $BacktestMinOrigin THEN " +
+      s"sequence(${BacktestMinOrigin}L, n_days - 1) " +
+      "ELSE CAST(array() AS ARRAY<BIGINT>) END")).as("rn")
+
+  /** One row per horizon `h` = 1..min(7, n_days − rn) of origin rn. */
+  private def horizons: Column =
+    explode(expr("sequence(1L, least(7L, n_days - rn))")).as("h")
+
+  /** One row per (origin `rn`, horizon `h`) of `folded` (event_type,
+    * n_days, ys, hist, sad), with `so`, the state history's element
+    * rn. */
+  private def originHorizons(folded: DataFrame): DataFrame =
+    folded
+      .select(col("event_type"), col("n_days"), col("ys"), col("hist"),
+        col("sad"), origins)
+      .select(col("event_type"), col("n_days"), col("sad"), col("rn"),
+        expr("element_at(hist, CAST(rn AS INT))").as("so"), col("ys"),
+        horizons)
+
+  /** Per (event_type, h, method): the eval count, the summed absolute
+    * error and the MASE in e6, (sae·(N−1)·1e6) div (n_evals·sad), NULL
+    * for a constant series (sad = 0). `methods` is a `stack(2, ...)`
+    * of (method, abs_err) over the rows of `evals`. */
+  private def mase(evals: DataFrame, methods: String): DataFrame =
+    evals
+      .select(col("event_type"), col("n_days"), col("sad"), col("h"),
+        expr(methods).as(Seq("method", "abs_err")))
+      .groupBy(col("event_type"), col("h"), col("method"))
+      .agg(count(lit(1)).as("n_evals"), sum(col("abs_err")).as("sae_cents"),
+        max(col("sad")).as("sad"), max(col("n_days")).as("nd"))
+      .select(col("event_type"), col("h"), col("method"), col("n_evals"),
+        col("sae_cents"),
+        expr("CASE WHEN sad > 0 THEN (sae_cents * (nd - 1) * 1000000) " +
+          "div (n_evals * sad) END").as("mase_e6"))
+
   /** ROLLING-ORIGIN FORECAST BACKTEST (Tashman 2000's evaluation
     * protocol; MASE per Hyndman & Koehler 2006) — the eval that tells
     * you whether q268's forecaster EARNS its keep: for every origin
@@ -932,56 +997,19 @@ object EventAnalytics {
 
   /** q270 off an existing daily relation (the streaming-shared form). */
   private[graft] def backtestFinalize(daily: DataFrame): DataFrame = {
-    val (lN, bN) = holtStep("acc.l", "acc.b", "s.y * 1000000", "div")
     val folded = daily
-      .groupBy("event_type")
-      .agg(count(lit(1)).as("n_days"),
-        sort_array(collect_list(struct(col("day"), col("y")))).as("ys"))
+      .transform(dailySeries)
       .select(col("event_type"), col("n_days"), col("ys"),
-        expr(s"""aggregate(ys,
-               |  named_struct('l', CAST(0 AS BIGINT), 'b', CAST(0 AS BIGINT),
-               |    'n', CAST(0 AS BIGINT),
-               |    'hist', CAST(array() AS ARRAY<STRUCT<l: BIGINT, b: BIGINT>>)),
-               |  (acc, s) -> CASE WHEN acc.n = 0
-               |    THEN named_struct('l', s.y * 1000000L, 'b', CAST(0 AS BIGINT),
-               |      'n', 1L, 'hist', array(named_struct('l', s.y * 1000000L,
-               |                                          'b', CAST(0 AS BIGINT))))
-               |    ELSE named_struct('l', $lN, 'b', $bN, 'n', acc.n + 1L,
-               |      'hist', array_append(acc.hist,
-               |        named_struct('l', $lN, 'b', $bN)))
-               |  END)""".stripMargin).as("st"),
-        expr("""aggregate(sequence(2, CAST(size(ys) AS INT)), CAST(0 AS BIGINT),
-               |  (a, i) -> a + abs(element_at(ys, i).y
-               |                    - element_at(ys, i - 1).y))""".stripMargin)
-          .as("sad"))
-    val evals = folded
-      .select(col("event_type"), col("n_days"), col("ys"), col("st"),
-        col("sad"),
-        // guard: Spark's sequence() DESCENDS when stop < start, so a
-        // sub-4-day series must yield zero origins, not a reversed ramp
-        explode(expr(s"CASE WHEN n_days - 1 >= $BacktestMinOrigin THEN " +
-          s"sequence(${BacktestMinOrigin}L, n_days - 1) " +
-          "ELSE CAST(array() AS ARRAY<BIGINT>) END")).as("rn"))
-      .select(col("event_type"), col("n_days"), col("sad"), col("rn"),
-        expr("element_at(st.hist, CAST(rn AS INT))").as("so"),
-        expr("element_at(ys, CAST(rn AS INT)).y").as("y0"), col("ys"),
-        explode(expr("sequence(1L, least(7L, n_days - rn))")).as("h"))
+        holtHistory,
+        naiveSad)
+    val evals = originHorizons(folded)
       .select(col("event_type"), col("n_days"), col("sad"), col("h"),
         expr("element_at(ys, CAST(rn + h AS INT)).y").as("actual"),
         expr(s"(so.l + h * so.b + ${1000000L * HoltOffF}) " +
-          s"div 1000000 - $HoltOffF").as("fc_holt"), col("y0"))
-    evals
-      .select(col("event_type"), col("n_days"), col("sad"), col("h"),
-        expr("""stack(2, 'holt', abs(fc_holt - actual),
-               |         'naive', abs(y0 - actual))""".stripMargin)
-          .as(Seq("method", "abs_err")))
-      .groupBy(col("event_type"), col("h"), col("method"))
-      .agg(count(lit(1)).as("n_evals"), sum(col("abs_err")).as("sae_cents"),
-        max(col("sad")).as("sad"), max(col("n_days")).as("nd"))
-      .select(col("event_type"), col("h"), col("method"), col("n_evals"),
-        col("sae_cents"),
-        expr("CASE WHEN sad > 0 THEN (sae_cents * (nd - 1) * 1000000) " +
-          "div (n_evals * sad) END").as("mase_e6"))
+          s"div 1000000 - $HoltOffF").as("fc_holt"),
+        expr("element_at(ys, CAST(rn AS INT)).y").as("y0"))
+    mase(evals, """stack(2, 'holt', abs(fc_holt - actual),
+                   |         'naive', abs(y0 - actual))""".stripMargin)
   }
 
   // -- q271: seasonal forecast backtest ---------------------------------
@@ -1041,21 +1069,10 @@ object EventAnalytics {
                |      array_append(acc.hist,
                |        named_struct('l', $lN, 'b', $bN, $stepS)))
                |  END).hist""".stripMargin).as("hist"),
-        expr("""aggregate(sequence(2, CAST(size(ys) AS INT)), CAST(0 AS BIGINT),
-               |  (a, i) -> a + abs(element_at(ys, i).y
-               |                    - element_at(ys, i - 1).y))""".stripMargin)
-          .as("sad"))
+        naiveSad)
     val sT = (0 to 6).map(i => s"WHEN $i THEN so.s$i")
       .mkString("CASE tslot ", " ", " END")
-    val evals = folded
-      .select(col("event_type"), col("n_days"), col("ys"), col("hist"),
-        col("sad"),
-        explode(expr(s"CASE WHEN n_days - 1 >= $BacktestMinOrigin THEN " +
-          s"sequence(${BacktestMinOrigin}L, n_days - 1) " +
-          "ELSE CAST(array() AS ARRAY<BIGINT>) END")).as("rn"))
-      .select(col("event_type"), col("n_days"), col("sad"), col("rn"),
-        expr("element_at(hist, CAST(rn AS INT))").as("so"), col("ys"),
-        explode(expr("sequence(1L, least(7L, n_days - rn))")).as("h"))
+    val evals = originHorizons(folded)
       .select(col("event_type"), col("n_days"), col("sad"), col("h"),
         expr("element_at(ys, CAST(rn + h AS INT)).y").as("actual"),
         expr("element_at(ys, CAST(rn + h AS INT)).slot").as("tslot"),
@@ -1067,18 +1084,8 @@ object EventAnalytics {
         col("actual"), col("fc_snaive"),
         expr(s"(so.l + h * so.b + ($sT) + ${1000000L * HoltOffF}) " +
           s"div 1000000 - $HoltOffF").as("fc_hw"))
-    evals
-      .select(col("event_type"), col("n_days"), col("sad"), col("h"),
-        expr("""stack(2, 'hw', abs(fc_hw - actual),
-               |         'snaive', abs(fc_snaive - actual))""".stripMargin)
-          .as(Seq("method", "abs_err")))
-      .groupBy(col("event_type"), col("h"), col("method"))
-      .agg(count(lit(1)).as("n_evals"), sum(col("abs_err")).as("sae_cents"),
-        max(col("sad")).as("sad"), max(col("n_days")).as("nd"))
-      .select(col("event_type"), col("h"), col("method"), col("n_evals"),
-        col("sae_cents"),
-        expr("CASE WHEN sad > 0 THEN (sae_cents * (nd - 1) * 1000000) " +
-          "div (n_evals * sad) END").as("mase_e6"))
+    mase(evals, """stack(2, 'hw', abs(fc_hw - actual),
+                   |         'snaive', abs(fc_snaive - actual))""".stripMargin)
   }
 
   // -- q272: split-conformal forecast intervals -------------------------
@@ -1115,33 +1122,17 @@ object EventAnalytics {
 
   /** q272 off an existing daily relation (the streaming-shared form). */
   private[graft] def conformalFinalize(daily: DataFrame): DataFrame = {
-    val (lN, bN) = holtStep("acc.l", "acc.b", "s.y * 1000000", "div")
     val folded = daily
-      .groupBy("event_type")
-      .agg(count(lit(1)).as("n_days"),
-        sort_array(collect_list(struct(col("day"), col("y")))).as("ys"))
+      .transform(dailySeries)
       .select(col("event_type"), col("n_days"), col("ys"),
-        expr(s"""aggregate(ys,
-               |  named_struct('l', CAST(0 AS BIGINT), 'b', CAST(0 AS BIGINT),
-               |    'n', CAST(0 AS BIGINT),
-               |    'hist', CAST(array() AS ARRAY<STRUCT<l: BIGINT, b: BIGINT>>)),
-               |  (acc, s) -> CASE WHEN acc.n = 0
-               |    THEN named_struct('l', s.y * 1000000L, 'b', CAST(0 AS BIGINT),
-               |      'n', 1L, 'hist', array(named_struct('l', s.y * 1000000L,
-               |                                          'b', CAST(0 AS BIGINT))))
-               |    ELSE named_struct('l', $lN, 'b', $bN, 'n', acc.n + 1L,
-               |      'hist', array_append(acc.hist,
-               |        named_struct('l', $lN, 'b', $bN)))
-               |  END).hist""".stripMargin).as("hist"))
+        holtHistory)
     val evals = folded
       .select(col("event_type"), col("n_days"), col("ys"), col("hist"),
-        explode(expr(s"CASE WHEN n_days - 1 >= $BacktestMinOrigin THEN " +
-          s"sequence(${BacktestMinOrigin}L, n_days - 1) " +
-          "ELSE CAST(array() AS ARRAY<BIGINT>) END")).as("rn"))
+        origins)
       .select(col("event_type"), col("rn"),
         expr("element_at(hist, CAST(rn AS INT))").as("so"), col("ys"),
         col("n_days"),
-        explode(expr("sequence(1L, least(7L, n_days - rn))")).as("h"))
+        horizons)
       .select(col("event_type"), col("h"), expr("rn % 2 = 1").as("is_cal"),
         expr(s"abs((so.l + h * so.b + ${1000000L * HoltOffF}) " +
           s"div 1000000 - $HoltOffF " +
@@ -1193,24 +1184,10 @@ object EventAnalytics {
 
   /** q273 off an existing daily relation (the streaming-shared form). */
   private[graft] def anomalyFinalize(daily: DataFrame): DataFrame = {
-    val (lN, bN) = holtStep("acc.l", "acc.b", "s.y * 1000000", "div")
     val folded = daily
-      .groupBy("event_type")
-      .agg(count(lit(1)).as("n_days"),
-        sort_array(collect_list(struct(col("day"), col("y")))).as("ys"))
+      .transform(dailySeries)
       .select(col("event_type"), col("ys"),
-        expr(s"""aggregate(ys,
-               |  named_struct('l', CAST(0 AS BIGINT), 'b', CAST(0 AS BIGINT),
-               |    'n', CAST(0 AS BIGINT),
-               |    'hist', CAST(array() AS ARRAY<STRUCT<l: BIGINT, b: BIGINT>>)),
-               |  (acc, s) -> CASE WHEN acc.n = 0
-               |    THEN named_struct('l', s.y * 1000000L, 'b', CAST(0 AS BIGINT),
-               |      'n', 1L, 'hist', array(named_struct('l', s.y * 1000000L,
-               |                                          'b', CAST(0 AS BIGINT))))
-               |    ELSE named_struct('l', $lN, 'b', $bN, 'n', acc.n + 1L,
-               |      'hist', array_append(acc.hist,
-               |        named_struct('l', $lN, 'b', $bN)))
-               |  END).hist""".stripMargin).as("hist"))
+        holtHistory)
       .select(col("event_type"), col("ys"),
         // size guard: sequence() DESCENDS when size(ys) < 2
         expr(s"""CASE WHEN size(ys) >= 2 THEN
@@ -1579,9 +1556,9 @@ object EventAnalytics {
     * node region, no extra shuffle), then a |types|-row aggregate.
     * Overflow: c·n products ≤ N² — exact to N ≈ 3×10⁹ rows per type
     * (q224 convention). */
-  /** The q247 report tail over the SAME cell relation — shared with
-    * the streaming twin. */
-  private[graft] def ksFinalize(cells: DataFrame): DataFrame = {
+  /** Two-arm value cells (event_type, v, n0v, n1v) plus, per type,
+    * the running counts `c0`/`c1` up to v and the arm totals `n0`/`n1`. */
+  private def cumulativeCells(cells: DataFrame): DataFrame = {
     val wRun = Window.partitionBy("event_type").orderBy("v")
     val wAll = Window.partitionBy("event_type")
     cells
@@ -1589,6 +1566,13 @@ object EventAnalytics {
       .withColumn("c1", sum(col("n1v")).over(wRun))
       .withColumn("n0", sum(col("n0v")).over(wAll))
       .withColumn("n1", sum(col("n1v")).over(wAll))
+  }
+
+  /** The q247 report tail over the SAME cell relation — shared with
+    * the streaming twin. */
+  private[graft] def ksFinalize(cells: DataFrame): DataFrame = {
+    val wAll = Window.partitionBy("event_type")
+    cumulativeCells(cells)
       .withColumn("gap", abs(col("c0") * col("n1") - col("c1") * col("n0")))
       .withColumn("d_num", max(col("gap")).over(wAll))
       .groupBy("event_type")
@@ -1702,13 +1686,8 @@ object EventAnalytics {
   /** The q263 report tail over the SAME cell relation — shared with
     * the streaming twin. */
   private[graft] def qteFinalize(cells: DataFrame): DataFrame = {
-    val wRun = Window.partitionBy("event_type").orderBy("v")
     val wAll = Window.partitionBy("event_type")
-    val based = cells
-      .withColumn("c0", sum(col("n0v")).over(wRun))
-      .withColumn("c1", sum(col("n1v")).over(wRun))
-      .withColumn("n0", sum(col("n0v")).over(wAll))
-      .withColumn("n1", sum(col("n1v")).over(wAll))
+    val based = cumulativeCells(cells)
     val qCols = QtePctX100.flatMap { p =>
       Seq(
         min(when(col("c0") >= expr(s"($p * n0 + 99) div 100"), col("v")))
@@ -1838,16 +1817,21 @@ object EventAnalytics {
     * Plan: ONE map-combined shuffle to per-(type, user) covariate
     * cells (the q245 cell discipline — the corpus never meets the
     * moment stage), then a |types|-row aggregate. */
-  /** The per-(type, user, arm) covariate/outcome cells — additive by
-    * + under any chunking of the event stream (a user's even- and
-    * odd-day cents sums fold across batches exactly); shared verbatim
-    * with [[graft.streaming.StreamingCuped]]. */
-  private[graft] def cupedCells(events: DataFrame): DataFrame =
+  /** Per event: type, user, the user's arm (`treat` = odd user_id),
+    * `pre` (an even epoch day) and the value in cents `v`. */
+  private def armedValues(events: DataFrame): DataFrame =
     events
       .select(col("event_type"), col("user_id"),
         (col("user_id") % 2 === 1).as("treat"),
         (datediff(col("ts"), lit("1970-01-01")) % 2 === 0).as("pre"),
         e2(col("value")).as("v"))
+
+  /** The per-(type, user, arm) covariate/outcome cells — additive by
+    * + under any chunking of the event stream (a user's even- and
+    * odd-day cents sums fold across batches exactly); shared verbatim
+    * with [[graft.streaming.StreamingCuped]]. */
+  private[graft] def cupedCells(events: DataFrame): DataFrame =
+    armedValues(events)
       .groupBy("event_type", "user_id", "treat")
       .agg(sum(when(col("pre"), col("v")).otherwise(0L)).as("x"),
         sum(when(!col("pre"), col("v")).otherwise(0L)).as("y"))
@@ -2135,24 +2119,32 @@ object EventAnalytics {
     * over the ≤2·|days| relation + a 2-row arm spine off the cell
     * pass + ONE 1-row conditional pivot. Per-arm medians attached
     * (q257 convention, NULL when the arm's curve never crosses ½). */
-  /** The q260 tail over the cell relation — shared with the streaming
-    * twin so its answer is this exact code path. */
-  private[graft] def rmstArmFinalize(cells: DataFrame): DataFrame = {
-    val wLead = Window.partitionBy("arm").orderBy("day")
-    val perArm = kmFinalize(cells, byArm = true)
+  /** Per `keys` group of a survival curve (day, surv_e9): `tail_e9`,
+    * Σ span·S over the curve's steps clipped to [0, τ], the `first_day`
+    * and the `median_day` (first day with S ≤ 0.5). No keys makes it
+    * one global row. */
+  private def rmstTail(curve: DataFrame, keys: String*): DataFrame = {
+    val wLead = Window.partitionBy(keys.map(col): _*).orderBy("day")
+    curve
       .withColumn("next_day",
         coalesce(lead(col("day"), 1).over(wLead), lit(RmstHorizonDays)))
-      .select(col("arm"),
+      .select(keys.map(col) ++ Seq(
         greatest(
           least(col("next_day"), lit(RmstHorizonDays)) -
             least(col("day"), lit(RmstHorizonDays)),
           lit(0L)).as("span"),
-        col("surv_e9"), col("day"))
-      .groupBy("arm")
+        col("surv_e9"), col("day")): _*)
+      .groupBy(keys.map(col): _*)
       .agg(sum(col("span") * col("surv_e9")).as("tail_e9"),
         min(col("day")).as("first_day"),
         min(when(col("surv_e9") <= 500000000L, col("day")))
           .as("median_day"))
+  }
+
+  /** The q260 tail over the cell relation — shared with the streaming
+    * twin so its answer is this exact code path. */
+  private[graft] def rmstArmFinalize(cells: DataFrame): DataFrame = {
+    val perArm = rmstTail(kmFinalize(cells, byArm = true), "arm")
     // the arm spine: arms that HAVE at-risk users (distinct from arms
     // whose curve is merely empty — those coalesce to tau, not NULL)
     val arms = survivalDurations(cells)
@@ -2279,20 +2271,7 @@ object EventAnalytics {
   /** The q257 tail over a KM curve relation — shared with the
     * streaming twin. */
   private[graft] def rmstFinalize(curve: DataFrame): DataFrame = {
-    val wLead = Window.orderBy("day")
-    curve
-      .withColumn("next_day",
-        coalesce(lead(col("day"), 1).over(wLead), lit(RmstHorizonDays)))
-      .select(
-        greatest(
-          least(col("next_day"), lit(RmstHorizonDays)) -
-            least(col("day"), lit(RmstHorizonDays)),
-          lit(0L)).as("span"),
-        col("surv_e9"), col("day"))
-      .agg(sum(col("span") * col("surv_e9")).as("tail_e9"),
-        min(col("day")).as("first_day"),
-        min(when(col("surv_e9") <= 500000000L, col("day")))
-          .as("median_day"))
+    rmstTail(curve)
       .select(lit(RmstHorizonDays).as("tau_days"),
         // degenerate curve (no conversion days yet — the streaming
         // twin early in a stream): S ≡ 1 on [0, τ], so RMST = τ, not
@@ -2360,11 +2339,7 @@ object EventAnalytics {
     * chunking of the event stream; shared verbatim with
     * [[graft.streaming.StreamingUplift]]. */
   private[graft] def upliftCells(events: DataFrame): DataFrame =
-    events
-      .select(col("event_type"), col("user_id"),
-        (col("user_id") % 2 === 1).as("treat"),
-        (datediff(col("ts"), lit("1970-01-01")) % 2 === 0).as("pre"),
-        e2(col("value")).as("v"))
+    armedValues(events)
       .groupBy("user_id", "treat")
       .agg(sum(when(col("pre"), col("v")).otherwise(0L)).as("score"),
         max(when(col("event_type") === "purchase", 1L).otherwise(0L))

@@ -422,20 +422,22 @@ object Graph {
     * re-runs the basket expansion; the cached relation is three longs
     * per distinct pair — key-space-sized, never lineitem-sized.
     * Isolate mode releases it between queries as always. */
-  private[graft] def copurchasePairCounts(s: SparkSession, d: String): DataFrame = {
-    import graft.Tables
-    Tables.lineitem(s, d)
-      .select(col("l_orderkey"), col("l_partkey"))
-      .groupBy(col("l_orderkey"))
-      .agg(sort_array(collect_set(col("l_partkey"))).as("items"))
+  private[graft] def copurchasePairCounts(s: SparkSession, d: String): DataFrame =
+    basketItems(s, d)
       .filter(size(col("items")) >= 2)
-      .select(explode(flatten(transform(col("items"), (x, i) =>
-        transform(slice(col("items"), i + lit(2), size(col("items"))), y =>
-          struct(x.as("x"), y.as("y")))))).as("p"))
+      .select(explode(pairs(col("items"))).as("p"))
       .groupBy(col("p.x").as("x"), col("p.y").as("y"))
       .agg(count(lit(1)).as("n_orders"))
       .transform(graft.ops.SharedCache.persist)
-  }
+
+  /** Per order (`l_orderkey`), the sorted distinct `items` (part keys)
+    * of its lines: one partial-aggregated shuffle on the order key,
+    * `collect_set` deduplicating map-side. */
+  private[graft] def basketItems(s: SparkSession, d: String): DataFrame =
+    graft.Tables.lineitem(s, d)
+      .select(col("l_orderkey"), col("l_partkey"))
+      .groupBy(col("l_orderkey"))
+      .agg(sort_array(collect_set(col("l_partkey"))).as("items"))
 
   /** The support-floored part co-purchase graph (parts bought together
     * in ≥ minSupport orders) — a filter over the shared pair counts. */
@@ -520,16 +522,10 @@ object Graph {
     * not the part. ≥2-shared-orders floor keeps the output the
     * affinity shortlist, not the quadratic noise tail. */
   val q136LinkPrediction: Q = (s, d) => {
-    import graft.Tables
-    Tables.lineitem(s, d)
-      .select(col("l_orderkey"), col("l_partkey"))
-      .groupBy(col("l_orderkey"))
-      .agg(sort_array(collect_set(col("l_partkey"))).as("items"))
+    basketItems(s, d)
       .filter(size(col("items")).between(2, RaMaxBasket))
       .select(expr("1000000 div size(items)").as("w_e6"),
-        explode(flatten(transform(col("items"), (x, i) =>
-          transform(slice(col("items"), i + lit(2), size(col("items"))), y =>
-            struct(x.as("x"), y.as("y")))))).as("p"))
+        explode(pairs(col("items"))).as("p"))
       .groupBy(col("p.x").as("x"), col("p.y").as("y"))
       .agg(count(lit(1)).as("shared_orders"), sum(col("w_e6")).as("ra_e6"))
       .filter(col("shared_orders") >= RaMinShared)
@@ -812,11 +808,8 @@ object Graph {
     * text or scales with corpus volume. */
   val q207SplitLeakage: Q = (s, d) => {
     val withSplit = q55DupClusters(s, d)
-      .withColumn("bucket",
-        md5Draw(col("doc_id").cast("string"), 1, 4) % 10)
-      .withColumn("split",
-        when(col("bucket") < 8, "train")
-          .when(col("bucket") === 8, "val").otherwise("test"))
+      .withColumn("bucket", splitBucket(col("doc_id")))
+      .withColumn("split", splitOf(col("bucket")))
       .withColumn("leaky",
         (size(collect_set(col("split"))
           .over(Window.partitionBy("cluster_id"))) > 1).cast("long"))
@@ -904,18 +897,14 @@ object Graph {
     * relation (doc_id-keyed, text never shuffles), then narrow hash
     * math — nothing beyond q55's own cost. */
   val q211LeakFreeSplits: Q = (s, d) => {
-    def bucketOf(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-      md5Draw(c.cast("string"), 1, 4) % 10
-    def splitOf(b: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-      when(b < 8, "train").when(b === 8, "val").otherwise("test")
     graft.Tables.documents(s, d).select(col("doc_id"))
       .join(q55DupClusters(s, d).select(col("doc_id"), col("cluster_id")),
         Seq("doc_id"), "left")
       .withColumn("unit", coalesce(col("cluster_id"), col("doc_id")))
       .select(col("doc_id"), col("unit"),
-        splitOf(bucketOf(col("unit"))).as("split"),
-        (splitOf(bucketOf(col("unit"))) =!=
-          splitOf(bucketOf(col("doc_id")))).as("moved"))
+        splitOf(splitBucket(col("unit"))).as("split"),
+        (splitOf(splitBucket(col("unit"))) =!=
+          splitOf(splitBucket(col("doc_id")))).as("moved"))
   }
 
   // -- q193: dedup token-yield forecast ----------------------------------

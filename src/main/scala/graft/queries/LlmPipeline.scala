@@ -3,7 +3,7 @@ package graft.queries
 import graft.Tables
 import graft.functions.VectorFunctions.{dotLong, quantE4}
 import graft.ops.Exact._
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -40,21 +40,6 @@ object LlmPipeline {
 
   // -- shared text primitives ---------------------------------------
 
-  /** Word n-gram shingles as space-joined strings; empty below n
-    * tokens. zip_with chain over shifted slices (Curation.ngrams
-    * convention): every `tk` reference is a HOF argument evaluated
-    * once per row — the transform+slice form re-ran the tokenizer
-    * per shingle after CollapseProject inlining (3.5× slower across
-    * q21/q25/q39/q45's shared shingle scan). Short docs zip against
-    * null, null-propagate through `concat`, and are filtered out. */
-  private def shingles(tk: Column, n: Int): Column = {
-    val chained = (1 until n).foldLeft(tk) { (g, k) =>
-      zip_with(g, slice(tk, lit(k + 1), greatest(size(tk) - k, lit(0))),
-        (a, b) => concat(a, lit(" "), b))
-    }
-    filter(chained, x => x.isNotNull)
-  }
-
   /** (doc_id, h1, h2) hashed shingle occurrences: ONE md5 per shingle,
     * sliced into two 48-bit longs. Shingle identity downstream is h1
     * (48 bits) — cross-engine identical, and any rare collision is
@@ -72,7 +57,7 @@ object LlmPipeline {
     val md = md5(col("sh"))
     docs
       .select(col("doc_id"), tokens(col("text")).as("tk"))
-      .select(col("doc_id"), explode(shingles(col("tk"), 3)).as("sh"))
+      .select(col("doc_id"), explode(ngrams(col("tk"), 3)).as("sh"))
       .select(col("doc_id"),
         conv(substring(md, 1, 12), 16, 10).cast("long").as("h1"),
         conv(substring(md, 17, 12), 16, 10).cast("long").as("h2"))
@@ -100,9 +85,9 @@ object LlmPipeline {
   private[graft] val MinhashPrime = 281474976710597L
 
   /** MinHash signatures + per-doc Jaccard state in ONE aggregate: the
-    * 16-value double-hashing family `(h1 + i*h2) mod p` (r3 computed 16
-    * md5s per shingle occurrence — 27% of the whole bench; one digest
-    * per shingle does the same job), plus the shingle count and the
+    * 16-value double-hashing family `(h1 + i*h2) mod p` (one md5 per
+    * shingle; 16 digests per shingle occurrence would cost about a
+    * quarter of the whole bench), plus the shingle count and the
     * shingle-hash array used for in-row exact-intersection later. One
     * shuffle over the hashed shingle set, after which everything about
     * a doc lives in a single sig row. */
@@ -121,8 +106,8 @@ object LlmPipeline {
     * band-signature bucket equality.
     *
     * Plan discipline (this was q21's real cost, not hashing): `sig` is
-    * referenced three times (buckets, a-side, b-side), and the r3
-    * band-union self-join replicated the whole explode→distinct→agg
+    * referenced three times (buckets, a-side, b-side), and a
+    * band-union self-join would replicate the whole explode→distinct→agg
     * subtree 18× in the physical plan. Now (a) the 8 band signatures
     * leave `sig` as ONE exploded array column instead of an 8-way
     * union, (b) in-bucket pairs come from `collect_list` + an in-row
@@ -141,24 +126,19 @@ object LlmPipeline {
     * relation SHARED by q21 (threshold filter) and q101 (rank per
     * doc). Mirrors the oracle's `scored` CTE exactly; any change here
     * must change `minhashPairCtes` too. */
-  private def scoredCandidatePairs(sig: DataFrame): DataFrame = {
-    val buckets = sig.select(col("doc_id"), explode(bandSigArray).as("bsig"))
-    // per-bucket sorted doc list -> all i<j pairs, expanded in-row
-    val pairsArr = flatten(transform(col("ids"), (x, i) =>
-      transform(
-        slice(col("ids"), i + lit(2), greatest(size(col("ids")) - i - lit(1), lit(0))),
-        y => struct(x.as("a"), y.as("b")))))
-    val cand = buckets
-      .groupBy("bsig").agg(sort_array(collect_list(col("doc_id"))).as("ids"))
-      .filter(size(col("ids")) >= 2)
-      .select(explode(pairsArr).as("p"))
-      .select(col("p.a").as("doc_a"), col("p.b").as("doc_b"))
-      .distinct()
-    val a = sig.select(col("doc_id").as("a_id"), col("n").as("na"), col("hs").as("hs_a"))
-    val b = sig.select(col("doc_id").as("b_id"), col("n").as("nb"), col("hs").as("hs_b"))
-    // No forced broadcast of cand: the pair set grows with the data, so
-    // at scale these must stay keyed shuffle joins — AQE still picks a
-    // broadcast at runtime whenever cand measures small.
+  private def scoredCandidatePairs(sig: DataFrame): DataFrame =
+    withOverlap(bucketPairs(sig.select(col("doc_id"), explode(bandSigArray).as("bsig")),
+      "bsig", "doc_id", "doc_a", "doc_b"), sig)
+
+  /** The (doc_a, doc_b) pairs of `cand` with `n_inter`, the size of the
+    * intersection of their `hs` sets in `sets` (doc_id, n, hs), and
+    * the set sizes `na`, `nb`. No forced broadcast of cand: the pair
+    * set grows with the data, so at scale these stay keyed shuffle
+    * joins; AQE still picks a broadcast at runtime whenever cand
+    * measures small. */
+  private[graft] def withOverlap(cand: DataFrame, sets: DataFrame): DataFrame = {
+    val a = sets.select(col("doc_id").as("a_id"), col("n").as("na"), col("hs").as("hs_a"))
+    val b = sets.select(col("doc_id").as("b_id"), col("n").as("nb"), col("hs").as("hs_b"))
     cand
       .join(a, col("doc_a") === col("a_id"))
       .join(b, col("doc_b") === col("b_id"))
@@ -171,14 +151,20 @@ object LlmPipeline {
     round(lit(1e6) * ni.cast("double") /
       (na + nb - ni).cast("double"), 0).cast("long")
 
-  val q21DedupMinhashLsh: Q = (s, d) => {
-    val sig = minhashSignatures(hashedShingleSet(s, d))
-      .transform(graft.ops.SharedCache.persist)
-    scoredCandidatePairs(sig)
+  /** The pairs of an overlap relation (doc_a, doc_b, n_inter, na, nb)
+    * whose Jaccard similarity reaches 0.5: n_inter, `n_union` and
+    * `jaccard_e6`. */
+  private[graft] def jaccardAtLeastHalf(scored: DataFrame): DataFrame =
+    scored
       .select(col("doc_a"), col("doc_b"), col("n_inter"),
         (col("na") + col("nb") - col("n_inter")).as("n_union"),
         jaccardE6(col("n_inter"), col("na"), col("nb")).as("jaccard_e6"))
       .filter(col("jaccard_e6") >= 500000L)
+
+  val q21DedupMinhashLsh: Q = (s, d) => {
+    val sig = minhashSignatures(hashedShingleSet(s, d))
+      .transform(graft.ops.SharedCache.persist)
+    jaccardAtLeastHalf(scoredCandidatePairs(sig))
   }
 
   // -- q237: MinHash banding-config sweep -----------------------------
@@ -228,17 +214,9 @@ object LlmPipeline {
     val recall = truth.join(aSide, "doc_a").join(bSide, "doc_b")
       .agg(recallCols.head, recallCols.tail: _*)
     // candidate volume per config: q21's banded bucket expansion
-    val pairsArr = flatten(transform(col("ids"), (x, i) =>
-      transform(
-        slice(col("ids"), i + lit(2), greatest(size(col("ids")) - i - lit(1), lit(0))),
-        y => struct(x.as("a"), y.as("b")))))
     val candLegs = BandConfigs.map { case (b, _) =>
-      withBands.select(col("doc_id"), explode(col(s"bands_b$b")).as("bsig"))
-        .groupBy("bsig").agg(sort_array(collect_list(col("doc_id"))).as("ids"))
-        .filter(size(col("ids")) >= 2)
-        .select(explode(pairsArr).as("p"))
-        .select(col("p.a").as("doc_a"), col("p.b").as("doc_b"))
-        .distinct()
+      bucketPairs(withBands.select(col("doc_id"), explode(col(s"bands_b$b")).as("bsig")),
+        "bsig", "doc_id", "doc_a", "doc_b")
         .agg(count(lit(1)).as(s"cand_b$b"))
     }
     // join-free scalar combine (the q221 pattern)
@@ -298,6 +276,39 @@ object LlmPipeline {
   private def inList(ws: Seq[String]): String =
     ws.map(w => s"'$w'").mkString(", ")
 
+  /** The stopword language guess over the four `score_*` columns: the
+    * highest positive score wins, ties going to the earlier of en, de,
+    * fr, es; no positive score is "unknown". */
+  private def langGuess: Column =
+    when(col("score_en") > 0 && col("score_en") >= col("score_de") &&
+      col("score_en") >= col("score_fr") && col("score_en") >= col("score_es"), "en")
+      .when(col("score_de") > 0 && col("score_de") >= col("score_fr") &&
+        col("score_de") >= col("score_es"), "de")
+      .when(col("score_fr") > 0 && col("score_fr") >= col("score_es"), "fr")
+      .when(col("score_es") > 0, "es")
+      .otherwise("unknown")
+
+  /** The per-document features of the curation runs (q43, q100): tokens,
+    * long token count, char and punctuation counts, the stopword scores
+    * and `lang_guess`, the whitespace-normalized content hash, and the
+    * hash split's `bucket` and `split`. */
+  private def docFeatures(s: SparkSession, d: String): DataFrame =
+    Tables.documents(s, d)
+      .withColumn("tk", tokens(col("text")))
+      .withColumn("lo", lower(col("text")))
+      .select(col("doc_id"), col("tk"),
+        size(col("tk")).cast("long").as("n_tokens"),
+        length(col("text")).as("n_chars"),
+        length(regexp_replace(col("lo"), "[a-z0-9 ]", "")).as("n_punct"),
+        scoreIn(col("tk"), StopEn).as("score_en"),
+        scoreIn(col("tk"), StopDe).as("score_de"),
+        scoreIn(col("tk"), StopFr).as("score_fr"),
+        scoreIn(col("tk"), StopEs).as("score_es"),
+        md5(trim(regexp_replace(col("lo"), "\\s+", " "))).as("content_hash"),
+        splitBucket(col("doc_id")).as("bucket"))
+      .withColumn("lang_guess", langGuess)
+      .withColumn("split", splitOf(col("bucket")))
+
   /** Per-document text statistics: char/token/charset counts, BPE-ish
     * token count, stopword-based language ID, quality flag. All
     * integer arithmetic + one exact division — fully codegen'd, no
@@ -323,14 +334,7 @@ object LlmPipeline {
       scoreIn(col("tk"), StopEs).as("score_es"))
       .withColumn("avg_token_len",
         col("sum_token_len").cast("double") / col("n_tokens").cast("double"))
-      .withColumn("lang_guess",
-        when(col("score_en") > 0 && col("score_en") >= col("score_de") &&
-          col("score_en") >= col("score_fr") && col("score_en") >= col("score_es"), "en")
-          .when(col("score_de") > 0 && col("score_de") >= col("score_fr") &&
-            col("score_de") >= col("score_es"), "de")
-          .when(col("score_fr") > 0 && col("score_fr") >= col("score_es"), "fr")
-          .when(col("score_es") > 0, "es")
-          .otherwise("unknown"))
+      .withColumn("lang_guess", langGuess)
       .withColumn("is_quality",
         col("n_tokens") >= 5 && col("n_chars") <= 10000 &&
           col("n_punct") * 10 <= col("n_chars"))
@@ -402,8 +406,8 @@ object LlmPipeline {
 
     // One quantized scan feeds both bucketing and scoring. All 6
     // tables' buckets come out of one pass as an exploded array
-    // (the q21 pattern — the r3 shape was a 6-way union that rescanned
-    // and re-quantized the embeddings per table). Pair generation is
+    // (the q21 pattern — a 6-way union would rescan and re-quantize
+    // the embeddings per table). Pair generation is
     // KEY-ONLY: the 64-element arrays never ride the (t, b) shuffle;
     // they attach by vec_id equi-join after the pair dedup, so each
     // array crosses exactly two shuffles regardless of L.
@@ -441,7 +445,7 @@ object LlmPipeline {
   val q25DocFingerprint: Q = (s, d) => {
     val docs = Tables.documents(s, d).select(col("doc_id"), tokens(col("text")).as("tk"))
     val fp = docs
-      .select(col("doc_id"), explode(shingles(col("tk"), 3)).as("sh"))
+      .select(col("doc_id"), explode(ngrams(col("tk"), 3)).as("sh"))
       .distinct()
       .groupBy("doc_id").agg(min(md5(col("sh"))).as("minhash_fp"))
     val toks = docs.select(col("doc_id"), explode(col("tk")).as("t"))
@@ -490,6 +494,61 @@ object LlmPipeline {
 
   // -- q112: REAL image decode (javax.imageio) -----------------------
 
+  /** The ids of the documents with `doc_id % m == r`: the sample each
+    * multimodal query synthesizes its assets from. */
+  private def sampledIds(s: SparkSession, d: String, m: Int, r: Int): Dataset[Long] = {
+    import s.implicits._
+    Tables.documents(s, d).select(col("doc_id")).where(col("doc_id") % m === r).as[Long]
+  }
+
+  /** An image encoded as PNG by the JDK codec. */
+  private def pngBytes(img: java.awt.image.BufferedImage): Array[Byte] = {
+    val buf = new java.io.ByteArrayOutputStream()
+    javax.imageio.ImageIO.write(img, "png", buf)
+    buf.toByteArray
+  }
+
+  /** Document `id`'s synthetic raster (8–23 pixels each way, a pure
+    * function of `id`) filled with one `rgb` colour, as PNG. */
+  private def flatPng(id: Long, rgb: Int): Array[Byte] = {
+    val w = 8 + (id % 16).toInt
+    val h = 8 + ((id / 16) % 16).toInt
+    val img = new java.awt.image.BufferedImage(
+      w, h, java.awt.image.BufferedImage.TYPE_INT_RGB)
+    var y = 0
+    while (y < h) { var x = 0; while (x < w) { img.setRGB(x, y, rgb); x += 1 }; y += 1 }
+    pngBytes(img)
+  }
+
+  /** The fill of frame `f` of document `id`'s synthetic video; frame 0
+    * is also q112's image fill. */
+  private def frameRgb(id: Long, f: Int): Int =
+    (((id * 37 + f * 11) % 256).toInt << 16) |
+      (((id * 59 + f * 23) % 256).toInt << 8) | ((id * 83 + f * 31) % 256).toInt
+
+  /** The [[VideoFrames]] flat PNG frames of document `id`'s video. */
+  private def videoFrames(id: Long): Seq[Array[Byte]] =
+    (0 until VideoFrames).map(f => flatPng(id, frameRgb(id, f)))
+
+  /** (width, height, mean r, mean g, mean b) of a decoded image, each
+    * channel mean the floor of its exact pixel sum over the count. */
+  private def meanRgb(bytes: Array[Byte]): (Long, Long, Long, Long, Long) = {
+    val img = javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(bytes))
+    var sr = 0L; var sg = 0L; var sb = 0L
+    var y = 0
+    while (y < img.getHeight) {
+      var x = 0
+      while (x < img.getWidth) {
+        val p = img.getRGB(x, y)
+        sr += (p >> 16) & 0xff; sg += (p >> 8) & 0xff; sb += p & 0xff
+        x += 1
+      }
+      y += 1
+    }
+    val n = img.getWidth.toLong * img.getHeight
+    (img.getWidth.toLong, img.getHeight.toLong, sr / n, sg / n, sb / n)
+  }
+
   /** Real raster decode on the distributed path: synthesize a flat-
     * color PNG per document (raster size and fill are pure functions
     * of `doc_id`), push it through [[graft.multimodal.ImageIoCodec]]
@@ -503,24 +562,9 @@ object LlmPipeline {
     * same as every other modality. 10% sample keeps the bench honest
     * about per-image cost without dominating the suite. */
   val q112ImageDecodeStats: Q = (s, d) => {
-    import s.implicits._
     import graft.multimodal.{Asset, ImageIoCodec, MultimodalOps}
-    val ids = Tables.documents(s, d)
-      .select(col("doc_id")).where(col("doc_id") % 10 === 0).as[Long]
-    val assets = ids.mapPartitions { it =>
-      it.map { id =>
-        val w = 8 + (id % 16).toInt
-        val h = 8 + ((id / 16) % 16).toInt
-        val rgb = (((id * 37) % 256).toInt << 16) |
-          (((id * 59) % 256).toInt << 8) | ((id * 83) % 256).toInt
-        val img = new java.awt.image.BufferedImage(
-          w, h, java.awt.image.BufferedImage.TYPE_INT_RGB)
-        var y = 0
-        while (y < h) { var x = 0; while (x < w) { img.setRGB(x, y, rgb); x += 1 }; y += 1 }
-        val buf = new java.io.ByteArrayOutputStream()
-        javax.imageio.ImageIO.write(img, "png", buf)
-        Asset(id, buf.toByteArray, "image/png", "synthetic")
-      }
+    val assets = sampledIds(s, d, 10, 0).mapPartitions { it =>
+      it.map(id => Asset(id, flatPng(id, frameRgb(id, 0)), "image/png", "synthetic"))
     }(MultimodalOps.assetEncoder)
     MultimodalOps.decodeFeatures(assets, ImageIoCodec)
       .select(col("asset_id"),
@@ -563,9 +607,7 @@ object LlmPipeline {
     * discipline) composes on the same hash column. */
   val q198ImagePhashDedup: Q = (s, d) => {
     import s.implicits._
-    val ids = Tables.documents(s, d)
-      .select(col("doc_id")).where(col("doc_id") % 5 === 0).as[Long]
-    val hashed = ids.mapPartitions { it =>
+    val hashed = sampledIds(s, d, 5, 0).mapPartitions { it =>
       it.map { id =>
         val c = 8 * (1 + ((id / 4) % 6).toInt) // split column, 8..48
         val lo = 40 + (id % 4).toInt * 20 // per-doc brightness pair:
@@ -582,10 +624,8 @@ object LlmPipeline {
           }
           y += 1
         }
-        val buf = new java.io.ByteArrayOutputStream()
-        javax.imageio.ImageIO.write(img, "png", buf)
         val dec = javax.imageio.ImageIO.read(
-          new java.io.ByteArrayInputStream(buf.toByteArray))
+          new java.io.ByteArrayInputStream(pngBytes(img)))
         // aHash over the DECODED raster: 8×8 block sums vs image sum
         val sums = Array.ofDim[Long](8, 8)
         var total = 0L
@@ -624,6 +664,23 @@ object LlmPipeline {
   private val AudioSamples = 2048
   private val AudioFrameLen = 256
 
+  /** The frame stats of document `id`'s synthetic waveform after the
+    * S16LE encode → parse round trip: a sawtooth whose step and phase
+    * are pure functions of `id`; with `silentSlots`, every third frame
+    * slot (phase-shifted by `id`) is silent. */
+  private def audioFrames(id: Long, silentSlots: Boolean)
+      : Iterator[graft.multimodal.PcmAudio.FrameStats] = {
+    import graft.multimodal.PcmAudio
+    val step = 1 + (id % 7).toInt
+    val off = (id % 11).toInt
+    val samples = Array.tabulate(AudioSamples) { i =>
+      if (silentSlots && (i / AudioFrameLen + id) % 3 == 0) 0
+      else ((i * step + off) % 2000) - 1000
+    }
+    PcmAudio.frameStats(id,
+      PcmAudio.decodeS16LE(PcmAudio.encodeS16LE(samples)), AudioFrameLen)
+  }
+
   /** Real audio-path decode on the distributed path, the PCM sibling
     * of q112: synthesize a sawtooth S16LE waveform per sampled
     * document (amplitude trajectory a pure integer function of
@@ -639,16 +696,7 @@ object LlmPipeline {
     * the image path. */
   val q142AudioFrameStats: Q = (s, d) => {
     import s.implicits._
-    import graft.multimodal.PcmAudio
-    val ids = Tables.documents(s, d)
-      .select(col("doc_id")).where(col("doc_id") % 10 === 0).as[Long]
-    ids.flatMap { id =>
-      val step = 1 + (id % 7).toInt
-      val off = (id % 11).toInt
-      val samples = Array.tabulate(AudioSamples)(i => ((i * step + off) % 2000) - 1000)
-      PcmAudio.frameStats(id,
-        PcmAudio.decodeS16LE(PcmAudio.encodeS16LE(samples)), AudioFrameLen)
-    }.toDF()
+    sampledIds(s, d, 10, 0).flatMap(id => audioFrames(id, silentSlots = false)).toDF()
       .select(col("asset_id"), col("frame_idx").cast("long").as("frame_idx"),
         col("n_samples").cast("long").as("n_samples"), col("sumsq"),
         col("peak_abs").cast("long").as("peak_abs"),
@@ -683,19 +731,7 @@ object LlmPipeline {
     * never shuffle. */
   val q201AudioVadSpans: Q = (s, d) => {
     import s.implicits._
-    import graft.multimodal.PcmAudio
-    val ids = Tables.documents(s, d)
-      .select(col("doc_id")).where(col("doc_id") % 10 === 5).as[Long]
-    val frames = ids.flatMap { id =>
-      val step = 1 + (id % 7).toInt
-      val off = (id % 11).toInt
-      val samples = Array.tabulate(AudioSamples) { i =>
-        if ((i / AudioFrameLen + id) % 3 == 0) 0 // silent frame slot
-        else ((i * step + off) % 2000) - 1000
-      }
-      PcmAudio.frameStats(id,
-        PcmAudio.decodeS16LE(PcmAudio.encodeS16LE(samples)), AudioFrameLen)
-    }.toDF()
+    val frames = sampledIds(s, d, 10, 5).flatMap(id => audioFrames(id, silentSlots = true)).toDF()
       .select(col("asset_id"), col("frame_idx").cast("long").as("frame_idx"),
         (col("sumsq") >= VadSumsqFloor).as("active"))
     val wRun = Window.partitionBy("asset_id").orderBy("frame_idx")
@@ -740,37 +776,10 @@ object LlmPipeline {
   val q202ShotBoundaries: Q = (s, d) => {
     import s.implicits._
     import graft.multimodal.VideoContainer
-    val ids = Tables.documents(s, d)
-      .select(col("doc_id")).where(col("doc_id") % 10 === 5).as[Long]
-    val frames = ids.flatMap { id =>
-      val w = 8 + (id % 16).toInt
-      val h = 8 + ((id / 16) % 16).toInt
-      val packed = (0 until VideoFrames).map { f =>
-        val rgb = (((id * 37 + f * 11) % 256).toInt << 16) |
-          (((id * 59 + f * 23) % 256).toInt << 8) | ((id * 83 + f * 31) % 256).toInt
-        val img = new java.awt.image.BufferedImage(
-          w, h, java.awt.image.BufferedImage.TYPE_INT_RGB)
-        var y = 0
-        while (y < h) { var x = 0; while (x < w) { img.setRGB(x, y, rgb); x += 1 }; y += 1 }
-        val buf = new java.io.ByteArrayOutputStream()
-        javax.imageio.ImageIO.write(img, "png", buf)
-        buf.toByteArray
-      }
-      VideoContainer.sampleFrames(VideoContainer.pack(packed), 1).map { fr =>
-        val img = javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(fr.bytes))
-        var sr = 0L; var sg = 0L; var sb = 0L
-        var y = 0
-        while (y < img.getHeight) {
-          var x = 0
-          while (x < img.getWidth) {
-            val p = img.getRGB(x, y)
-            sr += (p >> 16) & 0xff; sg += (p >> 8) & 0xff; sb += p & 0xff
-            x += 1
-          }
-          y += 1
-        }
-        val n = img.getWidth.toLong * img.getHeight
-        (id, fr.idx.toLong, sr / n, sg / n, sb / n)
+    val frames = sampledIds(s, d, 10, 5).flatMap { id =>
+      VideoContainer.sampleFrames(VideoContainer.pack(videoFrames(id)), 1).map { fr =>
+        val (_, _, r, g, b) = meanRgb(fr.bytes)
+        (id, fr.idx.toLong, r, g, b)
       }
     }.toDF("asset_id", "frame_idx", "mean_r", "mean_g", "mean_b")
     val order = Window.partitionBy("asset_id").orderBy("frame_idx")
@@ -806,39 +815,10 @@ object LlmPipeline {
   val q147VideoFrameStats: Q = (s, d) => {
     import s.implicits._
     import graft.multimodal.VideoContainer
-    val ids = Tables.documents(s, d)
-      .select(col("doc_id")).where(col("doc_id") % 10 === 0).as[Long]
-    ids.flatMap { id =>
-      val w = 8 + (id % 16).toInt
-      val h = 8 + ((id / 16) % 16).toInt
-      val frames = (0 until VideoFrames).map { f =>
-        val rgb = (((id * 37 + f * 11) % 256).toInt << 16) |
-          (((id * 59 + f * 23) % 256).toInt << 8) | ((id * 83 + f * 31) % 256).toInt
-        val img = new java.awt.image.BufferedImage(
-          w, h, java.awt.image.BufferedImage.TYPE_INT_RGB)
-        var y = 0
-        while (y < h) { var x = 0; while (x < w) { img.setRGB(x, y, rgb); x += 1 }; y += 1 }
-        val buf = new java.io.ByteArrayOutputStream()
-        javax.imageio.ImageIO.write(img, "png", buf)
-        buf.toByteArray
-      }
-      val container = VideoContainer.pack(frames)
-      VideoContainer.sampleFrames(container, VideoStride).map { fr =>
-        val img = javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(fr.bytes))
-        var sr = 0L; var sg = 0L; var sb = 0L
-        var y = 0
-        while (y < img.getHeight) {
-          var x = 0
-          while (x < img.getWidth) {
-            val p = img.getRGB(x, y)
-            sr += (p >> 16) & 0xff; sg += (p >> 8) & 0xff; sb += p & 0xff
-            x += 1
-          }
-          y += 1
-        }
-        val n = img.getWidth.toLong * img.getHeight
-        (id, fr.idx.toLong, img.getWidth.toLong, img.getHeight.toLong,
-          sr / n, sg / n, sb / n)
+    sampledIds(s, d, 10, 0).flatMap { id =>
+      VideoContainer.sampleFrames(VideoContainer.pack(videoFrames(id)), VideoStride).map { fr =>
+        val (w, h, r, g, b) = meanRgb(fr.bytes)
+        (id, fr.idx.toLong, w, h, r, g, b)
       }
     }.toDF("asset_id", "frame_idx", "width", "height", "mean_r", "mean_g", "mean_b")
   }
@@ -1003,31 +983,7 @@ object LlmPipeline {
     * aggregate — the filter runs before the dedup shuffle so junk
     * never ships. */
   val q43CuratedCorpus: Q = (s, d) => {
-    val st = Tables.documents(s, d)
-      .withColumn("tk", tokens(col("text")))
-      .withColumn("lo", lower(col("text")))
-      .select(col("doc_id"),
-        size(col("tk")).as("n_tokens"),
-        length(col("text")).as("n_chars"),
-        length(regexp_replace(col("lo"), "[a-z0-9 ]", "")).as("n_punct"),
-        scoreIn(col("tk"), StopEn).as("score_en"),
-        scoreIn(col("tk"), StopDe).as("score_de"),
-        scoreIn(col("tk"), StopFr).as("score_fr"),
-        scoreIn(col("tk"), StopEs).as("score_es"),
-        md5(trim(regexp_replace(col("lo"), "\\s+", " "))).as("content_hash"),
-        (md5Draw(col("doc_id").cast("string"), 1, 4) % 10).as("bucket"))
-      .withColumn("lang_guess",
-        when(col("score_en") > 0 && col("score_en") >= col("score_de") &&
-          col("score_en") >= col("score_fr") && col("score_en") >= col("score_es"), "en")
-          .when(col("score_de") > 0 && col("score_de") >= col("score_fr") &&
-            col("score_de") >= col("score_es"), "de")
-          .when(col("score_fr") > 0 && col("score_fr") >= col("score_es"), "fr")
-          .when(col("score_es") > 0, "es")
-          .otherwise("unknown"))
-      .withColumn("split",
-        when(col("bucket") < 8, "train")
-          .when(col("bucket") === 8, "val")
-          .otherwise("test"))
+    val st = docFeatures(s, d)
       .filter(col("n_tokens") >= 5 && col("n_chars") <= 10000 &&
         col("n_punct") * 10 <= col("n_chars"))
     st.groupBy("content_hash")
@@ -1115,31 +1071,7 @@ object LlmPipeline {
     * tables; the oracle restates every stage (mounting q21's pair CTEs
     * unchanged) and agrees on the exact surviving chunk set. */
   val q100PretrainPipeline: Q = (s, d) => {
-    val st = Tables.documents(s, d)
-      .withColumn("tk", tokens(col("text")))
-      .withColumn("lo", lower(col("text")))
-      .select(col("doc_id"), col("tk"),
-        size(col("tk")).cast("long").as("n_tokens"),
-        length(col("text")).as("n_chars"),
-        length(regexp_replace(col("lo"), "[a-z0-9 ]", "")).as("n_punct"),
-        scoreIn(col("tk"), StopEn).as("score_en"),
-        scoreIn(col("tk"), StopDe).as("score_de"),
-        scoreIn(col("tk"), StopFr).as("score_fr"),
-        scoreIn(col("tk"), StopEs).as("score_es"),
-        md5(trim(regexp_replace(col("lo"), "\\s+", " "))).as("content_hash"),
-        (md5Draw(col("doc_id").cast("string"), 1, 4) % 10).as("bucket"))
-      .withColumn("lang_guess",
-        when(col("score_en") > 0 && col("score_en") >= col("score_de") &&
-          col("score_en") >= col("score_fr") && col("score_en") >= col("score_es"), "en")
-          .when(col("score_de") > 0 && col("score_de") >= col("score_fr") &&
-            col("score_de") >= col("score_es"), "de")
-          .when(col("score_fr") > 0 && col("score_fr") >= col("score_es"), "fr")
-          .when(col("score_es") > 0, "es")
-          .otherwise("unknown"))
-      .withColumn("split",
-        when(col("bucket") < 8, "train")
-          .when(col("bucket") === 8, "val")
-          .otherwise("test"))
+    val st = docFeatures(s, d)
     val kept1 = st.filter(col("n_tokens") >= 5 && col("n_chars") <= 10000 &&
       col("n_punct") * 10 <= col("n_chars") && col("lang_guess") =!= "unknown")
     // exact dedup among survivors: keeper = min doc_id per content hash
@@ -1154,7 +1086,7 @@ object LlmPipeline {
     // doc drop (q47 rule; gram relation persisted, probed twice)
     val grams = st
       .select(col("doc_id"), col("bucket"),
-        explode(array_distinct(shingles(col("tk"), ContamGramN))).as("g"))
+        explode(array_distinct(ngrams(col("tk"), ContamGramN))).as("g"))
       .select(col("doc_id"), col("bucket"),
         md5Draw(col("g"), 1, 12).as("gh"))
       .transform(graft.ops.SharedCache.persist)

@@ -91,17 +91,8 @@ object NearDup {
     val bandKeys = array((0 until SimBands).map(b =>
       concat_ws("|", lit(b),
         shiftright(col("simhash"), b * BandBits).bitwiseAND(lit((1L << BandBits) - 1)))): _*)
-    val buckets = sim.select(col("doc_id"), explode(bandKeys).as("bkey"))
-    val pairsArr = flatten(transform(col("ids"), (x, i) =>
-      transform(
-        slice(col("ids"), i + lit(2), greatest(size(col("ids")) - i - lit(1), lit(0))),
-        y => struct(x.as("a"), y.as("b")))))
-    val cand = buckets
-      .groupBy("bkey").agg(sort_array(collect_list(col("doc_id"))).as("ids"))
-      .filter(size(col("ids")) >= 2)
-      .select(explode(pairsArr).as("p"))
-      .select(col("p.a").as("doc_a"), col("p.b").as("doc_b"))
-      .distinct()
+    val cand = bucketPairs(sim.select(col("doc_id"), explode(bandKeys).as("bkey")),
+      "bkey", "doc_id", "doc_a", "doc_b")
     val a = sim.select(col("doc_id").as("a_id"), col("simhash").as("sh_a"))
     val b = sim.select(col("doc_id").as("b_id"), col("simhash").as("sh_b"))
     // cand grows with the data — keyed shuffle joins at scale; AQE
@@ -117,18 +108,6 @@ object NearDup {
   // -- q39: exact n-gram Jaccard join via prefix filtering -----------
 
   private val JaccardThresholdE6 = 500000L // t = 0.5
-
-  /** Word 3-gram shingles as space-joined strings (same contract and
-    * zip_with-chain shape as LlmPipeline.shingles — `tk` references
-    * stay HOF arguments so the tokenizer is never inlined into a
-    * per-element lambda). */
-  private def shingles3(tk: Column): Column = {
-    val chained = (1 until 3).foldLeft(tk) { (g, k) =>
-      zip_with(g, slice(tk, lit(k + 1), greatest(size(tk) - k, lit(0))),
-        (a, b) => concat(a, lit(" "), b))
-    }
-    filter(chained, x => x.isNotNull)
-  }
 
   /** EXACT Jaccard ≥ 0.5 near-dup join over hashed 3-gram shingle sets
     * — the lossless complement to q21's MinHash (which can miss pairs
@@ -167,7 +146,7 @@ object NearDup {
   private def dfOrderedShingleSets(s: SparkSession, d: String): DataFrame = {
     val exh = Tables.documents(s, d)
       .select(col("doc_id"), tokens(col("text")).as("tk"))
-      .select(col("doc_id"), explode(shingles3(col("tk"))).as("sh"))
+      .select(col("doc_id"), explode(ngrams(col("tk"), 3)).as("sh"))
       .select(col("doc_id"),
         md5Draw(col("sh"), 1, 12).as("h"))
       .distinct()
@@ -192,32 +171,10 @@ object NearDup {
     val sets = dfOrderedShingleSets(s, d)
       // prefix length n - ceil(t*n) + 1 at t=0.5, in exact integer math
       .withColumn("plen", expr("cast(n - (n + 1) div 2 + 1 as int)"))
-    val buckets = sets
-      .select(col("doc_id"), explode(slice(col("hs"), lit(1), col("plen"))).as("h"))
-    val pairsArr = flatten(transform(col("ids"), (x, i) =>
-      transform(
-        slice(col("ids"), i + lit(2), greatest(size(col("ids")) - i - lit(1), lit(0))),
-        y => struct(x.as("a"), y.as("b")))))
-    val cand = buckets
-      .groupBy("h").agg(sort_array(collect_list(col("doc_id"))).as("ids"))
-      .filter(size(col("ids")) >= 2)
-      .select(explode(pairsArr).as("p"))
-      .select(col("p.a").as("doc_a"), col("p.b").as("doc_b"))
-      .distinct()
-    val a = sets.select(col("doc_id").as("a_id"), col("n").as("na"), col("hs").as("hs_a"))
-    val b = sets.select(col("doc_id").as("b_id"), col("n").as("nb"), col("hs").as("hs_b"))
-    cand
-      .join(a, col("doc_a") === col("a_id"))
-      .join(b, col("doc_b") === col("b_id"))
-      .select(col("doc_a"), col("doc_b"),
-        size(array_intersect(col("hs_a"), col("hs_b"))).cast("long").as("n_inter"),
-        col("na"), col("nb"))
-      .select(col("doc_a"), col("doc_b"), col("n_inter"),
-        (col("na") + col("nb") - col("n_inter")).as("n_union"),
-        round(lit(1e6) * col("n_inter").cast("double") /
-          (col("na") + col("nb") - col("n_inter")).cast("double"), 0)
-          .cast("long").as("jaccard_e6"))
-      .filter(col("jaccard_e6") >= JaccardThresholdE6)
+    val cand = bucketPairs(sets
+      .select(col("doc_id"), explode(slice(col("hs"), lit(1), col("plen"))).as("h")),
+      "h", "doc_id", "doc_a", "doc_b")
+    LlmPipeline.jaccardAtLeastHalf(LlmPipeline.withOverlap(cand, sets))
   }
 
   /** q39's exact-truth pair relation, SharedCache'd: the calibration
@@ -538,17 +495,8 @@ object NearDup {
       }.reduce(_ + _)
       concat_ws("|", lit(b), sig)
     }: _*)
-    val buckets = e.select(col("vec_id"), explode(bandKeys).as("bkey"))
-    val pairsArr = flatten(transform(col("ids"), (x, i) =>
-      transform(
-        slice(col("ids"), i + lit(2), greatest(size(col("ids")) - i - lit(1), lit(0))),
-        y => struct(x.as("a"), y.as("b")))))
-    val cand = buckets
-      .groupBy("bkey").agg(sort_array(collect_list(col("vec_id"))).as("ids"))
-      .filter(size(col("ids")) >= 2)
-      .select(explode(pairsArr).as("p"))
-      .select(col("p.a").as("vec_a"), col("p.b").as("vec_b"))
-      .distinct()
+    val cand = bucketPairs(e.select(col("vec_id"), explode(bandKeys).as("bkey")),
+      "bkey", "vec_id", "vec_a", "vec_b")
     val a = e.select(col("vec_id").as("a_id"), col("q").as("qa"), col("s2").as("sa"))
     val b = e.select(col("vec_id").as("b_id"), col("q").as("qb"), col("s2").as("sb"))
     // cand grows with the data — keyed shuffle joins at scale; AQE
@@ -737,9 +685,7 @@ object NearDup {
       s"CASE WHEN $sv >= 0 THEN $sv div $n ELSE -((-$sv) div $n) END"
     val cells = Tables.embeddings(s, d)
       .select(
-        when(md5Draw(col("vec_id").cast("string"), 1, 4) % 10 < 8, "train")
-          .when(md5Draw(col("vec_id").cast("string"), 1, 4) % 10 === 8, "val")
-          .otherwise("test").as("split"),
+        splitOf(splitBucket(col("vec_id"))).as("split"),
         posexplode(quantE4(col("embedding"))).as(Seq("p", "v")))
       .groupBy("split", "p")
       .agg(sum(col("v")).as("sv"), count(lit(1)).as("n"))

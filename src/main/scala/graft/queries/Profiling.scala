@@ -188,14 +188,9 @@ object Profiling {
     * scale). Plan: a narrow map over the scan, ZERO shuffles; the
     * assignment parallelizes embarrassingly at any data size. */
   val q42TrainTestSplit: Q = (s, d) => {
-    val bucket =
-      md5Draw(col("doc_id").cast("string"), 1, 4) % 10
     Tables.documents(s, d)
-      .select(col("doc_id"), bucket.as("bucket"))
-      .withColumn("split",
-        when(col("bucket") < 8, "train")
-          .when(col("bucket") === 8, "val")
-          .otherwise("test"))
+      .select(col("doc_id"), splitBucket(col("doc_id")).as("bucket"))
+      .withColumn("split", splitOf(col("bucket")))
   }
 
   // -- q76: equi-width histogram ---------------------------------------
@@ -401,6 +396,41 @@ object Profiling {
 
   private val DriftRefK = 100
 
+  /** Per `key` group of `toks` (rows of `key` and a token hash `gh`):
+    * `n_tokens` and `l1_ppm`, the L1 distance in integer ppm between the
+    * group's token distribution and the corpus's over the corpus's
+    * top-[[DriftRefK]] reference hashes. For a reference hash a group
+    * never emits, |0 − ppm_c| = ppm_c, so
+    * L1 = Σ_ref ppm_c + Σ_present (|ppm_s − ppm_c| − ppm_c): a constant
+    * plus a sum over observed (group, hash) pairs only, with no dense
+    * group×vocabulary grid. The corpus total and the reference mass are
+    * read on the driver (carrying them as 1-row relations would
+    * constant-fold the lit-key joins into nested-loop joins); both read
+    * 0 over an empty `toks`, whose result is empty. */
+  private[graft] def tokenDrift(toks: DataFrame, key: String): DataFrame = {
+    val corpus = toks.groupBy("gh").agg(count(lit(1)).as("n_gh"))
+      .withColumn("grp", lit(1))
+    val nTotal = corpus.agg(sum(col("n_gh"))).head() match {
+      case r if r.isNullAt(0) => 0L; case r => r.getLong(0) }
+    val ref = graft.functions.TopK
+      .topKPerGroup(corpus, "grp", "gh", "n_gh", DriftRefK)
+      .select(col("gh"), expr(s"n_gh * 1000000 div ${math.max(nTotal, 1L)}").as("ppm_c"))
+      .transform(graft.ops.SharedCache.persist)
+    val cPpm = Option(ref.agg(sum(col("ppm_c"))).collect()(0).get(0))
+      .map(_.asInstanceOf[Long]).getOrElse(0L)
+    val totals = toks.groupBy(key).agg(count(lit(1)).as("n_tokens"))
+    val present = toks.groupBy(key, "gh").agg(count(lit(1)).as("n_sg"))
+      .join(broadcast(ref), Seq("gh"))
+      .join(broadcast(totals), Seq(key))
+      .withColumn("ppm_s", expr("n_sg * 1000000 div n_tokens"))
+      .groupBy(key)
+      .agg(sum(abs(col("ppm_s") - col("ppm_c")) - col("ppm_c")).as("adj"))
+    totals
+      .join(present, Seq(key), "left")
+      .select(col(key), col("n_tokens"),
+        (lit(cPpm) + coalesce(col("adj"), lit(0L))).as("l1_ppm"))
+  }
+
   /** DISTRIBUTION DRIFT MONITOR: the L1 distance (in integer ppm)
     * between each source's unigram distribution and the corpus
     * distribution, restricted to the corpus's top-100 reference
@@ -426,30 +456,7 @@ object Profiling {
       .select(col("source"),
         md5Draw(col("t"), 1, 12).as("gh"))
       .transform(graft.ops.SharedCache.persist)
-    val corpus = toks.groupBy("gh").agg(count(lit(1)).as("n_gh"))
-      .withColumn("grp", lit(1))
-    // the two corpus scalars (total token count, reference ppm mass)
-    // are CONTROL PLANE — driver-hosted like q57's centroids; carrying
-    // them as 1-row relations instead would constant-fold the lit-key
-    // joins into the nested-loop joins the plan gate forbids
-    val nTotal = corpus.agg(sum(col("n_gh"))).collect()(0).getLong(0)
-    val ref = graft.functions.TopK
-      .topKPerGroup(corpus, "grp", "gh", "n_gh", DriftRefK)
-      .select(col("gh"), expr(s"n_gh * 1000000 div ${math.max(nTotal, 1L)}").as("ppm_c"))
-      .transform(graft.ops.SharedCache.persist)
-    val cPpm = Option(ref.agg(sum(col("ppm_c"))).collect()(0).get(0))
-      .map(_.asInstanceOf[Long]).getOrElse(0L)
-    val srcTotals = toks.groupBy("source").agg(count(lit(1)).as("n_tokens"))
-    val present = toks.groupBy("source", "gh").agg(count(lit(1)).as("n_sg"))
-      .join(broadcast(ref), Seq("gh"))
-      .join(broadcast(srcTotals), Seq("source"))
-      .withColumn("ppm_s", expr("n_sg * 1000000 div n_tokens"))
-      .groupBy("source")
-      .agg(sum(abs(col("ppm_s") - col("ppm_c")) - col("ppm_c")).as("adj"))
-    srcTotals
-      .join(present, Seq("source"), "left")
-      .select(col("source"), col("n_tokens"),
-        (lit(cPpm) + coalesce(col("adj"), lit(0L))).as("l1_ppm"))
+    tokenDrift(toks, "source")
   }
 
   // -- q213: split representativeness audit -------------------------------
@@ -472,36 +479,13 @@ object Profiling {
     * shuffle once, and the two corpus scalars are driver-hosted
     * control plane. */
   val q213SplitDrift: Q = (s, d) => {
-    val b =
-      md5Draw(col("doc_id").cast("string"), 1, 4) % 10
     val toks = Tables.documents(s, d)
-      .select(
-        when(b < 8, "train").when(b === 8, "val").otherwise("test").as("split"),
+      .select(splitOf(splitBucket(col("doc_id"))).as("split"),
         explode(tokens(col("text"))).as("t"))
       .select(col("split"),
         md5Draw(col("t"), 1, 12).as("gh"))
       .transform(graft.ops.SharedCache.persist)
-    val corpus = toks.groupBy("gh").agg(count(lit(1)).as("n_gh"))
-      .withColumn("grp", lit(1))
-    val nTotal = corpus.agg(sum(col("n_gh"))).head() match {
-      case r if r.isNullAt(0) => 0L; case r => r.getLong(0) }
-    val ref = graft.functions.TopK
-      .topKPerGroup(corpus, "grp", "gh", "n_gh", DriftRefK)
-      .select(col("gh"), expr(s"n_gh * 1000000 div ${math.max(nTotal, 1L)}").as("ppm_c"))
-      .transform(graft.ops.SharedCache.persist)
-    val cPpm = Option(ref.agg(sum(col("ppm_c"))).collect()(0).get(0))
-      .map(_.asInstanceOf[Long]).getOrElse(0L)
-    val spTotals = toks.groupBy("split").agg(count(lit(1)).as("n_tokens"))
-    val present = toks.groupBy("split", "gh").agg(count(lit(1)).as("n_sg"))
-      .join(broadcast(ref), Seq("gh"))
-      .join(broadcast(spTotals), Seq("split"))
-      .withColumn("ppm_s", expr("n_sg * 1000000 div n_tokens"))
-      .groupBy("split")
-      .agg(sum(abs(col("ppm_s") - col("ppm_c")) - col("ppm_c")).as("adj"))
-    spTotals
-      .join(present, Seq("split"), "left")
-      .select(col("split"), col("n_tokens"),
-        (lit(cPpm) + coalesce(col("adj"), lit(0L))).as("l1_ppm"))
+    tokenDrift(toks, "split")
   }
 
   // -- q215: oracle-gated count-min sketch ----------------------------
@@ -598,18 +582,26 @@ object Profiling {
   private val HllAlphaNumerator = // ⌊0.673 · m² · 2^45⌋ via integer e3
     673L * 256L * (1L << 45) / 1000L
 
-  val q129HllDistinct: Q = (s, d) => {
-    val regs = graft.Tables.events(s, d)
-      .select(col("event_type"),
-        md5Draw(concat(lit("hll"), col("user_id").cast("string")), 1, 12).as("h48"))
+  /** The HLL registers of the `user_id`s of `rel` per `keys` group:
+    * (keys, bucket, r). The 48-bit salted md5 of a user splits into a
+    * 4-bit bucket and a 44-bit suffix; a register is the largest rank
+    * of the suffix's first set bit (1-based; 45 for an all-zero
+    * suffix, and length(bin(w)) = ⌊log2 w⌋ + 1 exactly). The streaming
+    * twin `StreamingHll` folds the same registers with no keys. */
+  private[graft] def hllRegisters(rel: DataFrame, keys: String*): DataFrame =
+    rel
+      .select(keys.map(col) :+ md5Draw(concat(lit("hll"),
+        col("user_id").cast("string")), 1, 12).as("h48"): _*)
       .withColumn("bucket", expr(s"h48 div ${1L << 44}L"))
       .withColumn("w", expr(s"h48 % ${1L << 44}L"))
-      // rank of the first set bit in the 44-bit suffix (1-based);
-      // all-zero suffix => 45. length(bin(w)) = floor(log2 w)+1 exactly.
       .withColumn("rho",
         when(col("w") === 0, lit(45L))
           .otherwise(lit(45L) - length(bin(col("w"))).cast("long")))
-      .groupBy("event_type", "bucket").agg(max(col("rho")).as("r"))
+      .groupBy((keys :+ "bucket").head, (keys :+ "bucket").tail: _*)
+      .agg(max(col("rho")).as("r"))
+
+  val q129HllDistinct: Q = (s, d) => {
+    val regs = hllRegisters(graft.Tables.events(s, d), "event_type")
     val s45 = regs.groupBy("event_type")
       .agg(sum(expr("shiftleft(1L, cast(45 - r as int))")).as("s_present"),
         count(lit(1)).as("n_present"))
@@ -795,10 +787,9 @@ object Profiling {
     * is the declared semantics, mirrored in the oracle (the q161
     * floor-before-sum convention; never a float accumulation).
     *
-    * Plan (r13 — the r12 watch-grade retired): one narrow projection,
-    * then a DISTRIBUTED exact rank instead of the old per-source
-    * Window sort (which funneled ~N/|sources| docs through one task —
-    * at 100× docs that task is the job). The q255 decomposition,
+    * Plan: one narrow projection, then a DISTRIBUTED exact rank, not
+    * a per-source Window sort (which would funnel ~N/|sources| docs
+    * through one task — at 100× docs that task is the job). The q255 decomposition,
     * per source: under (n_chars DESC, doc_id ASC),
     *   k−1      = |chars' > chars| + |chars'=chars, bucket' < bucket|
     *              + rows before the doc in its (source, chars, bucket)
@@ -1129,6 +1120,15 @@ object Profiling {
     * a constant-width stack unpivot to one row per l. Both aggregate
     * keys are domain-bounded (25 nations × ~12 bands × 5 segments), so
     * nothing after the first partial aggregate scales with rows. */
+  /** Customer counts per (q1 nation, q2 balance band in thousands,
+    * sens market segment) cell: the input of q188 and q199. */
+  private def customerCells(s: SparkSession, d: String): DataFrame =
+    Tables.customer(s, d)
+      .groupBy(col("c_nationkey").as("q1"),
+        floor(col("c_acctbal") / 1000).cast("long").as("q2"),
+        col("c_mktsegment").as("sens"))
+      .agg(count(lit(1)).as("cell"))
+
   /** Shared finalizer for q188 and its streaming twin: the
     * per-threshold diversity risk report over (q1, q2, sens, cell)
     * sensitive-value cells — cells merge by `+` under any chunking
@@ -1157,11 +1157,7 @@ object Profiling {
   }
 
   val q188LDiversity: Q = (s, d) =>
-    ldivFromCells(Tables.customer(s, d)
-      .groupBy(col("c_nationkey").as("q1"),
-        floor(col("c_acctbal") / 1000).cast("long").as("q2"),
-        col("c_mktsegment").as("sens"))
-      .agg(count(lit(1)).as("cell")))
+    ldivFromCells(customerCells(s, d))
 
   // -- q199: t-closeness audit ------------------------------------------
 
@@ -1232,11 +1228,7 @@ object Profiling {
   }
 
   val q199TCloseness: Q = (s, d) =>
-    tcloseFromCells(Tables.customer(s, d)
-      .groupBy(col("c_nationkey").as("q1"),
-        floor(col("c_acctbal") / 1000).cast("long").as("q2"),
-        col("c_mktsegment").as("sens"))
-      .agg(count(lit(1)).as("cell")))
+    tcloseFromCells(customerCells(s, d))
 
   // -- q206: DP-noised histogram release + utility audit -----------------
 
@@ -1344,7 +1336,7 @@ object Profiling {
   private val BloomBits = 65536L // m — the WHOLE filter is one 8 KiB bitset
   /** k — exposed to [[graft.streaming.StreamingBloom]] so the probe's
     * all-k-bits-present test can never disagree with the filter on the
-    * hash count (r11 advice: a hardcoded 4 in the twin would silently
+    * hash count (a hardcoded 4 in the twin would silently
     * void the no-false-negative guarantee if k ever changed here). */
   private[graft] val BloomHashes = 4
 
@@ -1385,12 +1377,8 @@ object Profiling {
       md5Draw(concat(lit(s"bloom$j|"), t), 1, 12) % BloomBits): _*)
 
   val q221BloomPrecheck: Q = (s, d) => {
-    val splitCol = when(
-      md5Draw(col("doc_id").cast("string"), 1, 4) % 10 < 8, "train")
-      .when(md5Draw(col("doc_id").cast("string"), 1, 4) % 10 === 8, "val")
-      .otherwise("test")
     val vocab = Tables.documents(s, d)
-      .select(splitCol.as("split"),
+      .select(splitOf(splitBucket(col("doc_id"))).as("split"),
         explode(tokens(col("text"))).as("t"))
       .distinct()
       .transform(graft.ops.SharedCache.persist)
@@ -1548,15 +1536,8 @@ object Profiling {
   val q233HllAdoption: Q = (s, d) => {
     import org.apache.spark.sql.expressions.Window
     val ev = graft.Tables.events(s, d)
-      .select(to_date(col("ts")).as("day"),
-        md5Draw(concat(lit("hll"), col("user_id").cast("string")), 1, 12).as("h48"))
-    val regs = ev
-      .withColumn("bucket", expr(s"h48 div ${1L << 44}L"))
-      .withColumn("rho",
-        when(expr(s"h48 % ${1L << 44}L") === 0, lit(45L))
-          .otherwise(lit(45L) -
-            length(bin(expr(s"h48 % ${1L << 44}L"))).cast("long")))
-      .groupBy("day", "bucket").agg(max(col("rho")).as("r"))
+      .select(to_date(col("ts")).as("day"), col("user_id"))
+    val regs = hllRegisters(ev, "day")
     val spine = ev.select(col("day")).distinct()
       .select(col("day"), explode(sequence(lit(0L), lit(15L))).as("bucket"))
     val wcum = Window.partitionBy("bucket").orderBy("day")

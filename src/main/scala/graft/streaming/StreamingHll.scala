@@ -1,6 +1,5 @@
 package graft.streaming
 
-import graft.ops.Exact._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -42,19 +41,9 @@ object StreamingHll {
   def registers(spark: SparkSession, stateDir: String): DataFrame =
     rows(spark, stateDir, StateDdl, "r")
 
-  /** Per-batch register partials — q129's decomposition verbatim:
-    * 48-bit salted md5 → 4-bit bucket + 44-bit suffix, rho = first
-    * set bit rank (45 for an all-zero suffix). */
+  /** Per-batch register partials: q129's registers with no keys. */
   private[graft] def registerPartials(batch: DataFrame): DataFrame =
-    batch
-      .select(md5Draw(concat(lit("hll"),
-        col("user_id").cast("string")), 1, 12).as("h48"))
-      .withColumn("bucket", expr(s"h48 div ${1L << 44}L"))
-      .withColumn("w", expr(s"h48 % ${1L << 44}L"))
-      .withColumn("rho",
-        when(col("w") === 0, lit(45L))
-          .otherwise(lit(45L) - length(bin(col("w"))).cast("long")))
-      .groupBy("bucket").agg(max(col("rho")).as("r"))
+    graft.queries.Profiling.hllRegisters(batch)
 
   /** Fold one micro-batch of events into the registers at `stateDir`.
     * Returns false (state untouched) when `batchId` was already

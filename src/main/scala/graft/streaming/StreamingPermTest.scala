@@ -4,8 +4,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Continuous permutation test — the streaming twin of batch q245,
-  * completing the round-12 resampling family's batch/stream symmetry
-  * (the Poisson bootstrap has [[StreamingBootstrap]]): the sequential
+  * the resampling family's second streaming twin (the Poisson
+  * bootstrap's is [[StreamingBootstrap]]): the sequential
   * A/B monitor that asks "is the parity split's mean difference
   * explainable by chance, given everything seen so far" after every
   * micro-batch, without re-drawing permutations over history.

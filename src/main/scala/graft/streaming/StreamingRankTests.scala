@@ -66,18 +66,18 @@ object StreamingRankTests {
     graft.queries.EventAnalytics.ksFinalize(cells(spark, stateDir))
 
   /** The winsorized-means report over the accumulated stream — batch
-    * q261's columns, computed by the SHARED finalizer (r13: a THIRD
-    * reading off the same maintained cell relation — the exact p99
-    * cap re-derives from the cells each refresh, so the cap tracks
-    * the stream's own distribution, no stale quantile). */
+    * q261's columns, computed by the SHARED finalizer off the same
+    * maintained cell relation: the exact p99 cap re-derives from the
+    * cells each refresh, so the cap tracks the stream's own
+    * distribution, no stale quantile. */
   def winsorReport(spark: SparkSession, stateDir: String): DataFrame =
     graft.queries.EventAnalytics.winsorFinalize(cells(spark, stateDir))
 
   /** The quantile-treatment-effects report over the accumulated
     * stream — batch q263's columns, computed by the SHARED finalizer
-    * (r13: a FOURTH reading off the same maintained cell relation —
-    * location test, shape test, capped means, and now the
-    * distributional effect table, all from one additive state). */
+    * off the same maintained cell relation as the location test, the
+    * shape test and the capped means: all four reports read one
+    * additive state. */
   def qteReport(spark: SparkSession, stateDir: String): DataFrame =
     graft.queries.EventAnalytics.qteFinalize(cells(spark, stateDir))
 }

@@ -17,7 +17,7 @@ import org.apache.spark.sql.functions._
   * pins). Cells are built with EXACTLY batch q255's code
   * ([[graft.queries.EventAnalytics.upliftCells]], shared verbatim)
   * and the report is the literally shared
-  * [[graft.queries.EventAnalytics.upliftFinalize]] — the r13
+  * [[graft.queries.EventAnalytics.upliftFinalize]] — the
   * DISTRIBUTED rank (score-cell prefix + uid-bucket prefix + bounded
   * row_number + closed-form ntile), so the q255 DuckDB oracle
   * transitively verifies the streaming decile table, and the report

@@ -21,8 +21,8 @@ import org.apache.spark.sql.functions._
   * ([[graft.queries.EventAnalytics.upliftCells]] /
   * [[graft.queries.EventAnalytics.upliftFinalize]]), so the q255
   * DuckDB oracle transitively gates this layout too, and the
-  * finalizer's no-cache contract (r14) means the mutable bucket reads
-  * are never served stale.
+  * finalizer caches nothing, so the mutable bucket reads are never
+  * served stale.
   */
 object StreamingUpliftBucketed {
 

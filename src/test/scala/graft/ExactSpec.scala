@@ -99,4 +99,54 @@ class ExactSpec extends SparkSpec {
     got shouldBe cases.map(_._4)
     got shouldBe cases.map(c => graft.functions.AnnKernels.cosE6(c._1, c._2, c._3))
   }
+
+  test("ngrams are the driver's sliding windows of n tokens, none below n") {
+    val texts = Seq("a b c d", "One  two", "x", "", "  the quick brown fox  ")
+    for (n <- 1 to 3) {
+      val got = texts.toDF("t").coalesce(1)
+        .select(Exact.tokens(col("t")).as("tk"))
+        .select(col("tk"), Exact.ngrams(col("tk"), n).as("g"))
+        .as[(Seq[String], Seq[String])].collect().toSeq
+      got.map(_._1).map(_.size) shouldBe Seq(4, 2, 1, 1, 4)
+      withClue(s"n = $n:") {
+        got.map(_._2) shouldBe got.map(_._1.sliding(n).filter(_.size == n).map(_.mkString(" ")).toSeq)
+      }
+    }
+  }
+
+  test("splitBucket / splitOf: md5's first 4 hex digits mod 10, 0-7 train, 8 val, 9 test") {
+    val ids = (0L until 40L)
+    val got = ids.toDF("id").coalesce(1)
+      .select(Exact.splitBucket(col("id")), Exact.splitOf(Exact.splitBucket(col("id"))))
+      .as[(Long, String)].collect().toSeq
+    val want = ids.map { id =>
+      val hex = java.security.MessageDigest.getInstance("MD5")
+        .digest(id.toString.getBytes("UTF-8")).map(b => f"${b & 0xff}%02x").mkString
+      val b = java.lang.Long.parseLong(hex.take(4), 16) % 10
+      (b, if (b < 8) "train" else if (b == 8) "val" else "test")
+    }
+    got shouldBe want
+    got.map(_._2).toSet shouldBe Set("train", "val", "test")
+  }
+
+  test("pairs expands an array's i < j pairs in position order") {
+    val got = Seq(Seq(1L, 2L, 3L), Seq(5L), Seq.empty[Long]).toDF("items").coalesce(1)
+      .select(Exact.pairs(col("items")).as("p"))
+      .select(transform(col("p"), p => concat_ws(",", p.getField("x"), p.getField("y"))))
+      .as[Seq[String]].collect().toSeq
+    got shouldBe Seq(Seq("1,2", "1,3", "2,3"), Nil, Nil)
+  }
+
+  test("bucketPairs are the driver's combinations(2) per bucket, each pair once") {
+    val rows = Seq(("b1", 3L), ("b1", 1L), ("b1", 2L), ("b2", 2L), ("b2", 1L),
+      ("b3", 7L), ("b4", 9L), ("b4", 4L), ("b5", 4L), ("b5", 3L))
+    val got = Exact.bucketPairs(rows.toDF("bkt", "id"), "bkt", "id", "lo", "hi")
+    got.columns.toSeq shouldBe Seq("lo", "hi")
+    val want = rows.groupBy(_._1).values.toSeq
+      .flatMap(_.map(_._2).sorted.combinations(2).map(c => (c(0), c(1))))
+      .distinct.sorted
+    // (1, 2) shares b1 and b2 and is reported once; b3 has one member
+    want shouldBe Seq((1L, 2L), (1L, 3L), (2L, 3L), (3L, 4L), (4L, 9L))
+    got.as[(Long, Long)].collect().toSeq.sorted shouldBe want
+  }
 }

@@ -186,6 +186,18 @@ class LocalFsSpec extends SparkSpec {
       .getCondition shouldBe missing.getCondition
   }
 
+  test("LocalFs.csv reads a two-file glob as Spark does, file names included") {
+    val dir = tmpDir("localfs-glob")
+    put(s"$dir/one.csv", "k,v", "1,a", "2,b")
+    put(s"$dir/two.csv", "k,v", "3,c")
+    val glob = s"$dir/*.csv"
+    def withFile(df: DataFrame) =
+      df.withColumn("file", input_file_name()).collect().sortBy(_.toString).toSeq
+    val rows = withFile(LocalFs.csv(spark, glob))
+    rows shouldBe withFile(sparkCsv(glob))
+    rows.map(_.getString(2)).distinct.map(_.split('/').last) shouldBe Seq("one.csv", "two.csv")
+  }
+
   test("LocalFs.csvRows parses a control file as Spark's header read does") {
     val path = put(s"${tmpDir("localfs-rows")}/cfg.csv",
       "a,b,,a",

@@ -181,4 +181,12 @@ class ProfilingSpec extends SparkSpec {
       }
     }
   }
+
+  test("tokenDrift over an empty token relation is empty, not an error") {
+    import spark.implicits._
+    val noTokens = Seq.empty[(String, Long)].toDF("source", "gh")
+    val drift = Profiling.tokenDrift(noTokens, "source")
+    drift.columns.toSeq shouldBe Seq("source", "n_tokens", "l1_ppm")
+    drift.collect() shouldBe empty
+  }
 }

@@ -26,13 +26,19 @@ from collections import Counter
 ROOTS = ("src/main/scala", "src/test/scala")
 
 
-def code_lines(text):
-    """Number of lines of `text` that carry code outside comments."""
-    n = 0
+def split_lines(text):
+    """Per line of `text`, the pair (code, literal).
+
+    `code` is the line's text outside comments and outside the body of
+    triple-quoted literals (the quotes themselves and single-line string
+    and character literals stay in it); `literal` is the text inside
+    triple-quoted literals.
+    """
+    out = []
     depth = 0          # block-comment nesting
     in_str = None      # None, '"' or '"""'
     for line in text.split("\n"):
-        code = False
+        code, lit = [], []
         i = 0
         while i < len(line):
             if depth:
@@ -45,23 +51,22 @@ def code_lines(text):
                 else:
                     i += 1
             elif in_str == '"""':
-                code = code or not line[i].isspace()
                 if line.startswith('"""', i):
                     in_str = None
-                    i += 3
-                    while i < len(line) and line[i] == '"':
-                        i += 1
+                    j = i + 3
+                    while j < len(line) and line[j] == '"':
+                        j += 1
+                    code.append(line[i:j])
+                    i = j
                 else:
+                    lit.append(line[i])
                     i += 1
             elif in_str == '"':
-                code = True
-                if line[i] == "\\":
-                    i += 2
-                elif line[i] == '"':
+                step = 2 if line[i] == "\\" else 1
+                if line[i] == '"':
                     in_str = None
-                    i += 1
-                else:
-                    i += 1
+                code.append(line[i:i + step])
+                i += step
             elif line.startswith("//", i):
                 break
             elif line.startswith("/*", i):
@@ -69,23 +74,29 @@ def code_lines(text):
                 i += 2
             elif line.startswith('"""', i):
                 in_str = '"""'
-                code = True
+                code.append('"""')
                 i += 3
             elif line[i] == '"':
                 in_str = '"'
-                code = True
+                code.append('"')
                 i += 1
             elif line[i] == "'" and i + 2 < len(line) and (
                     line[i + 2] == "'" or (line[i + 1] == "\\" and "'" in line[i + 3:i + 8])):
-                code = True
-                i = line.index("'", i + 2 if line[i + 1] != "\\" else i + 3) + 1
+                j = line.index("'", i + 2 if line[i + 1] != "\\" else i + 3) + 1
+                code.append(line[i:j])
+                i = j
             else:
-                code = code or not line[i].isspace()
+                code.append(line[i])
                 i += 1
         if in_str == '"':  # single-line literals cannot span lines
             in_str = None
-        n += code
-    return n
+        out.append(("".join(code), "".join(lit)))
+    return out
+
+
+def code_lines(text):
+    """Number of lines of `text` that carry code outside comments."""
+    return sum(1 for code, lit in split_lines(text) if (code + lit).strip())
 
 
 def tree_counts():

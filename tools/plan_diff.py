@@ -17,7 +17,9 @@ text that stderr interleaves with the plans (an `...Exception: ...` or
 into the middle of a plan line is cut out and the line rejoined.
 What differs between two runs of the same code is masked before
 comparing: expression ids (`#123`), object hashes (`@1a2b3c`), lambda
-class names (`$Lambda$5486/0x00007f...`), exchange plan ids
+class names (`$Lambda$5486/0x00007f...`), the JVM-wide counter suffix
+of a higher-order function's variable (`lambda x_385`, numbered by how
+many such variables the JVM created before), exchange plan ids
 (`plan_id=12`) and the directory of a `Checkpoints.cut` scan
 (`graft-ckpt-<n>/<uuid>`, which Spark may cut short with `...`). The
 `Expand` of a query with several count-distinct groups is put in one
@@ -51,6 +53,7 @@ MASKS = [
     (re.compile(r"#\d+L?"), "#N"),
     (re.compile(r"@[0-9a-f]{4,}\b"), "@H"),
     (re.compile(r"\$Lambda\$\d+/0x[0-9a-f]+"), "$Lambda$N"),
+    (re.compile(r"\b(lambda \w+?)_\d+\b"), r"\1_N"),
     (re.compile(r"plan_id=\d+"), "plan_id=N"),
     (re.compile(r"graft-ckpt-[0-9a-f/-]*(\.\.\.)?"), "graft-ckpt-N"),
 ]
